@@ -3,10 +3,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       // single large parquet files split at the default 128 MB starve a
       // 32-thread executor (measured: labeler_votes scan-stage on 6
       // tasks, dsir_weights on 2) — size splits to the core count
@@ -158,7 +158,7 @@ object Bench {
           case _ => acc
         }
     }
-    val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errs = errors.map("\"" + jq(_) + "\"").mkString("[", ",", "]")
     // per-stream replay metrics (batches / state rows / max batch ms),
     // written by StreamMetrics.dump during the run, attached next to
     // the timing entries so a slow stream_* number is attributable to
@@ -173,7 +173,7 @@ object Bench {
       }.mkString("{", ",", "}")
     }
     val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${js(results)},"variants":${js(variants)},"variants_total":${r3(vTotal)},"substituted_total":${r3(substitutedTotal)},"stream":$streamMetrics,"errors":$errs,"cpus":$cpus,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${js(results)},"variants":${js(variants)},"variants_total":${r3(vTotal)},"substituted_total":${r3(substitutedTotal)},"stream":$streamMetrics,"errors":$errs,"cpus":$cpus,"sf":"${jq(sfDir)}"}"""
     println(line)
     // sbt prefixes stdout with "[info] ", which has broken downstream
     // JSON extraction before — persist the bare line as a file too.
@@ -225,7 +225,7 @@ object Bench {
       // distinguished — they fail open (no mismatch), same as sf.
       val anchorCpus = anchorText.flatMap(old =>
         "\"cpus\":([0-9]+)".r.findFirstMatchIn(old).map(_.group(1)))
-      val cpusMismatch = !sfMismatch && anchorCpus.exists(_ != cpus)
+      val cpusMismatch = !sfMismatch && anchorCpus.exists(_ != cpus.toString)
       val noisy = !sfMismatch && !cpusMismatch && (try {
         anchorText.exists(old => noiseTrip(old, canaries, results, total))
       } catch { case _: Throwable => false })
@@ -293,9 +293,6 @@ object Bench {
         if (p.waitFor() == 0 && out.nonEmpty) out else "unknown"
       } catch { case e: Throwable =>
         System.err.println(s"[bench] git rev-parse failed: $e"); "unknown" }
-      def jq(s: String): String = s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
       val sidecar = dest.replace("BENCH_LATEST", "BENCH_PARSED_LATEST")
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(sidecar),
@@ -322,19 +319,48 @@ object Bench {
     * (first [[CompactMaxErrors]] + a count) so a mass-failure run cannot
     * push the line past the capture window either. */
   private[graft] val CompactMaxErrors = 8
+  /** Longest escaped string the compact line carries per field: with
+    * [[CompactMaxErrors]] names plus the two paths, ten such fields and
+    * the fixed keys stay under 1 KB whatever the input characters. */
+  private[graft] val CompactMaxChars = 48
   private[graft] def compactLine(total: Double, vTotal: Double,
       substitutedTotal: Double, nQueries: Int, nVariants: Int,
-      cpus: String, errors: Seq[String], sfDir: String,
+      cpus: Int, errors: Seq[String], sfDir: String,
       sidecar: Option[String]): String = {
     def r3(v: Double) = if (v < 0) "-1" else f"$v%.3f"
+    // each string is cut to CompactMaxChars AFTER escaping; paths keep
+    // their tail (the sf / file name is the part that differs)
+    def str(v: String, keepTail: Boolean = false): String = {
+      var n = 0
+      val kept = (if (keepTail) v.reverseIterator else v.iterator)
+        .map(c => jq(c.toString))
+        .takeWhile { e => n += e.length; n <= CompactMaxChars }.toSeq
+      "\"" + (if (keepTail) kept.reverse else kept).mkString + "\""
+    }
     val errNames = errors.take(CompactMaxErrors)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+      .map(str(_)).mkString("[", ",", "]")
     s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
       s""""n_queries":$nQueries,"n_variants":$nVariants,""" +
       s""""variants_total":${r3(vTotal)},""" +
       s""""substituted_total":${r3(substitutedTotal)},""" +
       s""""cpus":$cpus,"n_errors":${errors.size},"errors":$errNames,""" +
-      s""""queries_file":"${sidecar.getOrElse("")}","sf":"$sfDir"}"""
+      s""""queries_file":${str(sidecar.getOrElse(""), keepTail = true)},""" +
+      s""""sf":${str(sfDir, keepTail = true)}}"""
+  }
+
+  /** JSON string-body escape: quote, backslash and control characters. */
+  private[graft] def jq(s: String): String = s.flatMap {
+    case '"' => "\\\""; case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
+
+  /** `SPARK_GRAFT_CPUS` as a positive core count (4 when unset). It
+    * becomes `local[N]`, a bare JSON number and part of a file name, so
+    * anything else fails here with the offending value. */
+  private[graft] def parseCpus(raw: Option[String]): Int = raw match {
+    case None => 4
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got \"$v\""))
   }
 
   /** Noise-window decision against the committed anchor JSON, pure so

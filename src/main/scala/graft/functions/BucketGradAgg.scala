@@ -40,7 +40,15 @@ class BucketGradAgg(nBuckets: Int)
       // in-place bump: the Aggregator contract gives `reduce` exclusive
       // ownership of `b` (the HistogramAgg safety note)
       val s = b.sums
-      in.bs.foreach { bk => s(bk.toInt) += in.gs }
+      in.bs.foreach { bk =>
+        // bk == nBuckets would alias into the bias slot, and a long past
+        // Int range would wrap on toInt — reject both by name
+        require(bk >= 0 && bk < nBuckets,
+          s"BucketGradAgg: bucket id $bk outside [0, $nBuckets): " +
+            "bucket ids must come from the same nBuckets the aggregate " +
+            "was built with")
+        s(bk.toInt) += in.gs
+      }
       s(nBuckets) += in.gs
     }
     b

@@ -26,13 +26,15 @@ final case class ProfilerOptions(
       * guards against binary-garbage columns). */
     vocabCap: Int = 1000,
     /** Row budget for the vocab pass: above this, vocab is computed on a
-      * deterministic Bernoulli sample instead of the full scan — the
-      * pass's map-side CPU is O(total characters), and the reference
+      * deterministic Bernoulli sample instead of the full scan. The
+      * pass reads every code point of every value it sees (up to
+      * [[vocabCharsPerValue]]), so its map-side CPU is O(total
+      * characters) however cheap the per-character fold; the reference
       * computes vocab on its row sample anyway (sampled vocab ⊆ true
       * vocab; alphabets saturate in a few thousand rows). */
     vocabSampleRows: Int = 100000,
-    /** Chars scanned per value in the vocab pass — a length cap so one
-      * pathological multi-MB value can't dominate the pass. */
+    /** Code points scanned per value in the vocab pass — a length cap so
+      * one pathological multi-MB value can't dominate the pass. */
     vocabCharsPerValue: Int = 1000,
     /** Natural-scan-order detection per column
       * (order_column_profile.py:374-413). */
@@ -51,8 +53,9 @@ final case class ProfilerOptions(
     /** Relative standard deviation of the HLL NDV sketches — the
       * reference's register_count knob (profiler_options.py:1078-1090).
       * Drives the DataSketches lgK via rsd ≈ 1.04/√(2^lgK); the default
-      * 0.008 ≈ 2^14 registers. Also used by the datetime distinct-day
-      * estimates. */
+      * 0.008 ≈ 2^14 registers. The datetime distinct-day counts
+      * (`DatetimeStats.nDays`) use the same DataSketches HLL at the same
+      * lgK, over the epoch-day number of each value's date. */
     ndvRsd: Double = 0.008,
     /** Sampling floor per column (the reference's min_true_samples,
       * profile_builder.py:640-647): when > 0, [[Profiler.profileSampled]]
@@ -143,6 +146,8 @@ final case class ProfilerOptions(
   *            melt + groupBy (skipped when nothing qualifies).
   *   pass 3 — fixed-width histogram bucket counts for numeric columns
   *            (bounds from pass 1), one melt + groupBy.
+  *   pass 5 — character vocabulary: one mergeable code-point-set
+  *            aggregate per string column, no per-character rows.
   * Nothing unbounded is collected: category maps are capped, histograms are
   * fixed-width, quantiles use percentile_approx (GK sketch).
   */
@@ -152,8 +157,9 @@ object Profiler {
     * session value after (r20). Every exchange a profile pass plans is
     * bounded-cardinality BY CONSTRUCTION: pass 1 is a partial-agg'd
     * global (or ≤ maxGroups-key) aggregation whose exchange carries one
-    * sketch row per map task (per key), the category/vocab melts
-    * aggregate map-side to ≤ qualifying-columns × maxCategories rows,
+    * sketch row per map task (per key), the category melt aggregates
+    * map-side to ≤ qualifying-columns × maxCategories rows, the vocab
+    * pass carries one code-point set per (map task, key, column),
     * and the order pass is map-only. Adaptive re-planning has nothing
     * to coalesce or skew-split on such exchanges at ANY scale, while
     * costing one extra job + scheduling barrier per exchange
@@ -333,7 +339,7 @@ object Profiler {
           Seq(
             date_format(min(c), "yyyy-MM-dd HH:mm:ss").as(s"${nm}__mints"),
             date_format(max(c), "yyyy-MM-dd HH:mm:ss").as(s"${nm}__maxts"),
-            approx_count_distinct(to_date(c), opts.ndvRsd).as(s"${nm}__ndays"))
+            distinctDays(c, opts).as(s"${nm}__ndays"))
         case _ => Seq.empty
       }
       val plugged = statPlugins.filter(_.appliesTo(f.dataType))
@@ -354,6 +360,33 @@ object Profiler {
       cnt(anyNull > 0).as("__rowhasnull"),
       cnt(anyNull === fields.size).as("__rowisnull"))
     perCol ++ tableLevel
+  }
+
+  /** Distinct calendar days of a timestamp/date column: the DataSketches
+    * HLL at the profile's lgK, the same estimator and rsd contract as
+    * every other NDV here. Spark's `approx_count_distinct` at the default
+    * rsd is HLL++ with a 3,277-field aggregation buffer, whose generated
+    * projection dominated the profiler's fixed per-call cost. */
+  private def distinctDays(x: Column, opts: ProfilerOptions): Column =
+    hll_sketch_estimate(
+      hll_sketch_agg(unix_date(to_date(x)), lit(opts.ndvLgK)))
+
+  /** Pass 5 (shared): the code-point vocabulary of every string column,
+    * one [[CodePointVocabAgg]] per column in one aggregation — global
+    * when `key` is None (the whole frame, returned under key 0), else
+    * grouped by `key` (one result row per split group). */
+  private def vocabPass(src: DataFrame, key: Option[Column],
+      stringCols: Seq[String],
+      opts: ProfilerOptions): Map[Long, Map[String, Set[String]]] = {
+    val vocab = udaf(new CodePointVocabAgg(opts.vocabCharsPerValue, opts.vocabCap))
+    val aggs = stringCols.map(c => vocab(col(c)))
+    src.groupBy(key.toSeq: _*).agg(aggs.head, aggs.tail: _*).collect()
+      .map { r =>
+        (if (key.isDefined) r.getLong(0) else 0L) ->
+          stringCols.zipWithIndex.map { case (c, i) =>
+            c -> r.getSeq[String](key.size + i).toSet
+          }.toMap
+      }.toMap
   }
 
   /** Two-regime chunking of pass-1 aggregates, shared by the whole-frame
@@ -557,7 +590,8 @@ object Profiler {
         }
     }
 
-    // pass 5: char vocabulary, grouped
+    // pass 5: char vocabulary, grouped — the whole-frame aggregation
+    // under groupBy(key), one code-point set per (group, column)
     val vocabFut: Future[Map[Long, Map[String, Set[String]]]] = Future {
       if (!opts.computeVocab || stringCols.isEmpty) Map.empty
       else {
@@ -574,21 +608,7 @@ object Profiler {
             }
             df.filter(rand(42) < frac)
           }
-        src.select(key.as("__split"), explode(array(stringCols.map(c =>
-          struct(lit(c).as("k"),
-            substring(col(c).cast("string"), 1, opts.vocabCharsPerValue)
-              .as("v"))): _*)).as("kv"))
-          .select(col("__split"), col("kv.k"),
-            explode(split(col("kv.v"), "")).as("ch"))
-          .filter(col("ch") =!= "")
-          .groupBy("__split", "k").agg(
-            slice(array_sort(collect_set(col("ch"))), 1, opts.vocabCap)
-              .as("chars"))
-          .collect()
-          .groupBy(_.getLong(0)).map { case (k, rows) =>
-            k -> rows.map(r =>
-              r.getString(1) -> r.getSeq[String](2).toSet).toMap
-          }
+        vocabPass(src, Some(key.as("__split")), stringCols, opts)
       }
     }
 
@@ -819,15 +839,14 @@ object Profiler {
     val t4 = System.currentTimeMillis()
 
     // ---- pass 5: char vocabulary for string columns --------------------
-    // Explode-to-chars then per-column capped distinct-char SET: the
-    // shuffle and the collected state are bounded by the alphabet
-    // (collect_set dedups map-side); keeping the set (not just its size)
-    // makes merge a true set-union (profiler_utils.py:74-92).
-    // The pass runs under the sampling contract: map-side CPU is
-    // O(characters scanned), so past vocabSampleRows the input is a
-    // deterministic Bernoulli sample (pushed into the scan, no shuffle)
-    // and each value is length-capped — at 100 TB of text the full-corpus
-    // char explode would dwarf every other pass.
+    // One global aggregation of per-column code-point sets (vocabPass):
+    // each map task folds its rows into a bitset per column, so the
+    // shuffle and the collected state are bounded by the alphabet;
+    // keeping the set (not just its size) makes merge a true set-union
+    // (profiler_utils.py:74-92). The pass runs under the sampling
+    // contract: map-side CPU is O(characters scanned), so past
+    // vocabSampleRows the input is a deterministic Bernoulli sample
+    // (pushed into the scan, no shuffle) and each value is length-capped.
     val vocabSrc = {
       val nRows = g[Long]("__rowcount")
       if (nRows > opts.vocabSampleRows)
@@ -837,18 +856,7 @@ object Profiler {
     }
     val vocabSets: Map[String, Set[String]] =
       if (!opts.computeVocab || stringCols.isEmpty) Map.empty
-      else vocabSrc.select(explode(array(stringCols.map(c =>
-        struct(lit(c).as("k"),
-          substring(col(c).cast("string"), 1, opts.vocabCharsPerValue)
-            .as("v"))): _*)).as("kv"))
-        .select(col("kv.k"), explode(split(col("kv.v"), "")).as("ch"))
-        .filter(col("ch") =!= "")
-        .groupBy("k").agg(
-          slice(array_sort(collect_set(col("ch"))), 1, opts.vocabCap)
-            .as("chars"))
-        .collect()
-        .map(r => r.getString(0) ->
-          r.getSeq[String](1).toSet).toMap
+      else vocabPass(vocabSrc, None, stringCols, opts)(0L)
     val t5 = System.currentTimeMillis()
 
     // ---- pass 6: natural-order detection per column --------------------
@@ -973,7 +981,7 @@ object Profiler {
       // stop-condition flags cap_reached rather than dropping the stat,
       // categorical_column_profile.py:478-521) so Diff can distinguish
       // "capped" from "not categorical". NOTE: the cap decision keys off
-      // approx_count_distinct, so nCat for a capped column is the APPROX
+      // the HLL NDV sketch, so nCat for a capped column is the APPROX
       // cardinality (one-pass tradeoff vs the reference's exact stop
       // condition) — Diff consumers must not treat a capped nCat as exact.
       // Capped columns keep CMS heavy hitters: candidate keys come from
@@ -1091,8 +1099,7 @@ object Profiler {
               .as(s"${c}__smints"),
             date_format(max(parsed), "yyyy-MM-dd HH:mm:ss")
               .as(s"${c}__smaxts"),
-            approx_count_distinct(to_date(parsed), opts.ndvRsd)
-              .as(s"${c}__sndays"))
+            distinctDays(parsed, opts).as(s"${c}__sndays"))
         }
         val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
         parseCols.keySet.flatMap { c =>

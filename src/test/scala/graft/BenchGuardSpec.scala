@@ -53,7 +53,7 @@ class BenchGuardSpec extends AnyFunSuite {
     val manyErrors = (1 to 200).map(i => s"some_long_query_name_$i")
     val line = Bench.compactLine(
       total = 12345.678, vTotal = 234.567, substitutedTotal = 12000.123,
-      nQueries = 146, nVariants = 14, cpus = "32", errors = manyErrors,
+      nQueries = 146, nVariants = 14, cpus = 32, errors = manyErrors,
       sfDir = "/root/testdata/sf0.1",
       sidecar = Some("BENCH_PARSED_LATEST_noisy.json"))
     assert(line.length < 1024,
@@ -72,13 +72,49 @@ class BenchGuardSpec extends AnyFunSuite {
   }
 
   test("compact line: clean run has empty errors and -1 for failed totals") {
-    val line = Bench.compactLine(163.939, 22.312, 163.939, 146, 14, "8",
+    val line = Bench.compactLine(163.939, 22.312, 163.939, 146, 14, 8,
       Nil, "/root/testdata/sf0.1", None)
     assert(line.contains("\"errors\":[]") && line.contains("\"n_errors\":0"))
     assert(line.contains("\"cpus\":8"))
-    val failed = Bench.compactLine(-1.0, -1.0, -1.0, 0, 0, "32", Nil,
+    val failed = Bench.compactLine(-1.0, -1.0, -1.0, 0, 0, 32, Nil,
       "x", None)
     assert(failed.contains("\"value\":-1"))
+  }
+
+  test("compact line escapes quotes and backslashes in paths and names") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    val sf = "C:\\data\\sf \"0.1\""
+    val line = Bench.compactLine(1.5, 0.5, 1.5, 146, 14, 4,
+      Seq("q\"uote", "back\\slash", "tab\there"), sf,
+      Some("BENCH_\"PARSED\".json"))
+    implicit val formats: Formats = DefaultFormats
+    val js = parse(line)
+    assert((js \ "sf").extract[String] == sf)
+    assert((js \ "queries_file").extract[String] == "BENCH_\"PARSED\".json")
+    assert((js \ "errors").extract[Seq[String]] ==
+      Seq("q\"uote", "back\\slash", "tab\there"))
+    assert((js \ "cpus").extract[Int] == 4)
+    // worst case: every field long and made of characters that escape
+    // to two or six characters — still one parseable line under 1 KB
+    val nasty = ("\"\\\u0001" * 200)
+    val worst = Bench.compactLine(12345.678, 234.567, 12000.123, 146, 14,
+      32, Seq.fill(200)(nasty), "/data/" + nasty, Some(nasty + ".json"))
+    assert(worst.length < 1024, s"${worst.length} chars")
+    val wjs = parse(worst)
+    assert((wjs \ "n_errors").extract[Int] == 200)
+    assert((wjs \ "sf").extract[String].nonEmpty)
+  }
+
+  test("SPARK_GRAFT_CPUS parses to a positive Int or fails by name") {
+    assert(Bench.parseCpus(None) == 4)
+    assert(Bench.parseCpus(Some("8")) == 8)
+    assert(Bench.parseCpus(Some(" 32 ")) == 32)
+    for (bad <- Seq("*", "", "0", "-2", "4.5", "eight")) {
+      val e = intercept[IllegalArgumentException](Bench.parseCpus(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") &&
+        e.getMessage.contains(s"\"$bad\""), e.getMessage)
+    }
   }
 
   test("r18 golden-slot shape: ms-jitter canary against an outlier-low " +

@@ -50,6 +50,29 @@ class BucketGradAggSpec extends AnyFunSuite {
       "NULL-bs row must be skipped entirely (bias included)")
   }
 
+  test("out-of-range bucket id fails by name instead of aliasing the bias") {
+    // b == nBuckets used to land silently in the bias slot; a negative
+    // id threw a bare ArrayIndexOutOfBoundsException
+    val agg = new graft.functions.BucketGradAgg(4)
+    for (bad <- Seq(4L, -1L, 1L << 32)) {
+      val e = intercept[IllegalArgumentException] {
+        agg.reduce(agg.zero, graft.functions.BucketGradIn(Seq(0L, bad), 1L))
+      }
+      assert(e.getMessage.contains(s"bucket id $bad outside [0, 4)"),
+        e.getMessage)
+    }
+    // and through Spark: the task failure carries the same message
+    import spark.implicits._
+    val df = Seq((Seq(1L, 4L), 5L)).toDF("bs", "gs")
+    val gradAgg = udaf(agg)
+    val e = intercept[Exception] {
+      df.agg(gradAgg(col("bs"), col("gs"))).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("bucket id 4 outside [0, 4)")), e.toString)
+  }
+
   test("empty input yields the zero buffer, not null") {
     import spark.implicits._
     val df = Seq.empty[(Seq[Long], Long)].toDF("bs", "gs")

@@ -1,0 +1,102 @@
+package graft
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.CodePointVocabAgg
+import graft.profiler.{Profiler, ProfilerOptions}
+
+/** The profiler's vocab pass (one CodePointVocabAgg per string column)
+  * must return exactly the set the per-character formulation it
+  * replaced returned: explode every value's first `vocabCharsPerValue`
+  * characters into rows, `collect_set`, `array_sort`, keep the first
+  * `vocabCap`. That formulation lives on here only, as the reference. */
+class CodePointVocabSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  /** The old pass 5, grouped by `key` (a constant key = whole frame). */
+  private def explodeVocab(df: DataFrame, key: Column, cols: Seq[String],
+      opts: ProfilerOptions): Map[Long, Map[String, Set[String]]] =
+    df.select(key.cast("long").as("__split"), explode(array(cols.map(c =>
+      struct(lit(c).as("k"),
+        substring(col(c).cast("string"), 1, opts.vocabCharsPerValue)
+          .as("v"))): _*)).as("kv"))
+      .select(col("__split"), col("kv.k"),
+        explode(split(col("kv.v"), "")).as("ch"))
+      .filter(col("ch") =!= "")
+      .groupBy("__split", "k").agg(
+        slice(array_sort(collect_set(col("ch"))), 1, opts.vocabCap)
+          .as("chars"))
+      .collect()
+      .groupBy(_.getLong(0)).map { case (k, rows) =>
+        k -> rows.map(r => r.getString(1) -> r.getSeq[String](2).toSet).toMap
+      }
+
+  // nulls, "", accented and CJK (multi-byte UTF-8), emoji (supplementary
+  // code points: a surrogate pair in Java, ONE symbol to Spark), values
+  // longer than vocabCharsPerValue, and an alphabet past vocabCap
+  private val cells = Seq(
+    "abc", null, "", "héllo", "中文字符", "x😀y🎉z", "zzzzzzzzzzqrstuvw",
+    "😀", "éé", "ÀÁÂÃÄÅÆÇÈÉ", "mixed 中 é 😀 end", null, "  ", "0123456789",
+    "\t\ttab", "Ωmega", "a", "b")
+
+  private def fixture: DataFrame = {
+    import spark.implicits._
+    cells.zipWithIndex.map { case (s, i) =>
+      (i.toLong % 3, s, Option(s).map(_.reverse).orNull,
+        if (i % 4 == 0) null else "zyx")
+    }.toDF("g", "s", "r", "sparse")
+      .repartition(3) // several map tasks → the merge path runs
+  }
+
+  private val stringCols = Seq("s", "r", "sparse")
+
+  private val optsGrid = Seq(
+    ProfilerOptions(computeLabels = false, vocabCharsPerValue = 4,
+      vocabCap = 12),
+    ProfilerOptions(computeLabels = false, vocabCharsPerValue = 1000,
+      vocabCap = 5),
+    ProfilerOptions(computeLabels = false, vocabCharsPerValue = Int.MaxValue,
+      vocabCap = 1000))
+
+  test("aggregate reads code points, caps per value, sorts by code point") {
+    val agg = new CodePointVocabAgg(charsPerValue = 3, cap = 10)
+    val b = Seq("ba😀zz", null, "", "é中").foldLeft(agg.zero)(agg.reduce)
+    // "ba😀" (3 code points, not 3 UTF-16 units), then "é中"
+    assert(agg.finish(b) == Seq("a", "b", "é", "中", "😀"))
+    val capped = new CodePointVocabAgg(charsPerValue = 100, cap = 2)
+    val m = capped.merge(capped.reduce(capped.zero, "zy"),
+      capped.reduce(capped.zero, "xa"))
+    assert(capped.finish(m) == Seq("a", "x"))
+    assert(agg.finish(agg.zero).isEmpty)
+  }
+
+  test("profile vocab equals the explode/collect_set reference") {
+    val df = fixture.drop("g")
+    for (opts <- optsGrid) {
+      val ref = explodeVocab(df, lit(0L), stringCols, opts)
+        .getOrElse(0L, Map.empty)
+      val p = Profiler.profile(df, opts)
+      for (c <- stringCols)
+        assert(p.column(c).get.text.get.vocab == ref.getOrElse(c, Set.empty),
+          s"$c at $opts")
+    }
+    // the fixture exercises what it claims to
+    val full = explodeVocab(df, lit(0L), stringCols, optsGrid(2))(0L)
+    assert(full("s").contains("😀") && full("s").contains("中"))
+    assert(full("s").size > optsGrid(1).vocabCap)
+  }
+
+  test("profileSplit vocab equals the explode/collect_set reference per group") {
+    val df = fixture
+    for (opts <- optsGrid) {
+      val ref = explodeVocab(df, col("g"), stringCols, opts)
+      val split = Profiler.profileSplit(df, "g", opts)
+      assert(split.keySet == Set(0L, 1L, 2L))
+      for ((k, p) <- split; c <- stringCols)
+        assert(p.column(c).get.text.get.vocab ==
+          ref.getOrElse(k, Map.empty).getOrElse(c, Set.empty),
+          s"group $k column $c at $opts")
+    }
+  }
+}

@@ -73,6 +73,79 @@ class ColumnStatSpec extends AnyFunSuite {
     assert(rep.contains("\"vocab_size\"") && rep.contains("\"order\""))
   }
 
+  test("profiler plans: no HLL++ day count, no per-character explode") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{
+      HllSketchAgg, HyperLogLogPlusPlus}
+    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution,
+      SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.functions.CodePointVocabAgg
+    import graft.profiler.ProfilerOptions
+    // a string-datetime, a TimestampType and a text column, two groups
+    val df = spark.range(3000).select(
+      (col("id") % 2).as("g"),
+      when(col("id") % 17 =!= 0, date_format(date_add(lit("2000-01-01")
+        .cast("date"), (col("id") * 7 % 2500).cast("int")), "yyyy-MM-dd"))
+        .as("sdt"),
+      timestamp_seconds(lit(978307200L) + (col("id") * 13 % 1700) * 86400L +
+        col("id") % 86400L).as("ts"),
+      concat(lit("word "), col("id").cast("string"), lit(" é")).as("txt"))
+    // labels off (profileSplit requires it) and a category cap below every
+    // column's cardinality: the labeler sample and the category melt are
+    // the passes that explode legitimately, so with both idle any
+    // GenerateExec left would be the vocab pass
+    val opts = ProfilerOptions(computeLabels = false, maxCategories = 10)
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.executedPlan)
+    }
+    spark.listenerManager.register(listener)
+    val (whole, split) = try {
+      val w = Profiler.profile(df.drop("g"), opts)
+      val sp = Profiler.profileSplit(df, "g", opts)
+      SparkTestSession.drainListenerBus()
+      (w, sp)
+    } finally spark.listenerManager.unregister(listener)
+
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect { case n => n }
+      .flatMap {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case n => Seq(n)
+      }
+    val all = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(nodes)
+    val exprs = all.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(all.nonEmpty, "listener captured no plans")
+    assert(!exprs.exists(_.isInstanceOf[HyperLogLogPlusPlus]),
+      "approx_count_distinct (HLL++) planned by the profiler")
+    assert(!all.exists(_.isInstanceOf[GenerateExec]),
+      "a Generate (explode) planned by the profiler")
+    // the capture saw the passes in question
+    assert(exprs.exists(_.isInstanceOf[HllSketchAgg]))
+    assert(exprs.exists {
+      case a: ScalaAggregator[_, _, _] => a.agg.isInstanceOf[CodePointVocabAgg]
+      case _ => false
+    }, "vocab aggregate not among the captured plans")
+
+    // nDays within 3·rsd of the exact distinct-date count
+    val frames = Seq(None -> whole) ++
+      split.toSeq.map { case (k, p) => Some(k) -> p }
+    assert(split.keySet == Set(0L, 1L))
+    for ((k, p) <- frames; c <- Seq("sdt", "ts")) {
+      val slice = k.fold(df)(v => df.filter(col("g") === v))
+      val exact = slice.agg(countDistinct(to_date(col(c)))).head().getLong(0)
+      val est = p.column(c).get.datetime.get.nDays
+      assert(math.abs(est - exact) <= 3 * opts.ndvRsd * exact,
+        s"$c group $k: nDays $est vs exact $exact")
+    }
+    assert(whole.column("sdt").get.datetime.get.nDays > 1000)
+  }
+
   test("ordinal day suffixes are stripped before format discovery") {
     import spark.implicits._
     import graft.functions.{cnt, DatetimeFormats}

@@ -355,26 +355,8 @@ class ProfileSplitSpec extends AnyFunSuite {
           n.incrementAndGet()
       }
       sc.addSparkListener(l)
-      try { f; waitForListenerBus() } finally sc.removeSparkListener(l)
+      try { f; SparkTestSession.drainListenerBus() } finally sc.removeSparkListener(l)
       n.get()
-    }
-    def waitForListenerBus(): Unit = {
-      // listenerBus is private[spark] (public in bytecode) — reflection.
-      // If NO waitUntilEmpty overload resolves (a Spark upgrade renamed
-      // it), fail the test loudly: silently skipping the drain would
-      // make the job-count assertion flaky instead (r19 advice).
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      val noArg = bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      val oneArg = bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-      (noArg, oneArg) match {
-        case (Some(m), _) => m.invoke(bus)
-        case (None, Some(m)) => m.invoke(bus, java.lang.Long.valueOf(10000L))
-        case (None, None) => fail(
-          "no waitUntilEmpty overload on LiveListenerBus — the " +
-            "job-count assertions below would be flaky without a drain")
-      }
     }
     var withProbes: Map[Long, graft.profiler.Profile] = null
     var noProbes: Map[Long, graft.profiler.Profile] = null

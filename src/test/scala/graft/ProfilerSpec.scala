@@ -22,6 +22,26 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Block until the listener bus has delivered every queued event, so a
+    * listener's counts are complete. `listenerBus` is private[spark]
+    * (public in bytecode), hence reflection; if no `waitUntilEmpty`
+    * overload resolves (a Spark upgrade renamed it) this throws rather
+    * than let a caller's assertions run on a partial drain. */
+  def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    val byArity = bus.getClass.getMethods
+      .filter(_.getName == "waitUntilEmpty").map(m => m.getParameterCount -> m)
+      .toMap
+    (byArity.get(0), byArity.get(1)) match {
+      case (Some(m), _) => m.invoke(bus)
+      case (None, Some(m)) => m.invoke(bus, java.lang.Long.valueOf(10000L))
+      case (None, None) => throw new AssertionError(
+        "no waitUntilEmpty overload on LiveListenerBus — listener-based " +
+          "assertions would be flaky without a drain")
+    }
+  }
 }
 
 class ProfilerSpec extends AnyFunSuite {
