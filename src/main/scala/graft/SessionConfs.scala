@@ -15,9 +15,12 @@ import org.apache.spark.sql.SparkSession
 object SessionConfs {
 
   /** Run `f` with `key` set to `value`, then restore the prior value
-    * (or unset, if the key was never set). */
+    * (or unset, if the key was never set). The prior value comes from
+    * the explicitly set entries (`conf.getAll`): for a registered SQL
+    * conf `getOption` returns the default when the key is unset, and
+    * restoring that would leave an explicit entry behind. */
   def withConf[T](s: SparkSession, key: String, value: String)(f: => T): T = {
-    val prev = s.conf.getOption(key)
+    val prev = s.conf.getAll.get(key)
     s.conf.set(key, value)
     try f
     finally prev match {

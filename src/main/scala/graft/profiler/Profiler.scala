@@ -1,9 +1,10 @@
 package graft.profiler
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftSessions, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions._
+import scala.jdk.CollectionConverters._
 
 /** Options mirroring the reference's ProfilerOptions surface
   * (profiler_options.py): category cap = the stop-condition, histogram bin
@@ -17,7 +18,11 @@ final case class ProfilerOptions(
     computeCorrelation: Boolean = true,
     computeLabels: Boolean = true,
     /** Values per column sent to the entity labeler — the reference caps
-      * the labeler sample at 1000 (data_labeler_column_profile.py:34). */
+      * the labeler sample at 1000 (data_labeler_column_profile.py:34).
+      * The labeler reads the first this-many rows of the profile's one
+      * head sample (`df.head(n)`, collected to the driver with every
+      * column), so this also bounds that sample's size when labels
+      * are on. */
     labelerSampleSize: Int = 1000,
     /** Distinct-char vocabulary per string column
       * (text_column_profile.py:134-157). */
@@ -116,16 +121,16 @@ final case class ProfilerOptions(
       * correctness, not driver memory — which is why the flag defaults
       * to false and is opt-in per call site). */
     keyDomainBounded: Boolean = false,
-    /** Pass-8 head-sample exemplars (5 values/column,
-      * profile_builder.py:665-668). The probe is its own bounded
-      * limit(100) scan — and under [[Profiler.profileSplit]] it is one
-      * scan PER GROUP (each `filter(key === k).limit(100)` job reads
-      * until 100 group rows surface). Composite consumers whose emitted
-      * output never includes exemplars (the gate/diff/merge oracle
-      * queries) turn this off: at bench scale the per-group probes were
-      * ~45% of stream_gate's job count, and at corpus scale each probe
-      * is a real per-group scan (r19 optimization, guide §1.2 "don't
-      * compute things you throw away"). */
+    /** Head-sample exemplars (5 distinct values per column from the
+      * first 100 rows, profile_builder.py:665-668). They read the
+      * profile's one head sample, which this option sizes to at least
+      * 100 rows; under [[Profiler.profileSplit]] that sample is taken
+      * PER GROUP (a `filter(key === k)` head job that reads until the
+      * group's rows surface). With labels off and no datetime-like
+      * string column, exemplars are the only reader of the sample, so
+      * turning them off saves that job per call (per group when
+      * split): composite consumers whose emitted output never includes
+      * exemplars (the gate/diff/merge oracle queries) do. */
     computeExemplars: Boolean = true) {
 
   /** DataSketches lgConfigK from the rsd contract rsd ≈ 1.04/√m. */
@@ -146,10 +151,20 @@ final case class ProfilerOptions(
   *            melt + groupBy (skipped when nothing qualifies).
   *   pass 3 — fixed-width histogram bucket counts for numeric columns
   *            (bounds from pass 1), one melt + groupBy.
+  *   pass 4 — one head sample, `df.head(n)` (a CollectLimit: no generated
+  *            limit counter), feeding label votes (first
+  *            labelerSampleSize rows), datetime-format discovery (first
+  *            50) and exemplars (first 100); the label and format rules
+  *            run in one projection over the sample as a LocalRelation,
+  *            folded on the driver — no job, no codegen.
   *   pass 5 — character vocabulary: one mergeable code-point-set
   *            aggregate per string column, no per-character rows.
+  *   pass 6 — natural-order detection, one map-only scan.
+  *   pass 7 — parsed min/max/distinct days of string columns under the
+  *            formats pass 4 discovered, one aggregation.
   * Nothing unbounded is collected: category maps are capped, histograms are
-  * fixed-width, quantiles use percentile_approx (GK sketch).
+  * fixed-width, quantiles use percentile_approx (GK sketch), and the head
+  * sample is at most max(labelerSampleSize, 100) rows.
   */
 object Profiler {
 
@@ -171,12 +186,8 @@ object Profiler {
     * caveat) — callers running OTHER queries concurrently on the same
     * SparkSession should profile on spark.newSession(). */
   private def withAqeOff[T](spark: org.apache.spark.sql.SparkSession)(
-      f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try f finally spark.conf.set(key, prev)
-  }
+      f: => T): T =
+    graft.SessionConfs.withConf(spark, "spark.sql.adaptive.enabled", "false")(f)
 
   /** Incremental profiling (the reference's `update_profile(chunk)`,
     * profile_builder.py:939-998): profile the chunk, merge into the
@@ -416,9 +427,9 @@ object Profiler {
     * aggregation), pass 2 (categories) and pass 5 (vocab) each run once
     * under `groupBy(splitKey)` — identical aggregate expressions, same
     * map-side partial aggregation, k result rows instead of one — so
-    * the scan count is independent of k. The bounded passes (datetime
-    * discovery, exemplars: limit(50)/limit(100) probes) stay per-group,
-    * preserving profile()'s head-sample semantics exactly.
+    * the scan count is independent of k. The head sample (datetime
+    * discovery, exemplars) and the parsed datetime extremes stay
+    * per-group, preserving profile()'s head-sample semantics exactly.
     *
     * Surface: labels must be off (genuinely whole-frame-shaped — a
     * separate bounded-sample scan); histograms ride the grouped pass 1
@@ -612,28 +623,21 @@ object Profiler {
       }
     }
 
-    // passes 7–8 per group (bounded limit() probes), each timing ITSELF
-    // so Profile.timings carries that group's own tail cost rather than
-    // an accumulating await (the cat/vocab window runs concurrently and
-    // is attributed once, under "categories"; "vocab" is folded into it)
+    // passes 4 + 7 per group (head sample, parsed extremes), each timing
+    // ITSELF so Profile.timings carries that group's own tail cost rather
+    // than an accumulating await (the cat/vocab window runs concurrently
+    // and is attributed once, under "categories"; "vocab" is folded in)
     val tailFuts = keys.map { k =>
       k -> Future {
         val tStart = System.currentTimeMillis()
+        // no reader of the head sample → zero per-group jobs (and
+        // `slice` stays an unbuilt lazy)
         lazy val slice = df.filter(key === k)
           .select(fields.map(f => col(f.name)): _*)
         val dtFormatCols = stringCols.filter(c => gdOf(k, s"${c}__dtr") > 0.0)
-        // both probes off → zero per-group jobs (and `slice` stays an
-        // unbuilt lazy) — the exemplar probe in particular was one
-        // filter+limit scan per (group × call)
-        val (dtFormats, strDtStats) =
-          if (dtFormatCols.isEmpty)
-            (Map.empty[String, Seq[String]], Map.empty[String, DatetimeStats])
-          else datetimeDiscovery(slice, dtFormatCols, opts)
-        val ex =
-          if (opts.computeExemplars) exemplarsOf(slice, fields)
-          else Map.empty[String, Seq[String]]
-        (dtFormats, strDtStats, ex,
-          System.currentTimeMillis() - tStart)
+        val head = headPasses(slice, fields, Nil, dtFormatCols, opts)
+        (head.dtFormats, datetimeExtremes(slice, head.dtFormats, opts),
+          head.exemplars, System.currentTimeMillis() - tStart)
       }
     }.toMap
 
@@ -814,28 +818,14 @@ object Profiler {
       }
     val t3 = System.currentTimeMillis()
 
-    // ---- pass 4: entity-label votes over a bounded sample -------------
+    // ---- pass 4: one head sample for labels, formats and exemplars ----
     // The reference sends ≤1000 values per column to its labeler
-    // (data_labeler_column_profile.py:34); here the RegexLabeler CASE-WHEN
-    // chain labels a limit()-bounded slice of the string columns in one
-    // melt + tiny groupBy. The limit caps work regardless of table size.
-    val labelVotes: Map[String, Map[String, Long]] =
-      if (!opts.computeLabels || stringCols.isEmpty) Map.empty
-      else {
-        val sample = df
-          .select(stringCols.map(col): _*)
-          .limit(opts.labelerSampleSize)
-        val melted = sample.select(explode(array(stringCols.map(c =>
-          struct(lit(c).as("k"), col(c).cast("string").as("v"))): _*)).as("kv"))
-          .select(col("kv.k"),
-            graft.labelers.RegexLabeler.labelOf(col("kv.v")).as("label"))
-          .filter(col("label").isNotNull)
-          .groupBy("k", "label").agg(count(lit(1)).as("c"))
-          .collect()
-        melted.groupBy(_.getString(0)).map { case (k, rows) =>
-          k -> rows.map(r => r.getString(1) -> r.getLong(2)).toMap
-        }
-      }
+    // (data_labeler_column_profile.py:34) and pre-tests 50 rows for
+    // datetime formats; both, and the exemplars, read prefixes of one
+    // bounded head sample (headPasses). Timed as "labeler".
+    val dtFormatCols = stringCols.filter(c => gd(s"${c}__dtr") > 0.0)
+    val head = headPasses(df, fields,
+      if (opts.computeLabels) stringCols else Nil, dtFormatCols, opts)
     val t4 = System.currentTimeMillis()
 
     // ---- pass 5: char vocabulary for string columns --------------------
@@ -869,20 +859,14 @@ object Profiler {
         .map { case (k, r) => k -> r.order }
     val t6 = System.currentTimeMillis()
 
-    // ---- pass 7: datetime format discovery (string columns) -----------
-    val dtFormatCols = stringCols.filter(c => gd(s"${c}__dtr") > 0.0)
-    val (dtFormats, strDtStats) = datetimeDiscovery(df, dtFormatCols, opts)
+    // ---- pass 7: parsed extremes under the discovered formats ---------
+    val strDtStats = datetimeExtremes(df, head.dtFormats, opts)
     val t7 = System.currentTimeMillis()
-
-    // ---- pass 8: exemplars from a bounded head sample ------------------
-    val exemplars =
-      if (opts.computeExemplars) exemplarsOf(df, fields)
-      else Map.empty[String, Seq[String]]
 
     // ---- assemble -----------------------------------------------------
     assembleProfile(fields, opts, statPlugins, vals, corrPairs,
-      catMaps, histMaps, labelVotes, vocabSets, orders,
-      dtFormats, strDtStats, exemplars,
+      catMaps, histMaps, head.labelVotes, vocabSets, orders,
+      head.dtFormats, strDtStats, head.exemplars,
       Map("aggregate" -> (t1 - t0), "categories" -> (t2 - t1),
         "histograms" -> (t3 - t2), "labeler" -> (t4 - t3),
         "vocab" -> (t5 - t4), "order" -> (t6 - t5),
@@ -1061,67 +1045,114 @@ object Profiler {
       cols, corrMap, timings, rowsSk)
   }
 
-  /** Pass 7 (shared): datetime format discovery + parsed extremes for
-    * the given string columns. The reference pre-tests 50 rows before
-    * the per-format loop (datetime_column_profile.py:392-410); here the
-    * 50-row sample IS the discovery set, then parsed min/max use ONLY
-    * the discovered formats (no 16-way coalesce on the full data). */
-  private def datetimeDiscovery(df: DataFrame, dtFormatCols: Seq[String],
-      opts: ProfilerOptions)
-      : (Map[String, Seq[String]], Map[String, DatetimeStats]) = {
-    val dtFormats: Map[String, Seq[String]] =
-      if (dtFormatCols.isEmpty) Map.empty
-      else {
-        val sample = df.select(dtFormatCols.map(col): _*).limit(50)
-        val aggs = dtFormatCols.flatMap { c =>
-          graft.functions.DatetimeFormats.formats.zipWithIndex.map {
-            case (f, i) =>
-              cnt(graft.functions.DatetimeFormats.matches(col(c), f))
-                .as(s"${c}__fmt$i")
-          }
-        }
-        val r = sample.agg(aggs.head, aggs.tail: _*).collect()(0)
-        dtFormatCols.map { c =>
-          c -> graft.functions.DatetimeFormats.formats.zipWithIndex
-            .filter { case (_, i) => r.getAs[Long](s"${c}__fmt$i") > 0 }
-            .map(_._1.java)
-        }.toMap
-      }
-    val strDtStats: Map[String, DatetimeStats] = {
-      val parseCols = dtFormats.filter(_._2.nonEmpty)
-      if (parseCols.isEmpty) Map.empty
-      else {
-        val aggs = parseCols.toSeq.flatMap { case (c, fmts) =>
-          val parsed = coalesce(fmts.map(fm =>
-            try_to_timestamp(col(c), lit(fm))): _*)
-          Seq(
-            date_format(min(parsed), "yyyy-MM-dd HH:mm:ss")
-              .as(s"${c}__smints"),
-            date_format(max(parsed), "yyyy-MM-dd HH:mm:ss")
-              .as(s"${c}__smaxts"),
-            distinctDays(parsed, opts).as(s"${c}__sndays"))
-        }
-        val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-        parseCols.keySet.flatMap { c =>
-          Option(r.getAs[String](s"${c}__smints")).map(mn =>
-            c -> DatetimeStats(mn, r.getAs[String](s"${c}__smaxts"),
-              r.getAs[Long](s"${c}__sndays")))
-        }.toMap
-      }
+  /** What the head sample yields: label votes, discovered datetime
+    * formats (every probed column, possibly with no format) and
+    * exemplars, each keyed by column. */
+  private final case class HeadPasses(
+      labelVotes: Map[String, Map[String, Long]],
+      dtFormats: Map[String, Seq[String]],
+      exemplars: Map[String, Seq[String]])
+
+  /** Rows datetime-format discovery reads: the reference's pre-test
+    * (datetime_column_profile.py:392-410) is the discovery set. */
+  private val DtDiscoveryRows = 50
+  /** Rows the exemplars are drawn from (profile_builder.py:665-668). */
+  private val ExemplarRows = 100
+
+  /** Pass 4 (shared): ONE head sample read by label votes (its first
+    * labelerSampleSize rows, for `labelCols`), datetime-format discovery
+    * (its first 50 rows, for `dtFormatCols`) and exemplars (its first
+    * 100 rows, every field). `df.head(n)` plans as a CollectLimit, which
+    * generates no limit counter: a LocalLimit/GlobalLimit names its
+    * counter from a JVM-global id, so any stage holding one is new
+    * source — a codegen-cache miss — on every call. The label and format
+    * rules ([[graft.labelers.RegexLabeler.labelOf]],
+    * [[graft.functions.DatetimeFormats.matches]]) run in one select over
+    * the sample as a LocalRelation, each gated to its own row prefix;
+    * the optimizer folds that projection on the driver, so no job runs.
+    * No reader → no sample, and `df` is never evaluated. */
+  private def headPasses(df: => DataFrame, fields: Seq[StructField],
+      labelCols: Seq[String], dtFormatCols: Seq[String],
+      opts: ProfilerOptions): HeadPasses = {
+    val labelN = if (labelCols.nonEmpty) opts.labelerSampleSize else 0
+    val dtN = if (dtFormatCols.nonEmpty) DtDiscoveryRows else 0
+    val exN = if (opts.computeExemplars) ExemplarRows else 0
+    val n = Seq(labelN, dtN, exN).max
+    if (n == 0) return HeadPasses(Map.empty, Map.empty, Map.empty)
+    val src = df
+    val rows = src.head(n)
+
+    val exemplars =
+      if (exN == 0) Map.empty[String, Seq[String]]
+      else fields.zipWithIndex.map { case (f, idx) =>
+        f.name -> rows.iterator.take(exN)
+          .map(_.get(idx)).filter(_ != null).map(_.toString)
+          .toSeq.distinct.take(5)
+      }.toMap
+
+    // the rule columns under positional names, plus the row's sample index
+    val ruleCols = (labelCols ++ dtFormatCols).distinct
+    val fieldIdx = fields.map(_.name).zipWithIndex.toMap
+    val pos = ruleCols.zipWithIndex.toMap
+    def cell(c: String): Column = col(s"c${pos(c)}")
+    val local = src.sparkSession.createDataFrame(
+      rows.toSeq.zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(ruleCols.map(c => r.get(fieldIdx(c))) :+ i)
+      }.asJava,
+      StructType(ruleCols.indices.map(i => StructField(s"c$i", StringType)) :+
+        StructField("i", IntegerType)))
+    val formats = graft.functions.DatetimeFormats.formats
+    // labelOf registers its function on the ACTIVE session, which must be
+    // the one `local` resolves in (a stream's sink thread, or a caller
+    // profiling another session's frame, has a different one active)
+    val out = GraftSessions.withActive(local.sparkSession) {
+      val exprs = labelCols.map(c => when(col("i") < labelN,
+          graft.labelers.RegexLabeler.labelOf(cell(c)))) ++
+        dtFormatCols.flatMap(c => formats.map(f => when(col("i") < dtN,
+          graft.functions.DatetimeFormats.matches(cell(c), f))))
+      if (exprs.isEmpty) Array.empty[Row]
+      else local.select(exprs: _*).collect()
     }
-    (dtFormats, strDtStats)
+
+    val labelVotes = labelCols.zipWithIndex.map { case (c, j) =>
+      c -> out.flatMap(r => Option(r.getString(j)))
+        .groupMapReduce(identity)(_ => 1L)(_ + _)
+    }.filter(_._2.nonEmpty).toMap
+    val dtFormats = dtFormatCols.zipWithIndex.map { case (c, j) =>
+      val base = labelCols.size + j * formats.size
+      c -> formats.indices.filter(i =>
+        out.exists(r => !r.isNullAt(base + i) && r.getBoolean(base + i)))
+        .map(formats(_).java)
+    }.toMap
+    HeadPasses(labelVotes, dtFormats, exemplars)
   }
 
-  /** Pass 8 (shared): 5 exemplar values per column from a bounded head
-    * sample (profile_builder.py:665-668). */
-  private def exemplarsOf(df: DataFrame,
-      fields: Seq[StructField]): Map[String, Seq[String]] = {
-    val exemplarRows = df.limit(100).collect()
-    fields.zipWithIndex.map { case (f, idx) =>
-      f.name -> exemplarRows.iterator
-        .map(_.get(idx)).filter(_ != null).map(_.toString)
-        .toSeq.distinct.take(5)
-    }.toMap
+  /** Pass 7 (shared): parsed min/max and distinct days of each string
+    * column with at least one discovered format, parsing under ONLY its
+    * discovered formats (no 16-way coalesce on the full data). */
+  private def datetimeExtremes(df: DataFrame,
+      dtFormats: Map[String, Seq[String]],
+      opts: ProfilerOptions): Map[String, DatetimeStats] = {
+    val parseCols = dtFormats.filter(_._2.nonEmpty)
+    if (parseCols.isEmpty) Map.empty
+    else {
+      val aggs = parseCols.toSeq.flatMap { case (c, fmts) =>
+        val parsed = coalesce(fmts.map(fm =>
+          try_to_timestamp(col(c), lit(fm))): _*)
+        Seq(
+          date_format(min(parsed), "yyyy-MM-dd HH:mm:ss")
+            .as(s"${c}__smints"),
+          date_format(max(parsed), "yyyy-MM-dd HH:mm:ss")
+            .as(s"${c}__smaxts"),
+          distinctDays(parsed, opts).as(s"${c}__sndays"))
+      }
+      val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+      parseCols.keySet.flatMap { c =>
+        Option(r.getAs[String](s"${c}__smints")).map(mn =>
+          c -> DatetimeStats(mn, r.getAs[String](s"${c}__smaxts"),
+            r.getAs[Long](s"${c}__sndays")))
+      }.toMap
+    }
   }
 
   private def isNumeric(t: DataType): Boolean = t match {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSessions, SparkSession}
 import graft.profiler.{Profile, Profiler, ProfilerOptions}
 
 /** Rolling profile over a Structured Streaming source — the engine's
@@ -26,15 +26,37 @@ import graft.profiler.{Profile, Profiler, ProfilerOptions}
   * State is one Profile per profiler (bounded: capped category maps,
   * fixed-width histograms, 24-entry label votes) — no per-row state, so
   * arbitrarily long streams hold O(columns) memory.
+  *
+  * Session contract: micro-batches are profiled on the session that was
+  * active (else the default one) when this profiler was constructed,
+  * not on the stream's own session. A stream runs on a clone session
+  * created anew at every `start()`, and each session has its own
+  * executor class loader, which keys Spark's codegen cache — so
+  * profiling on the clone recompiled every generated class of the
+  * profile on every query. [[sink]] re-binds the batch's plan onto the
+  * captured session without converting its rows. With no session
+  * active at construction, the batch's own session is used.
+  *
+  * AQE note: a profile turns `spark.sql.adaptive.enabled` off for its
+  * duration on the session it runs on (see [[Profiler.profile]]), so
+  * while a micro-batch is being profiled that flip is visible on the
+  * constructing session — exactly as during a batch `Profiler.profile`
+  * call there. Queries run concurrently on that session should use their
+  * own `newSession()`.
   */
 final class StreamingProfiler(opts: ProfilerOptions = ProfilerOptions()) {
 
   @volatile private var state: Option[Profile] = None
 
+  private val session: Option[SparkSession] =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+
   /** foreachBatch-compatible sink. Batches are profiled sequentially
     * (foreachBatch serializes calls), so plain volatile state suffices. */
   def sink: (DataFrame, Long) => Unit = (batch, _) => {
-    if (!batch.isEmpty) state = Some(Profiler.update(state, batch, opts))
+    val rebound = session.fold(batch)(
+      GraftSessions.ofRows(_, batch.queryExecution.logical))
+    if (!rebound.isEmpty) state = Some(Profiler.update(state, rebound, opts))
   }
 
   def current: Option[Profile] = state

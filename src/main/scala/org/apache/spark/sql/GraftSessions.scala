@@ -1,0 +1,19 @@
+package org.apache.spark.sql
+
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+/** Bridge to two private[sql] session hooks the library needs. */
+object GraftSessions {
+
+  /** `plan` as a DataFrame of `session` — how a frame built on one
+    * session (a stream's per-query clone, say) is re-bound onto another
+    * without converting its rows (`classic.Dataset.ofRows` is
+    * private[sql]). */
+  def ofRows(session: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
+
+  /** Run `f` with `session` as the thread's active session, restoring
+    * the previous one after (`SparkSession.withActive` is private[sql]). */
+  def withActive[T](session: SparkSession)(f: => T): T =
+    session.withActive(f)
+}

@@ -76,8 +76,8 @@ class ColumnStatSpec extends AnyFunSuite {
   test("profiler plans: no HLL++ day count, no per-character explode") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.{
       HllSketchAgg, HyperLogLogPlusPlus}
-    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution,
-      SparkPlan}
+    import org.apache.spark.sql.execution.{CollectLimitExec, GenerateExec,
+      GlobalLimitExec, LocalLimitExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.ScalaAggregator
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -92,11 +92,13 @@ class ColumnStatSpec extends AnyFunSuite {
       timestamp_seconds(lit(978307200L) + (col("id") * 13 % 1700) * 86400L +
         col("id") % 86400L).as("ts"),
       concat(lit("word "), col("id").cast("string"), lit(" é")).as("txt"))
-    // labels off (profileSplit requires it) and a category cap below every
-    // column's cardinality: the labeler sample and the category melt are
-    // the passes that explode legitimately, so with both idle any
-    // GenerateExec left would be the vocab pass
-    val opts = ProfilerOptions(computeLabels = false, maxCategories = 10)
+    // a category cap below every column's cardinality: the category melt
+    // is the pass that explodes legitimately, so with it idle any
+    // GenerateExec left would be the vocab pass or the labeler. Labels
+    // on for the whole frame (profileSplit requires them off), and the
+    // split key declared bounded so its maxGroups pre-check is skipped
+    val opts = ProfilerOptions(maxCategories = 10)
+    val splitOpts = opts.copy(computeLabels = false, keyDomainBounded = true)
 
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
@@ -108,7 +110,7 @@ class ColumnStatSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     val (whole, split) = try {
       val w = Profiler.profile(df.drop("g"), opts)
-      val sp = Profiler.profileSplit(df, "g", opts)
+      val sp = Profiler.profileSplit(df, "g", splitOpts)
       SparkTestSession.drainListenerBus()
       (w, sp)
     } finally spark.listenerManager.unregister(listener)
@@ -125,6 +127,14 @@ class ColumnStatSpec extends AnyFunSuite {
       "approx_count_distinct (HLL++) planned by the profiler")
     assert(!all.exists(_.isInstanceOf[GenerateExec]),
       "a Generate (explode) planned by the profiler")
+    // a LocalLimit/GlobalLimit names its generated counter from a
+    // JVM-global id, so its stage is new source (a codegen-cache miss)
+    // on every call; the head sample is a CollectLimit instead
+    val limits = all.filter(n =>
+      n.isInstanceOf[LocalLimitExec] || n.isInstanceOf[GlobalLimitExec])
+    assert(limits.isEmpty, s"limit operators planned: ${limits.map(_.nodeName)}")
+    assert(all.exists(_.isInstanceOf[CollectLimitExec]),
+      "head sample not among the captured plans")
     // the capture saw the passes in question
     assert(exprs.exists(_.isInstanceOf[HllSketchAgg]))
     assert(exprs.exists {
@@ -144,6 +154,53 @@ class ColumnStatSpec extends AnyFunSuite {
         s"$c group $k: nDays $est vs exact $exact")
     }
     assert(whole.column("sdt").get.datetime.get.nDays > 1000)
+    // the captured runs did read the head sample: labels, formats, exemplars
+    assert(whole.column("txt").get.labelVotes.nonEmpty)
+    assert(whole.column("sdt").get.datetimeFormats == Seq("yyyy-MM-dd"))
+    assert(split.values.forall(_.column("sdt").get.datetimeFormats.nonEmpty))
+    assert(whole.columns.forall(_.exemplars.nonEmpty))
+  }
+
+  test("profiler plans: streamed micro-batches profile on the constructing session") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.HllSketchAgg
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.streaming.StreamingProfiler
+    val dir = java.nio.file.Files.createTempDirectory("sp-session").toFile
+    val data = new java.io.File(dir, "data").toString
+    val files = 2
+    spark.range(0, 400, 1, files)
+      .select(col("id"), concat(lit("v"), col("id").cast("string")).as("s"))
+      .write.parquet(data)
+
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = execs.add(qe)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = execs.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    val sp = new StreamingProfiler()
+    try {
+      spark.readStream.schema(spark.read.parquet(data).schema)
+        .option("maxFilesPerTrigger", 1).parquet(data)
+        .writeStream.foreachBatch(sp.sink)
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", new java.io.File(dir, "ck").toString)
+        .start().awaitTermination()
+      SparkTestSession.drainListenerBus()
+    } finally spark.listenerManager.unregister(listener)
+    assert(sp.current.map(_.rowCount).contains(400L))
+
+    // pass 1 (the HLL sketches) ran once per micro-batch, and every
+    // profile execution the listener saw was on the constructing session
+    val profileExecs = execs.toArray(Array.empty[QueryExecution]).toSeq
+      .filter(_.optimizedPlan.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[HllSketchAgg]))))
+    assert(profileExecs.size >= files,
+      s"${profileExecs.size} profile executions for $files micro-batches")
+    assert(profileExecs.forall(_.sparkSession eq spark),
+      "a micro-batch profile ran on the stream's clone session")
   }
 
   test("ordinal day suffixes are stripped before format discovery") {

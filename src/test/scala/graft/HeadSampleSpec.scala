@@ -1,0 +1,116 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.{cnt, DatetimeFormats}
+import graft.labelers.RegexLabeler
+import graft.profiler.{Profile, Profiler, ProfilerOptions}
+
+/** Label votes, datetime-format discovery and exemplars all read the
+  * profile's one head sample. Each must equal what its own bounded probe
+  * returned before — a limit()-bounded melt + groupBy for the labeler,
+  * a limit(50) aggregate for the formats, a limit(100) collect for the
+  * exemplars. Those three formulations live on here only, as the
+  * reference. */
+class HeadSampleSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  /** The old pass 4: labels of the first `labelerSampleSize` rows. */
+  private def limitLabelVotes(df: DataFrame, stringCols: Seq[String],
+      opts: ProfilerOptions): Map[String, Map[String, Long]] =
+    df.select(stringCols.map(col): _*).limit(opts.labelerSampleSize)
+      .select(explode(array(stringCols.map(c =>
+        struct(lit(c).as("k"), col(c).cast("string").as("v"))): _*)).as("kv"))
+      .select(col("kv.k"), RegexLabeler.labelOf(col("kv.v")).as("label"))
+      .filter(col("label").isNotNull)
+      .groupBy("k", "label").agg(count(lit(1)).as("c"))
+      .collect()
+      .groupBy(_.getString(0)).map { case (k, rows) =>
+        k -> rows.map(r => r.getString(1) -> r.getLong(2)).toMap
+      }
+
+  /** The old pass-7 discovery: formats matching any of the first 50 rows. */
+  private def limitFormats(df: DataFrame, c: String): Seq[String] = {
+    val fmts = DatetimeFormats.formats
+    val aggs = fmts.zipWithIndex.map { case (f, i) =>
+      cnt(DatetimeFormats.matches(col(c), f)).as(s"f$i")
+    }
+    val r = df.select(col(c)).limit(50).agg(aggs.head, aggs.tail: _*).head()
+    fmts.indices.filter(i => r.getLong(i) > 0).map(fmts(_).java)
+  }
+
+  /** The old pass 8: 5 distinct values per column of the first 100 rows. */
+  private def limitExemplars(df: DataFrame): Map[String, Seq[String]] = {
+    val rows = df.limit(100).collect()
+    df.schema.fieldNames.zipWithIndex.map { case (f, i) =>
+      f -> rows.iterator.map(_.get(i)).filter(_ != null).map(_.toString)
+        .toSeq.distinct.take(5)
+    }.toMap
+  }
+
+  // One partition, 1500 rows (past the default labelerSampleSize), two
+  // split groups. `d` is yyyy-MM-dd for its first 200 rows (so in both
+  // groups' first 50) and MM/dd/yyyy after: the late format must stay
+  // undiscovered. Nulls sit in every column, some among the first rows.
+  private def fixture: DataFrame = {
+    val kinds = Seq("a%d@example.com", "%d", "555-01%02d", "word%d", "%d.5")
+    val rows = (0 until 1500).map { i =>
+      Row(
+        (i % 2).toLong,
+        if (i % 11 == 3) null else kinds(i / 7 % kinds.size).format(i % 100),
+        if (i % 13 == 5) null
+        else if (i < 200) f"2021-${i % 12 + 1}%02d-${i % 28 + 1}%02d"
+        else f"${i % 12 + 1}%02d/${i % 28 + 1}%02d/2022",
+        if (i % 17 == 0) null else java.lang.Long.valueOf(i * 31L % 97))
+    }
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      StructType(Seq(StructField("g", LongType), StructField("s", StringType),
+        StructField("d", StringType), StructField("x", LongType))))
+  }
+
+  private def assertMatchesProbes(p: Profile, df: DataFrame,
+      labels: Option[ProfilerOptions], what: String): Unit = {
+    val ex = limitExemplars(df)
+    p.columns.foreach(c =>
+      assert(c.exemplars == ex(c.name), s"$what ${c.name} exemplars"))
+    assert(p.column("d").get.datetimeFormats == limitFormats(df, "d"), what)
+    assert(p.column("d").get.datetimeFormats == Seq("yyyy-MM-dd"), what)
+    labels.foreach { opts =>
+      val votes = limitLabelVotes(df, Seq("s", "d"), opts)
+      for (c <- Seq("s", "d"))
+        assert(p.column(c).get.labelVotes == votes.getOrElse(c, Map.empty),
+          s"$what $c label votes")
+      assert(p.column("s").get.labelVotes.values.sum ==
+        df.limit(opts.labelerSampleSize).filter(col("s").isNotNull).count(),
+        s"$what: labels read exactly the first labelerSampleSize rows")
+    }
+  }
+
+  test("profile: head-sample passes equal the three limit probes") {
+    val df = fixture.drop("g")
+    assert(df.rdd.getNumPartitions == 1)
+    // 1000: the labeler sets the sample size; 60: the exemplars do, and
+    // the labeler must still read only its first 60 rows
+    for (n <- Seq(1000, 60)) {
+      val opts = ProfilerOptions(labelerSampleSize = n)
+      assertMatchesProbes(Profiler.profile(df, opts), df, Some(opts),
+        s"labelerSampleSize=$n")
+    }
+    // labels off: the sample is sized by the exemplars alone
+    val noLabels = Profiler.profile(df, ProfilerOptions(computeLabels = false))
+    assert(noLabels.columns.forall(_.labelVotes.isEmpty))
+    assertMatchesProbes(noLabels, df, None, "labels off")
+  }
+
+  test("profileSplit: per-group head samples equal the per-group probes") {
+    val df = fixture
+    val split = Profiler.profileSplit(df, "g",
+      ProfilerOptions(computeLabels = false, keyDomainBounded = true))
+    assert(split.keySet == Set(0L, 1L))
+    for ((k, p) <- split)
+      assertMatchesProbes(p, df.filter(col("g") === k).drop("g"), None,
+        s"group $k")
+  }
+}

@@ -198,7 +198,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
         case h: ResolvedHint if scansFact(h.child) => h.child
       }
     def count(p: LogicalPlan): Long =
-      org.apache.spark.sql.GraftExtensionsBridge.ofRows(spark, p).count()
+      org.apache.spark.sql.GraftSessions.ofRows(spark, p).count()
     // the triangle pipeline is eager in production (caches +
     // localCheckpoint), so its declarative twin joins the sweep
     // explicitly — this is the query whose round-8 plan this gate

@@ -10,13 +10,6 @@ object GraftExtensionsBridge {
   def register(ext: SparkSessionExtensions, reg: FunctionRegistry): Unit =
     ext.registerFunctions(reg)
 
-  /** `classic.Dataset` is private[sql]; the broadcast-scaling plan gate
-    * needs to evaluate a hinted SUBTREE of an analyzed plan as its own
-    * DataFrame to count its rows across scale factors. */
-  def ofRows(spark: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
   /** Force-compile every WholeStageCodegen stage of `df`'s executed
     * plan through Janino (the exact source + compiler path of a real
     * run) and return the compiled stages. Throws on ANY compile
