@@ -155,12 +155,10 @@ object CurationQueries extends QueryModule {
     // there is nothing for adaptive re-planning to coalesce or
     // skew-split at ANY scale, and AQE's per-exchange stage
     // materialization costs one extra job + scheduling barrier per GD
-    // round (trace: 2 jobs/round → 1). Session value saved/restored;
-    // results are plan-independent (exact long sums) and hash-verified.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = s.conf.get(aqeKey)
-    s.conf.set(aqeKey, "false")
-    try {
+    // round (trace: 2 jobs/round → 1). Scoped by SessionConfs.withConf
+    // (an unset key is restored as unset); results are plan-independent
+    // (exact long sums) and hash-verified.
+    graft.SessionConfs.withConf(s, "spark.sql.adaptive.enabled", "false") {
       for (t <- 1 to ClfIters) {
         val sums = score(w, bias)
           .select(col("bs"), round(col("g") * 1e6).cast("long").as("gs"))
@@ -177,7 +175,7 @@ object CurationQueries extends QueryModule {
           }.toMap
         bias = round8(bias - lr * (sums(ClfBuckets).toDouble / 1e6) / nDocs)
       }
-    } finally s.conf.set(aqeKey, aqePrev)
+    }
 
     score(w, bias)
       .groupBy("y")

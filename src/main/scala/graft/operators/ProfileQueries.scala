@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSessions, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.profiler.{Codec, Profiler, ProfilerOptions}
@@ -694,11 +694,16 @@ object ProfileQueries extends QueryModule {
       computeVocab = false, computeExemplars = false,
       keyDomainBounded = true)
     val slots = scala.collection.mutable.Map[Long, graft.profiler.Profile]()
-    val sink: (DataFrame, Long) => Unit = (batch, _) =>
+    // each micro-batch is re-bound onto `s` (as StreamingProfiler.sink
+    // does): the stream's per-start() clone session has its own executor
+    // class loader, so profiling there recompiles every generated class
+    val sink: (DataFrame, Long) => Unit = (batch0, _) => {
+      val batch = GraftSessions.ofRows(s, batch0.queryExecution.logical)
       if (!batch.isEmpty)
         Profiler.profileSplit(batch, "y", opts).foreach { case (yy, p) =>
           slots(yy) = slots.get(yy).map(_.merge(p)).getOrElse(p)
         }
+    }
     val schema = s.read.parquet(stage).schema
     val q = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(stage)

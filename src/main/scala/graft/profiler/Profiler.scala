@@ -74,10 +74,6 @@ final case class ProfilerOptions(
       * column falls back to the GK sketch — the same early-abandon shape
       * as the categorical stop-condition. */
     exactQuantileNdvCap: Long = graft.functions.ExactQuantiles.DefaultNdvCap,
-    /** true: histograms via the mergeable HistogramAgg custom aggregate
-      * fused into pass 1 (one scan total for all numeric stats); false:
-      * a separate exact-range width_bucket pass after min/max are known. */
-    singlePassHistograms: Boolean = true,
     /** Global null-sentinel override (profile_builder.py:107-122
       * `null_values`): a regex; string cells matching it are treated as
       * null by EVERY stat in the profile. None = only physical nulls
@@ -94,11 +90,10 @@ final case class ProfilerOptions(
       * one WIDE row per key (HLL sketches + histogram buffers + quantile
       * arrays, ~tens of KB each) and the grouped order pass collects
       * O(partitions × keys × columns) summaries — a high-cardinality id
-      * column would OOM the driver instead of erroring. Enforced inside
-      * pass 1 itself (a CollectLimit over the grouped aggregation caps
-      * the driver fetch at maxGroups+1 rows, then an exact length check
-      * errors), so the guard costs zero extra jobs and every later
-      * per-key pass inherits the bound. */
+      * column would OOM the driver instead of erroring. Enforced before
+      * pass 1 by a narrow exact count of the distinct keys (one
+      * column-pruned scan, one long to the driver), unless
+      * [[keyDomainBounded]] skips it. */
     maxGroups: Int = 4096,
     /** Sibling aggregates per pass-1 job. One mega-aggregate generates an
       * update method past the JVM's 8 KB JIT threshold and runs as
@@ -110,16 +105,12 @@ final case class ProfilerOptions(
     /** Caller CONTRACT flag for [[Profiler.profileSplit]]: true asserts
       * the split key's cardinality is bounded by construction (an
       * arithmetic image like `x % k`, a boolean cast, a calendar year —
-      * every ProfileQueries composite), so the defensive narrow
-      * distinct-count pre-pass that [[maxGroups]] otherwise pays is
-      * skipped. That pre-pass is one full (column-pruned) scan of the
-      * input PER profileSplit CALL — at corpus scale a real pass, at
-      * bench scale 3 AQE jobs per call (r20, guide §1.2: the count is
-      * computed only to be thrown away when the caller already knows
-      * the bound). A wrong assertion is still caught by an exact
-      * post-collect require (after the collect, so it protects
-      * correctness, not driver memory — which is why the flag defaults
-      * to false and is opt-in per call site). */
+      * every ProfileQueries composite), so the [[maxGroups]] distinct
+      * count, one narrow scan of the input per call, is skipped. A wrong
+      * assertion is still caught by an exact require after pass 1's
+      * collect (so it protects correctness and the later passes, not
+      * pass 1's driver memory — which is why the flag defaults to false
+      * and is opt-in per call site). */
     keyDomainBounded: Boolean = false,
     /** Head-sample exemplars (5 distinct values per column from the
       * first 100 rows, profile_builder.py:665-668). They read the
@@ -141,18 +132,22 @@ final case class ProfilerOptions(
 /** Computes a mergeable [[Profile]] of any DataFrame.
   *
   * Execution shape (SURVEY §3 "Spark shape"): the reference's per-column
-  * process pools collapse into
-  *   pass 1 — ONE `df.agg` where every column contributes sibling aggregate
-  *            expressions (count/null/moments/minmax/ndv/quantiles/type
-  *            ratios + table-level row stats + correlation co-moments);
-  *            Catalyst fuses them into a single scan with map-side partial
-  *            aggregation, so cost is one read of the data at any scale.
+  * process pools collapse into ONE pass-set, run either on the whole
+  * frame ([[profile]]) or grouped by an integral split key
+  * ([[profileSplit]]). Every aggregating pass groups with
+  * `groupBy(key.toSeq: _*)`: with no key that is exactly `df.agg` — a
+  * global aggregation with a single-partition final and one result row
+  * even on empty input; with a key, the same expressions yield one row
+  * per group, so the scan count is independent of the number of groups.
+  *   pass 1 — the fused aggregation: every column contributes sibling
+  *            aggregate expressions (count/null/moments/minmax/ndv/
+  *            quantiles/histogram buffers/type ratios + table-level row
+  *            stats + correlation co-moments); Catalyst fuses them into
+  *            one scan per chunk with map-side partial aggregation.
   *   pass 2 — category counts for low-cardinality string columns, one
   *            melt + groupBy (skipped when nothing qualifies).
-  *   pass 3 — fixed-width histogram bucket counts for numeric columns
-  *            (bounds from pass 1), one melt + groupBy.
-  *   pass 4 — one head sample, `df.head(n)` (a CollectLimit: no generated
-  *            limit counter), feeding label votes (first
+  *   pass 4 — one head sample per group, `df.head(n)` (a CollectLimit:
+  *            no generated limit counter), feeding label votes (first
   *            labelerSampleSize rows), datetime-format discovery (first
   *            50) and exemplars (first 100); the label and format rules
   *            run in one projection over the sample as a LocalRelation,
@@ -161,10 +156,12 @@ final case class ProfilerOptions(
   *            aggregate per string column, no per-character rows.
   *   pass 6 — natural-order detection, one map-only scan.
   *   pass 7 — parsed min/max/distinct days of string columns under the
-  *            formats pass 4 discovered, one aggregation.
-  * Nothing unbounded is collected: category maps are capped, histograms are
-  * fixed-width, quantiles use percentile_approx (GK sketch), and the head
-  * sample is at most max(labelerSampleSize, 100) rows.
+  *            formats pass 4 discovered, one aggregation per group.
+  * Pass 1 runs first (its chunks concurrently); passes 2, 5, 6 and the
+  * per-group 4 + 7 then run as concurrent actions. Nothing unbounded is
+  * collected: category maps are capped, histograms are fixed-width,
+  * quantiles use percentile_approx (GK sketch), and the head sample is
+  * at most max(labelerSampleSize, 100) rows.
   */
 object Profiler {
 
@@ -240,17 +237,20 @@ object Profiler {
   def profile(df: DataFrame, opts: ProfilerOptions = ProfilerOptions()): Profile = {
     val names = df.schema.fieldNames
     // duplicates judged case-INSENSITIVELY: Spark's default resolution is
-    // case-insensitive, so "ID" vs "Id" is just as ambiguous as "x" vs "x"
-    if (names.map(_.toLowerCase).distinct.length == names.length)
-      return profileImpl(df, opts)
-    // duplicate column names (legal in Spark schemas, e.g. post-join):
-    // profile under positional unique aliases and restore the originals
-    // afterward — the reference's name→indices multimap equivalent
+    // case-insensitive, so "ID" vs "Id" is just as ambiguous as "x" vs "x".
+    // Duplicate column names (legal in Spark schemas, e.g. post-join) are
+    // profiled under positional unique aliases and restored afterward —
+    // the reference's name→indices multimap equivalent
     // (profile_builder.py:1972-2045). Correlation keys are restored too;
     // a same-name numeric pair keeps the last entry.
+    val dup = names.map(_.toLowerCase).distinct.length != names.length
     val uniq = names.zipWithIndex.map { case (nm, i) => s"${nm}__pos$i" }
+    val src = applyNullValues(if (dup) df.toDF(uniq: _*) else df, opts)
+    val p = withAqeOff(df.sparkSession) {
+      passSet(src, src.schema.fields.toSeq, None, opts)(0L)
+    }
+    if (!dup) return p
     val restore = uniq.zip(names).toMap
-    val p = profileImpl(df.toDF(uniq: _*), opts)
     p.copy(
       columns = p.columns.map(c =>
         c.copy(name = restore.getOrElse(c.name, c.name))),
@@ -292,15 +292,13 @@ object Profiler {
       .values.toSeq.sortBy(_.name)
 
   /** Pass-1 sibling aggregate expressions for `fields` (per-column stats
-    * + table-level row stats, NOT correlation pairs) — shared between the
-    * whole-frame path ([[profileImpl]]) and the grouped split path
-    * ([[profileSplit]]), where the same expressions run under a
-    * `groupBy(splitKey)` so every group's profile comes from ONE scan. */
+    * + table-level row stats, NOT correlation pairs). Under a split key
+    * the same expressions run grouped, so every group's profile comes
+    * from ONE scan. */
   private def pass1Cols(fields: Seq[StructField], opts: ProfilerOptions,
       statPlugins: Seq[graft.plugins.ColumnStatPlugin]): Seq[Column] = {
     val histUdaf =
-      if (opts.computeHistograms && opts.singlePassHistograms)
-        Some(udaf(new HistogramAgg(opts.histogramBins)))
+      if (opts.computeHistograms) Some(udaf(new HistogramAgg(opts.histogramBins)))
       else None
     val mgUdaf = udaf(new MisraGriesAgg(opts.hhCandidates))
     val perCol: Seq[Column] = fields.flatMap { f =>
@@ -382,10 +380,10 @@ object Profiler {
     hll_sketch_estimate(
       hll_sketch_agg(unix_date(to_date(x)), lit(opts.ndvLgK)))
 
-  /** Pass 5 (shared): the code-point vocabulary of every string column,
-    * one [[CodePointVocabAgg]] per column in one aggregation — global
-    * when `key` is None (the whole frame, returned under key 0), else
-    * grouped by `key` (one result row per split group). */
+  /** Pass 5: the code-point vocabulary of every string column, one
+    * [[CodePointVocabAgg]] per column in one aggregation — global when
+    * `key` is None (the whole frame, returned under key 0), else grouped
+    * by `key` (one result row per split group). */
   private def vocabPass(src: DataFrame, key: Option[Column],
       stringCols: Seq[String],
       opts: ProfilerOptions): Map[Long, Map[String, Set[String]]] = {
@@ -400,8 +398,8 @@ object Profiler {
       }.toMap
   }
 
-  /** Two-regime chunking of pass-1 aggregates, shared by the whole-frame
-    * and split paths (see ProfilerOptions.aggChunkSize): object/
+  /** Two-regime chunking of pass-1 aggregates (see
+    * ProfilerOptions.aggChunkSize): object/
     * imperative aggregates (sketches, histogram Aggregator, CMS, HLL)
     * never whole-stage-codegen and all go in ONE job; declarative
     * aggregates chunk to stay under the JIT method threshold. A marker
@@ -423,106 +421,45 @@ object Profiler {
     * of one frame" that [[graft.operators.ProfileQueries]]' merge/diff
     * composites and any partitioned-dataset profiling job want. Running
     * `profile(df.filter(key === k))` k times scans the data k times and
-    * pays k× the per-job scheduler cost; here pass 1 (the fused
-    * aggregation), pass 2 (categories) and pass 5 (vocab) each run once
-    * under `groupBy(splitKey)` — identical aggregate expressions, same
-    * map-side partial aggregation, k result rows instead of one — so
-    * the scan count is independent of k. The head sample (datetime
-    * discovery, exemplars) and the parsed datetime extremes stay
-    * per-group, preserving profile()'s head-sample semantics exactly.
-    *
-    * Surface: labels must be off (genuinely whole-frame-shaped — a
-    * separate bounded-sample scan); histograms ride the grouped pass 1
-    * in single-pass mode (r14), natural-order detection runs as ONE
-    * grouped forward pass (r14, OrderDetect.detectNaturalSplit), and
-    * correlation co-moments ride the grouped pass 1 (r15) — all equal
-    * their per-slice profile() results exactly
-    * (ProfileSplitSpec). Vocab row-sampling uses a
-    * per-group Bernoulli `rand(42)` filter rather than `df.sample`'s
-    * per-partition sampler — same contract (sampled vocab ⊆ true
-    * vocab), different draw.
+    * pays k× the per-job scheduler cost; here the aggregating passes
+    * each run once under `groupBy(splitKey)` — identical aggregate
+    * expressions, same map-side partial aggregation, k result rows
+    * instead of one — so the scan count is independent of k. The head
+    * sample (labels, datetime discovery, exemplars) and the parsed
+    * datetime extremes stay per-group, preserving profile()'s
+    * head-sample semantics exactly, and natural-order detection runs as
+    * ONE grouped forward pass (OrderDetect.detectNaturalSplit) — all
+    * equal their per-slice profile() results (ProfileSplitSpec). Vocab
+    * row-sampling draws the same per-row `rand(42)` Bernoulli filter
+    * profile() does, at each over-budget group's own fraction.
     *
     * Returns one Profile per key VALUE (cast to long); a key absent
-    * from the result had zero rows. `splitCol` itself is not profiled. */
+    * from the result had zero rows, and null keys are excluded.
+    * `splitCol` itself is not profiled. */
   def profileSplit(df0: DataFrame, splitCol: String,
       opts: ProfilerOptions = ProfilerOptions()): Map[Long, Profile] =
-    withAqeOff(df0.sparkSession) { profileSplitImpl(df0, splitCol, opts) }
-
-  private def profileSplitImpl(df0: DataFrame, splitCol: String,
-      opts: ProfilerOptions): Map[Long, Profile] = {
-    require(!opts.computeLabels,
-      "profileSplit covers the per-group profile surface: labels are " +
-        "whole-frame-shaped (a separate bounded-sample scan) and must " +
-        "be disabled")
-    require(!opts.computeHistograms || opts.singlePassHistograms,
-      "profileSplit histograms require singlePassHistograms: the " +
-        "two-pass width_bucket mode is whole-frame-shaped; the " +
-        "HistogramAgg buffers ride the grouped pass 1 instead")
-    val t0 = System.currentTimeMillis()
-    val dfAll = applyNullValues(df0, opts)
-    val fields = dfAll.schema.fields.toSeq.filterNot(_.name == splitCol)
-    require(fields.size + 1 == dfAll.schema.size,
-      s"split column `$splitCol` not found in ${dfAll.schema.fieldNames.toSeq}")
-    val keyField = dfAll.schema(splitCol)
-    require(isIntegral(keyField.dataType),
-      s"split column `$splitCol` must be integral " +
-        s"(got ${keyField.dataType.simpleString}): a lossy cast would " +
-        "silently merge distinct keys")
-    val key = col(splitCol).cast("long")
-    // null keys are EXCLUDED everywhere (groupBy would keep a null group
-    // that the per-group tail filters could never see — an internally
-    // inconsistent Profile); callers split on derived non-null keys
-    val df = dfAll.filter(key.isNotNull)
-    val statPlugins = activePlugins
-    val stringCols = fields.filter(_.dataType == StringType).map(_.name)
-
-    // ---- pass 1: the fused aggregation, grouped by the split key ------
-    // Correlation rides the same grouped pass: the pairwise co-moment
-    // aggregates are ordinary sibling expressions, so under groupBy(key)
-    // each group gets its own mergeable matrix state — identical to what
-    // the per-slice profile() computes, at zero extra scans.
-    val (corrPairs, corrAggs) = corrPairsAndAggs(
-      fields.filter(f => isNumeric(f.dataType)).map(_.name), opts)
-    val chunks = pass1Chunks(
-      pass1Cols(fields, opts, statPlugins) ++ corrAggs, opts)
-    val valsByKey: Map[Long, Map[String, Any]] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      // Key-domain guard (ProfilerOptions.maxGroups), enforced by one
-      // EXACT narrow pre-check BEFORE any wide state ships: a
-      // distinct+limit over just the key column bounds the driver fetch
-      // at P × (maxGroups+1) EIGHT-BYTE rows (trivial at any sane P/cap),
-      // so a caller who splits on a high-cardinality id column gets a
-      // fast, exact error instead of a driver OOM. The r15 formulation
-      // put the limit on the WIDE grouped aggregation instead — "zero
-      // extra scans", but its one-wave fetch could buffer
-      // P × (maxGroups+1) wide rows (HLL sketches + histogram buffers +
-      // quantile arrays per key) on the driver in the misuse case, i.e.
-      // GBs at P=32, cap=4096 — the very failure the guard exists for.
-      // One extra narrow pass of the input (column-pruned to the key at
-      // the parquet scan) buys the hard driver bound; the wide chunks
-      // then collect() PLAIN — no limit machinery, no extra reduce
-      // waves — which roughly offsets the added pass in the happy path.
-      // Executors still aggregate every group, which is distributed and
-      // safe; the hazard being bounded is the driver-side collect. The
-      // later passes (categories, vocab, order summaries — the
-      // O(P × keys × columns) collect) all key off this pass's result,
-      // so they inherit the bound. Counting the limited distinct (not
-      // collecting it) keeps even the pre-check's driver traffic to a
-      // single long: the partial-agg'd distinct local-limits each map
-      // partition to cap+1 keys, the single-partition exchange under
-      // GlobalLimit carries ≤ P × (cap+1) 8-byte rows on one EXECUTOR,
-      // and the count is exact because the limit can only truncate
-      // beyond cap+1 — precisely the region where the require fires
-      // anyway.
-      // keyDomainBounded (r20): callers whose key is bounded by
-      // construction skip this pre-pass — one fewer full narrow scan
-      // of the input per call; the exact require after the collect
-      // below still catches a wrong assertion (loudly, post-hoc).
+    withAqeOff(df0.sparkSession) {
+      val dfAll = applyNullValues(df0, opts)
+      val fields = dfAll.schema.fields.toSeq.filterNot(_.name == splitCol)
+      require(fields.size + 1 == dfAll.schema.size,
+        s"split column `$splitCol` not found in ${dfAll.schema.fieldNames.toSeq}")
+      val keyField = dfAll.schema(splitCol)
+      require(isIntegral(keyField.dataType),
+        s"split column `$splitCol` must be integral " +
+          s"(got ${keyField.dataType.simpleString}): a lossy cast would " +
+          "silently merge distinct keys")
+      val key = col(splitCol).cast("long")
+      // null keys are EXCLUDED everywhere (groupBy would keep a null group
+      // that the per-group tail filters could never see — an internally
+      // inconsistent Profile); callers split on derived non-null keys
+      val df = dfAll.filter(key.isNotNull)
+      // Key-domain guard (ProfilerOptions.maxGroups): a narrow exact
+      // count of the distinct keys BEFORE any wide state ships, so a
+      // caller who splits on a high-cardinality id column gets a fast,
+      // exact error instead of a driver OOM from pass 1's one wide row
+      // per key. Only one long reaches the driver.
       if (!opts.keyDomainBounded) {
-        val nKeys = df.select(key.as("__split")).distinct()
-          .limit(opts.maxGroups + 1).count()
+        val nKeys = df.select(key).distinct().count()
         require(nKeys <= opts.maxGroups,
           s"profileSplit key `$splitCol` has more than " +
             s"ProfilerOptions.maxGroups=${opts.maxGroups} distinct " +
@@ -531,11 +468,40 @@ object Profiler {
             "category/vocab/order state). Split on a coarser derived " +
             "key, or raise maxGroups if the driver is sized for it")
       }
+      passSet(df, fields, Some(key), opts)
+    }
+
+  /** The profiler's one pass-set over `fields` of `df`: whole-frame when
+    * `key` is None (the result holds one Profile, under key 0), else one
+    * Profile per value of the long-typed `key`. Runs inside the caller's
+    * [[withAqeOff]] scope. */
+  private def passSet(df: DataFrame, fields: Seq[StructField],
+      key: Option[Column], opts: ProfilerOptions): Map[Long, Profile] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val t0 = System.currentTimeMillis()
+    val statPlugins = activePlugins
+    val numericCols = fields.filter(f => isNumeric(f.dataType)).map(_.name)
+    val stringCols = fields.filter(_.dataType == StringType).map(_.name)
+    val grouping = key.map(_.as("__split")).toSeq
+    def keyOf(r: Row): Long = if (key.isDefined) r.getLong(0) else 0L
+
+    // ---- pass 1: the fused aggregation --------------------------------
+    // Correlation rides the same pass: the pairwise co-moment aggregates
+    // are ordinary sibling expressions, so under a key each group gets
+    // its own mergeable matrix state at zero extra scans. The chunks
+    // (pass1Chunks) submit CONCURRENTLY: each scans only its own
+    // columns, so overlapping them pipelines I/O and keeps all cores
+    // busy.
+    val (corrPairs, corrAggs) = corrPairsAndAggs(numericCols, opts)
+    val chunks = pass1Chunks(
+      pass1Cols(fields, opts, statPlugins) ++ corrAggs, opts)
+    val valsByKey: Map[Long, Map[String, Any]] = {
       val futs = chunks.map(ch => Future {
-        df.groupBy(key.as("__split")).agg(ch.head, ch.tail: _*)
-          .collect()
+        df.groupBy(grouping: _*).agg(ch.head, ch.tail: _*).collect()
           .map { r =>
-            r.getLong(0) -> r.schema.fieldNames.toSeq.zipWithIndex.drop(1)
+            keyOf(r) -> r.schema.fieldNames.toSeq.zipWithIndex.drop(key.size)
               .map { case (n, i) => n -> r.get(i) }
           }.toSeq
       })
@@ -543,8 +509,8 @@ object Profiler {
         .flatten
         .groupBy(_._1).view.mapValues(_.flatMap(_._2).toMap).toMap
     }
-    require(valsByKey.size <= opts.maxGroups,
-      s"profileSplit key `$splitCol` realized ${valsByKey.size} distinct " +
+    require(key.isEmpty || valsByKey.size <= opts.maxGroups,
+      s"profileSplit key ${key.get} realized ${valsByKey.size} distinct " +
         s"values > maxGroups=${opts.maxGroups} — the keyDomainBounded " +
         "assertion at this call site is wrong")
     val keys = valsByKey.keys.toSeq.sorted
@@ -556,152 +522,154 @@ object Profiler {
     def ndvOf(k: Long, c: String): Long =
       Option(valsByKey(k)(s"${c}__ndvsk").asInstanceOf[Array[Byte]])
         .map(HllOps.estimate).getOrElse(0L)
+    def rowsOf(k: Long): Long = valsByKey(k)("__rowcount").asInstanceOf[Long]
     val t1 = System.currentTimeMillis()
 
-    // ---- passes 2 + 5 + per-group 7/8: independent actions, submitted
-    // concurrently (the same overlap the old per-slice futures had) ----
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
+    // ---- passes 2, 5, 6 and the per-group 4 + 7: independent actions,
+    // submitted concurrently, each timing itself ----
+    def timed[T](f: => T): Future[(T, Long)] = Future {
+      val start = System.currentTimeMillis()
+      val r = f
+      (r, System.currentTimeMillis() - start)
+    }
 
-    // pass 2: category maps, grouped. Qualification is PER GROUP (a
-    // column can be categorical in one chunk and over-cap in another);
-    // the melt covers the union and the qualification filter runs
-    // INSIDE the query (catMelt), so only qualifying (group, column)
-    // pairs are ever counted, shuffled, or collected.
+    // pass 2: category maps. Qualification is PER GROUP (a column can be
+    // categorical in one chunk and over-cap in another); see catMelt.
     val catColsByKey: Map[Long, Seq[String]] = keys.map(k => k ->
       stringCols.filter(c =>
         opts.computeCategories && ndvOf(k, c) <= opts.maxCategories)).toMap
-    val catFut: Future[Map[Long, Map[String, Map[String, Long]]]] = Future {
-      if (catColsByKey.values.forall(_.isEmpty)) Map.empty
-      else {
-        val melted = catMelt(df, key, catColsByKey).collect()
-        melted.groupBy(_.getLong(0)).map { case (k, rows) =>
-          k -> rows.groupBy(_.getString(1)).map { case (c, rs) =>
-            c -> rs.map(r => r.getString(2) -> r.getLong(3)).toMap
+    val catFut = timed {
+      if (catColsByKey.values.forall(_.isEmpty))
+        Map.empty[Long, Map[String, Map[String, Long]]]
+      else catMelt(df, key, catColsByKey).collect()
+        .groupBy(keyOf).map { case (k, rows) =>
+          k -> rows.groupBy(_.getString(key.size)).map { case (c, rs) =>
+            c -> rs.map(r =>
+              r.getString(key.size + 1) -> r.getLong(key.size + 2)).toMap
           }
         }
-      }
     }
 
-    // pass 6: natural-order detection, grouped — ONE forward pass with
-    // per-partition per-key accumulators (OrderDetect.detectNaturalSplit);
-    // a filter preserves partition structure and row order, so each
-    // group's result is exactly what profile(df.filter(key === k)) sees.
-    // Awaited with cat/vocab, so its wall rides the divided
-    // "categories" window like the other concurrent grouped passes.
-    val ordersFut: Future[Map[Long, Map[String, String]]] = Future {
-      if (!opts.computeOrder) Map.empty
-      else graft.functions.OrderDetect
-        .detectNaturalSplit(
-          df.select((key +: fields.map(f => col(f.name))): _*),
-          fields.map(_.name))
-        .map { case (k, m) =>
-          k -> m.map { case (c, r) => c -> r.order }
-        }
-    }
-
-    // pass 5: char vocabulary, grouped — the whole-frame aggregation
-    // under groupBy(key), one code-point set per (group, column)
-    val vocabFut: Future[Map[Long, Map[String, Set[String]]]] = Future {
-      if (!opts.computeVocab || stringCols.isEmpty) Map.empty
+    // pass 5: char vocabulary. Map-side CPU is O(characters scanned), so
+    // past vocabSampleRows a group's input is a deterministic Bernoulli
+    // sample (a per-row rand(42) filter — the same rows
+    // df.sample(false, f, 42) keeps — at the group's own fraction; no
+    // shuffle), and each value is length-capped. Sampled vocab ⊆ true
+    // vocab; keeping the set makes merge a true set-union
+    // (profiler_utils.py:74-92).
+    val vocabFut = timed {
+      if (!opts.computeVocab || stringCols.isEmpty)
+        Map.empty[Long, Map[String, Set[String]]]
       else {
-        // per-group Bernoulli sampling where a group exceeds the row
-        // budget (the sampled-vocab contract; see scaladoc deviation)
-        val overBudget = keys.filter(k =>
-          valsByKey(k)("__rowcount").asInstanceOf[Long] > opts.vocabSampleRows)
+        val overBudget = keys.filter(rowsOf(_) > opts.vocabSampleRows)
         val src =
           if (overBudget.isEmpty) df
-          else {
-            val frac = overBudget.foldLeft(lit(1.0)) { (acc, k) =>
-              when(key === k, lit(opts.vocabSampleRows.toDouble /
-                valsByKey(k)("__rowcount").asInstanceOf[Long])).otherwise(acc)
-            }
-            df.filter(rand(42) < frac)
-          }
-        vocabPass(src, Some(key.as("__split")), stringCols, opts)
+          else df.filter(rand(42) < overBudget.foldLeft(lit(1.0)) { (acc, k) =>
+            val frac = lit(opts.vocabSampleRows.toDouble / rowsOf(k))
+            key.fold(frac)(kc => when(kc === k, frac).otherwise(acc))
+          })
+        vocabPass(src, grouping.headOption, stringCols, opts)
       }
     }
 
-    // passes 4 + 7 per group (head sample, parsed extremes), each timing
-    // ITSELF so Profile.timings carries that group's own tail cost rather
-    // than an accumulating await (the cat/vocab window runs concurrently
-    // and is attributed once, under "categories"; "vocab" is folded in)
+    // pass 6: natural-order detection, one map-only forward pass with
+    // per-partition (per-key) summaries and a driver seam merge — never
+    // a global sort. A filter preserves partition structure and row
+    // order, so each group's result is exactly what
+    // profile(df.filter(key === k)) sees.
+    val orderFut = timed {
+      if (!opts.computeOrder) Map.empty[Long, Map[String, String]]
+      else {
+        val names = fields.map(_.name)
+        val byKey = key match {
+          case None => Map(0L -> OrderDetect.detectNatural(df, names))
+          case Some(kc) => OrderDetect.detectNaturalSplit(
+            df.select((kc +: names.map(col)): _*), names)
+        }
+        byKey.map { case (k, m) => k -> m.map { case (c, r) => c -> r.order } }
+      }
+    }
+
+    // passes 4 + 7 per group: the head sample (timed as "labeler") and
+    // the parsed extremes under its discovered formats (timed as
+    // "datetime_formats")
+    val labelCols = if (opts.computeLabels) stringCols else Nil
     val tailFuts = keys.map { k =>
       k -> Future {
-        val tStart = System.currentTimeMillis()
-        // no reader of the head sample → zero per-group jobs (and
-        // `slice` stays an unbuilt lazy)
-        lazy val slice = df.filter(key === k)
-          .select(fields.map(f => col(f.name)): _*)
+        // no reader of the head sample → no job, and `slice` stays an
+        // unbuilt lazy
+        lazy val slice = key.fold(df)(kc =>
+          df.filter(kc === k).select(fields.map(f => col(f.name)): _*))
         val dtFormatCols = stringCols.filter(c => gdOf(k, s"${c}__dtr") > 0.0)
-        val head = headPasses(slice, fields, Nil, dtFormatCols, opts)
-        (head.dtFormats, datetimeExtremes(slice, head.dtFormats, opts),
-          head.exemplars, System.currentTimeMillis() - tStart)
+        val tHead = System.currentTimeMillis()
+        val head = headPasses(slice, fields, labelCols, dtFormatCols, opts)
+        val tDt = System.currentTimeMillis()
+        val strDtStats = datetimeExtremes(slice, head.dtFormats, opts)
+        (head, strDtStats, tDt - tHead, System.currentTimeMillis() - tDt)
       }
     }.toMap
 
-    val catMapsByKey = Await.result(catFut, Duration.Inf)
-    val vocabByKey = Await.result(vocabFut, Duration.Inf)
-    val ordersByKey = Await.result(ordersFut, Duration.Inf)
-    val t2 = System.currentTimeMillis()
+    val (catMaps, catMs) = Await.result(catFut, Duration.Inf)
+    val (vocabSets, vocabMs) = Await.result(vocabFut, Duration.Inf)
+    val (orders, orderMs) = Await.result(orderFut, Duration.Inf)
 
+    // windows shared by all groups are DIVIDED across them, so merging
+    // the k split profiles sums back to the actual wall clock instead of
+    // k× it; the per-group tail passes are attributed whole
+    val shared = keys.size.max(1)
     keys.map { k =>
-      val (dtFormats, strDtStats, exemplars, tailMs) =
+      val (head, strDtStats, labelMs, dtMs) =
         Await.result(tailFuts(k), Duration.Inf)
       val histMaps =
-        if (opts.computeHistograms && opts.singlePassHistograms)
-          histFromPass1(
-            fields.filter(f => isNumeric(f.dataType)).map(_.name),
-            valsByKey(k))
+        if (opts.computeHistograms) histFromPass1(numericCols, valsByKey(k))
         else Map.empty[String, Histogram]
       k -> assembleProfile(fields, opts, statPlugins, valsByKey(k), corrPairs,
-        catMapsByKey.getOrElse(k, Map.empty), histMaps, Map.empty,
-        vocabByKey.getOrElse(k, Map.empty),
-        ordersByKey.getOrElse(k, Map.empty),
-        dtFormats, strDtStats, exemplars,
-        // shared windows (grouped pass 1, concurrent cat/vocab) are
-        // DIVIDED across the groups so merging the k split profiles
-        // sums back to the actual aggregate wall clock instead of k×
-        // it; only the per-group tail probes are attributed whole
-        Map("aggregate" -> (t1 - t0) / keys.size.max(1),
-          "categories" -> (t2 - t1) / keys.size.max(1),
-          "histograms" -> 0L, "labeler" -> 0L,
-          "vocab" -> 0L, "order" -> 0L,
-          "datetime_formats" -> tailMs))
+        catMaps.getOrElse(k, Map.empty), histMaps, head.labelVotes,
+        vocabSets.getOrElse(k, Map.empty), orders.getOrElse(k, Map.empty),
+        head.dtFormats, strDtStats, head.exemplars,
+        Map("aggregate" -> (t1 - t0) / shared,
+          "categories" -> catMs / shared, "histograms" -> 0L,
+          "labeler" -> labelMs, "vocab" -> vocabMs / shared,
+          "order" -> orderMs / shared, "datetime_formats" -> dtMs))
     }.toMap
   }
 
-  /** The grouped category melt behind [[profileSplit]]'s pass 2, with
-    * the per-group qualification pushed INTO the query: the melt covers
-    * the union of columns that qualify in ANY group, and the codegen'd
-    * InSet filter on the packed (split, column) pair drops every
-    * non-qualifying pair BEFORE the count aggregation — so a column
-    * that is categorical in one small group but high-cardinality in a
-    * big one never counts, shuffles, or collects that big group's
+  /** Pass 2's category melt, with the per-group qualification pushed
+    * INTO the query when the groups' qualifying column sets differ: the
+    * melt covers the union of columns that qualify in ANY group, and the
+    * codegen'd InSet filter on the packed (split, column) pair drops
+    * every non-qualifying pair BEFORE the count aggregation — so a
+    * column that is categorical in one small group but high-cardinality
+    * in a big one never counts, shuffles, or collects that big group's
     * distinct values. Collected rows are bounded by
     * Σ_group |qualifying columns(group)| × maxCategories regardless of
     * any group's true cardinality (the qualification map is already
-    * known driver-side from pass 1's NDV sketches). Package-private so
-    * ProfileSplitSpec can count the pre-collect rows directly. */
-  private[graft] def catMelt(df: DataFrame, key: Column,
+    * known driver-side from pass 1's NDV sketches). With no key (or
+    * identical sets) every melted pair qualifies and no filter is
+    * planned. Package-private so ProfileSplitSpec can count the
+    * pre-collect rows directly. */
+  private[graft] def catMelt(df: DataFrame, key: Option[Column],
       catColsByKey: Map[Long, Seq[String]]): DataFrame = {
     val allCatCols = catColsByKey.values.flatten.toSeq.distinct
-    val qualPairs = catColsByKey.toSeq.flatMap { case (k, cs) =>
-      cs.map(c => s"$k $c")
-    }
-    df.select(key.as("__split"), explode(array(allCatCols.map(c =>
-        struct(lit(c).as("k"), col(c).as("v"))): _*)).as("kv"))
-      .select(col("__split"), col("kv.k"), col("kv.v"))
-      .filter(col("v").isNotNull &&
-        concat(col("__split").cast("string"), lit(" "), col("k"))
-          .isin(qualPairs: _*))
-      .groupBy("__split", "k", "v").agg(count(lit(1)).as("c"))
+    val keyName = key.map(_ => "__split").toSeq
+    val groupCols = keyName ++ Seq("k", "v")
+    val nonNull = col("v").isNotNull
+    val qualifies =
+      if (catColsByKey.values.map(_.toSet).toSet.size <= 1) nonNull
+      else nonNull &&
+        concat(col("__split").cast("string"), lit(" "), col("k")).isin(
+          catColsByKey.toSeq.flatMap { case (k, cs) => cs.map(c => s"$k $c") }: _*)
+    val melt = explode(array(allCatCols.map(c =>
+      struct(lit(c).as("k"), col(c).as("v"))): _*)).as("kv")
+    df.select(key.map(_.as("__split")).toSeq :+ melt: _*)
+      .select(keyName.map(col) ++ Seq(col("kv.k"), col("kv.v")): _*)
+      .filter(qualifies)
+      .groupBy(groupCols.head, groupCols.tail: _*)
+      .agg(count(lit(1)).as("c"))
   }
 
-  /** Histograms decoded from pass-1 [[HistogramAgg]] buffers (single-pass
-    * mode) — shared by the whole-frame path and [[profileSplit]], where
-    * the same buffers ride the grouped aggregation (one per group). */
+  /** Histograms decoded from pass-1 [[HistogramAgg]] buffers (one per
+    * group under a split key). */
   private def histFromPass1(numericCols: Seq[String],
       vals: Map[String, Any]): Map[String, Histogram] =
     numericCols.flatMap { c =>
@@ -715,170 +683,11 @@ object Profiler {
       }
     }.toMap
 
-  private def profileImpl(df0: DataFrame, opts: ProfilerOptions): Profile =
-    withAqeOff(df0.sparkSession) { profileWholeImpl(df0, opts) }
-
-  private def profileWholeImpl(df0: DataFrame, opts: ProfilerOptions): Profile = {
-    val t0 = System.currentTimeMillis()
-    val df = applyNullValues(df0, opts)
-    val fields = df.schema.fields.toSeq
-    val statPlugins = activePlugins
-    val numericCols = fields.filter(f => isNumeric(f.dataType)).map(_.name)
-    val stringCols = fields.filter(_.dataType == StringType).map(_.name)
-
-    val (corrPairs, corrAggs) = corrPairsAndAggs(numericCols, opts)
-
-    // Chunked execution (see pass1Chunks + ProfilerOptions.aggChunkSize):
-    // a chunk only reads the columns it references, so parquet pruning
-    // keeps total I/O near one full-scan equivalent.
-    val chunks = pass1Chunks(
-      pass1Cols(fields, opts, statPlugins) ++ corrAggs, opts)
-    // chunks submit CONCURRENTLY (Spark schedules parallel actions from
-    // separate threads): each chunk scans only its own columns, so
-    // overlapping them pipelines I/O and keeps all cores busy — same
-    // per-chunk plans and results, ~2× lower wall time than sequential
-    // submission at local[32]
-    val vals: Map[String, Any] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val futs = chunks.map(ch => Future {
-        val r = df.agg(ch.head, ch.tail: _*).collect()(0)
-        r.schema.fieldNames.toSeq.zipWithIndex
-          .map { case (n, i) => n -> r.get(i) }
-      })
-      Await.result(Future.sequence(futs), Duration.Inf).flatten.toMap
-    }
-    def g[T](name: String): T = vals(name).asInstanceOf[T]
-    val ndvCache = scala.collection.mutable.Map.empty[String, Long]
-    def ndvSketchOf(c: String): Option[Array[Byte]] =
-      Option(vals(s"${c}__ndvsk").asInstanceOf[Array[Byte]])
-    def ndvOf(c: String): Long = ndvCache.getOrElseUpdate(c,
-      ndvSketchOf(c).map(HllOps.estimate).getOrElse(0L))
-    def gd(name: String): Double = vals(name) match {
-      case null => Double.NaN
-      case d: Double => d
-      case x: Number => x.doubleValue()
-    }
-    val t1 = System.currentTimeMillis()
-
-    // ---- pass 2: category maps for qualifying string columns ----------
-    val catCols = stringCols.filter { c =>
-      opts.computeCategories && ndvOf(c) <= opts.maxCategories
-    }
-    val catMaps: Map[String, Map[String, Long]] =
-      if (catCols.isEmpty) Map.empty
-      else {
-        val melted = df.select(explode(array(catCols.map(c =>
-          struct(lit(c).as("k"), col(c).as("v"))): _*)).as("kv"))
-          .select(col("kv.k"), col("kv.v"))
-          .filter(col("v").isNotNull)
-          .groupBy("k", "v").agg(count(lit(1)).as("c"))
-          .collect()
-        melted.groupBy(_.getString(0)).map { case (k, rows) =>
-          k -> rows.map(r => r.getString(1) -> r.getLong(2)).toMap
-        }
-      }
-    val t2 = System.currentTimeMillis()
-
-    // ---- pass 3: histograms for numeric columns -----------------------
-    // Single-pass mode read them from pass 1's HistogramAgg buffers; the
-    // two-pass mode re-scans with exact-range width_bucket arithmetic.
-    val histMaps: Map[String, Histogram] =
-      if (!opts.computeHistograms || numericCols.isEmpty) Map.empty
-      else if (opts.singlePassHistograms) {
-        histFromPass1(numericCols, vals)
-      } else {
-        val bins = opts.histogramBins
-        val specs = numericCols.flatMap { c =>
-          val lo = gd(s"${c}__min"); val hi = gd(s"${c}__max")
-          if (lo.isNaN || hi.isNaN || lo == hi) None else Some((c, lo, hi))
-        }
-        if (specs.isEmpty) Map.empty
-        else {
-          val melted = df.select(explode(array(specs.map { case (c, lo, hi) =>
-            val bucket = least(lit(bins - 1), greatest(lit(0),
-              floor((col(c).cast("double") - lit(lo)) / lit((hi - lo) / bins))
-                .cast("int")))
-            struct(lit(c).as("k"), bucket.as("b"))
-          }: _*)).as("kb"))
-            .select(col("kb.k"), col("kb.b"))
-            .filter(col("b").isNotNull)
-            .groupBy("k", "b").agg(count(lit(1)).as("c"))
-            .collect()
-          val byCol = melted.groupBy(_.getString(0))
-          specs.map { case (c, lo, hi) =>
-            val counts = Array.fill(bins)(0L)
-            byCol.getOrElse(c, Array.empty[Row]).foreach { r =>
-              counts(r.getInt(1)) = r.getLong(2)
-            }
-            c -> Histogram(lo, hi, counts)
-          }.toMap
-        }
-      }
-    val t3 = System.currentTimeMillis()
-
-    // ---- pass 4: one head sample for labels, formats and exemplars ----
-    // The reference sends ≤1000 values per column to its labeler
-    // (data_labeler_column_profile.py:34) and pre-tests 50 rows for
-    // datetime formats; both, and the exemplars, read prefixes of one
-    // bounded head sample (headPasses). Timed as "labeler".
-    val dtFormatCols = stringCols.filter(c => gd(s"${c}__dtr") > 0.0)
-    val head = headPasses(df, fields,
-      if (opts.computeLabels) stringCols else Nil, dtFormatCols, opts)
-    val t4 = System.currentTimeMillis()
-
-    // ---- pass 5: char vocabulary for string columns --------------------
-    // One global aggregation of per-column code-point sets (vocabPass):
-    // each map task folds its rows into a bitset per column, so the
-    // shuffle and the collected state are bounded by the alphabet;
-    // keeping the set (not just its size) makes merge a true set-union
-    // (profiler_utils.py:74-92). The pass runs under the sampling
-    // contract: map-side CPU is O(characters scanned), so past
-    // vocabSampleRows the input is a deterministic Bernoulli sample
-    // (pushed into the scan, no shuffle) and each value is length-capped.
-    val vocabSrc = {
-      val nRows = g[Long]("__rowcount")
-      if (nRows > opts.vocabSampleRows)
-        df.sample(withReplacement = false,
-          opts.vocabSampleRows.toDouble / nRows, 42)
-      else df
-    }
-    val vocabSets: Map[String, Set[String]] =
-      if (!opts.computeVocab || stringCols.isEmpty) Map.empty
-      else vocabPass(vocabSrc, None, stringCols, opts)(0L)
-    val t5 = System.currentTimeMillis()
-
-    // ---- pass 6: natural-order detection per column --------------------
-    // One map-only scan: per-partition forward summaries + driver seam
-    // merge (OrderDetect) — never a global single-partition sort.
-    val orders: Map[String, String] =
-      if (!opts.computeOrder) Map.empty
-      else graft.functions.OrderDetect
-        .detectNatural(df, fields.map(_.name))
-        .map { case (k, r) => k -> r.order }
-    val t6 = System.currentTimeMillis()
-
-    // ---- pass 7: parsed extremes under the discovered formats ---------
-    val strDtStats = datetimeExtremes(df, head.dtFormats, opts)
-    val t7 = System.currentTimeMillis()
-
-    // ---- assemble -----------------------------------------------------
-    assembleProfile(fields, opts, statPlugins, vals, corrPairs,
-      catMaps, histMaps, head.labelVotes, vocabSets, orders,
-      head.dtFormats, strDtStats, head.exemplars,
-      Map("aggregate" -> (t1 - t0), "categories" -> (t2 - t1),
-        "histograms" -> (t3 - t2), "labeler" -> (t4 - t3),
-        "vocab" -> (t5 - t4), "order" -> (t6 - t5),
-        "datetime_formats" -> (t7 - t6)))
-  }
-
   /** Mergeable correlation state: pairwise-complete count, means, second
     * moments, and co-moment per pair (six sibling aggs each, still one
     * scan) — so Profile.merge pools instead of dropping the matrix
-    * (profile_builder.py:2380-2551). Shared by the whole-frame pass 1
-    * and [[profileSplit]]'s grouped pass 1 — under `groupBy(key)` the
-    * same expressions yield each group's pairwise state, exactly what
+    * (profile_builder.py:2380-2551). Under a split key the same
+    * expressions yield each group's pairwise state, exactly what
     * `profile(df.filter(key === k))` computes. */
   private def corrPairsAndAggs(numericCols: Seq[String],
       opts: ProfilerOptions): (Seq[(String, String)], Seq[Column]) = {
@@ -901,9 +710,8 @@ object Profiler {
     (pairs, aggs)
   }
 
-  /** Build the [[Profile]] object from pass results — shared verbatim by
-    * the whole-frame and grouped-split paths (the split path calls it
-    * once per group with that group's `vals`/pass maps). */
+  /** Build the [[Profile]] object of one group from its pass results
+    * (its `vals` row and pass maps). */
   private def assembleProfile(
       fields: Seq[StructField], opts: ProfilerOptions,
       statPlugins: Seq[graft.plugins.ColumnStatPlugin],
@@ -1059,7 +867,7 @@ object Profiler {
   /** Rows the exemplars are drawn from (profile_builder.py:665-668). */
   private val ExemplarRows = 100
 
-  /** Pass 4 (shared): ONE head sample read by label votes (its first
+  /** Pass 4: ONE head sample read by label votes (its first
     * labelerSampleSize rows, for `labelCols`), datetime-format discovery
     * (its first 50 rows, for `dtFormatCols`) and exemplars (its first
     * 100 rows, every field). `df.head(n)` plans as a CollectLimit, which
@@ -1127,7 +935,7 @@ object Profiler {
     HeadPasses(labelVotes, dtFormats, exemplars)
   }
 
-  /** Pass 7 (shared): parsed min/max and distinct days of each string
+  /** Pass 7: parsed min/max and distinct days of each string
     * column with at least one discovered format, parsing under ONLY its
     * discovered formats (no 16-way coalesce on the full data). */
   private def datetimeExtremes(df: DataFrame,

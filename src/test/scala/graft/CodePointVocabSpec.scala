@@ -87,6 +87,39 @@ class CodePointVocabSpec extends AnyFunSuite {
     assert(full("s").size > optsGrid(1).vocabCap)
   }
 
+  test("sampled vocab equals the reference over df.sample(false, f, 42)") {
+    // vocabSampleRows below the row count: the pass reads a Bernoulli
+    // sample at f = vocabSampleRows / rows, whose rows must be exactly
+    // the ones df.sample(false, f, 42) keeps. Split groups sample at
+    // their own fraction: group 1 has twice group 0's rows here.
+    val opts = optsGrid(2).copy(vocabSampleRows = 4)
+    val df = fixture.withColumn("h", (col("g") =!= 0L).cast("long")).drop("g")
+    def sampledRef(src: DataFrame, rows: Long, keep: Column) =
+      explodeVocab(src.sample(withReplacement = false,
+        opts.vocabSampleRows.toDouble / rows, 42).filter(keep),
+        lit(0L), stringCols, opts).getOrElse(0L, Map.empty)
+    val whole = df.drop("h")
+    val wholeRef = sampledRef(whole, cells.size, lit(true))
+    val p = Profiler.profile(whole, opts)
+    for (c <- stringCols)
+      assert(p.column(c).get.text.get.vocab ==
+        wholeRef.getOrElse(c, Set.empty), c)
+    // the sample is a real one: it misses characters the full scan sees
+    assert(wholeRef("s") !=
+      explodeVocab(whole, lit(0L), stringCols, opts)(0L)("s"))
+
+    val split = Profiler.profileSplit(df, "h", opts)
+    assert(split.keySet == Set(0L, 1L))
+    for ((k, p) <- split) {
+      val rows = df.filter(col("h") === k).count()
+      assert(rows > opts.vocabSampleRows)
+      val ref = sampledRef(df, rows, col("h") === k)
+      for (c <- stringCols)
+        assert(p.column(c).get.text.get.vocab == ref.getOrElse(c, Set.empty),
+          s"group $k column $c")
+    }
+  }
+
   test("profileSplit vocab equals the explode/collect_set reference per group") {
     val df = fixture
     for (opts <- optsGrid) {

@@ -95,10 +95,11 @@ class ColumnStatSpec extends AnyFunSuite {
     // a category cap below every column's cardinality: the category melt
     // is the pass that explodes legitimately, so with it idle any
     // GenerateExec left would be the vocab pass or the labeler. Labels
-    // on for the whole frame (profileSplit requires them off), and the
-    // split key declared bounded so its maxGroups pre-check is skipped
-    val opts = ProfilerOptions(maxCategories = 10)
-    val splitOpts = opts.copy(computeLabels = false, keyDomainBounded = true)
+    // on for both, and the split key not declared bounded, so its
+    // maxGroups pre-check runs and is covered by the no-limit assertion
+    // (maxGroups below the row count: the optimizer drops a limit at or
+    // above a Range's row count, which would hide one)
+    val opts = ProfilerOptions(maxCategories = 10, maxGroups = 16)
 
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
@@ -110,7 +111,7 @@ class ColumnStatSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     val (whole, split) = try {
       val w = Profiler.profile(df.drop("g"), opts)
-      val sp = Profiler.profileSplit(df, "g", splitOpts)
+      val sp = Profiler.profileSplit(df, "g", opts)
       SparkTestSession.drainListenerBus()
       (w, sp)
     } finally spark.listenerManager.unregister(listener)
@@ -159,6 +160,7 @@ class ColumnStatSpec extends AnyFunSuite {
     assert(whole.column("sdt").get.datetimeFormats == Seq("yyyy-MM-dd"))
     assert(split.values.forall(_.column("sdt").get.datetimeFormats.nonEmpty))
     assert(whole.columns.forall(_.exemplars.nonEmpty))
+    assert(split.values.forall(_.column("txt").get.labelVotes.nonEmpty))
   }
 
   test("profiler plans: streamed micro-batches profile on the constructing session") {
@@ -201,6 +203,37 @@ class ColumnStatSpec extends AnyFunSuite {
       s"${profileExecs.size} profile executions for $files micro-batches")
     assert(profileExecs.forall(_.sparkSession eq spark),
       "a micro-batch profile ran on the stream's clone session")
+  }
+
+  test("profiler plans: stream_gate micro-batches profile on the caller's session") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.HllSketchAgg
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = execs.add(qe)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = execs.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    val rows = try {
+      val r = graft.operators.ProfileQueries.queries("stream_gate")(
+        spark, SparkTestSession.sfDir).collect()
+      SparkTestSession.drainListenerBus()
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(rows.nonEmpty)
+    // the grouped pass 1: an Aggregate keyed on the split year holding
+    // the HLL sketches
+    val pass1 = execs.toArray(Array.empty[QueryExecution]).toSeq
+      .filter(_.optimizedPlan.exists {
+        case a: Aggregate => a.groupingExpressions.nonEmpty &&
+          a.aggregateExpressions.exists(_.exists(_.isInstanceOf[HllSketchAgg]))
+        case _ => false
+      })
+    assert(pass1.nonEmpty, "no grouped pass-1 execution reached the listener")
+    assert(pass1.forall(_.sparkSession eq spark),
+      "a stream_gate micro-batch profile ran on the stream's clone session")
   }
 
   test("ordinal day suffixes are stripped before format discovery") {

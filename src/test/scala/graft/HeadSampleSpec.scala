@@ -106,11 +106,20 @@ class HeadSampleSpec extends AnyFunSuite {
 
   test("profileSplit: per-group head samples equal the per-group probes") {
     val df = fixture
-    val split = Profiler.profileSplit(df, "g",
-      ProfilerOptions(computeLabels = false, keyDomainBounded = true))
-    assert(split.keySet == Set(0L, 1L))
-    for ((k, p) <- split)
-      assertMatchesProbes(p, df.filter(col("g") === k).drop("g"), None,
-        s"group $k")
+    // labels on at labelerSampleSize 1000 (more than a group's 750 rows)
+    // and 60 (a prefix of each group), then off
+    val grid = Seq(1000, 60).map(n => ProfilerOptions(labelerSampleSize = n)) :+
+      ProfilerOptions(computeLabels = false)
+    for (opts0 <- grid) {
+      val opts = opts0.copy(keyDomainBounded = true)
+      val split = Profiler.profileSplit(df, "g", opts)
+      assert(split.keySet == Set(0L, 1L))
+      val what = s"labels=${opts.computeLabels} n=${opts.labelerSampleSize}"
+      for ((k, p) <- split) {
+        assertMatchesProbes(p, df.filter(col("g") === k).drop("g"),
+          Some(opts).filter(_.computeLabels), s"$what group $k")
+        if (!opts.computeLabels) assert(p.columns.forall(_.labelVotes.isEmpty))
+      }
+    }
   }
 }

@@ -148,12 +148,6 @@ class ProfileSplitSpec extends AnyFunSuite {
         }
       }
     }
-    // two-pass mode stays whole-frame-shaped
-    intercept[IllegalArgumentException] {
-      Profiler.profileSplit(
-        base0.withColumn("__half", col("l_orderkey") % 2).drop("l_orderkey"),
-        "__half", hOpts.copy(singlePassHistograms = false))
-    }
   }
 
   test("category-pass qualification is applied inside the query") {
@@ -178,7 +172,7 @@ class ProfileSplitSpec extends AnyFunSuite {
     // the pre-collect frame itself is bounded: only group 0 qualifies,
     // so the melt yields exactly its 3 value-count rows — group 1's
     // 2000 distinct values never reach the aggregation output
-    val meltRows = Profiler.catMelt(base, col("__g").cast("long"),
+    val meltRows = Profiler.catMelt(base, Some(col("__g").cast("long")),
       Map(0L -> Seq("mixed"), 1L -> Seq.empty)).collect()
     assert(meltRows.length == 3)
     assert(meltRows.forall(_.getLong(0) == 0L))
@@ -256,21 +250,22 @@ class ProfileSplitSpec extends AnyFunSuite {
     }
   }
 
-  test("profileSplit rejects whole-frame-shaped opts and missing keys") {
+  test("profileSplit rejects missing and non-integral keys") {
     val df = Tables.load(spark, SparkTestSession.sfDir, "lineitem")
       .select("l_orderkey", "l_quantity")
     intercept[IllegalArgumentException] {
-      Profiler.profileSplit(df, "l_orderkey", ProfilerOptions())
-    }
-    intercept[IllegalArgumentException] {
       Profiler.profileSplit(df, "no_such_col", opts)
     }
+    val e = intercept[IllegalArgumentException] {
+      Profiler.profileSplit(df, "l_quantity", opts)
+    }
+    assert(e.getMessage.contains("integral"), e.getMessage)
   }
 
   test("profileSplit fails fast above maxGroups instead of collecting") {
     // a high-cardinality split key must produce an exact, clearly-named
     // error — never a driver-side collect of one wide stats row per key.
-    // The guard is an exact NARROW pre-check (distinct+limit on just the
+    // The guard is an exact NARROW pre-check (a distinct count of just the
     // key column) that runs before any wide chunk, so the misuse case
     // ships only 8-byte key rows. Proof that no wide expression ever
     // evaluates: poison a string column with raise_error — column

@@ -38,4 +38,16 @@ class SessionConfsSpec extends AnyFunSuite {
     assert(Profiler.profile(df).rowCount == 200)
     assert(s.conf.getAll == before)
   }
+
+  test("quality_classifier leaves a fresh session's conf entries unchanged") {
+    val s = spark.newSession()
+    // Tables.load sets the parquet nanosAsLong read knob for good (a
+    // separate, known leak); load once first so the snapshot holds it
+    Tables.load(s, SparkTestSession.sfDir, "documents")
+    val before = s.conf.getAll
+    assert(!before.contains(aqe))
+    graft.operators.CurationQueries.queries("quality_classifier")(
+      s, SparkTestSession.sfDir).collect()
+    assert(s.conf.getAll == before)
+  }
 }
