@@ -259,14 +259,12 @@ object ColumnStatQueries extends QueryModule {
     * fixture change could legitimately break: CMS only promises a
     * bounded overestimate). */
   private def catHeavy(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.MisraGriesAgg
     import s.implicits._
     val ev = Tables.load(s, dir, "events")
       .select(col("user_id").cast("string").as("v"))
       .filter(col("v").isNotNull)
-    val mgU = udaf(new MisraGriesAgg(HeavyCap))
     val row = ev.agg(
-      mgU(col("v")).as("cand"),
+      graft.functions.MisraGriesAggregate(col("v"), HeavyCap).as("cand"),
       count_min_sketch(col("v"), lit(0.001), lit(0.99), lit(42)).as("cms"),
       count(lit(1)).as("n")).head()
     val cand = row.getAs[Map[String, Long]]("cand").keys.toSeq

@@ -72,7 +72,7 @@ object CurationQueries extends QueryModule {
     * Fit: [[ClfIters]] GD rounds w ← w − lr_t·∇ under the L0/√t
     * schedule; each round is a map-only literal-table scoring pass →
     * ONE fixed-size per-bucket gradient array aggregate
-    * ([[graft.functions.BucketGradAgg]], ≤ [[ClfBuckets]]+1 longs),
+    * ([[graft.functions.BucketGradAggregate]], ≤ [[ClfBuckets]]+1 longs),
     * with the model collected driver-side (the NB/centroid
     * bounded-model precedent); scoring is map-only — the
     * sorted bucket array travels with the doc. Score and gradient sums are
@@ -142,13 +142,12 @@ object CurationQueries extends QueryModule {
     var w = Map.empty[Long, Double]
     var bias = 0.0
     // gradient as ONE fixed-size array aggregate per iteration
-    // (BucketGradAgg, r20): the old explode(bs ++ [-1]) → groupBy(b)
+    // (BucketGradAggregate, r20): the old explode(bs ++ [-1]) → groupBy(b)
     // shuffled rows × buckets-per-doc records to a 256-key hash
     // aggregation every GD round; now each task folds its docs into a
     // local 257-slot long array and the exchange carries one ~2 KB
     // array per task. Same scaled-long sums (exact, order-free) —
     // bit-identical weights, pinned by BucketGradAggSpec.
-    val gradAgg = udaf(new graft.functions.BucketGradAgg(ClfBuckets))
     // AQE OFF for the 16 bounded gradient materializations (r20, r19
     // verdict #3): each iteration's only exchange now carries one
     // ~2 KB long array per map task into a single-partition final —
@@ -162,7 +161,8 @@ object CurationQueries extends QueryModule {
       for (t <- 1 to ClfIters) {
         val sums = score(w, bias)
           .select(col("bs"), round(col("g") * 1e6).cast("long").as("gs"))
-          .agg(gradAgg(col("bs"), col("gs")).as("sums"))
+          .agg(graft.functions.BucketGradAggregate(col("bs"), col("gs"),
+            ClfBuckets).as("sums"))
           .head().getSeq[Long](0) // bounded: ClfBuckets+1 longs
         val lr = clfLr(t)
         // buckets never seen in any doc have sums(b) = 0 and had no

@@ -1,6 +1,8 @@
 package graft.profiler
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSessions, Row}
+import org.apache.spark.sql.catalyst.expressions.aggregate.ImperativeAggregate
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions._
@@ -141,9 +143,13 @@ final case class ProfilerOptions(
   * per group, so the scan count is independent of the number of groups.
   *   pass 1 — the fused aggregation: every column contributes sibling
   *            aggregate expressions (count/null/moments/minmax/ndv/
-  *            quantiles/histogram buffers/type ratios + table-level row
-  *            stats + correlation co-moments); Catalyst fuses them into
-  *            one scan per chunk with map-side partial aggregation.
+  *            quantiles/histogram/Misra-Gries/type ratios + table-level
+  *            row stats + correlation co-moments); Catalyst fuses them
+  *            into one scan per chunk with map-side partial aggregation.
+  *            The declarative aggregates run in whole-stage-codegen'd
+  *            chunks of aggChunkSize; every imperative one (the sketches
+  *            and the native histogram and Misra-Gries aggregates) runs
+  *            in one object-aggregate chunk.
   *   pass 2 — category counts for low-cardinality string columns, one
   *            melt + groupBy (skipped when nothing qualifies).
   *   pass 4 — one head sample per group, `df.head(n)` (a CollectLimit:
@@ -297,10 +303,6 @@ object Profiler {
     * from ONE scan. */
   private def pass1Cols(fields: Seq[StructField], opts: ProfilerOptions,
       statPlugins: Seq[graft.plugins.ColumnStatPlugin]): Seq[Column] = {
-    val histUdaf =
-      if (opts.computeHistograms) Some(udaf(new HistogramAgg(opts.histogramBins)))
-      else None
-    val mgUdaf = udaf(new MisraGriesAgg(opts.hhCandidates))
     val perCol: Seq[Column] = fields.flatMap { f =>
       val c = col(f.name); val nm = f.name
       val base = Seq(
@@ -324,7 +326,9 @@ object Profiler {
             percentile_approx(d,
               array(opts.quantileProbs.map(lit): _*), lit(10000))
               .as(s"${nm}__quant")) ++
-            histUdaf.map(h => h(d).as(s"${nm}__hist")).toSeq
+            (if (opts.computeHistograms)
+              Seq(HistogramAggregate(d, opts.histogramBins).as(s"${nm}__hist"))
+            else Seq.empty)
         case StringType =>
           val len = length(c).cast("double")
           Seq(
@@ -342,7 +346,7 @@ object Profiler {
               Seq(
                 count_min_sketch(c, lit(opts.cmsEps),
                   lit(opts.cmsConfidence), lit(42)).as(s"${nm}__cms"),
-                mgUdaf(c).as(s"${nm}__mg"))
+                MisraGriesAggregate(c, opts.hhCandidates).as(s"${nm}__mg"))
             else Seq.empty)
         case t if isDatetime(t) =>
           Seq(
@@ -381,14 +385,14 @@ object Profiler {
       hll_sketch_agg(unix_date(to_date(x)), lit(opts.ndvLgK)))
 
   /** Pass 5: the code-point vocabulary of every string column, one
-    * [[CodePointVocabAgg]] per column in one aggregation — global when
+    * [[CodePointVocabAggregate]] per column in one aggregation — global when
     * `key` is None (the whole frame, returned under key 0), else grouped
     * by `key` (one result row per split group). */
   private def vocabPass(src: DataFrame, key: Option[Column],
       stringCols: Seq[String],
       opts: ProfilerOptions): Map[Long, Map[String, Set[String]]] = {
-    val vocab = udaf(new CodePointVocabAgg(opts.vocabCharsPerValue, opts.vocabCap))
-    val aggs = stringCols.map(c => vocab(col(c)))
+    val aggs = stringCols.map(c =>
+      CodePointVocabAggregate(col(c), opts.vocabCharsPerValue, opts.vocabCap))
     src.groupBy(key.toSeq: _*).agg(aggs.head, aggs.tail: _*).collect()
       .map { r =>
         (if (key.isDefined) r.getLong(0) else 0L) ->
@@ -399,21 +403,23 @@ object Profiler {
   }
 
   /** Two-regime chunking of pass-1 aggregates (see
-    * ProfilerOptions.aggChunkSize): object/
-    * imperative aggregates (sketches, histogram Aggregator, CMS, HLL)
-    * never whole-stage-codegen and all go in ONE job; declarative
-    * aggregates chunk to stay under the JIT method threshold. A marker
-    * missing here would silently put an imperative aggregate into a
-    * codegen'd chunk — keep the list in this one place. */
-  private def pass1Chunks(allAggs: Seq[Column],
+    * ProfilerOptions.aggChunkSize), by expression type: a column whose
+    * analyzed expression holds an imperative aggregate (the GK quantile
+    * sketch, histogram, Misra-Gries, CMS, HLL sketches, any plugin
+    * sketch) never whole-stage-codegens, so all such columns go in ONE
+    * job; the declarative rest chunk to stay under the JIT method
+    * threshold. The columns come back analyzed against `df`, so each
+    * chunk's own analysis has nothing left to resolve. */
+  private def pass1Chunks(df: DataFrame, allAggs: Seq[Column],
       opts: ProfilerOptions): Seq[Seq[Column]] = {
-    val objectMarkers =
-      Seq("__quant", "__hist", "__cms", "__mg", "__ndv", "__ndays", "__ndrows")
-    val (objAggs, declAggs) = allAggs.partition(c =>
-      objectMarkers.exists(c.toString.contains))
+    val analyzed = df.agg(allAggs.head, allAggs.tail: _*).queryExecution.analyzed
+      .collectFirst { case a: Aggregate => a.aggregateExpressions }.get
+    val (objAggs, declAggs) =
+      analyzed.partition(_.exists(_.isInstanceOf[ImperativeAggregate]))
     val chunkSize = if (opts.aggChunkSize > 0) opts.aggChunkSize else declAggs.size
-    declAggs.grouped(chunkSize).toSeq ++
-      (if (objAggs.nonEmpty) Seq(objAggs) else Seq.empty)
+    (declAggs.grouped(chunkSize).toSeq ++
+      (if (objAggs.nonEmpty) Seq(objAggs) else Seq.empty))
+      .map(_.map(GraftSessions.column))
   }
 
   /** Grouped (split) profiling: ONE pass-set produces a Profile per
@@ -495,7 +501,7 @@ object Profiler {
     // columns, so overlapping them pipelines I/O and keeps all cores
     // busy.
     val (corrPairs, corrAggs) = corrPairsAndAggs(numericCols, opts)
-    val chunks = pass1Chunks(
+    val chunks = pass1Chunks(df,
       pass1Cols(fields, opts, statPlugins) ++ corrAggs, opts)
     val valsByKey: Map[Long, Map[String, Any]] = {
       val futs = chunks.map(ch => Future {
@@ -668,7 +674,7 @@ object Profiler {
       .agg(count(lit(1)).as("c"))
   }
 
-  /** Histograms decoded from pass-1 [[HistogramAgg]] buffers (one per
+  /** Histograms decoded from pass-1 [[HistogramAggregate]] results (one per
     * group under a split key). */
   private def histFromPass1(numericCols: Seq[String],
       vals: Map[String, Any]): Map[String, Histogram] =

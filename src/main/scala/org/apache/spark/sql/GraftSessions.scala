@@ -1,8 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge to two private[sql] session hooks the library needs. */
+/** Bridge to the private[sql] session and column hooks the library needs. */
 object GraftSessions {
 
   /** `plan` as a DataFrame of `session` — how a frame built on one
@@ -16,4 +17,13 @@ object GraftSessions {
     * the previous one after (`SparkSession.withActive` is private[sql]). */
   def withActive[T](session: SparkSession)(f: => T): T =
     session.withActive(f)
+
+  /** The catalyst expression of `c` (unresolved while `c` names columns
+    * by name). */
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `e` as a Column, bound by expression: an aggregate built this way
+    * needs no function-registry lookup, so nothing is registered per
+    * session. */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 }

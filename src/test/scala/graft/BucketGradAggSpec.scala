@@ -1,9 +1,14 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
+import graft.functions.BucketGradAggregate
 import org.scalatest.funsuite.AnyFunSuite
 
-/** BucketGradAgg (the quality_classifier GD-round gradient) must equal
+/** BucketGradAggregate (the quality_classifier GD-round gradient) must equal
   * the explode-and-shuffle formulation it replaced, long for long —
   * the r20 optimization changed the aggregation SHAPE (fixed-size
   * array fold instead of explode → groupBy(b)), never the sums. */
@@ -20,10 +25,9 @@ class BucketGradAggSpec extends AnyFunSuite {
         graft.functions.HashBuckets(col("text"), NB, asSet = true).as("bs"),
         // deterministic pseudo-gradient in (-1, 1) at 6dp, like p − y
         round(sin(col("doc_id").cast("double")), 6).as("g"))
-    val gradAgg = udaf(new graft.functions.BucketGradAgg(NB))
     val sums = docs
       .select(col("bs"), round(col("g") * 1e6).cast("long").as("gs"))
-      .agg(gradAgg(col("bs"), col("gs")))
+      .agg(BucketGradAggregate(col("bs"), col("gs"), NB))
       .head().getSeq[Long](0)
     assert(sums.length == NB + 1)
     val exploded = docs
@@ -44,8 +48,7 @@ class BucketGradAggSpec extends AnyFunSuite {
       (None: Option[Seq[Long]], 100L),
       (Some(Seq(2L)), -3L)
     ).toDF("bs", "gs")
-    val gradAgg = udaf(new graft.functions.BucketGradAgg(4))
-    val sums = df.agg(gradAgg(col("bs"), col("gs"))).head().getSeq[Long](0)
+    val sums = df.agg(BucketGradAggregate(col("bs"), col("gs"), 4)).head().getSeq[Long](0)
     assert(sums == Seq(5L, 0L, 2L, 0L, 2L),
       "NULL-bs row must be skipped entirely (bias included)")
   }
@@ -53,10 +56,12 @@ class BucketGradAggSpec extends AnyFunSuite {
   test("out-of-range bucket id fails by name instead of aliasing the bias") {
     // b == nBuckets used to land silently in the bias slot; a negative
     // id threw a bare ArrayIndexOutOfBoundsException
-    val agg = new graft.functions.BucketGradAgg(4)
+    val agg = BucketGradAggregate(BoundReference(0, ArrayType(LongType), true),
+      BoundReference(1, LongType, false), 4)
     for (bad <- Seq(4L, -1L, 1L << 32)) {
       val e = intercept[IllegalArgumentException] {
-        agg.reduce(agg.zero, graft.functions.BucketGradIn(Seq(0L, bad), 1L))
+        agg.update(agg.createAggregationBuffer(),
+          InternalRow(new GenericArrayData(Array[Any](0L, bad)), 1L))
       }
       assert(e.getMessage.contains(s"bucket id $bad outside [0, 4)"),
         e.getMessage)
@@ -64,9 +69,8 @@ class BucketGradAggSpec extends AnyFunSuite {
     // and through Spark: the task failure carries the same message
     import spark.implicits._
     val df = Seq((Seq(1L, 4L), 5L)).toDF("bs", "gs")
-    val gradAgg = udaf(agg)
     val e = intercept[Exception] {
-      df.agg(gradAgg(col("bs"), col("gs"))).collect()
+      df.agg(BucketGradAggregate(col("bs"), col("gs"), 4)).collect()
     }
     val msgs = Iterator.iterate[Throwable](e)(_.getCause)
       .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
@@ -76,8 +80,7 @@ class BucketGradAggSpec extends AnyFunSuite {
   test("empty input yields the zero buffer, not null") {
     import spark.implicits._
     val df = Seq.empty[(Seq[Long], Long)].toDF("bs", "gs")
-    val gradAgg = udaf(new graft.functions.BucketGradAgg(2))
-    val sums = df.agg(gradAgg(col("bs"), col("gs"))).head().getSeq[Long](0)
+    val sums = df.agg(BucketGradAggregate(col("bs"), col("gs"), 2)).head().getSeq[Long](0)
     assert(sums == Seq(0L, 0L, 0L))
   }
 }

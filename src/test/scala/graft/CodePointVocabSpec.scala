@@ -3,16 +3,34 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.CodePointVocabAgg
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.CodePointVocabAggregate
 import graft.profiler.{Profiler, ProfilerOptions}
 
-/** The profiler's vocab pass (one CodePointVocabAgg per string column)
+/** The profiler's vocab pass (one CodePointVocabAggregate per string column)
   * must return exactly the set the per-character formulation it
   * replaced returned: explode every value's first `vocabCharsPerValue`
   * characters into rows, `collect_set`, `array_sort`, keep the first
   * `vocabCap`. That formulation lives on here only, as the reference. */
 class CodePointVocabSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
+
+  /** The aggregate's buffer operations under the names the first test
+    * is stated in. */
+  private final class Vocab(charsPerValue: Int, cap: Int) {
+    private val agg = CodePointVocabAggregate(
+      BoundReference(0, StringType, nullable = true), charsPerValue, cap)
+    def zero = agg.createAggregationBuffer()
+    def reduce(b: java.util.BitSet, s: String) = agg.update(b,
+      InternalRow(if (s == null) null else UTF8String.fromString(s)))
+    def merge(a: java.util.BitSet, b: java.util.BitSet) = agg.merge(a, b)
+    def finish(b: java.util.BitSet): Seq[String] = agg.eval(b)
+      .asInstanceOf[ArrayData].toSeq[UTF8String](StringType).map(_.toString)
+  }
 
   /** The old pass 5, grouped by `key` (a constant key = whole frame). */
   private def explodeVocab(df: DataFrame, key: Column, cols: Seq[String],
@@ -60,11 +78,11 @@ class CodePointVocabSpec extends AnyFunSuite {
       vocabCap = 1000))
 
   test("aggregate reads code points, caps per value, sorts by code point") {
-    val agg = new CodePointVocabAgg(charsPerValue = 3, cap = 10)
+    val agg = new Vocab(charsPerValue = 3, cap = 10)
     val b = Seq("ba😀zz", null, "", "é中").foldLeft(agg.zero)(agg.reduce)
     // "ba😀" (3 code points, not 3 UTF-16 units), then "é中"
     assert(agg.finish(b) == Seq("a", "b", "é", "中", "😀"))
-    val capped = new CodePointVocabAgg(charsPerValue = 100, cap = 2)
+    val capped = new Vocab(charsPerValue = 100, cap = 2)
     val m = capped.merge(capped.reduce(capped.zero, "zy"),
       capped.reduce(capped.zero, "xa"))
     assert(capped.finish(m) == Seq("a", "x"))

@@ -75,13 +75,16 @@ class ColumnStatSpec extends AnyFunSuite {
 
   test("profiler plans: no HLL++ day count, no per-character explode") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.{
-      HllSketchAgg, HyperLogLogPlusPlus}
+      HllSketchAgg, HyperLogLogPlusPlus, Partial, PartialMerge}
     import org.apache.spark.sql.execution.{CollectLimitExec, GenerateExec,
-      GlobalLimitExec, LocalLimitExec, QueryExecution, SparkPlan}
+      GlobalLimitExec, InputAdapter, LocalLimitExec, QueryExecution, SparkPlan,
+      WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec,
+      ScalaAggregator}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.util.QueryExecutionListener
-    import graft.functions.CodePointVocabAgg
+    import graft.functions.CodePointVocabAggregate
     import graft.profiler.ProfilerOptions
     // a string-datetime, a TimestampType and a text column, two groups
     val df = spark.range(3000).select(
@@ -138,10 +141,29 @@ class ColumnStatSpec extends AnyFunSuite {
       "head sample not among the captured plans")
     // the capture saw the passes in question
     assert(exprs.exists(_.isInstanceOf[HllSketchAgg]))
-    assert(exprs.exists {
-      case a: ScalaAggregator[_, _, _] => a.agg.isInstanceOf[CodePointVocabAgg]
+    assert(exprs.exists(_.isInstanceOf[CodePointVocabAggregate]),
+      "vocab aggregate not among the captured plans")
+    // every aggregate is a native expression: no Aggregator wrapper
+    // resolving encoders at analysis and per task
+    assert(!exprs.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]),
+      "a udaf(Aggregator) planned by the profiler")
+    // the AQE-off scope holds only while every exchange carries partial
+    // aggregates (one row per map task and key), never raw rows
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case i: InputAdapter => unwrap(i.child)
+      case n => n
+    }
+    def isPartial(p: SparkPlan): Boolean = unwrap(p) match {
+      case a: BaseAggregateExec =>
+        if (a.aggregateExpressions.isEmpty) a.requiredChildDistributionExpressions.isEmpty
+        else a.aggregateExpressions.forall(e => e.mode == Partial || e.mode == PartialMerge)
       case _ => false
-    }, "vocab aggregate not among the captured plans")
+    }
+    val shuffles = all.collect { case x: ShuffleExchangeExec => x }
+    assert(shuffles.nonEmpty)
+    for (x <- shuffles)
+      assert(isPartial(x.child), s"exchange over a non-partial child:\n$x")
 
     // nDays within 3·rsd of the exact distinct-date count
     val frames = Seq(None -> whole) ++
@@ -161,6 +183,45 @@ class ColumnStatSpec extends AnyFunSuite {
     assert(split.values.forall(_.column("sdt").get.datetimeFormats.nonEmpty))
     assert(whole.columns.forall(_.exemplars.nonEmpty))
     assert(split.values.forall(_.column("txt").get.labelVotes.nonEmpty))
+  }
+
+  test("profiler plans: pass 1 chunks by expression type, not column name") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec,
+      SortAggregateExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // column names that hold the sketch aliases' suffixes: a name-based
+    // split would route their declarative aggregates (count, min, ...)
+    // into the object-aggregate job, out of whole-stage codegen
+    val df = spark.range(0, 2000, 1, 2).select(
+      (col("id") * 7 % 113).as("a__quant"),
+      concat(lit("v"), (col("id") % 1500).cast("string")).as("b__mg"))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.executedPlan)
+    }
+    spark.listenerManager.register(listener)
+    val p = try {
+      val p = Profiler.profile(df)
+      SparkTestSession.drainListenerBus()
+      p
+    } finally spark.listenerManager.unregister(listener)
+    val objectAggs = plans.toArray(Array.empty[SparkPlan]).toSeq
+      .flatMap(_.collect {
+        case a: ObjectHashAggregateExec => a.aggregateExpressions
+        case a: SortAggregateExec => a.aggregateExpressions
+      }.flatten)
+    assert(objectAggs.nonEmpty, "no object aggregate captured")
+    val declarative = objectAggs.map(_.aggregateFunction)
+      .filter(_.isInstanceOf[DeclarativeAggregate])
+    assert(declarative.isEmpty,
+      s"declarative aggregates in an object-aggregate job: $declarative")
+    assert(p.column("a__quant").get.numeric.get.quantiles.nonEmpty)
+    assert(p.column("b__mg").get.n == 2000)
   }
 
   test("profiler plans: streamed micro-batches profile on the constructing session") {

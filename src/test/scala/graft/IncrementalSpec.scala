@@ -70,22 +70,21 @@ class IncrementalSpec extends AnyFunSuite {
     assert(m.column("tag").get.n == 3)
   }
 
-  test("HistogramAgg runs unchanged inside a watermarked windowed streaming agg") {
-    // SURVEY §2.10's claim made concrete: the same Aggregator buffer that
+  test("HistogramAggregate runs unchanged inside a watermarked windowed streaming agg") {
+    // SURVEY §2.10's claim made concrete: the same aggregate buffer that
     // powers the batch profiler runs as streaming state under
     // window+watermark, no code changes.
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.functions.HistogramAgg
+    import graft.functions.HistogramAggregate
     import java.sql.Timestamp
     val sql = spark.sqlContext
     import spark.implicits._
     implicit val ctx = sql
     val mem = MemoryStream[(Timestamp, Double)]
-    val hist = udaf(new HistogramAgg(8))
     val q = mem.toDF().toDF("ts", "v")
       .withWatermark("ts", "10 seconds")
       .groupBy(window(col("ts"), "1 minute"))
-      .agg(hist(col("v")).as("h"), count(lit(1)).as("n"))
+      .agg(HistogramAggregate(col("v"), 8).as("h"), count(lit(1)).as("n"))
       .writeStream.outputMode("update")
       .format("memory").queryName("win_hist").start()
     def t(s: String) = Timestamp.valueOf(s)

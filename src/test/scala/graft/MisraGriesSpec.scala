@@ -2,7 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
-import graft.functions.MisraGriesAgg
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.util.MapData
+import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.MisraGriesAggregate
 
 /** Property check of the Misra-Gries frequency-summary guarantee the
   * heavy-hitter candidate path relies on: after ANY partitioning of the
@@ -11,9 +16,26 @@ import graft.functions.MisraGriesAgg
   * cases keep runs deterministic. */
 class MisraGriesSpec extends AnyFunSuite {
 
+  /** The aggregate's buffer operations under the names the property
+    * below is stated in. */
+  private type Buf = scala.collection.mutable.HashMap[UTF8String, scala.runtime.LongRef]
+  private final class Mg(capacity: Int) {
+    val agg =
+      MisraGriesAggregate(BoundReference(0, StringType, nullable = true), capacity)
+    def zero = agg.createAggregationBuffer()
+    def reduce(b: Buf, x: String) = agg.update(b,
+      InternalRow(if (x == null) null else UTF8String.fromString(x)))
+    def merge(a: Buf, b: Buf) = agg.merge(a, b)
+    def finish(b: Buf): Map[String, Long] = {
+      val m = agg.eval(b).asInstanceOf[MapData]
+      m.keyArray().toSeq[UTF8String](StringType).map(_.toString)
+        .zip(m.valueArray().toSeq[Long](LongType)).toMap
+    }
+  }
+
   test("guarantee holds under random partitioning and merge order") {
     val rnd = new Random(42)
-    val agg = new MisraGriesAgg(capacity = 64)
+    val agg = new Mg(capacity = 64)
     for (_ <- 0 until 50) {
       // zipf-ish stream: a few hot values over a long cold tail
       val hot = (0 until 5).flatMap(i =>
@@ -39,7 +61,7 @@ class MisraGriesSpec extends AnyFunSuite {
   }
 
   test("nulls are ignored and counts never exceed truth") {
-    val agg = new MisraGriesAgg(capacity = 8)
+    val agg = new Mg(capacity = 8)
     val m = Seq("a", null, "a", null, "b").foldLeft(agg.zero)(agg.reduce)
     val r = agg.finish(m)
     assert(r("a") == 2 && r("b") == 1)

@@ -1,0 +1,161 @@
+package graft
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.{BucketGradAggregate, CodePointVocabAggregate,
+  HistogramAggregate, MisraGriesAggregate}
+import graft.functions.reference
+
+/** The native aggregates (graft.functions.*Aggregate) against the
+  * `udaf(Aggregator)` formulations they replaced, kept in test scope as
+  * references. Each comparison runs both in ONE aggregation over a
+  * multi-partition input, so both see the same rows in the same update
+  * and merge order; result types must match the references' encoder
+  * schemas, which the profiler's decoders read. */
+class NativeAggregatesSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  /** `native` and `ref` over `df` in one aggregation: their two results,
+    * after asserting equal result types. */
+  private def both(df: DataFrame, native: Column, ref: Column): (Any, Any) = {
+    val out = df.agg(native.as("native"), ref.as("ref"))
+    assert(out.schema("native").dataType == out.schema("ref").dataType)
+    val r = out.head()
+    (r.get(0), r.get(1))
+  }
+
+  private def histOf(r: Any): (Double, Double, Seq[Long]) = {
+    val row = r.asInstanceOf[Row]
+    (row.getDouble(0), row.getDouble(1), row.getSeq[Long](2).toSeq)
+  }
+
+  /** One double column `v` over four partitions, in the given order. */
+  private def doubles(vs: Seq[java.lang.Double], parts: Int = 4): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      vs.map(v => Row(v)), parts), StructType(Seq(StructField("v", DoubleType))))
+
+  private def assertHistEqual(df: DataFrame, bins: Int, what: String): Unit = {
+    val (n, r) = both(df, HistogramAggregate(col("v"), bins),
+      udaf(new reference.HistogramAgg(bins)).apply(col("v").cast("double")))
+    assert(histOf(n) == histOf(r), what)
+  }
+
+  test("histogram equals the Aggregator reference") {
+    val nInf = java.lang.Double.NEGATIVE_INFINITY
+    val pInf = java.lang.Double.POSITIVE_INFINITY
+    val mixed: Seq[java.lang.Double] = (0 until 400).map { i =>
+      i % 13 match {
+        case 0 => null
+        case 1 => java.lang.Double.NaN
+        case 2 => if (i % 2 == 0) pInf else nInf
+        case _ => java.lang.Double.valueOf(math.sin(i.toDouble) * 1000)
+      }
+    }
+    assertHistEqual(doubles(mixed), 16, "nulls, NaN and ±Inf")
+    // ascending per partition: every new value is past the range, so the
+    // range regrows again and again
+    assertHistEqual(doubles((1 to 5000).map(i => java.lang.Double.valueOf(i * 1.5))),
+      32, "sorted input")
+    assertHistEqual(doubles(Seq.fill(300)(java.lang.Double.valueOf(7.25))), 8,
+      "constant column")
+    assertHistEqual(doubles(Seq.empty), 8, "empty input")
+    assertHistEqual(doubles(Seq(java.lang.Double.valueOf(-3.0)), 1), 8, "one row")
+    // and through the numeric cast the profiler applies to integral columns
+    assertHistEqual(spark.range(0, 3000, 1, 3).select((col("id") * 7 % 991).as("v")),
+      256, "bigint input")
+  }
+
+  test("Misra-Gries equals the Aggregator reference past capacity") {
+    // three partitions of distinct cold values, then heavy hitters that
+    // appear only in the last partition
+    val n = 4000
+    val df = spark.range(0, n, 1, 4).select(
+      when(col("id") >= 3 * n / 4, concat(lit("hot"), (col("id") % 3).cast("string")))
+        .when(col("id") % 17 === 0, lit(null))
+        .otherwise(concat(lit("cold"), col("id").cast("string"))).as("v"))
+    for (cap <- Seq(8, 64)) {
+      val (nat, ref) = both(df, MisraGriesAggregate(col("v"), cap),
+        udaf(new reference.MisraGriesAgg(cap)).apply(col("v")))
+      val m = nat.asInstanceOf[scala.collection.Map[String, Long]]
+      assert(m == ref.asInstanceOf[scala.collection.Map[String, Long]], s"cap $cap")
+      assert(m.size <= cap)
+      assert((0 until 3).forall(i => m.contains(s"hot$i")), m.keySet)
+    }
+  }
+
+  test("vocab equals the Aggregator reference") {
+    import spark.implicits._
+    val cells = Seq("héllo", null, "中文字符", "x😀y🎉z", "", "zzzzzzzzzzqrstuvw",
+      "ÀÁÂÃÄÅÆÇÈÉ", "mixed 中 é 😀 end", "Ωmega", "0123456789", "😀😀😀é")
+    val df = cells.toDF("v").repartition(3)
+    for ((perValue, cap) <- Seq((4, 1000), (1000, 5), (2, 3), (Int.MaxValue, 1000))) {
+      val (nat, ref) = both(df, CodePointVocabAggregate(col("v"), perValue, cap),
+        udaf(new reference.CodePointVocabAgg(perValue, cap)).apply(col("v")))
+      assert(nat == ref, s"charsPerValue $perValue, cap $cap")
+    }
+  }
+
+  test("bucket gradient equals the Aggregator reference") {
+    val df = spark.range(0, 2000, 1, 4).select(
+      when(col("id") % 11 =!= 0, array((col("id") % 5), (col("id") % 7) + 5))
+        .as("bs"),
+      (col("id") * 31 % 1001 - 500).as("gs"))
+    val (nat, ref) = both(df, BucketGradAggregate(col("bs"), col("gs"), 12),
+      udaf(new reference.BucketGradAgg(12)).apply(col("bs"), col("gs")))
+    assert(nat == ref)
+  }
+
+  // ---- serialize → deserialize round trips, on the expressions directly
+
+  private def roundTrip[B](agg: org.apache.spark.sql.catalyst.expressions
+      .aggregate.TypedImperativeAggregate[B], rows: Seq[Any]): (Any, Any) = {
+    val b = rows.foldLeft(agg.createAggregationBuffer())((b, v) =>
+      agg.update(b, InternalRow(v)))
+    (agg.eval(b), agg.eval(agg.deserialize(agg.serialize(b))))
+  }
+
+  private def mapOf(m: MapData): Map[String, Long] =
+    m.keyArray().toSeq[UTF8String](StringType).map(_.toString)
+      .zip(m.valueArray().toSeq[Long](LongType)).toMap
+
+  test("each buffer survives serialize → deserialize") {
+    val hist = HistogramAggregate(BoundReference(0, DoubleType, nullable = true), 16)
+    for (vs <- Seq(Seq.empty[Any], Seq[Any](2.5), Seq[Any](1.0, null, 9.0, -4.0, 1e9))) {
+      val (a, b) = roundTrip(hist, vs)
+      val (ra, rb) = (a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+      assert((ra.getDouble(0), ra.getDouble(1), ra.getArray(2).toLongArray.toSeq) ==
+        (rb.getDouble(0), rb.getDouble(1), rb.getArray(2).toLongArray.toSeq), vs)
+    }
+
+    val mg = MisraGriesAggregate(BoundReference(0, StringType, nullable = true), 4)
+    // a key past 64 KB of UTF-8 (the DataOutputStream.writeUTF limit),
+    // multi-byte characters, and the empty string
+    val long = "é中" * 15000
+    val keys = Seq(long, "a", "", long, "😀", null, "a", long)
+    val (ma, mb) = roundTrip(mg, keys.map(k => if (k == null) null else UTF8String.fromString(k)))
+    assert(mapOf(ma.asInstanceOf[MapData]) == Map(long -> 3L, "a" -> 2L, "" -> 1L, "😀" -> 1L))
+    assert(mapOf(mb.asInstanceOf[MapData]) == mapOf(ma.asInstanceOf[MapData]))
+    assert(UTF8String.fromString(long).numBytes > 65535)
+
+    val vocab = CodePointVocabAggregate(BoundReference(0, StringType, nullable = true),
+      100, 1000)
+    val (va, vb) = roundTrip(vocab, Seq("héllo 中😀", null, "\u0000z")
+      .map(s => if (s == null) null else UTF8String.fromString(s)))
+    assert(va.asInstanceOf[ArrayData].toSeq[UTF8String](StringType) ==
+      vb.asInstanceOf[ArrayData].toSeq[UTF8String](StringType))
+    assert(va.asInstanceOf[ArrayData].numElements() == 9)
+
+    val grad = BucketGradAggregate(BoundReference(0, ArrayType(LongType), nullable = true),
+      BoundReference(1, LongType, nullable = false), 3)
+    val b = Seq((Seq(0L, 2L), 5L), (Seq(1L), -7L)).foldLeft(grad.createAggregationBuffer()) {
+      case (b, (bs, gs)) => grad.update(b, InternalRow(new GenericArrayData(bs.toArray[Any]), gs))
+    }
+    assert(grad.deserialize(grad.serialize(b)).toSeq == Seq(5L, -7L, 5L, -2L))
+  }
+}

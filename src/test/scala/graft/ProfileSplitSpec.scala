@@ -120,7 +120,7 @@ class ProfileSplitSpec extends AnyFunSuite {
   }
 
   test("profileSplit histograms equal per-slice profile() histograms") {
-    // the HistogramAgg buffers ride the grouped pass 1, so lifting the
+    // the HistogramAggregate buffers ride the grouped pass 1, so lifting the
     // v1 restriction costs no extra pass. lo/hi (exact data extremes)
     // and total mass must ALWAYS match; exact bin-count equality is
     // asserted on a coalesce(1) layout where both paths reduce the same

@@ -1,4 +1,8 @@
-package graft.functions
+package graft.functions.reference
+
+// Test-scope reference: the udaf(Aggregator) formulation that the native
+// aggregate in graft.functions replaced, kept so NativeAggregatesSpec can
+// compare the two on the same input.
 
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
