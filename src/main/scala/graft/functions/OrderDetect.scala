@@ -45,6 +45,9 @@ object OrderDetect {
     else if (nIncr == 0) "descending"
     else "random"
 
+  /** The verdict on a column with no values. */
+  val EmptyVerdict: String = classify(0L, 0L, 0L)
+
   /** Detect order of `valCols` when rows are ordered by `keyCol`.
     * Range-repartitions on the key (so partitions tile the key space in
     * order), sorts within partitions, summarizes per partition, merges on

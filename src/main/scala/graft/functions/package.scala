@@ -74,12 +74,4 @@ package object functions {
     * Zero-row inputs yield null, not an ANSI divide-by-zero error. */
   def ratio(pred: Column): Column =
     try_divide(cnt(pred).cast("double"), count(lit(1)))
-
-  /** Ratio of non-null values matching pred over non-null values — the
-    * reference computes type-inference match ratios over non-null samples
-    * only (int_column_profile.py:106-115), so a single null must not block
-    * a column from reaching ratio 1.0. All-null columns yield null (ANSI
-    * mode would otherwise raise DIVIDE_BY_ZERO). */
-  def ratioNonNull(c: Column, pred: Column): Column =
-    try_divide(cnt(pred).cast("double"), count(c))
 }

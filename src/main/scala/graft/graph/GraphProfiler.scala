@@ -54,14 +54,9 @@ object GraphProfiler {
     // SparkSession lose constraint propagation for the loop's duration.
     // Callers that share a session across threads should run CC on
     // spark.newSession() (same SparkContext, isolated SQLConf).
-    val spark = edges.sparkSession
-    val cpKey = "spark.sql.constraintPropagation.enabled"
-    val cpPrev = spark.conf.getOption(cpKey)
-    spark.conf.set(cpKey, "false")
-    try connectedComponentsImpl(edges, maxIter, smallGraphCap)
-    finally cpPrev match {
-      case Some(v) => spark.conf.set(cpKey, v)
-      case None => spark.conf.unset(cpKey)
+    graft.SessionConfs.withConf(edges.sparkSession,
+        "spark.sql.constraintPropagation.enabled", "false") {
+      connectedComponentsImpl(edges, maxIter, smallGraphCap)
     }
   }
 

@@ -565,14 +565,9 @@ object StreamingQueries extends QueryModule {
     * (provider class is fixed at query start). */
   def streamJoinRocksdb(s: SparkSession, dir: String): DataFrame =
     withStatePartitions(s, sizedStatePartitions(dir, "events")) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try streamJoinImpl(s, dir, suffix = "_rocksdb")
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
+      graft.SessionConfs.withConf(s, "spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        streamJoinImpl(s, dir, suffix = "_rocksdb")
       }
     }
 
@@ -648,13 +643,11 @@ object StreamingQueries extends QueryModule {
     * stores to its cluster as SCALING.md's deployment notes describe. */
   private[graft] def withStatePartitions(s: SparkSession, sized: Int = 4)(
       f: => DataFrame): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
     // system property first so the partition-independence spec can vary
     // the count in-process; env for bench/deployment runs
-    s.conf.set(key, sys.props.getOrElse("graft.stream.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", sized.toString)))
-    try f finally s.conf.set(key, prev)
+    graft.SessionConfs.withConf(s, "spark.sql.shuffle.partitions",
+      sys.props.getOrElse("graft.stream.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", sized.toString)))(f)
   }
 
   /** [[withStatePartitions]] sized from the streamed table's bytes. */

@@ -1,8 +1,6 @@
 package graft.profiler
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSessions, Row}
-import org.apache.spark.sql.catalyst.expressions.aggregate.ImperativeAggregate
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions._
@@ -97,13 +95,6 @@ final case class ProfilerOptions(
       * column-pruned scan, one long to the driver), unless
       * [[keyDomainBounded]] skips it. */
     maxGroups: Int = 4096,
-    /** Sibling aggregates per pass-1 job. One mega-aggregate generates an
-      * update method past the JVM's 8 KB JIT threshold and runs as
-      * INTERPRETED bytecode (~10× slower — measured 23 s vs 6 s at sf0.1);
-      * chunks of ~30 stay JIT-compiled, and because each chunk only
-      * references its own columns, parquet column pruning keeps total
-      * I/O at roughly one full-scan equivalent. 0 = unchunked. */
-    aggChunkSize: Int = 30,
     /** Caller CONTRACT flag for [[Profiler.profileSplit]]: true asserts
       * the split key's cardinality is bounded by construction (an
       * arithmetic image like `x % k`, a boolean cast, a calendar year —
@@ -141,15 +132,15 @@ final case class ProfilerOptions(
   * global aggregation with a single-partition final and one result row
   * even on empty input; with a key, the same expressions yield one row
   * per group, so the scan count is independent of the number of groups.
-  *   pass 1 — the fused aggregation: every column contributes sibling
-  *            aggregate expressions (count/null/moments/minmax/ndv/
-  *            quantiles/histogram/Misra-Gries/type ratios + table-level
-  *            row stats + correlation co-moments); Catalyst fuses them
-  *            into one scan per chunk with map-side partial aggregation.
-  *            The declarative aggregates run in whole-stage-codegen'd
-  *            chunks of aggChunkSize; every imperative one (the sketches
-  *            and the native histogram and Misra-Gries aggregates) runs
-  *            in one object-aggregate chunk.
+  *   pass 1 — the fused aggregation, ONE job: every column contributes
+  *            sibling aggregate expressions (its native column-stats
+  *            aggregate — counts, moments, extremes, lengths, type
+  *            ratios — plus the NDV, quantile, histogram, CMS and
+  *            Misra-Gries sketches), with the table-level row stats and
+  *            one co-moment aggregate for correlation. All are typed
+  *            imperative aggregates, so the pass plans as one
+  *            ObjectHashAggregate scan with map-side partial
+  *            aggregation and no generated per-row code.
   *   pass 2 — category counts for low-cardinality string columns, one
   *            melt + groupBy (skipped when nothing qualifies).
   *   pass 4 — one head sample per group, `df.head(n)` (a CollectLimit:
@@ -163,11 +154,11 @@ final case class ProfilerOptions(
   *   pass 6 — natural-order detection, one map-only scan.
   *   pass 7 — parsed min/max/distinct days of string columns under the
   *            formats pass 4 discovered, one aggregation per group.
-  * Pass 1 runs first (its chunks concurrently); passes 2, 5, 6 and the
-  * per-group 4 + 7 then run as concurrent actions. Nothing unbounded is
-  * collected: category maps are capped, histograms are fixed-width,
-  * quantiles use percentile_approx (GK sketch), and the head sample is
-  * at most max(labelerSampleSize, 100) rows.
+  * Pass 1 runs first; passes 2, 5, 6 and the per-group 4 + 7 then run
+  * as concurrent actions, or not at all when pass 1 counted no rows.
+  * Nothing unbounded is collected: category maps are capped, histograms
+  * are fixed-width, quantiles use percentile_approx (GK sketch), and the
+  * head sample is at most max(labelerSampleSize, 100) rows.
   */
 object Profiler {
 
@@ -297,46 +288,38 @@ object Profiler {
       .all[graft.plugins.ColumnStatPlugin](graft.plugins.ColumnStatPlugin.Typ)
       .values.toSeq.sortBy(_.name)
 
-  /** Pass-1 sibling aggregate expressions for `fields` (per-column stats
-    * + table-level row stats, NOT correlation pairs). Under a split key
+  /** Pass-1 aggregate expressions for `fields`: per-column stats plus
+    * the table-level row stats, NOT the correlation co-moments. Every
+    * one is a typed imperative aggregate (or a projection over one), so
+    * the pass plans as one ObjectHashAggregate job. Under a split key
     * the same expressions run grouped, so every group's profile comes
     * from ONE scan. */
   private def pass1Cols(fields: Seq[StructField], opts: ProfilerOptions,
       statPlugins: Seq[graft.plugins.ColumnStatPlugin]): Seq[Column] = {
     val perCol: Seq[Column] = fields.flatMap { f =>
       val c = col(f.name); val nm = f.name
-      val base = Seq(
-        count(c).as(s"${nm}__n"),
-        cnt(c.isNull).as(s"${nm}__nulls"),
-        // NDV as a DataSketches HLL over value hashes (the sketch BYTES
-        // ride in the profile so chunk merges union instead of taking
-        // max); the isNotNull gate keeps nulls out of the sketch, and
-        // xxhash64 makes any column type sketchable
-        hll_sketch_agg(when(c.isNotNull, xxhash64(c)), lit(opts.ndvLgK))
-          .as(s"${nm}__ndvsk"))
+      // the named fields of a stats struct, each as `<column>__<field>`
+      def fieldsOf(stats: Column, names: String*): Seq[Column] =
+        names.map(x => stats.getField(x).as(s"${nm}__$x"))
+      // NDV as a DataSketches HLL over value hashes (the sketch BYTES
+      // ride in the profile so chunk merges union instead of taking
+      // max); the isNotNull gate keeps nulls out of the sketch, and
+      // xxhash64 makes any column type sketchable
+      val ndv = hll_sketch_agg(when(c.isNotNull, xxhash64(c)), lit(opts.ndvLgK))
+        .as(s"${nm}__ndvsk")
       val typed = f.dataType match {
         case t if isNumeric(t) =>
-          val d = c.cast("double")
-          Seq(
-            min(d).as(s"${nm}__min"), max(d).as(s"${nm}__max"),
-            sum(d).as(s"${nm}__sum"), avg(d).as(s"${nm}__mean"),
-            var_pop(d).as(s"${nm}__varp"),
-            skewness(d).as(s"${nm}__skew"), kurtosis(d).as(s"${nm}__kurt"),
-            cnt(d === 0).as(s"${nm}__zeros"), cnt(d < 0).as(s"${nm}__negs"),
-            percentile_approx(d,
+          fieldsOf(NumericStatsAggregate(c), NumericStatsAggregate.ResultType
+            .fieldNames.toSeq: _*) ++
+            Seq(percentile_approx(c.cast("double"),
               array(opts.quantileProbs.map(lit): _*), lit(10000))
               .as(s"${nm}__quant")) ++
             (if (opts.computeHistograms)
-              Seq(HistogramAggregate(d, opts.histogramBins).as(s"${nm}__hist"))
+              Seq(HistogramAggregate(c, opts.histogramBins).as(s"${nm}__hist"))
             else Seq.empty)
         case StringType =>
-          val len = length(c).cast("double")
-          Seq(
-            min(len).as(s"${nm}__minlen"), max(len).as(s"${nm}__maxlen"),
-            avg(len).as(s"${nm}__meanlen"), var_pop(len).as(s"${nm}__varlen"),
-            ratioNonNull(c, isIntStr(c)).as(s"${nm}__intr"),
-            ratioNonNull(c, isFloatStr(c)).as(s"${nm}__floatr"),
-            ratioNonNull(c, isDatetimeStr(c)).as(s"${nm}__dtr")) ++
+          fieldsOf(StringStatsAggregate(c), StringStatsAggregate.ResultType
+            .fieldNames.toSeq: _*) ++
             (if (opts.cmsHeavyHitters && opts.computeCategories)
               // a few-KB sketch per string column plus a bounded
               // Misra-Gries candidate map, fused into the same scan —
@@ -349,29 +332,31 @@ object Profiler {
                 MisraGriesAggregate(c, opts.hhCandidates).as(s"${nm}__mg"))
             else Seq.empty)
         case t if isDatetime(t) =>
-          Seq(
-            date_format(min(c), "yyyy-MM-dd HH:mm:ss").as(s"${nm}__mints"),
-            date_format(max(c), "yyyy-MM-dd HH:mm:ss").as(s"${nm}__maxts"),
+          val stats = ValueStatsAggregate(c)
+          fieldsOf(stats, "n", "nulls") ++ Seq(
+            date_format(stats.getField("min"), "yyyy-MM-dd HH:mm:ss")
+              .as(s"${nm}__mints"),
+            date_format(stats.getField("max"), "yyyy-MM-dd HH:mm:ss")
+              .as(s"${nm}__maxts"),
             distinctDays(c, opts).as(s"${nm}__ndays"))
-        case _ => Seq.empty
+        case _ => fieldsOf(ValueStatsAggregate(c), "n", "nulls")
       }
       val plugged = statPlugins.filter(_.appliesTo(f.dataType))
         .map(p => p.agg(c).cast("double").as(s"${nm}__plug__${p.name}"))
-      base ++ typed ++ plugged
+      ndv +: (typed ++ plugged)
     }
 
-    val anyNull = fields.map(f => col(f.name).isNull.cast("int"))
-      .reduce(_ + _)
+    val rows = RowStatsAggregate(fields.map(f => col(f.name)))
     val tableLevel = Seq(
-      count(lit(1)).as("__rowcount"),
+      rows.getField("rows").as("__rowcount"),
       // DataSketches HLL instead of approx_count_distinct: same one-pass
       // cost, but the sketch BYTES ride along in the Profile so chunk
       // merges union sketches (exact under overlap) instead of clamping
       hll_sketch_agg(
         xxhash64(fields.map(f => col(f.name)): _*), lit(opts.ndvLgK))
         .as("__ndrows_sk"),
-      cnt(anyNull > 0).as("__rowhasnull"),
-      cnt(anyNull === fields.size).as("__rowisnull"))
+      rows.getField("rowsWithNull").as("__rowhasnull"),
+      rows.getField("rowsAllNull").as("__rowisnull"))
     perCol ++ tableLevel
   }
 
@@ -400,26 +385,6 @@ object Profiler {
             c -> r.getSeq[String](key.size + i).toSet
           }.toMap
       }.toMap
-  }
-
-  /** Two-regime chunking of pass-1 aggregates (see
-    * ProfilerOptions.aggChunkSize), by expression type: a column whose
-    * analyzed expression holds an imperative aggregate (the GK quantile
-    * sketch, histogram, Misra-Gries, CMS, HLL sketches, any plugin
-    * sketch) never whole-stage-codegens, so all such columns go in ONE
-    * job; the declarative rest chunk to stay under the JIT method
-    * threshold. The columns come back analyzed against `df`, so each
-    * chunk's own analysis has nothing left to resolve. */
-  private def pass1Chunks(df: DataFrame, allAggs: Seq[Column],
-      opts: ProfilerOptions): Seq[Seq[Column]] = {
-    val analyzed = df.agg(allAggs.head, allAggs.tail: _*).queryExecution.analyzed
-      .collectFirst { case a: Aggregate => a.aggregateExpressions }.get
-    val (objAggs, declAggs) =
-      analyzed.partition(_.exists(_.isInstanceOf[ImperativeAggregate]))
-    val chunkSize = if (opts.aggChunkSize > 0) opts.aggChunkSize else declAggs.size
-    (declAggs.grouped(chunkSize).toSeq ++
-      (if (objAggs.nonEmpty) Seq(objAggs) else Seq.empty))
-      .map(_.map(GraftSessions.column))
   }
 
   /** Grouped (split) profiling: ONE pass-set produces a Profile per
@@ -494,27 +459,19 @@ object Profiler {
     def keyOf(r: Row): Long = if (key.isDefined) r.getLong(0) else 0L
 
     // ---- pass 1: the fused aggregation --------------------------------
-    // Correlation rides the same pass: the pairwise co-moment aggregates
-    // are ordinary sibling expressions, so under a key each group gets
-    // its own mergeable matrix state at zero extra scans. The chunks
-    // (pass1Chunks) submit CONCURRENTLY: each scans only its own
-    // columns, so overlapping them pipelines I/O and keeps all cores
-    // busy.
+    // One job: every pass-1 aggregate is a typed imperative aggregate, so
+    // the whole pass plans as a single ObjectHashAggregate with map-side
+    // partial aggregation. Correlation rides it as one co-moment
+    // aggregate, so under a key each group gets its own mergeable matrix
+    // state at zero extra scans.
     val (corrPairs, corrAggs) = corrPairsAndAggs(numericCols, opts)
-    val chunks = pass1Chunks(df,
-      pass1Cols(fields, opts, statPlugins) ++ corrAggs, opts)
-    val valsByKey: Map[Long, Map[String, Any]] = {
-      val futs = chunks.map(ch => Future {
-        df.groupBy(grouping: _*).agg(ch.head, ch.tail: _*).collect()
-          .map { r =>
-            keyOf(r) -> r.schema.fieldNames.toSeq.zipWithIndex.drop(key.size)
-              .map { case (n, i) => n -> r.get(i) }
-          }.toSeq
-      })
-      Await.result(Future.sequence(futs), Duration.Inf)
-        .flatten
-        .groupBy(_._1).view.mapValues(_.flatMap(_._2).toMap).toMap
-    }
+    val aggs = pass1Cols(fields, opts, statPlugins) ++ corrAggs
+    val valsByKey: Map[Long, Map[String, Any]] =
+      df.groupBy(grouping: _*).agg(aggs.head, aggs.tail: _*).collect()
+        .map { r =>
+          keyOf(r) -> r.schema.fieldNames.toSeq.zipWithIndex.drop(key.size)
+            .map { case (n, i) => n -> r.get(i) }.toMap
+        }.toMap
     require(key.isEmpty || valsByKey.size <= opts.maxGroups,
       s"profileSplit key ${key.get} realized ${valsByKey.size} distinct " +
         s"values > maxGroups=${opts.maxGroups} — the keyDomainBounded " +
@@ -529,6 +486,9 @@ object Profiler {
       Option(valsByKey(k)(s"${c}__ndvsk").asInstanceOf[Array[Byte]])
         .map(HllOps.estimate).getOrElse(0L)
     def rowsOf(k: Long): Long = valsByKey(k)("__rowcount").asInstanceOf[Long]
+    // no rows in any group: every later pass would read nothing, so none
+    // runs, and each result is what that pass yields on empty input
+    val empty = keys.forall(rowsOf(_) == 0L)
     val t1 = System.currentTimeMillis()
 
     // ---- passes 2, 5, 6 and the per-group 4 + 7: independent actions,
@@ -545,7 +505,7 @@ object Profiler {
       stringCols.filter(c =>
         opts.computeCategories && ndvOf(k, c) <= opts.maxCategories)).toMap
     val catFut = timed {
-      if (catColsByKey.values.forall(_.isEmpty))
+      if (empty || catColsByKey.values.forall(_.isEmpty))
         Map.empty[Long, Map[String, Map[String, Long]]]
       else catMelt(df, key, catColsByKey).collect()
         .groupBy(keyOf).map { case (k, rows) =>
@@ -564,7 +524,7 @@ object Profiler {
     // vocab; keeping the set makes merge a true set-union
     // (profiler_utils.py:74-92).
     val vocabFut = timed {
-      if (!opts.computeVocab || stringCols.isEmpty)
+      if (empty || !opts.computeVocab || stringCols.isEmpty)
         Map.empty[Long, Map[String, Set[String]]]
       else {
         val overBudget = keys.filter(rowsOf(_) > opts.vocabSampleRows)
@@ -584,9 +544,11 @@ object Profiler {
     // order, so each group's result is exactly what
     // profile(df.filter(key === k)) sees.
     val orderFut = timed {
+      val names = fields.map(_.name)
       if (!opts.computeOrder) Map.empty[Long, Map[String, String]]
+      else if (empty)
+        keys.map(_ -> names.map(_ -> OrderDetect.EmptyVerdict).toMap).toMap
       else {
-        val names = fields.map(_.name)
         val byKey = key match {
           case None => Map(0L -> OrderDetect.detectNatural(df, names))
           case Some(kc) => OrderDetect.detectNaturalSplit(
@@ -608,7 +570,9 @@ object Profiler {
           df.filter(kc === k).select(fields.map(f => col(f.name)): _*))
         val dtFormatCols = stringCols.filter(c => gdOf(k, s"${c}__dtr") > 0.0)
         val tHead = System.currentTimeMillis()
-        val head = headPasses(slice, fields, labelCols, dtFormatCols, opts)
+        val head =
+          if (empty) HeadPasses(Map.empty, Map.empty, Map.empty)
+          else headPasses(slice, fields, labelCols, dtFormatCols, opts)
         val tDt = System.currentTimeMillis()
         val strDtStats = datetimeExtremes(slice, head.dtFormats, opts)
         (head, strDtStats, tDt - tHead, System.currentTimeMillis() - tDt)
@@ -689,32 +653,18 @@ object Profiler {
       }
     }.toMap
 
-  /** Mergeable correlation state: pairwise-complete count, means, second
-    * moments, and co-moment per pair (six sibling aggs each, still one
-    * scan) — so Profile.merge pools instead of dropping the matrix
+  /** Mergeable correlation state: per pair the pairwise-complete count,
+    * means, second moments and co-moment, all from ONE
+    * [[CoMomentsAggregate]] over the numeric columns (still one scan) —
+    * so Profile.merge pools instead of dropping the matrix
     * (profile_builder.py:2380-2551). Under a split key the same
-    * expressions yield each group's pairwise state, exactly what
+    * expression yields each group's pairwise state, exactly what
     * `profile(df.filter(key === k))` computes. */
   private def corrPairsAndAggs(numericCols: Seq[String],
-      opts: ProfilerOptions): (Seq[(String, String)], Seq[Column]) = {
-    val pairs =
-      if (opts.computeCorrelation)
-        numericCols.combinations(2).map { case Seq(a, b) => (a, b) }.toSeq
-      else Seq.empty
-    val aggs = pairs.flatMap { case (a, b) =>
-      val ca = col(a).cast("double"); val cb = col(b).cast("double")
-      val both = ca.isNotNull && cb.isNotNull
-      val pa = when(both, ca); val pb = when(both, cb)
-      Seq(
-        cnt(both).as(s"__corr__${a}__${b}__n"),
-        avg(pa).as(s"__corr__${a}__${b}__ma"),
-        avg(pb).as(s"__corr__${a}__${b}__mb"),
-        var_pop(pa).as(s"__corr__${a}__${b}__va"),
-        var_pop(pb).as(s"__corr__${a}__${b}__vb"),
-        covar_pop(pa, pb).as(s"__corr__${a}__${b}__cov"))
-    }
-    (pairs, aggs)
-  }
+      opts: ProfilerOptions): (Seq[(String, String)], Seq[Column]) =
+    if (!opts.computeCorrelation || numericCols.size < 2) (Seq.empty, Seq.empty)
+    else (numericCols.combinations(2).map { case Seq(a, b) => (a, b) }.toSeq,
+      Seq(CoMomentsAggregate(numericCols.map(col)).as("__corr")))
 
   /** Build the [[Profile]] object of one group from its pass results
     * (its `vals` row and pass maps). */
@@ -838,15 +788,13 @@ object Profiler {
         plugStats)
     }
 
-    val corrMap = corrPairs.map { case (a, b) =>
-      val pn = vals(s"__corr__${a}__${b}__n") match {
-        case null => 0L
-        case x: Number => x.longValue()
-      }
-      (a, b) -> PairMoments(pn,
-        gd(s"__corr__${a}__${b}__ma"), gd(s"__corr__${a}__${b}__mb"),
-        gd(s"__corr__${a}__${b}__va") * pn, gd(s"__corr__${a}__${b}__vb") * pn,
-        gd(s"__corr__${a}__${b}__cov") * pn)
+    val corrRows =
+      if (corrPairs.isEmpty) Seq.empty
+      else vals("__corr").asInstanceOf[scala.collection.Seq[Row]]
+    val corrMap = corrPairs.zip(corrRows).map { case (pair, r) =>
+      def d(i: Int): Double = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+      val pn = r.getLong(0)
+      pair -> PairMoments(pn, d(1), d(2), d(3) * pn, d(4) * pn, d(5) * pn)
     }.toMap
 
     val rowsSk = Option(vals("__ndrows_sk").asInstanceOf[Array[Byte]])

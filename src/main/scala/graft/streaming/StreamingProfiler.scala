@@ -52,11 +52,14 @@ final class StreamingProfiler(opts: ProfilerOptions = ProfilerOptions()) {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
 
   /** foreachBatch-compatible sink. Batches are profiled sequentially
-    * (foreachBatch serializes calls), so plain volatile state suffices. */
+    * (foreachBatch serializes calls), so plain volatile state suffices.
+    * An empty batch costs its pass-1 job only (the profiler runs no
+    * later pass on zero rows) and leaves the state unchanged. */
   def sink: (DataFrame, Long) => Unit = (batch, _) => {
     val rebound = session.fold(batch)(
       GraftSessions.ofRows(_, batch.queryExecution.logical))
-    if (!rebound.isEmpty) state = Some(Profiler.update(state, rebound, opts))
+    val p = Profiler.profile(rebound, opts)
+    if (p.rowCount > 0) state = Some(state.fold(p)(_.merge(p)))
   }
 
   def current: Option[Profile] = state

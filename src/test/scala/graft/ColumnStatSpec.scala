@@ -185,18 +185,20 @@ class ColumnStatSpec extends AnyFunSuite {
     assert(split.values.forall(_.column("txt").get.labelVotes.nonEmpty))
   }
 
-  test("profiler plans: pass 1 chunks by expression type, not column name") {
+  test("profiler plans: pass 1 is one object-aggregate job with no declarative aggregate") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec,
-      SortAggregateExec}
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+      ObjectHashAggregateExec}
     import org.apache.spark.sql.util.QueryExecutionListener
-    // column names that hold the sketch aliases' suffixes: a name-based
-    // split would route their declarative aggregates (count, min, ...)
-    // into the object-aggregate job, out of whole-stage codegen
+    import graft.functions.RowStatsAggregate
+    // every column kind, under names that hold the sketch aliases' suffixes
     val df = spark.range(0, 2000, 1, 2).select(
       (col("id") * 7 % 113).as("a__quant"),
-      concat(lit("v"), (col("id") % 1500).cast("string")).as("b__mg"))
+      concat(lit("v"), (col("id") % 1500).cast("string")).as("b__mg"),
+      (col("id") % 3).cast("double").as("c"),
+      timestamp_seconds(col("id") * 3600).as("ts"),
+      (col("id") % 2 === 0).as("flag"))
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
@@ -210,18 +212,23 @@ class ColumnStatSpec extends AnyFunSuite {
       SparkTestSession.drainListenerBus()
       p
     } finally spark.listenerManager.unregister(listener)
-    val objectAggs = plans.toArray(Array.empty[SparkPlan]).toSeq
-      .flatMap(_.collect {
-        case a: ObjectHashAggregateExec => a.aggregateExpressions
-        case a: SortAggregateExec => a.aggregateExpressions
-      }.flatten)
-    assert(objectAggs.nonEmpty, "no object aggregate captured")
-    val declarative = objectAggs.map(_.aggregateFunction)
-      .filter(_.isInstanceOf[DeclarativeAggregate])
-    assert(declarative.isEmpty,
-      s"declarative aggregates in an object-aggregate job: $declarative")
+    // pass 1 is the plan that computes the table-level row stats
+    val pass1 = plans.toArray(Array.empty[SparkPlan]).toSeq.filter(_.exists {
+      case a: ObjectHashAggregateExec => a.aggregateExpressions
+        .exists(_.aggregateFunction.isInstanceOf[RowStatsAggregate])
+      case _ => false
+    })
+    assert(pass1.size == 1, s"pass-1 plans: ${pass1.size}")
+    assert(pass1.head.collect { case h: HashAggregateExec => h }.isEmpty,
+      s"HashAggregateExec in pass 1:\n${pass1.head}")
+    val funcs = pass1.head.collect { case a: ObjectHashAggregateExec => a }
+      .flatMap(_.aggregateExpressions).map(_.aggregateFunction)
+    val declarative = funcs.filter(_.isInstanceOf[DeclarativeAggregate])
+    assert(declarative.isEmpty, s"declarative aggregates in pass 1: $declarative")
     assert(p.column("a__quant").get.numeric.get.quantiles.nonEmpty)
     assert(p.column("b__mg").get.n == 2000)
+    assert(p.column("ts").get.datetime.nonEmpty)
+    assert(p.column("flag").get.n == 2000)
   }
 
   test("profiler plans: streamed micro-batches profile on the constructing session") {

@@ -38,26 +38,35 @@ class IncrementalSpec extends AnyFunSuite {
     assert(relClose(iq.skewnessBiased, wq.skewnessBiased, 1e-6))
   }
 
-  test("chunked pass-1 equals unchunked (the JIT-wall split changes nothing)") {
-    import graft.profiler.ProfilerOptions
+  test("native pass-1 stats equal the built-in aggregates on lineitem") {
+    // the built-in declarative aggregates pass 1 ran before its native
+    // column-stats and co-moment aggregates, on the same frame: the
+    // numeric and text moments and the correlation state agree exactly
     val li = Tables.load(spark, sf, "lineitem")
-    val chunked = Profiler.profile(li) // default aggChunkSize = 30
-    val fused = Profiler.profile(li, ProfilerOptions(aggChunkSize = 0))
-    assert(chunked.rowCount == fused.rowCount)
-    for (c <- chunked.columns; f = fused.column(c.name).get) {
-      assert(c.n == f.n && c.nulls == f.nulls)
-      assert(c.approxDistinct == f.approxDistinct) // HLL is deterministic
-      (c.numeric, f.numeric) match {
-        case (Some(a), Some(b)) =>
-          assert(a.mean == b.mean && a.min == b.min && a.max == b.max)
-          assert(relClose(a.m2, b.m2, 1e-9))
-        case _ => ()
-      }
+    val p = Profiler.profile(li)
+    val num = Seq("l_quantity", "l_extendedprice", "l_discount")
+    val aggs = num.flatMap { c =>
+      val d = col(c).cast("double")
+      Seq(min(d), max(d), sum(d), avg(d), var_pop(d), skewness(d), kurtosis(d))
+    } ++ Seq(avg(length(col("l_returnflag")).cast("double")),
+      var_pop(length(col("l_returnflag")).cast("double")),
+      covar_pop(col(num(0)).cast("double"), col(num(1)).cast("double")))
+    val r = li.agg(aggs.head, aggs.tail: _*).head()
+    num.zipWithIndex.foreach { case (c, i) =>
+      val s = p.column(c).get.numeric.get
+      val o = 7 * i
+      assert(s.min == r.getDouble(o) && s.max == r.getDouble(o + 1), c)
+      assert(s.sum == r.getDouble(o + 2) && s.mean == r.getDouble(o + 3), c)
+      assert(s.m2 == r.getDouble(o + 4) * s.n, c)
+      val varp = r.getDouble(o + 4)
+      assert(s.m3 == r.getDouble(o + 5) * math.pow(varp, 1.5) * s.n, c)
+      assert(s.m4 == (r.getDouble(o + 6) + 3.0) * varp * varp * s.n, c)
     }
-    assert(chunked.correlation.keySet == fused.correlation.keySet)
-    chunked.correlation.foreach { case (k, v) =>
-      assert(relClose(v, fused.correlation(k), 1e-9))
-    }
+    val t = p.column("l_returnflag").get.text.get
+    assert(t.meanLen == r.getDouble(21))
+    assert(t.lenM2 == r.getDouble(22) * t.nLen)
+    val pm = p.correlationState((num(0), num(1)))
+    assert(pm.com == r.getDouble(23) * pm.n)
   }
 
   test("fuzzy column-name alignment merges case-different schemas") {

@@ -8,8 +8,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{BucketGradAggregate, CodePointVocabAggregate,
-  HistogramAggregate, MisraGriesAggregate}
+import graft.functions.{BucketGradAggregate, CoMomentsAggregate,
+  CodePointVocabAggregate, HistogramAggregate, MisraGriesAggregate,
+  NumericStatsAggregate, RowStatsAggregate, StringStatsAggregate,
+  ValueStatsAggregate}
+import graft.functions.{cnt, isDatetimeStr, isFloatStr, isIntStr}
 import graft.functions.reference
 
 /** The native aggregates (graft.functions.*Aggregate) against the
@@ -111,6 +114,138 @@ class NativeAggregatesSpec extends AnyFunSuite {
     assert(nat == ref)
   }
 
+  // ---- the pass-1 column-stats aggregates against the built-ins they
+  // replace: bit-identical values, -0.0 and NaN included
+
+  /** Same value, doubles compared by bits (so -0.0 differs from 0.0). */
+  private def same(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) =>
+      java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y)
+    case _ => a == b
+  }
+
+  /** `native` (a struct) and `builtIns` in one aggregation grouped by
+    * `keys`: every struct field equals its built-in, per group. */
+  private def assertFieldsEqual(df: DataFrame, keys: Seq[Column],
+      native: Column, builtIns: Seq[Column], what: String): Unit = {
+    val rows = df.groupBy(keys: _*).agg(native.as("native"), builtIns: _*).collect()
+    assert(rows.nonEmpty, what)
+    for (r <- rows) {
+      val st = r.getStruct(keys.size)
+      assert(st.length == builtIns.size, what)
+      for (i <- builtIns.indices) {
+        val (a, b) = (st.get(i), r.get(keys.size + 1 + i))
+        assert(same(a, b), s"$what, ${st.schema(i).name}: $a vs $b (row $r)")
+      }
+    }
+  }
+
+  /** Doubles with nulls, NaN, ±Inf, signed zeros and spread magnitudes. */
+  private def specialDoubles: DataFrame = spark.range(0, 3000, 1, 4).select(
+    (col("id") % 3).as("g"),
+    when(col("id") % 97 === 0, lit(null))
+      .when(col("id") % 89 === 0, lit(Double.NaN))
+      .when(col("id") % 83 === 0, lit(Double.PositiveInfinity))
+      .when(col("id") % 79 === 0, lit(Double.NegativeInfinity))
+      .otherwise(sin(col("id")) * pow(lit(10.0), col("id") % 9)).as("v"),
+    when(col("id") % 5 === 0, lit(null))
+      .otherwise(sin(col("id") * 3) * 1e3 + col("id")).as("w"),
+    when(col("id") % 4 === 0, lit(-0.0)).when(col("id") % 4 === 1, lit(0.0))
+      .when(col("id") % 4 === 2, lit(null)).otherwise(lit(-2.0)).as("z"),
+    lit(4.5).as("c"),
+    (col("id") * 13 % 101).cast("int").as("i"))
+
+  private def numericBuiltIns(v: Column): Seq[Column] = Seq(count(v),
+    cnt(v.isNull), min(v), max(v), sum(v), avg(v), var_pop(v), skewness(v),
+    kurtosis(v), cnt(v === 0), cnt(v < 0))
+
+  test("numeric stats equal the built-ins bit for bit") {
+    val df = specialDoubles
+    for (c <- Seq("v", "w", "z", "c"); keys <- Seq(Nil, Seq(col("g")))) {
+      val finite = df.filter(!isnan(col(c)) && abs(col(c)) =!= Double.PositiveInfinity ||
+        col(c).isNull)
+      for ((frame, what) <- Seq(df -> c, finite -> s"finite $c"))
+        assertFieldsEqual(frame, keys, NumericStatsAggregate(col(c)),
+          numericBuiltIns(col(c)), s"$what by ${keys.size} keys")
+    }
+    // through the double cast of an integral column, and with no rows
+    assertFieldsEqual(spark.range(0, 5000, 1, 3).select((col("id") * 37 % 1009).as("v")),
+      Nil, NumericStatsAggregate(col("v")), numericBuiltIns(col("v").cast("double")),
+      "bigint")
+    assertFieldsEqual(df.filter(lit(false)), Nil, NumericStatsAggregate(col("v")),
+      numericBuiltIns(col("v")), "empty")
+  }
+
+  /** The type ratios' built-in form: matches over non-null values, null
+    * on an all-null column. */
+  private def ratioNonNull(c: Column, pred: Column): Column =
+    try_divide(cnt(pred).cast("double"), count(c))
+
+  test("string stats equal the built-ins bit for bit") {
+    val df = spark.range(0, 2000, 1, 4).select((col("id") % 2).as("g"),
+      when(col("id") % 9 === 0, lit(null))
+        .when(col("id") % 9 === 1, lit(""))
+        .when(col("id") % 9 === 2, concat(lit(" "), col("id").cast("string"), lit(".0 ")))
+        .when(col("id") % 9 === 3, (col("id") / 7.0).cast("string"))
+        .when(col("id") % 9 === 4, lit("2021-03-04 05:06"))
+        .when(col("id") % 9 === 5, lit("x😀é中"))
+        .otherwise(repeat(lit("ab "), (col("id") % 50).cast("int"))).as("s"))
+    val s = col("s")
+    val len = length(s).cast("double")
+    val builtIns = Seq(count(s), cnt(s.isNull), min(len), max(len), avg(len),
+      var_pop(len), ratioNonNull(s, isIntStr(s)), ratioNonNull(s, isFloatStr(s)),
+      ratioNonNull(s, isDatetimeStr(s)))
+    for (keys <- Seq(Nil, Seq(col("g"))))
+      assertFieldsEqual(df, keys, StringStatsAggregate(s), builtIns,
+        s"by ${keys.size} keys")
+    assertFieldsEqual(df.filter(lit(false)), Nil, StringStatsAggregate(s),
+      builtIns, "empty")
+  }
+
+  test("value stats equal count, null count, min and max") {
+    val df = spark.range(0, 1000, 1, 3).select(
+      when(col("id") % 7 =!= 0, timestamp_seconds(col("id") * 7919 % 100003)).as("ts"),
+      when(col("id") % 5 =!= 0, date_add(lit("2020-01-01").cast("date"),
+        (col("id") * 31 % 400).cast("int"))).as("d"),
+      (col("id") % 3 === 0).as("b"))
+    for (c <- Seq("ts", "d"))
+      assertFieldsEqual(df, Nil, ValueStatsAggregate(col(c)),
+        Seq(count(col(c)), cnt(col(c).isNull), min(col(c)), max(col(c))), c)
+    assertFieldsEqual(df, Nil, ValueStatsAggregate(col("b")),
+      Seq(count(col("b")), cnt(col("b").isNull)), "boolean")
+  }
+
+  test("row stats equal count(*) and the any/all-null row counts") {
+    val df = specialDoubles
+    val cols = Seq("v", "w", "z").map(col)
+    val nulls = cols.map(_.isNull.cast("int")).reduce(_ + _)
+    assertFieldsEqual(df, Seq(col("g")), RowStatsAggregate(cols),
+      Seq(count(lit(1)), cnt(nulls > 0), cnt(nulls === 3)), "rows")
+  }
+
+  test("co-moments equal the pairwise built-ins bit for bit") {
+    val df = specialDoubles
+    val names = Seq("w", "z", "c", "i")
+    for (keys <- Seq(Nil, Seq(col("g")))) {
+      val rows = df.groupBy(keys: _*).agg(
+        CoMomentsAggregate(names.map(col)).as("native"),
+        names.combinations(2).toSeq.flatMap { case Seq(a, b) =>
+          val (ca, cb) = (col(a).cast("double"), col(b).cast("double"))
+          val both = ca.isNotNull && cb.isNotNull
+          val (pa, pb) = (when(both, ca), when(both, cb))
+          Seq(cnt(both), avg(pa), avg(pb), var_pop(pa), var_pop(pb), covar_pop(pa, pb))
+        }: _*).collect()
+      for (r <- rows) {
+        val pairs = r.getSeq[Row](keys.size)
+        assert(pairs.size == 6)
+        for ((p, j) <- pairs.zipWithIndex; i <- 0 until 6) {
+          val b = r.get(keys.size + 1 + 6 * j + i)
+          assert(same(p.get(i), b), s"pair $j field $i: ${p.get(i)} vs $b")
+        }
+      }
+    }
+  }
+
   // ---- serialize → deserialize round trips, on the expressions directly
 
   private def roundTrip[B](agg: org.apache.spark.sql.catalyst.expressions
@@ -157,5 +292,16 @@ class NativeAggregatesSpec extends AnyFunSuite {
       case (b, (bs, gs)) => grad.update(b, InternalRow(new GenericArrayData(bs.toArray[Any]), gs))
     }
     assert(grad.deserialize(grad.serialize(b)).toSeq == Seq(5L, -7L, 5L, -2L))
+
+    val num = NumericStatsAggregate(BoundReference(0, DoubleType, nullable = true))
+    val (na, nb) = roundTrip(num, Seq(1.5, null, -0.0, Double.NaN, 3.0))
+    assert(na.asInstanceOf[InternalRow].toSeq(num.dataType.asInstanceOf[StructType])
+      .toString == nb.asInstanceOf[InternalRow].toSeq(num.dataType.asInstanceOf[StructType])
+      .toString)
+    val str = StringStatsAggregate(BoundReference(0, StringType, nullable = true))
+    val (sa, sb) = roundTrip(str, Seq("12", null, "x😀")
+      .map(s => if (s == null) null else UTF8String.fromString(s)))
+    val st = str.dataType.asInstanceOf[StructType]
+    assert(sa.asInstanceOf[InternalRow].toSeq(st) == sb.asInstanceOf[InternalRow].toSeq(st))
   }
 }

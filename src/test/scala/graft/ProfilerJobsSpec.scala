@@ -1,0 +1,93 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.profiler.Profiler
+import graft.streaming.StreamingProfiler
+
+/** Spark jobs per profiler call, counted with a job listener. Each count
+  * is pinned as a ceiling, so a change that adds a job to a profile call
+  * fails here; a change that removes one lowers the ceiling. */
+class ProfilerJobsSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  private def jobsOf(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    SparkTestSession.drainListenerBus()
+    sc.addSparkListener(l)
+    try { f; SparkTestSession.drainListenerBus() } finally sc.removeSparkListener(l)
+    n.get()
+  }
+
+  /** The column kinds of the benchmark's 7-column profile frame: datetime
+    * strings, integers, floats, five categories, an ascending id, long
+    * text and short high-cardinality strings; plus a 2-way split key. */
+  private def benchShaped: DataFrame = {
+    val id = col("id")
+    spark.range(0, 2000, 1, 4).select(
+      date_format(timestamp_seconds(lit(946684800L) + id * 392723L % 788400000L),
+        "yyyy-MM-dd HH:mm:ss").as("datetime"),
+      (id * 7919 % 2000001 - 1000000).as("integer"),
+      ((id * 104729 % 2000001 - 1000000) / 8.0).as("float"),
+      element_at(array(Seq("A", "B", "C", "D", "E").map(lit): _*),
+        (id % 5 + 1).cast("int")).as("categorical"),
+      id.as("ordered"),
+      repeat(concat(lit("lorem ipsum "), id.cast("string"), lit(" ")),
+        (id % 40 + 20).cast("int")).as("text"),
+      substring(sha2(id.cast("string"), 256), lit(1), (id % 60 + 1).cast("int"))
+        .as("string"),
+      (id % 2).as("half"))
+  }
+
+  private def lineitem: DataFrame =
+    Tables.load(spark, SparkTestSession.sfDir, "lineitem")
+
+  test("profile job counts do not grow: benchmark-shaped frame") {
+    val df = benchShaped
+    val whole = jobsOf(Profiler.profile(df.drop("half")))
+    val split = jobsOf(Profiler.profileSplit(df, "half"))
+    info(s"profile $whole jobs, profileSplit (2 groups) $split jobs")
+    // pass 1, categories, vocab, order, and a head sample that reads
+    // past the first partition (2 jobs) plus the parsed datetime extremes
+    // per group; a split adds the key-domain guard
+    assert(whole <= 7, s"profile: $whole jobs")
+    assert(split <= 11, s"profileSplit: $split jobs")
+  }
+
+  test("profile job counts do not grow: lineitem whole and 3-way split") {
+    val li = lineitem
+    val whole = jobsOf(Profiler.profile(li))
+    val split = jobsOf(Profiler.profileSplit(
+      li.withColumn("__k", col("l_orderkey") % 3), "__k"))
+    info(s"profile $whole jobs, profileSplit (3 groups) $split jobs")
+    assert(whole <= 5, s"profile: $whole jobs")
+    assert(split <= 8, s"profileSplit: $split jobs")
+  }
+
+  test("stream sink: an empty batch runs one job and keeps the state") {
+    val df = benchShaped.drop("half")
+    val sp = new StreamingProfiler()
+    sp.sink(df, 0L)
+    val before = sp.current
+    assert(jobsOf(sp.sink(df.filter(lit(false)), 1L)) == 1)
+    assert(sp.current eq before)
+    // a non-empty batch costs exactly its profile: no emptiness probe
+    assert(jobsOf(sp.sink(df, 2L)) == jobsOf(Profiler.profile(df)))
+    assert(sp.current.get.rowCount == 2 * df.count())
+  }
+
+  test("an empty frame runs pass 1 only") {
+    // a filter the optimizer cannot fold to an empty relation
+    val none = benchShaped.filter(col("ordered") < 0)
+    assert(jobsOf(Profiler.profile(none.drop("half"))) == 1)
+    // a split adds only the key-domain guard's distinct count
+    assert(jobsOf(Profiler.profileSplit(none, "half")) == 2)
+  }
+}

@@ -177,9 +177,8 @@ class ProfilerSpec extends AnyFunSuite {
   }
 
   test("wide schema (120 columns) profiles correctly through chunking") {
-    // wide tables are where the chunked + concurrent pass-1 design must
-    // hold: 120 columns -> ~40 declarative chunks; every column's stats
-    // must still be exact
+    // wide tables are where the one-job pass 1 must hold: 120 columns'
+    // stats aggregates in one scan, every column's stats still exact
     val cols = (0 until 120).map(i => (col("id") * (i + 1)).as(s"c$i"))
     val df = spark.range(1000).select(cols: _*)
     val p = Profiler.profile(df,

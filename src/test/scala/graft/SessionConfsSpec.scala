@@ -50,4 +50,38 @@ class SessionConfsSpec extends AnyFunSuite {
       s, SparkTestSession.sfDir).collect()
     assert(s.conf.getAll == before)
   }
+
+  test("connectedComponents leaves a fresh session's conf entries unchanged") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    val edges = s.createDataFrame(Seq((1L, 2L), (2L, 3L), (5L, 6L)))
+      .toDF("src", "dst")
+    assert(graft.graph.GraphProfiler.connectedComponents(edges).count() == 5)
+    assert(s.conf.getAll == before)
+  }
+
+  test("withStatePartitions leaves a fresh session's conf entries unchanged") {
+    val s = spark.newSession()
+    // the test session sets the key explicitly; unset, a restore that
+    // read `conf.get` would leave the default behind as an entry
+    s.conf.unset("spark.sql.shuffle.partitions")
+    val before = s.conf.getAll
+    assert(!before.contains("spark.sql.shuffle.partitions"))
+    val inside = graft.operators.StreamingQueries.withStatePartitions(s, 3) {
+      s.range(1).selectExpr(s"'${s.conf.get("spark.sql.shuffle.partitions")}' as p")
+    }.head().getString(0)
+    assert(inside == sys.props.getOrElse("graft.stream.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "3")))
+    assert(s.conf.getAll == before)
+  }
+
+  test("stream_join_rocksdb leaves a fresh session's conf entries unchanged") {
+    val s = spark.newSession()
+    // Tables.load's nanosAsLong knob, set for good (see quality_classifier)
+    Tables.load(s, SparkTestSession.sfDir, "events")
+    val before = s.conf.getAll
+    graft.operators.StreamingQueries.streamJoinRocksdb(
+      s, SparkTestSession.sfDir).collect()
+    assert(s.conf.getAll == before)
+  }
 }

@@ -13,6 +13,9 @@ import graft.profiler.{Codec, Profile, Profiler, ProfilerOptions, Report}
   * Fixtures, per test-data directory given: six tables profiled whole
   * (labels on) and a 3-way `l_orderkey % 3` split of lineitem; then,
   * once, a 3-partition frame with a string datetime column, whole and
+  * split in two; that frame with no rows, whole and split; and a
+  * 3-partition frame of nulls, NaN, ±Inf, signed zeros, constant
+  * numeric and string columns, a date and a boolean column, whole and
   * split in two. Splits run with labels off.
   *
   * Run: Test/runMain graft.tools.ProfileFingerprint <sfDir> [<sfDir> ...]
@@ -65,6 +68,37 @@ object ProfileFingerprint {
       (col("id") * 13 % 101).as("x"))
     print("dt", Profiler.profile(dt.drop("g")))
     split("dt%2", dt, "g")
+
+    // the same frame with no rows: a split yields no profile at all
+    val none = dt.filter(lit(false))
+    print("empty", Profiler.profile(none.drop("g")))
+    println(s"FP empty%2 groups=${
+      Profiler.profileSplit(none, "g", ProfilerOptions(computeLabels = false)).size}")
+
+    // special doubles, signed zeros, constants, and a date and a
+    // boolean column, over 3 partitions
+    val id = col("id")
+    val edge = spark.range(0, 600, 1, 3).select(
+      (id % 2).as("g"),
+      when(id % 7 === 0, lit(null))
+        .when(id % 7 === 1, lit(Double.NaN))
+        .when(id % 7 === 2, lit(Double.PositiveInfinity))
+        .when(id % 7 === 3, lit(Double.NegativeInfinity))
+        .when(id % 7 === 4, lit(-0.0))
+        .otherwise(id * 0.5 - 100).as("x"),
+      when(id % 3 === 0, lit(-0.0)).when(id % 3 === 1, lit(0.0)).as("z"),
+      when(id < 300, lit(-0.0)).otherwise(lit(0.0)).as("sz"),
+      when(id % 4 =!= 0, id * 3 % 17).as("i"),
+      lit(2.5).as("cx"),
+      lit("k").as("cs"),
+      when(id % 5 === 0, lit(null)).when(id % 5 === 1, lit(""))
+        .when(id % 5 === 2, lit("\uD83D\uDE00 x"))
+        .otherwise(concat(lit(" "), id.cast("string"), lit(".0 "))).as("s"),
+      when(id % 6 =!= 0, date_add(lit("2020-02-28").cast("date"),
+        (id % 40).cast("int"))).as("d"),
+      (id % 3 === 0).as("b"))
+    print("edge", Profiler.profile(edge.drop("g")))
+    split("edge%2", edge, "g")
     spark.stop()
   }
 }
