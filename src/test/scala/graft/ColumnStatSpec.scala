@@ -185,7 +185,7 @@ class ColumnStatSpec extends AnyFunSuite {
     assert(split.values.forall(_.column("txt").get.labelVotes.nonEmpty))
   }
 
-  test("profiler plans: pass 1 is one object-aggregate job with no declarative aggregate") {
+  test("profiler plans: pass 1 is one object-aggregate job, no declarative aggregate") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
