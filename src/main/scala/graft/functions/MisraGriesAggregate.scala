@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
@@ -80,38 +79,12 @@ case class MisraGriesAggregate(
     a
   }
 
-  override def eval(m: Buf): Any = {
-    val keys = new Array[Any](m.size)
-    val counts = new Array[Any](m.size)
-    var i = 0
-    m.foreachEntry { (k, c) => keys(i) = k; counts(i) = c.elem; i += 1 }
-    ArrayBasedMapData(keys, counts)
-  }
+  override def eval(m: Buf): Any = CategoryCountAggregate.mapData(m)
 
-  /** Layout: entry count (int), then per entry the key's UTF-8 byte
-    * length (int), its bytes, and its count (long). */
-  override def serialize(m: Buf): Array[Byte] = {
-    var size = 4
-    m.foreachEntry { (k, _) => size += 12 + k.numBytes }
-    val bb = java.nio.ByteBuffer.allocate(size)
-    bb.putInt(m.size)
-    m.foreachEntry { (k, c) =>
-      bb.putInt(k.numBytes).put(k.getBytes).putLong(c.elem)
-    }
-    bb.array()
-  }
+  /** Layout: [[CategoryCountAggregate.writeCounts]]'s. */
+  override def serialize(m: Buf): Array[Byte] = CategoryCountAggregate.writeCounts(m)
 
-  override def deserialize(bytes: Array[Byte]): Buf = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val m = createAggregationBuffer()
-    for (_ <- 0 until n) {
-      val k = new Array[Byte](bb.getInt)
-      bb.get(k)
-      m.update(UTF8String.fromBytes(k), new LongRef(bb.getLong))
-    }
-    m
-  }
+  override def deserialize(bytes: Array[Byte]): Buf = CategoryCountAggregate.readCounts(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): MisraGriesAggregate =
     copy(mutableAggBufferOffset = o)

@@ -1,43 +1,41 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, GraftSessions, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+  GenericInternalRow, InterpretedUnsafeProjection, RowOrdering, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 
 /** Order detection (SURVEY §2.4; reference order_column_profile.py:374-413
   * `_get_data_order`, merge `:100-263`): classify each column as
   * ascending / descending / constant / random over a defined row order.
   *
   * Scale shape: a naive `lag() OVER (ORDER BY key)` globally sorts into
-  * ONE partition — a scale-killer. Here the data is range-partitioned on
-  * the order key (or taken in natural scan order), each partition computes
+  * ONE partition — a scale-killer. Here each input partition computes
   * its local (first, last, nIncr, nDecr, nEq) summary in a single forward
-  * pass, and the driver merges the P summaries in partition order, adding
-  * the one cross-boundary comparison per seam — the same batch-merge
-  * algebra the reference applies between chunks. Cost: one pass, no
-  * global sort, O(P × columns) driver state.
+  * pass inside an [[OrderSegmentsAggregate]], and the final merge orders
+  * the P summaries by partition index, adding the one cross-boundary
+  * comparison per seam — the same batch-merge algebra the reference
+  * applies between chunks. The rows are taken either in natural scan
+  * order (the profiler's pass 1) or range-partitioned and sorted on a
+  * key ([[detect]]). Cost: one pass, no global sort, O(P × columns)
+  * state.
   */
 object OrderDetect {
-
-  /** Per-column, per-partition forward-scan summary. `first`/`last` are
-    * the first/last non-null values in partition row order. */
-  final case class ColSummary(
-      n: Long, first: Any, last: Any, nIncr: Long, nDecr: Long, nEq: Long)
 
   final case class OrderResult(
       order: String, nIncr: Long, nDecr: Long, nEq: Long)
 
-  /** Compare two cells of the same column: numeric when both are numbers,
-    * lexicographic for strings (the reference casts to float else compares
-    * as str, order_column_profile.py:374-413). */
-  private def cmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: Number, y: Number) =>
-      java.lang.Double.compare(x.doubleValue(), y.doubleValue())
-    case (x: String, y: String) => x.compareTo(y)
-    case (x: java.sql.Date, y: java.sql.Date) => x.compareTo(y)
-    case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
-    case _ => a.toString.compareTo(b.toString)
-  }
+  /** One key's decoded [[OrderSegmentsAggregate]] result: a result per
+    * value column, and the rows each input partition held. */
+  final case class Segments(columns: Seq[OrderResult], partitionRows: Map[Int, Long])
 
   private def classify(nIncr: Long, nDecr: Long, nEq: Long): String =
     if (nIncr == 0 && nDecr == 0) "constant"
@@ -48,10 +46,24 @@ object OrderDetect {
   /** The verdict on a column with no values. */
   val EmptyVerdict: String = classify(0L, 0L, 0L)
 
+  /** Whether a column of type `t` has an order to detect. */
+  def orderable(t: DataType): Boolean = RowOrdering.isOrderable(t)
+
+  /** An [[OrderSegmentsAggregate]] result, as collected, by key. */
+  def decode(v: Any): Map[Long, Segments] =
+    v.asInstanceOf[scala.collection.Seq[Row]].map { r =>
+      r.getLong(0) -> Segments(
+        r.getSeq[Row](2).map { c =>
+          OrderResult(classify(c.getLong(0), c.getLong(1), c.getLong(2)),
+            c.getLong(0), c.getLong(1), c.getLong(2))
+        },
+        r.getMap[Int, Long](1).toMap)
+    }.toMap
+
   /** Detect order of `valCols` when rows are ordered by `keyCol`.
     * Range-repartitions on the key (so partitions tile the key space in
-    * order), sorts within partitions, summarizes per partition, merges on
-    * the driver. */
+    * order), sorts within partitions, and summarizes each partition in
+    * one aggregation (its partial runs on the sorted partitions). */
   def detect(df: DataFrame, keyCol: String, valCols: Seq[String],
       partitions: Int = 0): Map[String, OrderResult] = {
     val p = if (partitions > 0) partitions
@@ -59,99 +71,12 @@ object OrderDetect {
     val arranged = df.select((keyCol +: valCols).map(col): _*)
       .repartitionByRange(p, col(keyCol))
       .sortWithinPartitions(keyCol)
-    summarizeAndMerge(arranged, valCols, keyed = true)
+    val res = decode(arranged.agg(
+      OrderSegmentsAggregate(lit(0L), valCols.map(col))).head().get(0))
+    val cols = res.get(0L).map(_.columns)
+      .getOrElse(valCols.map(_ => OrderResult(EmptyVerdict, 0L, 0L, 0L)))
+    valCols.zip(cols).toMap
   }
-
-  /** Detect order in the DataFrame's natural scan order (the reference's
-    * file-row-order semantics): per input partition in partition-index
-    * order, no shuffle at all. */
-  def detectNatural(df: DataFrame, valCols: Seq[String]): Map[String, OrderResult] =
-    summarizeAndMerge(df.select(valCols.map(col): _*), valCols, keyed = false)
-
-  /** Grouped [[detectNatural]] for [[graft.profiler.Profiler.profileSplit]]:
-    * one order result set PER split-key value, from the SAME single
-    * forward pass (per-partition per-key accumulators, then the driver
-    * seam-merge applied per key in partition order). A filter preserves
-    * partition structure and row order, so each key's summaries see
-    * exactly the row subsequence `profile(df.filter(key === k))` would —
-    * the results are deterministic and identical, with the scan count
-    * independent of k like the split profiler's other passes.
-    *
-    * `df` must be (split key LONG, valCols…) with the key first and
-    * non-null. Driver state: O(P × k × columns) summaries. */
-  def detectNaturalSplit(df: DataFrame, valCols: Seq[String])
-      : Map[Long, Map[String, OrderResult]] = {
-    val nCols = valCols.size
-    val summaries: Array[(Int, Long, Array[ColSummary])] =
-      df.rdd.mapPartitionsWithIndex { (pid, it) =>
-        val byKey =
-          scala.collection.mutable.LinkedHashMap.empty[Long, Array[ColSummary]]
-        it.foreach { row =>
-          val s = byKey.getOrElseUpdate(row.getLong(0),
-            Array.fill(nCols)(ColSummary(0L, null, null, 0L, 0L, 0L)))
-          updateRow(s, row, offset = 1, nCols)
-        }
-        byKey.iterator.map { case (k, s) => (pid, k, s) }
-      }.collect()
-    summaries.groupBy(_._2).map { case (k, parts) =>
-      k -> mergeInPartitionOrder(parts.sortBy(_._1).map(_._3), valCols)
-    }
-  }
-
-  private def summarizeAndMerge(
-      df: DataFrame, valCols: Seq[String], keyed: Boolean): Map[String, OrderResult] = {
-    val offset = if (keyed) 1 else 0
-    val nCols = valCols.size
-    // one Row per (partition): [partId, per-col summaries as packed Rows]
-    val summaries: Array[(Int, Array[ColSummary])] =
-      df.rdd.mapPartitionsWithIndex { (pid, it) =>
-        val s = Array.fill(nCols)(ColSummary(0L, null, null, 0L, 0L, 0L))
-        it.foreach(row => updateRow(s, row, offset, nCols))
-        Iterator.single((pid, s))
-      }.collect()
-    mergeInPartitionOrder(summaries.sortBy(_._1).map(_._2), valCols)
-  }
-
-  /** Fold one row into the per-column summaries (partition-local). */
-  private def updateRow(s: Array[ColSummary], row: Row, offset: Int,
-      nCols: Int): Unit = {
-    var c = 0
-    while (c < nCols) {
-      val v = row.get(c + offset)
-      if (v != null) {
-        val cur = s(c)
-        if (cur.n == 0L) s(c) = ColSummary(1L, v, v, 0L, 0L, 0L)
-        else {
-          val d = cmp(v, cur.last)
-          s(c) = ColSummary(cur.n + 1, cur.first, v,
-            cur.nIncr + (if (d > 0) 1 else 0),
-            cur.nDecr + (if (d < 0) 1 else 0),
-            cur.nEq + (if (d == 0) 1 else 0))
-        }
-      }
-      c += 1
-    }
-  }
-
-  /** Driver seam-merge of per-partition summaries in partition order. */
-  private def mergeInPartitionOrder(ordered: Array[Array[ColSummary]],
-      valCols: Seq[String]): Map[String, OrderResult] =
-    valCols.zipWithIndex.map { case (name, c) =>
-      var nIncr = 0L; var nDecr = 0L; var nEq = 0L
-      var prevLast: Any = null
-      ordered.foreach { parts =>
-        val s = parts(c)
-        if (s.n > 0) {
-          nIncr += s.nIncr; nDecr += s.nDecr; nEq += s.nEq
-          if (prevLast != null) { // one comparison per partition seam
-            val d = cmp(s.first, prevLast)
-            if (d > 0) nIncr += 1 else if (d < 0) nDecr += 1 else nEq += 1
-          }
-          prevLast = s.last
-        }
-      }
-      name -> OrderResult(classify(nIncr, nDecr, nEq), nIncr, nDecr, nEq)
-    }.toMap
 
   /** Results as a small DataFrame for the query/oracle surface. */
   def toDF(df: DataFrame, keyCol: String, valCols: Seq[String]): DataFrame = {
@@ -166,9 +91,281 @@ object OrderDetect {
       StructType(Seq(
         StructField("col_name", StringType, nullable = false),
         StructField("order_type", StringType, nullable = false),
-        StructField("n_incr", org.apache.spark.sql.types.LongType, false),
-        StructField("n_decr", org.apache.spark.sql.types.LongType, false),
-        StructField("n_eq", org.apache.spark.sql.types.LongType, false))))
+        StructField("n_incr", LongType, false),
+        StructField("n_decr", LongType, false),
+        StructField("n_eq", LongType, false))))
       .orderBy("col_name")
   }
+}
+
+/** Per-(input partition, key) forward-scan order summaries of the value
+  * columns, as one mergeable aggregate: the engine of [[OrderDetect]].
+  *
+  * `children` are a long key and then the value columns. A task folds
+  * its rows, in the order it reads them, into one segment per key for
+  * its partition (`TaskContext.getPartitionId`, the value
+  * `spark_partition_id()` reads): per column the non-null count, the
+  * first and last non-null values and the increase / decrease / equal
+  * counts between consecutive non-null values, plus the segment's row
+  * count. Merge is the union of the segments. `eval` sorts each key's
+  * segments by partition and adds one comparison per seam between
+  * consecutive non-empty segments.
+  *
+  * The rows of one partition must reach `update` in scan order, so the
+  * aggregate belongs in an aggregation without grouping (or over a
+  * partition sorted just below it): ObjectHashAggregate's sort-based
+  * fallback would update a group with the rows that arrive after the
+  * fallback before merging the earlier ones.
+  *
+  * Comparison (the reference casts to float, else compares as str):
+  * numbers as doubles (`java.lang.Double.compare`), strings in
+  * `String.compareTo` order (UTF-16 code units), binary as unsigned
+  * bytes, and every other orderable type — booleans, dates, timestamps,
+  * intervals — by its Catalyst value's natural ordering.
+  *
+  * The result is `array<struct<key, partition_rows: map<int, bigint>,
+  * columns: array<struct<n_incr, n_decr, n_eq>>>>`, sorted by key. */
+case class OrderSegmentsAggregate(
+    children: Seq[Expression],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[OrderSegmentsAggregate.Buf] {
+
+  import OrderSegmentsAggregate.{Buf, Segment}
+
+  private def values: Seq[Expression] = children.tail
+  private def k: Int = children.size - 1
+  @transient private lazy val valueExprs: Array[Expression] = values.toArray
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (children.isEmpty || children.head.dataType != LongType)
+      TypeCheckResult.TypeCheckFailure("OrderSegmentsAggregate expects a long key first")
+    else values.find(v => !OrderDetect.orderable(v.dataType)) match {
+      case Some(v) => TypeCheckResult.TypeCheckFailure(
+        s"OrderSegmentsAggregate cannot order ${v.dataType.simpleString}")
+      case None => TypeCheckResult.TypeCheckSuccess
+    }
+  override def dataType: DataType = OrderSegmentsAggregate.ResultType
+  override def nullable: Boolean = false
+
+  @transient private lazy val cmps: Array[(Any, Any) => Int] =
+    values.map(v => OrderSegmentsAggregate.comparator(v.dataType)).toArray
+
+  override def createAggregationBuffer(): Buf = new Buf
+
+  override def update(b: Buf, input: InternalRow): Buf =
+    updateIn(b, input, TaskContext.getPartitionId())
+
+  /** [[update]] with the input partition given. */
+  private[graft] def updateIn(b: Buf, input: InternalRow, partition: Int): Buf = {
+    val key = children.head.eval(input).asInstanceOf[Long]
+    val s = b.segment(partition, key, k)
+    s.rows += 1
+    var c = 0
+    while (c < k) {
+      val v = valueExprs(c).eval(input)
+      if (v != null) {
+        // the value may point into a reused row: copy before keeping
+        val kept = InternalRow.copyValue(v)
+        if (s.n(c) == 0L) s.first(c) = kept
+        else {
+          val d = cmps(c)(v, s.last(c))
+          if (d > 0) s.incr(c) += 1 else if (d < 0) s.decr(c) += 1 else s.eq(c) += 1
+        }
+        s.last(c) = kept
+        s.n(c) += 1
+      }
+      c += 1
+    }
+    b
+  }
+
+  override def merge(a: Buf, b: Buf): Buf = {
+    b.segments.foreach(s => a.add(s))
+    a
+  }
+
+  override def eval(b: Buf): Any = {
+    val byKey = b.segments.groupBy(_.key).toSeq.sortBy(_._1)
+    new GenericArrayData(byKey.map { case (key, segs) =>
+      val ordered = segs.toSeq.sortBy(_.partition)
+      val cols = (0 until k).map { c =>
+        var incr = 0L; var decr = 0L; var eq = 0L
+        var prevLast: Any = null
+        ordered.foreach { s =>
+          if (s.n(c) > 0) {
+            incr += s.incr(c); decr += s.decr(c); eq += s.eq(c)
+            if (prevLast != null) { // one comparison per partition seam
+              val d = cmps(c)(s.first(c), prevLast)
+              if (d > 0) incr += 1 else if (d < 0) decr += 1 else eq += 1
+            }
+            prevLast = s.last(c)
+          }
+        }
+        InternalRow(incr, decr, eq)
+      }
+      InternalRow(key,
+        ArrayBasedMapData(ordered.map(_.partition).toArray[Any],
+          ordered.map(_.rows).toArray[Any]),
+        new GenericArrayData(cols.toArray[Any]))
+    }.toArray[Any])
+  }
+
+  /** A segment's fields: partition, key, rows, then per column n, incr,
+    * decr, eq, first and last. */
+  @transient private lazy val segTypes: Seq[DataType] =
+    Seq(IntegerType, LongType, LongType) ++ values.flatMap(v =>
+      Seq(LongType, LongType, LongType, LongType, v.dataType, v.dataType))
+  @transient private lazy val toUnsafe = InterpretedUnsafeProjection.createProjection(
+    segTypes.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) })
+
+  /** Layout: the segment count (int), then per segment its fields as an
+    * UnsafeRow, length-prefixed (int). */
+  override def serialize(b: Buf): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val data = new java.io.DataOutputStream(out)
+    data.writeInt(b.segments.size)
+    b.segments.foreach { s =>
+      val fields = new Array[Any](segTypes.size)
+      fields(0) = s.partition; fields(1) = s.key; fields(2) = s.rows
+      for (c <- 0 until k) {
+        val o = 3 + 6 * c
+        fields(o) = s.n(c); fields(o + 1) = s.incr(c); fields(o + 2) = s.decr(c)
+        fields(o + 3) = s.eq(c); fields(o + 4) = s.first(c); fields(o + 5) = s.last(c)
+      }
+      val row = toUnsafe(new GenericInternalRow(fields))
+      data.writeInt(row.getSizeInBytes)
+      data.write(row.getBytes, 0, row.getSizeInBytes)
+    }
+    data.flush()
+    out.toByteArray
+  }
+
+  override def deserialize(bytes: Array[Byte]): Buf = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val b = new Buf
+    for (_ <- 0 until bb.getInt) {
+      val seg = new Array[Byte](bb.getInt)
+      bb.get(seg)
+      val row = new UnsafeRow(segTypes.size)
+      row.pointTo(seg, seg.length)
+      val s = new Segment(row.getInt(0), row.getLong(1), k)
+      s.rows = row.getLong(2)
+      for (c <- 0 until k) {
+        val o = 3 + 6 * c
+        s.n(c) = row.getLong(o); s.incr(c) = row.getLong(o + 1)
+        s.decr(c) = row.getLong(o + 2); s.eq(c) = row.getLong(o + 3)
+        s.first(c) = row.get(o + 4, segTypes(o + 4))
+        s.last(c) = row.get(o + 5, segTypes(o + 5))
+      }
+      b.add(s)
+    }
+    b
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): OrderSegmentsAggregate =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): OrderSegmentsAggregate =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): OrderSegmentsAggregate = copy(children = c)
+}
+
+object OrderSegmentsAggregate {
+
+  /** One (partition, key) forward-scan summary over `k` value columns. */
+  final class Segment(val partition: Int, val key: Long, k: Int) {
+    var rows = 0L
+    val n = new Array[Long](k)
+    val incr = new Array[Long](k)
+    val decr = new Array[Long](k)
+    val eq = new Array[Long](k)
+    val first = new Array[Any](k)
+    val last = new Array[Any](k)
+  }
+
+  /** Segments by (partition, key); the segment last updated is kept at
+    * hand, since a partition's rows usually run in one key. */
+  final class Buf {
+    private val byId = mutable.HashMap.empty[(Int, Long), Segment]
+    private var current: Segment = null
+
+    def segments: Iterable[Segment] = byId.values
+
+    def segment(partition: Int, key: Long, k: Int): Segment = {
+      if (current == null || current.key != key || current.partition != partition)
+        current = byId.getOrElseUpdate((partition, key), new Segment(partition, key, k))
+      current
+    }
+
+    /** Add a segment from another buffer: (partition, key) pairs are
+      * disjoint across tasks, so it is never already present. */
+    def add(s: Segment): Unit = {
+      require(!byId.contains((s.partition, s.key)),
+        s"order segment (partition ${s.partition}, key ${s.key}) merged twice")
+      byId.update((s.partition, s.key), s)
+    }
+  }
+
+  val ColumnType: StructType = StructType(Seq(
+    StructField("n_incr", LongType, nullable = false),
+    StructField("n_decr", LongType, nullable = false),
+    StructField("n_eq", LongType, nullable = false)))
+  val ResultType: DataType = ArrayType(StructType(Seq(
+    StructField("key", LongType, nullable = false),
+    StructField("partition_rows", MapType(IntegerType, LongType, valueContainsNull = false),
+      nullable = false),
+    StructField("columns", ArrayType(ColumnType, containsNull = false), nullable = false))),
+    containsNull = false)
+
+  /** The order of two non-null Catalyst values of type `t`. */
+  private[functions] def comparator(t: DataType): (Any, Any) => Int = t match {
+    case _: NumericType => (a, b) => java.lang.Double.compare(toDouble(a), toDouble(b))
+    case _: StringType => (a, b) =>
+      utf16Compare(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
+    case NullType => (_, _) => 0
+    case BinaryType => (a, b) =>
+      java.util.Arrays.compareUnsigned(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
+    case _ =>
+      val ord = TypeUtils.getInterpretedOrdering(t)
+      (a, b) => ord.compare(a, b)
+  }
+
+  private def toDouble(x: Any): Double = x match {
+    case v: Double => v
+    case v: Long => v.toDouble
+    case v: Int => v.toDouble
+    case v: Float => v.toDouble
+    case v: Short => v.toDouble
+    case v: Byte => v.toDouble
+    case v: org.apache.spark.sql.types.Decimal => v.toDouble
+  }
+
+  /** `String.compareTo` order over UTF-8 bytes: byte order is code-point
+    * order, which UTF-16 code units follow except that a supplementary
+    * character (a surrogate pair, U+D800..) sorts below U+E000..U+FFFF.
+    * So only the first differing code point's lead bytes need a look:
+    * 0xF0.. (4 bytes, supplementary) against 0xEE/0xEF (U+E000..U+FFFF)
+    * reverses the byte order. */
+  private[functions] def utf16Compare(a: UTF8String, b: UTF8String): Int = {
+    val c = a.binaryCompare(b)
+    if (c == 0) return 0
+    val n = math.min(a.numBytes, b.numBytes)
+    var i = 0
+    while (i < n && a.getByte(i) == b.getByte(i)) i += 1
+    if (i == n) return c // one is a prefix of the other
+    while (i > 0 && (a.getByte(i) & 0xC0) == 0x80) i -= 1
+    val la = a.getByte(i) & 0xFF
+    val lb = b.getByte(i) & 0xFF
+    def bmpHigh(x: Int) = x == 0xEE || x == 0xEF
+    if (la >= 0xF0 && bmpHigh(lb)) -1
+    else if (lb >= 0xF0 && bmpHigh(la)) 1
+    else c
+  }
+
+  /** Order summaries of the `values` columns per (input partition, `key`
+    * value); `key` must be a non-null long. */
+  def apply(key: Column, values: Seq[Column]): Column =
+    GraftSessions.column(OrderSegmentsAggregate(
+      (key +: values).map(GraftSessions.expression)).toAggregateExpression())
 }

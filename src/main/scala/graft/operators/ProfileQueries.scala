@@ -40,10 +40,9 @@ object ProfileQueries extends QueryModule {
     val opts = ProfilerOptions(
       computeCorrelation = false, computeLabels = false,
       computeOrder = false, computeHistograms = false,
-      // vocab must be the exact set union for the oracle: disable BOTH
-      // the row-sampling shortcut and the per-value char cap (the SQL
-      // side splits full values)
-      vocabSampleRows = Int.MaxValue, vocabCharsPerValue = Int.MaxValue,
+      // vocab must be the exact set union for the oracle: disable the
+      // per-value char cap (the SQL side splits full values)
+      vocabCharsPerValue = Int.MaxValue,
       // emitted keys never include exemplars → skip the per-chunk
       // head-sample probes (r19: one filter+limit job per chunk);
       // key is l_orderkey % 4 → ≤4 groups by construction (r20: skips
@@ -51,7 +50,7 @@ object ProfileQueries extends QueryModule {
       computeExemplars = false, keyDomainBounded = true)
     // the 4 chunk profiles come from ONE grouped pass-set
     // (Profiler.profileSplit, r13): same per-chunk Profiles as 4
-    // filtered profile() calls, but pass 1/2/5 each scan once grouped by
+    // filtered profile() calls, but pass 1 scans once grouped by
     // the chunk key instead of 4× — the fused form of the old
     // concurrent-futures submission (job count now independent of the
     // chunk count). Each chunk still round-trips through the JSON codec
@@ -587,7 +586,7 @@ object ProfileQueries extends QueryModule {
     val opts = ProfilerOptions(
       computeCorrelation = false, computeLabels = false,
       computeOrder = false, computeHistograms = false,
-      vocabSampleRows = Int.MaxValue, vocabCharsPerValue = Int.MaxValue,
+      vocabCharsPerValue = Int.MaxValue,
       // vocab IS emitted (returnflag_vocab) and stays on; exemplars
       // never are → skip the head probe each micro-batch pays (r19)
       computeExemplars = false)

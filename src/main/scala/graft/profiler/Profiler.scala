@@ -30,16 +30,9 @@ final case class ProfilerOptions(
     /** Cap on the stored vocab char set (alphabets are small; the cap
       * guards against binary-garbage columns). */
     vocabCap: Int = 1000,
-    /** Row budget for the vocab pass: above this, vocab is computed on a
-      * deterministic Bernoulli sample instead of the full scan. The
-      * pass reads every code point of every value it sees (up to
-      * [[vocabCharsPerValue]]), so its map-side CPU is O(total
-      * characters) however cheap the per-character fold; the reference
-      * computes vocab on its row sample anyway (sampled vocab ⊆ true
-      * vocab; alphabets saturate in a few thousand rows). */
-    vocabSampleRows: Int = 100000,
-    /** Code points scanned per value in the vocab pass — a length cap so
-      * one pathological multi-MB value can't dominate the pass. */
+    /** Code points scanned per value for the vocab — a length cap so one
+      * pathological multi-MB value can't dominate pass 1. Vocab is
+      * computed over every row (the true vocab, not a sample). */
     vocabCharsPerValue: Int = 1000,
     /** Natural-scan-order detection per column
       * (order_column_profile.py:374-413). */
@@ -136,26 +129,36 @@ final case class ProfilerOptions(
   *            sibling aggregate expressions (its native column-stats
   *            aggregate — counts, moments, extremes, lengths, type
   *            ratios — plus the NDV, quantile, histogram, CMS and
-  *            Misra-Gries sketches), with the table-level row stats and
-  *            one co-moment aggregate for correlation. All are typed
-  *            imperative aggregates, so the pass plans as one
-  *            ObjectHashAggregate scan with map-side partial
-  *            aggregation and no generated per-row code.
-  *   pass 2 — category counts for low-cardinality string columns, one
-  *            melt + groupBy (skipped when nothing qualifies).
-  *   pass 4 — one head sample per group, `df.head(n)` (a CollectLimit:
-  *            no generated limit counter), feeding label votes (first
-  *            labelerSampleSize rows), datetime-format discovery (first
-  *            50) and exemplars (first 100); the label and format rules
-  *            run in one projection over the sample as a LocalRelation,
-  *            folded on the driver — no job, no codegen.
-  *   pass 5 — character vocabulary: one mergeable code-point-set
-  *            aggregate per string column, no per-character rows.
-  *   pass 6 — natural-order detection, one map-only scan.
+  *            Misra-Gries sketches, and for a string column its exact
+  *            category counts up to a ceiling and its code-point
+  *            vocabulary), with the table-level row stats and one
+  *            co-moment aggregate for correlation. On the whole frame it
+  *            also carries the natural-order segments: per input
+  *            partition, each column's forward-scan order summary and
+  *            the partition's row count. All are typed imperative
+  *            aggregates, so the pass plans as one ObjectHashAggregate
+  *            scan with map-side partial aggregation and no generated
+  *            per-row code.
+  *   pass 2 — category counts by melt + groupBy, only for a column whose
+  *            NDV estimate qualifies it but whose pass-1 counter passed
+  *            its ceiling (normally never).
+  *   pass 4 — one head sample per group, the rows `df.head(n)` returns,
+  *            feeding label votes (first labelerSampleSize rows),
+  *            datetime-format discovery (first 50) and exemplars (first
+  *            100); the label and format rules run in one projection
+  *            over the sample as a LocalRelation, folded on the driver —
+  *            no job, no codegen. On the whole frame the order segments'
+  *            row counts name the leading partitions holding those rows,
+  *            so the sample is one job over exactly them.
+  *   pass 6 — under a split key only: natural-order detection, the
+  *            order segments keyed by (partition, key) in one ungrouped
+  *            aggregation.
   *   pass 7 — parsed min/max/distinct days of string columns under the
   *            formats pass 4 discovered, one aggregation per group.
-  * Pass 1 runs first; passes 2, 5, 6 and the per-group 4 + 7 then run
-  * as concurrent actions, or not at all when pass 1 counted no rows.
+  * Pass 1 runs first; passes 2, 6 and the per-group 4 + 7 then run as
+  * concurrent actions, or not at all when pass 1 counted no rows. A
+  * whole-frame profile is pass 1, the head sample and, with a string
+  * datetime column, pass 7: at most 3 jobs.
   * Nothing unbounded is collected: category maps are capped, histograms
   * are fixed-width, quantiles use percentile_approx (GK sketch), and the
   * head sample is at most max(labelerSampleSize, 100) rows.
@@ -167,9 +170,8 @@ object Profiler {
     * bounded-cardinality BY CONSTRUCTION: pass 1 is a partial-agg'd
     * global (or ≤ maxGroups-key) aggregation whose exchange carries one
     * sketch row per map task (per key), the category melt aggregates
-    * map-side to ≤ qualifying-columns × maxCategories rows, the vocab
-    * pass carries one code-point set per (map task, key, column),
-    * and the order pass is map-only. Adaptive re-planning has nothing
+    * map-side to ≤ qualifying-columns × maxCategories rows, and the
+    * split order pass carries one segment set per map task. Adaptive re-planning has nothing
     * to coalesce or skew-split on such exchanges at ANY scale, while
     * costing one extra job + scheduling barrier per exchange
     * materialization — at bench scale that was roughly half the
@@ -320,6 +322,13 @@ object Profiler {
         case StringType =>
           fieldsOf(StringStatsAggregate(c), StringStatsAggregate.ResultType
             .fieldNames.toSeq: _*) ++
+            (if (opts.computeCategories)
+              Seq(CategoryCountAggregate(c, categoryCeiling(opts)).as(s"${nm}__cat"))
+            else Seq.empty) ++
+            (if (opts.computeVocab)
+              Seq(CodePointVocabAggregate(c, opts.vocabCharsPerValue, opts.vocabCap)
+                .as(s"${nm}__vocab"))
+            else Seq.empty) ++
             (if (opts.cmsHeavyHitters && opts.computeCategories)
               // a few-KB sketch per string column plus a bounded
               // Misra-Gries candidate map, fused into the same scan —
@@ -369,23 +378,11 @@ object Profiler {
     hll_sketch_estimate(
       hll_sketch_agg(unix_date(to_date(x)), lit(opts.ndvLgK)))
 
-  /** Pass 5: the code-point vocabulary of every string column, one
-    * [[CodePointVocabAggregate]] per column in one aggregation — global when
-    * `key` is None (the whole frame, returned under key 0), else grouped
-    * by `key` (one result row per split group). */
-  private def vocabPass(src: DataFrame, key: Option[Column],
-      stringCols: Seq[String],
-      opts: ProfilerOptions): Map[Long, Map[String, Set[String]]] = {
-    val aggs = stringCols.map(c =>
-      CodePointVocabAggregate(col(c), opts.vocabCharsPerValue, opts.vocabCap))
-    src.groupBy(key.toSeq: _*).agg(aggs.head, aggs.tail: _*).collect()
-      .map { r =>
-        (if (key.isDefined) r.getLong(0) else 0L) ->
-          stringCols.zipWithIndex.map { case (c, i) =>
-            c -> r.getSeq[String](key.size + i).toSet
-          }.toMap
-      }.toMap
-  }
+  /** The distinct values a pass-1 category counter holds before it
+    * overflows: five rsd of NDV-estimate error above `maxCategories`, so
+    * a column the estimate qualifies almost never needs [[catMelt]]. */
+  private def categoryCeiling(opts: ProfilerOptions): Int =
+    math.ceil(opts.maxCategories * (1 + 5 * opts.ndvRsd)).toInt
 
   /** Grouped (split) profiling: ONE pass-set produces a Profile per
     * distinct value of `splitCol` — the fused form of "profile k chunks
@@ -399,10 +396,8 @@ object Profiler {
     * sample (labels, datetime discovery, exemplars) and the parsed
     * datetime extremes stay per-group, preserving profile()'s
     * head-sample semantics exactly, and natural-order detection runs as
-    * ONE grouped forward pass (OrderDetect.detectNaturalSplit) — all
-    * equal their per-slice profile() results (ProfileSplitSpec). Vocab
-    * row-sampling draws the same per-row `rand(42)` Bernoulli filter
-    * profile() does, at each over-budget group's own fraction.
+    * ONE ungrouped forward pass keyed by (partition, key) — all equal
+    * their per-slice profile() results (ProfileSplitSpec).
     *
     * Returns one Profile per key VALUE (cast to long); a key absent
     * from the result had zero rows, and null keys are excluded.
@@ -465,7 +460,18 @@ object Profiler {
     // aggregate, so under a key each group gets its own mergeable matrix
     // state at zero extra scans.
     val (corrPairs, corrAggs) = corrPairsAndAggs(numericCols, opts)
-    val aggs = pass1Cols(fields, opts, statPlugins) ++ corrAggs
+    // natural-order detection covers the columns with an ordered type;
+    // on the whole frame its segments ride pass 1 (which has no grouping,
+    // so each map task folds its partition's rows in scan order) and
+    // count each partition's rows for the head sample
+    val orderCols =
+      if (opts.computeOrder) fields.filter(f => OrderDetect.orderable(f.dataType))
+        .map(_.name)
+      else Nil
+    val orderAgg =
+      if (key.isDefined) Nil
+      else Seq(OrderSegmentsAggregate(lit(0L), orderCols.map(col)).as("__order"))
+    val aggs = pass1Cols(fields, opts, statPlugins) ++ corrAggs ++ orderAgg
     val valsByKey: Map[Long, Map[String, Any]] =
       df.groupBy(grouping: _*).agg(aggs.head, aggs.tail: _*).collect()
         .map { r =>
@@ -489,9 +495,13 @@ object Profiler {
     // no rows in any group: every later pass would read nothing, so none
     // runs, and each result is what that pass yields on empty input
     val empty = keys.forall(rowsOf(_) == 0L)
+    // the whole frame's order segments (pass 1); absent on empty input
+    val wholeOrder =
+      if (key.isDefined) None
+      else OrderDetect.decode(valsByKey(0L)("__order")).get(0L)
     val t1 = System.currentTimeMillis()
 
-    // ---- passes 2, 5, 6 and the per-group 4 + 7: independent actions,
+    // ---- passes 2, 6 and the per-group 4 + 7: independent actions,
     // submitted concurrently, each timing itself ----
     def timed[T](f: => T): Future[(T, Long)] = Future {
       val start = System.currentTimeMillis()
@@ -499,63 +509,45 @@ object Profiler {
       (r, System.currentTimeMillis() - start)
     }
 
-    // pass 2: category maps. Qualification is PER GROUP (a column can be
-    // categorical in one chunk and over-cap in another); see catMelt.
-    val catColsByKey: Map[Long, Seq[String]] = keys.map(k => k ->
-      stringCols.filter(c =>
-        opts.computeCategories && ndvOf(k, c) <= opts.maxCategories)).toMap
-    val catFut = timed {
-      if (empty || catColsByKey.values.forall(_.isEmpty))
-        Map.empty[Long, Map[String, Map[String, Long]]]
-      else catMelt(df, key, catColsByKey).collect()
-        .groupBy(keyOf).map { case (k, rows) =>
-          k -> rows.groupBy(_.getString(key.size)).map { case (c, rs) =>
-            c -> rs.map(r =>
-              r.getString(key.size + 1) -> r.getLong(key.size + 2)).toMap
+    // category maps: counted exactly in pass 1 up to the ceiling, and
+    // qualified PER GROUP afterwards (a column can be categorical in one
+    // chunk and over-cap in another) by the NDV estimate. A column the
+    // estimate qualifies but whose counter overflowed is counted by the
+    // catMelt fallback (pass 2).
+    def qualifies(k: Long, c: String): Boolean =
+      opts.computeCategories && ndvOf(k, c) <= opts.maxCategories
+    val counted: Map[Long, Map[String, Map[String, Long]]] = keys.map(k =>
+      k -> stringCols.filter(qualifies(k, _)).flatMap(c =>
+        Option(valsByKey(k)(s"${c}__cat").asInstanceOf[scala.collection.Map[String, Long]])
+          .map(m => c -> m.toMap)).toMap).toMap
+    val overflowed: Map[Long, Seq[String]] = keys.map(k => k ->
+      stringCols.filter(c => qualifies(k, c) && !counted(k).contains(c))).toMap
+    val catFut =
+      if (overflowed.values.forall(_.isEmpty))
+        Future.successful((Map.empty[Long, Map[String, Map[String, Long]]], 0L))
+      else timed {
+        catMelt(df, key, overflowed).collect()
+          .groupBy(keyOf).map { case (k, rows) =>
+            k -> rows.groupBy(_.getString(key.size)).map { case (c, rs) =>
+              c -> rs.map(r =>
+                r.getString(key.size + 1) -> r.getLong(key.size + 2)).toMap
+            }
           }
-        }
-    }
-
-    // pass 5: char vocabulary. Map-side CPU is O(characters scanned), so
-    // past vocabSampleRows a group's input is a deterministic Bernoulli
-    // sample (a per-row rand(42) filter — the same rows
-    // df.sample(false, f, 42) keeps — at the group's own fraction; no
-    // shuffle), and each value is length-capped. Sampled vocab ⊆ true
-    // vocab; keeping the set makes merge a true set-union
-    // (profiler_utils.py:74-92).
-    val vocabFut = timed {
-      if (empty || !opts.computeVocab || stringCols.isEmpty)
-        Map.empty[Long, Map[String, Set[String]]]
-      else {
-        val overBudget = keys.filter(rowsOf(_) > opts.vocabSampleRows)
-        val src =
-          if (overBudget.isEmpty) df
-          else df.filter(rand(42) < overBudget.foldLeft(lit(1.0)) { (acc, k) =>
-            val frac = lit(opts.vocabSampleRows.toDouble / rowsOf(k))
-            key.fold(frac)(kc => when(kc === k, frac).otherwise(acc))
-          })
-        vocabPass(src, grouping.headOption, stringCols, opts)
       }
-    }
 
-    // pass 6: natural-order detection, one map-only forward pass with
-    // per-partition (per-key) summaries and a driver seam merge — never
-    // a global sort. A filter preserves partition structure and row
-    // order, so each group's result is exactly what
-    // profile(df.filter(key === k)) sees.
-    val orderFut = timed {
-      val names = fields.map(_.name)
-      if (!opts.computeOrder) Map.empty[Long, Map[String, String]]
-      else if (empty)
-        keys.map(_ -> names.map(_ -> OrderDetect.EmptyVerdict).toMap).toMap
-      else {
-        val byKey = key match {
-          case None => Map(0L -> OrderDetect.detectNatural(df, names))
-          case Some(kc) => OrderDetect.detectNaturalSplit(
-            df.select((kc +: names.map(col)): _*), names)
-        }
-        byKey.map { case (k, m) => k -> m.map { case (c, r) => c -> r.order } }
+    // pass 6, under a split key: natural-order detection, one ungrouped
+    // forward pass whose segments are keyed by (partition, key). A filter
+    // preserves partition structure and row order, so each group's
+    // result is exactly what profile(df.filter(key === k)) sees. Not
+    // grouped by the key: past 128 keys a grouped ObjectHashAggregate
+    // falls back to sorting, which would feed a partition's rows to a
+    // group's buffer out of order.
+    val orderFut = key match {
+      case Some(kc) if !empty && orderCols.nonEmpty => timed {
+        OrderDetect.decode(df.agg(
+          OrderSegmentsAggregate(kc, orderCols.map(col))).head().get(0))
       }
+      case _ => Future.successful((wholeOrder.map(0L -> _).toMap, 0L))
     }
 
     // passes 4 + 7 per group: the head sample (timed as "labeler") and
@@ -572,20 +564,22 @@ object Profiler {
         val tHead = System.currentTimeMillis()
         val head =
           if (empty) HeadPasses(Map.empty, Map.empty, Map.empty)
-          else headPasses(slice, fields, labelCols, dtFormatCols, opts)
+          else headPasses(slice, wholeOrder.map(_.partitionRows), fields,
+            labelCols, dtFormatCols, opts)
         val tDt = System.currentTimeMillis()
         val strDtStats = datetimeExtremes(slice, head.dtFormats, opts)
         (head, strDtStats, tDt - tHead, System.currentTimeMillis() - tDt)
       }
     }.toMap
 
-    val (catMaps, catMs) = Await.result(catFut, Duration.Inf)
-    val (vocabSets, vocabMs) = Await.result(vocabFut, Duration.Inf)
-    val (orders, orderMs) = Await.result(orderFut, Duration.Inf)
+    val (melted, catMs) = Await.result(catFut, Duration.Inf)
+    val (orderSegs, orderMs) = Await.result(orderFut, Duration.Inf)
 
     // windows shared by all groups are DIVIDED across them, so merging
     // the k split profiles sums back to the actual wall clock instead of
-    // k× it; the per-group tail passes are attributed whole
+    // k× it; the per-group tail passes are attributed whole. Categories,
+    // vocab and (on the whole frame) order ride pass 1, so their own
+    // keys hold only the catMelt fallback and the split order pass.
     val shared = keys.size.max(1)
     keys.map { k =>
       val (head, strDtStats, labelMs, dtMs) =
@@ -593,28 +587,38 @@ object Profiler {
       val histMaps =
         if (opts.computeHistograms) histFromPass1(numericCols, valsByKey(k))
         else Map.empty[String, Histogram]
+      // a qualifying column with no non-null value has no category map
+      val catMaps = (counted(k) ++ melted.getOrElse(k, Map.empty))
+        .filter(_._2.nonEmpty)
+      val vocabSets =
+        if (!opts.computeVocab) Map.empty[String, Set[String]]
+        else stringCols.map(c => c ->
+          valsByKey(k)(s"${c}__vocab").asInstanceOf[scala.collection.Seq[String]].toSet)
+          .toMap
+      val orders: Map[String, String] = orderSegs.get(k) match {
+        case Some(s) => orderCols.zip(s.columns.map(_.order)).toMap
+        case None => orderCols.map(_ -> OrderDetect.EmptyVerdict).toMap
+      }
       k -> assembleProfile(fields, opts, statPlugins, valsByKey(k), corrPairs,
-        catMaps.getOrElse(k, Map.empty), histMaps, head.labelVotes,
-        vocabSets.getOrElse(k, Map.empty), orders.getOrElse(k, Map.empty),
+        catMaps, histMaps, head.labelVotes, vocabSets, orders,
         head.dtFormats, strDtStats, head.exemplars,
         Map("aggregate" -> (t1 - t0) / shared,
           "categories" -> catMs / shared, "histograms" -> 0L,
-          "labeler" -> labelMs, "vocab" -> vocabMs / shared,
+          "labeler" -> labelMs, "vocab" -> 0L,
           "order" -> orderMs / shared, "datetime_formats" -> dtMs))
     }.toMap
   }
 
-  /** Pass 2's category melt, with the per-group qualification pushed
-    * INTO the query when the groups' qualifying column sets differ: the
-    * melt covers the union of columns that qualify in ANY group, and the
+  /** Pass 2's category melt, the fallback for the columns of each group
+    * in `catColsByKey` (those whose NDV estimate qualifies but whose
+    * pass-1 counter overflowed), with the per-group selection pushed
+    * INTO the query when the groups' column sets differ: the melt
+    * covers the union of columns named for ANY group, and the
     * codegen'd InSet filter on the packed (split, column) pair drops
-    * every non-qualifying pair BEFORE the count aggregation — so a
-    * column that is categorical in one small group but high-cardinality
-    * in a big one never counts, shuffles, or collects that big group's
-    * distinct values. Collected rows are bounded by
-    * Σ_group |qualifying columns(group)| × maxCategories regardless of
-    * any group's true cardinality (the qualification map is already
-    * known driver-side from pass 1's NDV sketches). With no key (or
+    * every other pair BEFORE the count aggregation — so a column that
+    * is categorical in one small group but high-cardinality in a big
+    * one never counts, shuffles, or collects that big group's distinct
+    * values. With no key (or
     * identical sets) every melted pair qualifies and no filter is
     * planned. Package-private so ProfileSplitSpec can count the
     * pre-collect rows directly. */
@@ -827,14 +831,16 @@ object Profiler {
     * 100 rows, every field). `df.head(n)` plans as a CollectLimit, which
     * generates no limit counter: a LocalLimit/GlobalLimit names its
     * counter from a JVM-global id, so any stage holding one is new
-    * source — a codegen-cache miss — on every call. The label and format
+    * source — a codegen-cache miss — on every call. With `partitionRows`
+    * (the whole frame's rows per input partition) [[headOf]] takes the
+    * same rows in one job. The label and format
     * rules ([[graft.labelers.RegexLabeler.labelOf]],
     * [[graft.functions.DatetimeFormats.matches]]) run in one select over
     * the sample as a LocalRelation, each gated to its own row prefix;
     * the optimizer folds that projection on the driver, so no job runs.
     * No reader → no sample, and `df` is never evaluated. */
-  private def headPasses(df: => DataFrame, fields: Seq[StructField],
-      labelCols: Seq[String], dtFormatCols: Seq[String],
+  private def headPasses(df: => DataFrame, partitionRows: Option[Map[Int, Long]],
+      fields: Seq[StructField], labelCols: Seq[String], dtFormatCols: Seq[String],
       opts: ProfilerOptions): HeadPasses = {
     val labelN = if (labelCols.nonEmpty) opts.labelerSampleSize else 0
     val dtN = if (dtFormatCols.nonEmpty) DtDiscoveryRows else 0
@@ -842,7 +848,7 @@ object Profiler {
     val n = Seq(labelN, dtN, exN).max
     if (n == 0) return HeadPasses(Map.empty, Map.empty, Map.empty)
     val src = df
-    val rows = src.head(n)
+    val rows = partitionRows.fold(src.head(n))(headOf(src, n, _))
 
     val exemplars =
       if (exN == 0) Map.empty[String, Seq[String]]
@@ -887,6 +893,50 @@ object Profiler {
         .map(formats(_).java)
     }.toMap
     HeadPasses(labelVotes, dtFormats, exemplars)
+  }
+
+  /** The rows `df.head(n)` returns, in one job when `partitionRows` (the
+    * rows each input partition of `df` holds, from pass 1's order
+    * segments) shows that they span several partitions: `head` reads
+    * partition 0 first and then a scaled-up batch of further partitions,
+    * a second job. Here one job reads just the leading partitions that
+    * hold the first n rows, each only up to its share. If a partition
+    * yields a different count than pass 1 saw (the plan partitioned
+    * differently), the sample falls back to `df.head(n)`. */
+  private def headOf(df: DataFrame, n: Int, partitionRows: Map[Int, Long]): Array[Row] = {
+    // (partition, rows it contributes), in partition order
+    val quotaB = Vector.newBuilder[(Int, Int)]
+    val lastPart = partitionRows.keys.maxOption.getOrElse(-1)
+    var taken = 0L
+    var p = 0
+    while (taken < n && p <= lastPart) {
+      val r = math.min(partitionRows.getOrElse(p, 0L), n - taken)
+      quotaB += p -> r.toInt
+      taken += r
+      p += 1
+    }
+    val quota = quotaB.result()
+    if (quota.size <= 1) return df.head(n) // head's first job reads just partition 0
+    val spark = df.sparkSession
+    val qe = GraftSessions.ofRows(spark, df.queryExecution.logical).queryExecution
+    val want = quota.toMap
+    val last = quota.last._1
+    val parts = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+        Some("profile head sample")) {
+      spark.sparkContext.runJob(qe.toRdd,
+        (ctx: org.apache.spark.TaskContext,
+            it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+          val p = ctx.partitionId()
+          // one row past a leading partition's share checks its count
+          it.take(want(p) + (if (p == last) 0 else 1)).map(_.copy()).toArray
+        },
+        quota.map(_._1))
+    }
+    if (parts.zip(quota).exists { case (rs, (_, r)) => rs.length != r })
+      return df.head(n)
+    val fromRow = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(df.schema)
+      .resolveAndBind().createDeserializer()
+    parts.flatten.map(fromRow)
   }
 
   /** Pass 7: parsed min/max and distinct days of each string

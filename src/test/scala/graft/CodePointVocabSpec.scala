@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.CodePointVocabAggregate
 import graft.profiler.{Profiler, ProfilerOptions}
 
-/** The profiler's vocab pass (one CodePointVocabAggregate per string column)
+/** The profiler's vocab (one CodePointVocabAggregate per string column)
   * must return exactly the set the per-character formulation it
   * replaced returned: explode every value's first `vocabCharsPerValue`
   * characters into rows, `collect_set`, `array_sort`, keep the first
@@ -32,7 +32,7 @@ class CodePointVocabSpec extends AnyFunSuite {
       .asInstanceOf[ArrayData].toSeq[UTF8String](StringType).map(_.toString)
   }
 
-  /** The old pass 5, grouped by `key` (a constant key = whole frame). */
+  /** The explode formulation, grouped by `key` (a constant key = whole frame). */
   private def explodeVocab(df: DataFrame, key: Column, cols: Seq[String],
       opts: ProfilerOptions): Map[Long, Map[String, Set[String]]] =
     df.select(key.cast("long").as("__split"), explode(array(cols.map(c =>
@@ -105,37 +105,26 @@ class CodePointVocabSpec extends AnyFunSuite {
     assert(full("s").size > optsGrid(1).vocabCap)
   }
 
-  test("sampled vocab equals the reference over df.sample(false, f, 42)") {
-    // vocabSampleRows below the row count: the pass reads a Bernoulli
-    // sample at f = vocabSampleRows / rows, whose rows must be exactly
-    // the ones df.sample(false, f, 42) keeps. Split groups sample at
-    // their own fraction: group 1 has twice group 0's rows here.
-    val opts = optsGrid(2).copy(vocabSampleRows = 4)
-    val df = fixture.withColumn("h", (col("g") =!= 0L).cast("long")).drop("g")
-    def sampledRef(src: DataFrame, rows: Long, keep: Column) =
-      explodeVocab(src.sample(withReplacement = false,
-        opts.vocabSampleRows.toDouble / rows, 42).filter(keep),
-        lit(0L), stringCols, opts).getOrElse(0L, Map.empty)
+  test("vocab reads every row: characters in the last rows are kept") {
+    // 120k rows (past the 100k-row budget the vocab was once sampled
+    // under), with two characters that occur only in the last two rows of
+    // the last partition: the whole-frame and per-group vocab must still
+    // equal the reference over every row
+    val n = 120000L
+    val id = col("id")
+    val df = spark.range(0, n, 1, 4).select((id % 2).as("h"),
+      when(id === n - 1, lit("ab🎉")).when(id === n - 2, lit("中"))
+        .otherwise(concat(lit("x"), (id % 10).cast("string"))).as("s"))
+    val opts = optsGrid(2)
     val whole = df.drop("h")
-    val wholeRef = sampledRef(whole, cells.size, lit(true))
-    val p = Profiler.profile(whole, opts)
-    for (c <- stringCols)
-      assert(p.column(c).get.text.get.vocab ==
-        wholeRef.getOrElse(c, Set.empty), c)
-    // the sample is a real one: it misses characters the full scan sees
-    assert(wholeRef("s") !=
-      explodeVocab(whole, lit(0L), stringCols, opts)(0L)("s"))
-
+    val ref = explodeVocab(whole, lit(0L), Seq("s"), opts)(0L)("s")
+    assert(ref.contains("🎉") && ref.contains("中"))
+    assert(Profiler.profile(whole, opts).column("s").get.text.get.vocab == ref)
+    val splitRef = explodeVocab(df, col("h"), Seq("s"), opts)
     val split = Profiler.profileSplit(df, "h", opts)
     assert(split.keySet == Set(0L, 1L))
-    for ((k, p) <- split) {
-      val rows = df.filter(col("h") === k).count()
-      assert(rows > opts.vocabSampleRows)
-      val ref = sampledRef(df, rows, col("h") === k)
-      for (c <- stringCols)
-        assert(p.column(c).get.text.get.vocab == ref.getOrElse(c, Set.empty),
-          s"group $k column $c")
-    }
+    for ((k, p) <- split)
+      assert(p.column("s").get.text.get.vocab == splitRef(k)("s"), s"group $k")
   }
 
   test("profileSplit vocab equals the explode/collect_set reference per group") {

@@ -34,6 +34,81 @@ class ColumnStatSpec extends AnyFunSuite {
     assert(r("s").order == "random") // a < b < c > b
   }
 
+  test("OrderDetect plans: the partition sort stays below the order aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, QueryExecution,
+      SortExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.functions.OrderSegmentsAggregate
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.executedPlan)
+    }
+    val df = (1 to 500).map(i => (i.toLong, -i.toLong)).toDF("k", "desc")
+      .repartition(5)
+    spark.listenerManager.register(listener)
+    val r = try {
+      val r = OrderDetect.detect(df, "k", Seq("desc"))
+      SparkTestSession.drainListenerBus()
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(r("desc").order == "descending" && r("desc").nDecr == 499)
+    // a projection keeps its child's row order
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case i: InputAdapter => unwrap(i.child)
+      case pr: ProjectExec => unwrap(pr.child)
+      case n => n
+    }
+    // the map-side (partial) order aggregate reads the sorted partitions
+    // (the helper's collect descends into adaptive query stages)
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val partials = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(aqe.collect(_) {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+        e.mode == Partial && e.aggregateFunction.isInstanceOf[OrderSegmentsAggregate]) => a
+    })
+    assert(partials.size == 1, s"partial order aggregates: ${partials.size}")
+    assert(unwrap(partials.head.child).isInstanceOf[SortExec],
+      s"no Sort below the order aggregate:\n${partials.head}")
+  }
+
+  test("order verdicts on binary, datetime, interval and non-BMP string columns") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // ascending as unsigned bytes (0x7f < 0x80 < 0xff; signed bytes would
+    // put 0x80 first), as Catalyst dates / timestamps / intervals, and in
+    // String.compareTo order, where a surrogate pair (U+1F600) sorts below
+    // U+E000 (UTF-8 byte order would put it last)
+    val bins = Seq(Array[Byte](0), Array[Byte](1, 0), Array[Byte](0x7f),
+      Array[Byte](0x80.toByte), Array[Byte](0x80.toByte, 1), Array[Byte](0xff.toByte))
+    val strs = Seq("a", "b", "x😀", "x\uE000", "x\uFFFF", "y")
+    val rows = bins.indices.map { i =>
+      Row(i.toLong, bins(i), java.sql.Date.valueOf(s"2020-0${i + 1}-01"),
+        java.time.LocalDateTime.of(2020, 1, 1, 0, 0).plusHours(i * 7L),
+        java.time.Duration.ofSeconds(i * 90L), strs(i))
+    }
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("bin", BinaryType), StructField("d", DateType),
+      StructField("ntz", TimestampNTZType),
+      StructField("dur", DayTimeIntervalType()), StructField("s", StringType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val cols = Seq("bin", "d", "ntz", "dur", "s")
+    val r = OrderDetect.detect(df, "k", cols, partitions = 2)
+    for (c <- cols) assert(r(c).order == "ascending" && r(c).nIncr == 5, s"$c: ${r(c)}")
+    // the profiler's natural-order pass agrees, on every run
+    for (_ <- 1 to 2) {
+      val p = Profiler.profile(df.drop("k"))
+      for (c <- cols) assert(p.column(c).get.order.contains("ascending"), c)
+    }
+    val desc = Profiler.profile(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.reverse, 2), schema).drop("k"))
+    for (c <- cols) assert(desc.column(c).get.order.contains("descending"), c)
+  }
+
   test("diff surfaces order and label drift") {
     import graft.profiler.{Diff, Profiler}
     val asc = (1 to 200).map(i => (i.toLong, s"u$i@example.com"))

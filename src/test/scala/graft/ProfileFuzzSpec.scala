@@ -1,0 +1,152 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.{CategoryCountAggregate, CodePointVocabAggregate,
+  OrderSegmentsAggregate}
+import graft.profiler.{ColumnProfile, Profile, Profiler, ProfilerOptions}
+
+/** Seeded metamorphic properties of the profiler's category, vocab and
+  * order state over generated frames: nulls, "", non-BMP and U+E000..
+  * strings, constant and all-null columns, 1–4 input partitions and an
+  * uneven split key. Order-free state must not change under
+  * `repartition`; each split group's profile must equal the filtered
+  * whole-frame profile; every buffer must survive serialize →
+  * deserialize. Fixed seeds keep runs identical. */
+class ProfileFuzzSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  private val cell: Gen[String] = Gen.frequency(
+    2 -> Gen.const(null),
+    1 -> Gen.const(""),
+    3 -> Gen.oneOf("a", "b", "ab", "ba", "Z"),
+    2 -> Gen.oneOf("😀", "x🎉", "\uE000", "x\uFFFF", "中文", "é"),
+    1 -> Gen.choose(0, 5).flatMap(n => Gen.listOfN(n, Gen.alphaChar).map(_.mkString)))
+
+  private val schema = StructType(Seq(
+    StructField("g", LongType, nullable = false),
+    StructField("s", StringType), StructField("t", StringType),
+    StructField("const", StringType), StructField("v", LongType),
+    StructField("d", DoubleType)))
+
+  private final case class Frame(rows: IndexedSeq[Row], parts: Int, reparts: Int,
+      maxCategories: Int)
+
+  private val frame: Gen[Frame] = for {
+    n <- Gen.choose(0, 80)
+    parts <- Gen.choose(1, 4)
+    reparts <- Gen.choose(1, 5)
+    constant <- Gen.oneOf[String]("same", null)
+    maxCategories <- Gen.oneOf(3, 1000)
+    rows <- Gen.listOfN(n, for {
+      // skewed split key: group 0 holds about half the rows
+      g <- Gen.frequency(4 -> Gen.const(0L), 2 -> Gen.const(1L), 1 -> Gen.const(2L))
+      s <- cell
+      t <- cell
+      v <- Gen.frequency(1 -> Gen.const(null), 4 -> Gen.choose(-3L, 3L).map(Long.box))
+      d <- Gen.frequency(1 -> Gen.const(null),
+        4 -> Gen.oneOf(0.0, -0.0, 1.5, Double.NaN, -2.0).map(Double.box))
+    } yield Row(g, s, t, constant, v, d))
+  } yield Frame(rows.toIndexedSeq, parts, reparts, maxCategories)
+
+  private def frameOf(f: Frame): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(f.rows, f.parts), schema)
+
+  /** `n` generated values from `gen`, seed by seed. */
+  private def sample[T](gen: Gen[T], n: Int, seed: Long): Seq[T] = {
+    var s = Seed(seed)
+    (1 to n).flatMap { _ =>
+      val x = gen.apply(Gen.Parameters.default, s)
+      s = s.next
+      x
+    }
+  }
+
+  private def optsOf(f: Frame) = ProfilerOptions(computeLabels = false,
+    computeCorrelation = false, computeExemplars = false,
+    maxCategories = f.maxCategories)
+
+  /** The category, vocab and count state of a column. */
+  private def orderFree(c: ColumnProfile) =
+    (c.n, c.nulls, c.categorical.map(x => (x.counts, x.capped)), c.text.map(_.vocab))
+
+  private def sameOrderFree(a: Profile, b: Profile, what: String): Unit = {
+    assert(a.rowCount == b.rowCount, what)
+    for (c <- a.columns)
+      assert(orderFree(c) == orderFree(b.column(c.name).get), s"$what: ${c.name}")
+  }
+
+  private val frames = sample(frame, 10, seed = 20261018L)
+
+  test("category maps and vocab are invariant under repartition") {
+    for ((f, i) <- frames.zipWithIndex) {
+      val df = frameOf(f).drop("g")
+      sameOrderFree(Profiler.profile(df, optsOf(f)),
+        Profiler.profile(df.repartition(f.reparts), optsOf(f)),
+        s"frame $i (${f.rows.size} rows, ${f.parts} → ${f.reparts} partitions)")
+    }
+  }
+
+  test("profileSplit(df, k)(i) equals profile(df.filter(k === i))") {
+    for ((f, i) <- frames.zipWithIndex) {
+      val df = frameOf(f)
+      val split = Profiler.profileSplit(df, "g", optsOf(f))
+      assert(split.keySet == f.rows.map(_.getLong(0)).toSet, s"frame $i keys")
+      for ((k, g) <- split) {
+        val whole = Profiler.profile(df.filter(col("g") === k).drop("g"), optsOf(f))
+        val what = s"frame $i group $k"
+        sameOrderFree(g, whole, what)
+        for (c <- whole.columns)
+          assert(g.column(c.name).get.order == c.order, s"$what: ${c.name} order")
+      }
+    }
+  }
+
+  /** `agg`'s result over `parts` partial buffers (each folded from its
+    * rows) merged in order, straight and after each partial went through
+    * serialize → deserialize, as Scala values. */
+  private def roundTrip[B](agg: TypedImperativeAggregate[B], parts: Seq[Seq[InternalRow]],
+      update: (B, InternalRow, Int) => B): (Any, Any) = {
+    def partials = parts.zipWithIndex.map { case (rows, p) =>
+      rows.foldLeft(agg.createAggregationBuffer())(update(_, _, p))
+    }
+    def merged(bs: Seq[B]) = bs.foldLeft(agg.createAggregationBuffer())(agg.merge)
+    def scala(b: B) = CatalystTypeConverters.convertToScala(agg.eval(b), agg.dataType)
+    (scala(merged(partials)),
+      scala(merged(partials.map(b => agg.deserialize(agg.serialize(b))))))
+  }
+
+  test("category, vocab and order buffers survive serialize → deserialize") {
+    val utf8 = (s: String) => if (s == null) null else UTF8String.fromString(s)
+    val parted = for {
+      nParts <- Gen.choose(1, 4)
+      parts <- Gen.listOfN(nParts, Gen.choose(0, 30).flatMap(n => Gen.listOfN(n,
+        for { k <- Gen.choose(0L, 2L); s <- cell; v <- Gen.choose(-2L, 2L) }
+          yield InternalRow(k, utf8(s), if (s == null) null else v))))
+      ceiling <- Gen.choose(0, 6)
+    } yield (parts, ceiling)
+    for (((parts, ceiling), i) <- sample(parted, 200, seed = 7L).zipWithIndex) {
+      val str = BoundReference(1, StringType, nullable = true)
+      val cat = CategoryCountAggregate(str, ceiling)
+      val (c1, c2) = roundTrip(cat, parts,
+        (b: CategoryCountAggregate.Buf, r: InternalRow, _: Int) => cat.update(b, r))
+      assert(c1 == c2, s"case $i categories")
+      val vocab = CodePointVocabAggregate(str, 3, 1000)
+      val (v1, v2) = roundTrip(vocab, parts,
+        (b: java.util.BitSet, r: InternalRow, _: Int) => vocab.update(b, r))
+      assert(v1 == v2, s"case $i vocab")
+      val order = OrderSegmentsAggregate(Seq(BoundReference(0, LongType, nullable = false),
+        str, BoundReference(2, LongType, nullable = true)))
+      val (o1, o2) = roundTrip(order, parts, order.updateIn _)
+      assert(o1 == o2, s"case $i order")
+    }
+  }
+}

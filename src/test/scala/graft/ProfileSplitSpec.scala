@@ -16,7 +16,7 @@ class ProfileSplitSpec extends AnyFunSuite {
   private val opts = ProfilerOptions(
     computeCorrelation = false, computeLabels = false,
     computeOrder = false, computeHistograms = false,
-    vocabSampleRows = Int.MaxValue, vocabCharsPerValue = Int.MaxValue)
+    vocabCharsPerValue = Int.MaxValue)
 
   private def relClose(a: Double, b: Double, tol: Double = 1e-9): Boolean =
     (a.isNaN && b.isNaN) || math.abs(a - b) <= tol * (1 + math.abs(b))
@@ -178,6 +178,32 @@ class ProfileSplitSpec extends AnyFunSuite {
     assert(meltRows.forall(_.getLong(0) == 0L))
   }
 
+  test("a qualifying column whose pass-1 counter overflowed is counted by catMelt") {
+    // 24 distinct values whose 16-register HLL estimate (ndvRsd 0.26 →
+    // lgK 4), inserted in this order, is 10: the estimate qualifies the
+    // column at maxCategories 10, but the exact counter drops its map
+    // past its ceiling of ⌈10·(1 + 5·0.26)⌉ = 23 values, so the category
+    // melt must count it
+    import spark.implicits._
+    val values = Seq(0, 1, 2, 3, 4, 5, 6, 7, 8, 11, 20, 21, 22, 23, 25, 27, 28, 32,
+      34, 42, 43, 47, 49, 50).map(i => s"v$i")
+    val counts = values.zipWithIndex.map { case (v, i) => v -> (i % 3 + 1).toLong }
+    val rows = counts.flatMap { case (v, n) => Seq.fill(n.toInt)((0L, v)) } ++
+      Seq((1L, "a"), (1L, "b"), (1L, "a"))
+    val df = rows.toDF("__g", "c").coalesce(1)
+    val capOpts = opts.copy(maxCategories = 10, ndvRsd = 0.26)
+    val whole = Profiler.profile(df.filter(col("__g") === 0L).drop("__g"), capOpts)
+    val split = Profiler.profileSplit(df, "__g", capOpts)
+    for ((p, what) <- Seq(whole -> "whole", split(0L) -> "group 0")) {
+      val c = p.column("c").get
+      assert(c.approxDistinct <= 10, s"$what: the estimate no longer qualifies the column")
+      assert(c.categorical.map(x => (x.counts, x.capped)).contains((counts.toMap, false)),
+        what)
+    }
+    assert(split(1L).column("c").get.categorical.map(_.counts)
+      .contains(Map("a" -> 2L, "b" -> 1L)))
+  }
+
   test("profileSplit order detection equals per-slice profile() (grouped pass)") {
     // interleaved groups with OPPOSITE natural orders: the grouped
     // forward pass must see, per key, exactly the row subsequence a
@@ -201,6 +227,51 @@ class ProfileSplitSpec extends AnyFunSuite {
     }
     assert(split(0L).column("directional").get.order.contains("ascending"))
     assert(split(1L).column("directional").get.order.contains("descending"))
+  }
+
+  test("profileSplit past 128 groups equals per-slice profile()") {
+    // 200 groups over 4 partitions: every map task holds more keys than
+    // ObjectHashAggregate's sort-based fallback threshold (128), so pass
+    // 1 falls back to sorting. Order verdicts and category maps must
+    // still equal the filtered whole-frame profile's exactly; moments
+    // (merge-order sensitive) within 64 ulps.
+    val nG = 200
+    val id = col("id")
+    val base = spark.range(0, 8000, 1, 4).select((id % nG).as("__g"),
+      id.as("asc"), (lit(0L) - id).as("desc"),
+      (id * 2654435761L % 1000).as("rand"), lit(3L).as("const"),
+      concat(lit("c"), (floor(id / nG) % 5).cast("string")).as("cat"),
+      (id * 7919 % 1001 / 7.0).as("x"))
+    val o = opts.copy(computeOrder = true, computeExemplars = false)
+    val split = Profiler.profileSplit(base, "__g", o)
+    assert(split.keySet == (0L until nG).toSet)
+    def ulps(a: Double, b: Double): Double =
+      if (a == b) 0.0 else math.abs(a - b) / math.ulp(math.max(math.abs(a), math.abs(b)))
+    for (k <- 0L until nG) {
+      val whole = Profiler.profile(base.filter(col("__g") === k).drop("__g"), o)
+      val g = split(k)
+      assert(g.rowCount == whole.rowCount, s"group $k rows")
+      for (c <- whole.columns) {
+        val a = g.column(c.name).get
+        assert(a.order == c.order, s"group $k ${c.name} order")
+        assert(a.categorical.map(x => (x.counts, x.capped)) ==
+          c.categorical.map(x => (x.counts, x.capped)), s"group $k ${c.name} categories")
+        assert(a.text.map(_.vocab) == c.text.map(_.vocab), s"group $k ${c.name} vocab")
+        (a.numeric, c.numeric) match {
+          case (Some(x), Some(y)) =>
+            assert(x.n == y.n && x.min == y.min && x.max == y.max, s"group $k ${c.name}")
+            for ((u, v, what) <- Seq((x.mean, y.mean, "mean"), (x.m2, y.m2, "m2"),
+                (x.sum, y.sum, "sum")))
+              assert(ulps(u, v) <= 64, s"group $k ${c.name} $what: $u vs $v")
+          case (None, None) =>
+          case other => fail(s"group $k ${c.name} numeric mismatch: $other")
+        }
+      }
+    }
+    assert(split(0L).column("asc").get.order.contains("ascending"))
+    assert(split(7L).column("desc").get.order.contains("descending"))
+    assert(split(3L).column("const").get.order.contains("constant"))
+    assert(split.values.forall(_.column("cat").get.categorical.exists(_.counts.size == 5)))
   }
 
   test("profileSplit correlation equals per-slice profile() (grouped co-moments)") {
