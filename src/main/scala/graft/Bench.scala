@@ -3,30 +3,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      // single large parquet files split at the default 128 MB starve a
-      // 32-thread executor (measured: labeler_votes scan-stage on 6
-      // tasks, dsir_weights on 2) — size splits to the core count
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      // ObjectHashAggregate falls back to SORT-BASED aggregation at 128
-      // distinct keys per partition (Spark's conservative default) —
-      // measured sorting the triangle pipeline's full half-edge stream.
-      // Every object-buffer aggregate in this suite keys on bounded or
-      // model-sized groups, so the hash path is safe at any suite scale.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "20000000")
-      .config("spark.ui.enabled", "false")
-      // AQE stays ON (the 100 TB default); SPARK_GRAFT_AQE=false exists
-      // to measure how much of the toy-scale total is AQE's
-      // one-job-per-exchange orchestration rather than plan work
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus()
+    // AQE stays ON (the 100 TB default); SPARK_GRAFT_AQE=false exists
+    // to measure how much of the toy-scale total is AQE's
+    // one-job-per-exchange orchestration rather than plan work
+    val spark = GraftSession(cpus, confs = Seq("spark.sql.adaptive.enabled" ->
+      sys.env.getOrElse("SPARK_GRAFT_AQE", "true")))
     // stale-summary guard: a prior run (possibly at another SF) may have
     // left <q>.summary.json files in the persistent stage dir, which
     // would silently attach a previous run's batch counts to this bench
@@ -352,16 +334,6 @@ object Bench {
   private[graft] def jq(s: String): String = s.flatMap {
     case '"' => "\\\""; case '\\' => "\\\\"
     case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
-
-  /** `SPARK_GRAFT_CPUS` as a positive core count (4 when unset). It
-    * becomes `local[N]`, a bare JSON number and part of a file name, so
-    * anything else fails here with the offending value. */
-  private[graft] def parseCpus(raw: Option[String]): Int = raw match {
-    case None => 4
-    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got \"$v\""))
-  }
 
   /** Noise-window decision against the committed anchor JSON, pure so
     * BenchGuardSpec can pin the r11 failure shape. Trips when EITHER

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints `explain("formatted")` for selected queries so plan shape
   * (pushdown, pruning, broadcast, codegen spans) can be audited without a
   * notebook: `runMain graft.PlanAudit <sfDir> [name ...]` (no names =
@@ -29,12 +27,7 @@ object PlanAudit {
       // eager composites via their plan twins
       "graph_triangles", "sim_pq_adc", "sim_pq_rerank", "stream_*")
     val names = if (args.length > 1) args.tail.toSeq else defaults
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     def section(n: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
       println(s"\n========== $n ==========")
       try df.explain("formatted")

@@ -1,31 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single large parquet files split at the default 128 MB starve a
-      // 32-thread executor (measured: labeler_votes scan-stage on 6
-      // tasks, dsir_weights on 2) — size splits to the core count
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      // ObjectHashAggregate falls back to SORT-BASED aggregation at 128
-      // distinct keys per partition (Spark's conservative default) —
-      // measured sorting the triangle pipeline's full half-edge stream.
-      // Every object-buffer aggregate in this suite keys on bounded or
-      // model-sized groups, so the hash path is safe at any suite scale.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "20000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_QUERIES=a,b,c → dump only that subset (iteration aid;
     // tools/check.py compares whatever dump dirs exist)

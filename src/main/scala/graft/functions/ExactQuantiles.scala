@@ -17,14 +17,14 @@ import org.apache.spark.sql.expressions.Window
   */
 object ExactQuantiles {
 
-  /** Default per-column NDV cap for the exact path (see [[gated]]); also
-    * surfaced as `ProfilerOptions.exactQuantileNdvCap`. The histogram
-    * path's running-sum window sorts each column's NDV-row histogram on
-    * ONE task, so the cap bounds that task; the measured crossover vs the
-    * distributed sort-select sits far below the old 1M memory-safety cap
-    * (583k-NDV l_extendedprice: 2.1 s histogram vs 0.6 s sort-select at
-    * sf0.1), so the cap is set where the single-task sort is still
-    * clearly sub-second — 100k rows ≈ 1.6 MB of window state. */
+  /** Default per-column NDV cap for the exact path (see [[gated]]). The
+    * histogram path's running-sum window sorts each column's NDV-row
+    * histogram on ONE task, so the cap bounds that task; the measured
+    * crossover vs the distributed sort-select sits far below the old 1M
+    * memory-safety cap (583k-NDV l_extendedprice: 2.1 s histogram vs
+    * 0.6 s sort-select at sf0.1), so the cap is set where the
+    * single-task sort is still clearly sub-second — 100k rows ≈ 1.6 MB
+    * of window state. */
   val DefaultNdvCap: Long = 100000L
 
   /** Scale guard: exact-by-histogram is NDV-bounded, which on a

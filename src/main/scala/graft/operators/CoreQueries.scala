@@ -233,8 +233,7 @@ object CoreQueries extends QueryModule {
       // column routes to a distributed sort-select (still exact) instead
       // of an n-key histogram shuffle — see graft.functions.ExactQuantiles
       // (property-tested against percentile() in ExactQuantilesSpec)
-      ExactQuantiles.gated(li, momCols, qPs,
-        ndvCap = graft.profiler.ProfilerOptions().exactQuantileNdvCap)
+      ExactQuantiles.gated(li, momCols, qPs)
     }
   }
 

@@ -102,11 +102,8 @@ object CorpusQueries extends QueryModule {
     // graft_termcounts byte-scan (one pass, zero allocation per token):
     // no Generate over all corpus tokens, no (doc, dl, tok) hash-combine
     // — the only Generate left is the |terms|-slot posexplode and the tf
-    // stage needs no aggregation at all. The explode→isin→groupBy
-    // formulation it replaces is kept under SPARK_GRAFT_BM25_EXPLODE=1
-    // for paired measurement (SCALING.md records the ratio).
-    if (sys.env.get("SPARK_GRAFT_BM25_EXPLODE").contains("1"))
-      return searchBm25Explode(s, dir)
+    // stage needs no aggregation at all (SCALING.md records the ratio to
+    // the explode→isin→groupBy formulation it replaced).
     graft.functions.TermCounts.register(s)
     val nT = terms.size
     // CACHE the (doc_id, dl, tc) frame — ~an int per term per doc — so
@@ -129,41 +126,6 @@ object CorpusQueries extends QueryModule {
       .select(col("doc_id"), col("dl"),
         element_at(typedlit(terms), col("pos") + 1).as("tok"),
         col("col").cast("long").as("tf"))
-    val dft = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-    import s.implicits._
-    val q = Bm25Queries.flatMap { case (id, ts) => ts.map(id -> _) }
-      .toDF("query", "tok")
-    val idf = log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5))
-    val partScore = idf * col("tf") * (Bm25K1 + 1.0) /
-      (col("tf") + lit(Bm25K1) * (lit(1.0 - Bm25B) + lit(Bm25B) * col("dl") / col("avgdl")))
-    val scored = tf
-      .join(broadcast(q), "tok")
-      .join(broadcast(dft), "tok")
-      .crossJoin(broadcast(stats))
-      .groupBy("query", "doc_id")
-      .agg(round(sum(partScore), 4).as("score"))
-    val w = Window.partitionBy("query")
-      .orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= Bm25TopK)
-      .select(col("query"), col("rk").cast("long").as("rk"),
-        col("doc_id"), col("score"))
-      .orderBy("query", "rk")
-  }
-
-  /** The pre-TermCounts formulation (explode all tokens → isin prune →
-    * (doc, dl, tok) count), kept for paired measurement only. */
-  private def searchBm25Explode(s: SparkSession, dir: String): DataFrame = {
-    val terms = Bm25Queries.flatMap(_._2).distinct
-    val d = Tables.loadFanned(s, dir, "documents")
-      .select(col("doc_id"), tokArr.as("arr"))
-      .select(col("doc_id"), size(col("arr")).as("dl"), col("arr"))
-    val stats = d.agg(count(lit(1)).as("n"), avg("dl").as("avgdl"))
-    val tf = d
-      .select(col("doc_id"), col("dl"), explode(col("arr")).as("tok"))
-      .filter(col("tok").isin(terms: _*))
-      .groupBy("doc_id", "dl", "tok").agg(count(lit(1)).as("tf"))
-      .transform(graft.functions.cacheOnce)
     val dft = tf.groupBy("tok").agg(count(lit(1)).as("df"))
     import s.implicits._
     val q = Bm25Queries.flatMap { case (id, ts) => ts.map(id -> _) }

@@ -364,10 +364,11 @@ object GraphQueries extends QueryModule {
         greatest(col("v"), col("w"))), lit(sampleDenom)) === 0)
     // primitive-int aggregate, not collect_set: the ObjectHashAggregate
     // behind collect_set boxes every one of the tens of millions of
-    // half-edge ints into per-group Scala sets — StageProbe put the
-    // plan's dominant CPU there at sf1. CollectSortedInts appends into
-    // raw int buffers and sort+dedups once per group at eval (and its
-    // sorted output is exactly what the icount merge needs downstream).
+    // half-edge ints into per-group Scala sets — a per-stage probe
+    // (now graft.tools.Probe) put the plan's dominant CPU there at sf1.
+    // CollectSortedInts appends into raw int buffers and sort+dedups once
+    // per group at eval (and its sorted output is exactly what the
+    // icount merge needs downstream).
     graft.functions.CollectSortedInts.register(s)
     val nbr = p(h.groupBy("v")
       .agg(graft.functions.CollectSortedInts(col("w")).as("ns"))

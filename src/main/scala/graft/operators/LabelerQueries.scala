@@ -608,10 +608,11 @@ object LabelerQueries extends QueryModule {
     * exact counts, the assoc_rules pattern: as DataFrame algebra the
     * three `conf` consumers plus the marginal joins re-ran the labeling
     * subplans as ~20 AQE exchange jobs whose fixed cost dwarfed the
-    * arithmetic on ≤576 rows (JobOverhead: 20 jobs, 3.0 s at sf1 for
-    * ~0.5 s of real work). Rounding parity with the oracle: double
-    * division on identical operands, then HALF_UP on the value's
-    * decimal string — Spark round()/DuckDB round() semantics. */
+    * arithmetic on ≤576 rows (graft.tools.Probe's job-floor bracket: 20
+    * jobs, 3.0 s at sf1 for ~0.5 s of real work). Rounding parity with
+    * the oracle: double division on identical operands, then HALF_UP on
+    * the value's decimal string — Spark round()/DuckDB round()
+    * semantics. */
   private def labelAgreement(s: SparkSession, dir: String): DataFrame = {
     import graft.labelers.NgramBayes
     val o = Tables.load(s, dir, "orders")

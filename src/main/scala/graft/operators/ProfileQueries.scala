@@ -695,13 +695,14 @@ object ProfileQueries extends QueryModule {
     val slots = scala.collection.mutable.Map[Long, graft.profiler.Profile]()
     // each micro-batch is re-bound onto `s` (as StreamingProfiler.sink
     // does): the stream's per-start() clone session has its own executor
-    // class loader, so profiling there recompiles every generated class
+    // class loader, so profiling there recompiles every generated class.
+    // An empty batch needs no emptiness probe: with a bounded key domain
+    // its split runs pass 1 only and yields no groups.
     val sink: (DataFrame, Long) => Unit = (batch0, _) => {
       val batch = GraftSessions.ofRows(s, batch0.queryExecution.logical)
-      if (!batch.isEmpty)
-        Profiler.profileSplit(batch, "y", opts).foreach { case (yy, p) =>
-          slots(yy) = slots.get(yy).map(_.merge(p)).getOrElse(p)
-        }
+      Profiler.profileSplit(batch, "y", opts).foreach { case (yy, p) =>
+        slots(yy) = slots.get(yy).map(_.merge(p)).getOrElse(p)
+      }
     }
     val schema = s.read.parquet(stage).schema
     val q = s.readStream.schema(schema)

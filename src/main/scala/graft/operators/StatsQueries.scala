@@ -356,10 +356,11 @@ object StatsQueries extends QueryModule {
     // kinds (ia = -1 ⇒ total row; ib = -1 ⇒ single item ia). The old
     // three-consumer form (pairs / itemCounts / nOrders off the same
     // `masks`) re-materialized the corpus aggregation — ReuseExchange
-    // only deduped two of the subplans, StageProbe measured two full
-    // 26-task corpus scans — and a `.cache()` of `masks` measured WORSE
-    // (3.0 → 4.9 s: the frame is ≈ one row per distinct basket, and
-    // three consumers re-paid columnar deserialization on all of it).
+    // only deduped two of the subplans, a per-stage probe (now
+    // graft.tools.Probe) measured two full 26-task corpus scans — and a
+    // `.cache()` of `masks` measured WORSE (3.0 → 4.9 s: the frame is
+    // ≈ one row per distinct basket, and three consumers re-paid
+    // columnar deserialization on all of it).
     // The fused probe keeps one corpus scan, one expansion, and ≤
     // |items|²/2 + |items| + 1 result rows; the final 300-row rule
     // arithmetic is driver math on exact longs (same ops, same 6 dp

@@ -82,14 +82,19 @@ final case class CategoricalStats(
     cmsBytes: Option[Array[Byte]] = None) {
 
   private def total: Double = counts.values.sum.toDouble
+  /** Σc² over the counts in ascending order: equal maps give equal bits
+    * whatever order their entries were inserted in. */
+  private def sumSquares: Double =
+    counts.values.toArray.sorted.map(c => c.toDouble * c).sum
+  /** 1 − Σc²/n², the form CoreQueries' `gini` computes. */
   def gini: Option[Double] =
     if (capped || total == 0) None
-    else Some(1.0 - counts.values.map(c => (c / total) * (c / total)).sum)
+    else Some(1.0 - sumSquares / (total * total))
   def unalikeability: Option[Double] =
     if (capped || total <= 1) None
     else {
       val n = total
-      Some((n * n - counts.values.map(c => c.toDouble * c).sum) / (n * n - n))
+      Some((n * n - sumSquares) / (n * n - n))
     }
   def topK(k: Int): Seq[(String, Long)] =
     counts.toSeq.sortBy { case (v, c) => (-c, v) }.take(k)

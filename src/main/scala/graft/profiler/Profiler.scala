@@ -61,12 +61,6 @@ final case class ProfilerOptions(
       * many non-null values in the sample (or the sample is the whole
       * table). 0 = the plain max(0.2n, 5000) contract. */
     minTrueSamples: Int = 0,
-    /** Per-column NDV cap for EXACT quantiles ([[graft.functions
-      * .ExactQuantiles.gated]]): above it the value-histogram shuffle
-      * would approach an n-key shuffle on continuous columns, so the
-      * column falls back to the GK sketch — the same early-abandon shape
-      * as the categorical stop-condition. */
-    exactQuantileNdvCap: Long = graft.functions.ExactQuantiles.DefaultNdvCap,
     /** Global null-sentinel override (profile_builder.py:107-122
       * `null_values`): a regex; string cells matching it are treated as
       * null by EVERY stat in the profile. None = only physical nulls
@@ -854,8 +848,11 @@ object Profiler {
       if (exN == 0) Map.empty[String, Seq[String]]
       else fields.zipWithIndex.map { case (f, idx) =>
         f.name -> rows.iterator.take(exN)
-          .map(_.get(idx)).filter(_ != null).map(_.toString)
-          .toSeq.distinct.take(5)
+          .map(_.get(idx)).filter(_ != null).map {
+            // hex, not the array's identity hash, so exemplars are stable
+            case b: Array[Byte] => b.map(x => f"${x & 0xff}%02x").mkString
+            case v => v.toString
+          }.toSeq.distinct.take(5)
       }.toMap
 
     // the rule columns under positional names, plus the row's sample index

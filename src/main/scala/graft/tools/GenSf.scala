@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data generator: reproduces the driver testdata's
@@ -28,14 +28,7 @@ object GenSf {
   def main(args: Array[String]): Unit = {
     val Array(outDir, multS) = args
     val mult = multS.toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.envCpus(default = 8))
     new java.io.File(outDir).mkdirs()
 
     val nCust = (15000 * mult).toLong

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.labelers.{NgramBayes, RegexLabeler}
 
@@ -245,12 +245,8 @@ object LabelerBench {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("LABELER_ACCURACY.md")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(graft.GraftSession.envCpus(default = 8),
+      confs = Seq("spark.sql.shuffle.partitions" -> "8"))
     import spark.implicits._
 
     val fixtures = EvalLabels.flatMap(l =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Shared measurement harness for the per-label fixture-tier probes
@@ -21,12 +20,7 @@ object LabelerTierHarness {
     * @param cellFn  (label, i) → fixture cell, the only per-tier part */
   def run(tag: String, status: String,
       cellFn: (String, Int) => String, perLabel: Int = 96): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(cpus = 32)
     import spark.implicits._
 
     val labels = LabelerBench.EvalLabels

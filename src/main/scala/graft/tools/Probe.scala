@@ -1,61 +1,84 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry, Tables}
+import graft.obs.JobCensus
 
-/** Diagnostic main: run ONE named SparkEntry query with a job listener
-  * and print per-job wall times — separates driver/planning overhead
-  * from executor time when tuning the bench suite. Not part of the
-  * library surface. */
+/** Where a registered query's time goes (the Spark UI is off in this
+  * suite, so this is its substitute). For each named query it prints
+  * each job's wall time, stages, tasks and plan scope; the top stages by
+  * wall time with their executor run time; and the wall time against
+  * the job floor:
+  *
+  *   residual = wall − jobs × (median empty-job cost on this box)
+  *
+  * The empty-job cost is measured two ways — a 1-task no-op job (a pure
+  * scheduler round trip) and a no-op exchange over every core (the
+  * shape most composite jobs take) — so the residual is a bracket, not a
+  * point estimate.
+  *
+  * Like Bench it first warms every query shape at sf0.001 (JIT and
+  * codegen), then runs each query cold at the target SF under a
+  * [[graft.obs.JobCensus]]. No names = the multi-job profiler composites.
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.tools.Probe [query ...]
+  * (PROBE_SHOW=1 also prints each result's rows.)
+  */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single large parquet files split at the default 128 MB starve a
-      // 32-thread executor (measured: labeler_votes scan-stage on 6
-      // tasks, dsir_weights on 2) — size splits to the core count
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      // ObjectHashAggregate falls back to SORT-BASED aggregation at 128
-      // distinct keys per partition (Spark's conservative default) —
-      // measured sorting the triangle pipeline's full half-edge stream.
-      // Every object-buffer aggregate in this suite keys on bounded or
-      // model-sized groups, so the hash path is safe at any suite scale.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "20000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val jobs = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-    val starts = scala.collection.mutable.Map.empty[Int, Long]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        starts(j.jobId) = System.nanoTime()
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        starts.remove(j.jobId).foreach(t0 =>
-          jobs.synchronized { jobs += ((j.jobId, t0, System.nanoTime())) })
-    })
-    val fn = graft.SparkEntry.queries.getOrElse(name,
-      graft.SparkEntry.benchOnly(name))
-    // warm pass (JIT/codegen) at sf0.001 like Bench
-    try fn(spark, "/root/testdata/sf0.001").count()
-    catch { case _: Throwable => () }
-    Thread.sleep(300)
-    jobs.clear()
-    val t0 = System.nanoTime()
-    fn(spark, sfDir).count()
-    val total = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(300)
-    val sorted = jobs.sortBy(_._2)
-    val base = sorted.headOption.map(_._2).getOrElse(0L)
-    sorted.foreach { case (id, s, e) =>
-      println(f"job $id%3d  start=${(s - base) / 1e9}%7.3f  dur=${(e - s) / 1e9}%7.3f")
+    val names = if (args.nonEmpty) args.toSeq
+      else Seq("profile_diff", "stream_profile", "profile_merge",
+        "report_flat", "cat_topk", "graph_stats")
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val warmDir = "/root/testdata/sf0.001"
+    val all = SparkEntry.queries ++ SparkEntry.benchOnly
+    names.foreach(n => require(all.contains(n), s"unknown query $n"))
+    require(new java.io.File(warmDir).isDirectory, s"warm-up dir $warmDir " +
+      "missing (an unwarmed run would time codegen compilation, not work)")
+    val spark = GraftSession()
+    val sc = spark.sparkContext
+
+    def timed(f: => Unit): Double = {
+      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    println(f"TOTAL $name $total%.3f s, ${sorted.size} jobs, job-time sum=${sorted.map(j => (j._3 - j._2) / 1e9).sum}%.3f")
+    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
+    (1 to 5).foreach(_ => sc.parallelize(1 to 1, 1).count())
+    val emptyTask = median((1 to 21).map(_ =>
+      timed(sc.parallelize(1 to 1, 1).count())))
+    val parts = sc.defaultParallelism
+    val emptyShuffle = median((1 to 11).map(_ =>
+      timed(spark.range(parts).repartition(parts).count())))
+    println(f"[probe] empty 1-task job      $emptyTask%.4f s (median of 21)")
+    println(f"[probe] empty $parts%d-part shuffle $emptyShuffle%.4f s (median of 11)")
+
+    Tables.all.foreach(t => Tables.load(spark, dir, t).count())
+    names.foreach { n =>
+      try all(n)(spark, warmDir).count() catch { case _: Throwable => () }
+    }
+    for (name <- names) {
+      spark.catalog.clearCache()
+      val ((df, wall), census) = JobCensus.of(spark) {
+        val t0 = System.nanoTime()
+        val df = all(name)(spark, dir)
+        df.count()
+        (df, (System.nanoTime() - t0) / 1e9)
+      }
+      val base = census.jobs.headOption.map(_.startMs).getOrElse(0L)
+      census.jobs.foreach { j =>
+        println(f"[probe] $name job ${j.id}%4d start=${(j.startMs - base) / 1e3}%7.3f " +
+          f"dur=${j.wallMs / 1e3}%7.3f s stages=${j.stages}%2d tasks=${j.tasks}%4d " +
+          j.scope.take(90))
+      }
+      census.stages.sortBy(-_.wallMs).take(15).foreach { s =>
+        println(f"[probe] $name stage ${s.id}%4d wall=${s.wallMs / 1e3}%6.2f s " +
+          f"run=${s.runMs / 1e3}%7.2f s tasks=${s.tasks}%3d  ${s.scope.take(110)}")
+      }
+      val n = census.jobs.size
+      val jobTime = census.jobs.map(_.wallMs max 0L).sum / 1e3
+      println(f"[probe] $name TOTAL wall=$wall%7.3f s jobs=$n%4d " +
+        f"job-time=$jobTime%7.3f s fixed=${n * emptyTask}%6.3f..${n * emptyShuffle}%6.3f s " +
+        f"residual=${wall - n * emptyShuffle}%6.3f..${wall - n * emptyTask}%6.3f s")
+      if (sys.env.get("PROBE_SHOW").contains("1")) df.show(50, false)
+    }
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -42,16 +42,8 @@ object StreamSessionsProbe {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "20000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.envCpus()
+    val spark = graft.GraftSession(cpus)
 
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -112,13 +104,12 @@ object StreamSessionsProbe {
     // A/B: map-side session pre-merge before the state-store shuffle —
     // partial sessions are merged per input partition first, shrinking
     // both the exchange and the per-key state-update sort
-    val mergeKey =
-      "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition"
-    val prevMerge = spark.conf.get(mergeKey, "false")
-    spark.conf.set(mergeKey, "true")
-    val entryLocal = timed(entry(spark, dir).collect())
+    val entryLocal = graft.SessionConfs.withConf(spark,
+        "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition",
+        "true") {
+      timed(entry(spark, dir).collect())
+    }
     println(f"[sessions] 6. entry + local session pre-merge $entryLocal%7.3f s")
-    spark.conf.set(mergeKey, prevMerge)
     val statePath = entrySec - floorSec - (batchState - scanSec)
     println(f"[sessions] decomposition: machinery=${floorSec}%.3f " +
       f"plan(batch@$stateN)=${batchState - scanSec}%.3f " +

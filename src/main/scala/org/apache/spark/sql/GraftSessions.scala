@@ -26,4 +26,10 @@ object GraftSessions {
     * needs no function-registry lookup, so nothing is registered per
     * session. */
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** Block until `session`'s listener bus has delivered every queued
+    * event, so a listener's counts are complete (`listenerBus` is
+    * private[spark]). */
+  def drainListenerBus(session: SparkSession): Unit =
+    session.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -107,11 +107,12 @@ class BenchGuardSpec extends AnyFunSuite {
   }
 
   test("SPARK_GRAFT_CPUS parses to a positive Int or fails by name") {
-    assert(Bench.parseCpus(None) == 4)
-    assert(Bench.parseCpus(Some("8")) == 8)
-    assert(Bench.parseCpus(Some(" 32 ")) == 32)
+    assert(GraftSession.parseCpus(None) == 4)
+    assert(GraftSession.parseCpus(None, default = 8) == 8)
+    assert(GraftSession.parseCpus(Some("8")) == 8)
+    assert(GraftSession.parseCpus(Some(" 32 ")) == 32)
     for (bad <- Seq("*", "", "0", "-2", "4.5", "eight")) {
-      val e = intercept[IllegalArgumentException](Bench.parseCpus(Some(bad)))
+      val e = intercept[IllegalArgumentException](GraftSession.parseCpus(Some(bad)))
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS") &&
         e.getMessage.contains(s"\"$bad\""), e.getMessage)
     }

@@ -36,26 +36,14 @@ class ColumnStatSpec extends AnyFunSuite {
 
   test("OrderDetect plans: the partition sort stays below the order aggregate") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
-    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, QueryExecution,
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec,
       SortExec, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.util.QueryExecutionListener
     import graft.functions.OrderSegmentsAggregate
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
-      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
-        plans.add(qe.executedPlan)
-    }
     val df = (1 to 500).map(i => (i.toLong, -i.toLong)).toDF("k", "desc")
       .repartition(5)
-    spark.listenerManager.register(listener)
-    val r = try {
-      val r = OrderDetect.detect(df, "k", Seq("desc"))
-      SparkTestSession.drainListenerBus()
-      r
-    } finally spark.listenerManager.unregister(listener)
+    val (r, execs) = SparkTestSession.executions(OrderDetect.detect(df, "k", Seq("desc")))
+    val plans = execs.map(_.executedPlan)
     assert(r("desc").order == "descending" && r("desc").nDecr == 499)
     // a projection keeps its child's row order
     def unwrap(p: SparkPlan): SparkPlan = p match {
@@ -67,7 +55,7 @@ class ColumnStatSpec extends AnyFunSuite {
     // the map-side (partial) order aggregate reads the sorted partitions
     // (the helper's collect descends into adaptive query stages)
     val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    val partials = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(aqe.collect(_) {
+    val partials = plans.flatMap(aqe.collect(_) {
       case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
         e.mode == Partial && e.aggregateFunction.isInstanceOf[OrderSegmentsAggregate]) => a
     })
@@ -152,13 +140,12 @@ class ColumnStatSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.aggregate.{
       HllSketchAgg, HyperLogLogPlusPlus, Partial, PartialMerge}
     import org.apache.spark.sql.execution.{CollectLimitExec, GenerateExec,
-      GlobalLimitExec, InputAdapter, LocalLimitExec, QueryExecution, SparkPlan,
+      GlobalLimitExec, InputAdapter, LocalLimitExec, SparkPlan,
       WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec,
       ScalaAggregator}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.util.QueryExecutionListener
     import graft.functions.CodePointVocabAggregate
     import graft.profiler.ProfilerOptions
     // a string-datetime, a TimestampType and a text column, two groups
@@ -179,27 +166,16 @@ class ColumnStatSpec extends AnyFunSuite {
     // above a Range's row count, which would hide one)
     val opts = ProfilerOptions(maxCategories = 10, maxGroups = 16)
 
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
-      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
-        plans.add(qe.executedPlan)
+    val ((whole, split), execs) = SparkTestSession.executions {
+      (Profiler.profile(df.drop("g"), opts), Profiler.profileSplit(df, "g", opts))
     }
-    spark.listenerManager.register(listener)
-    val (whole, split) = try {
-      val w = Profiler.profile(df.drop("g"), opts)
-      val sp = Profiler.profileSplit(df, "g", opts)
-      SparkTestSession.drainListenerBus()
-      (w, sp)
-    } finally spark.listenerManager.unregister(listener)
 
     def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect { case n => n }
       .flatMap {
         case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
         case n => Seq(n)
       }
-    val all = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(nodes)
+    val all = execs.map(_.executedPlan).flatMap(nodes)
     val exprs = all.flatMap(_.expressions.flatMap(_.collect { case e => e }))
     assert(all.nonEmpty, "listener captured no plans")
     assert(!exprs.exists(_.isInstanceOf[HyperLogLogPlusPlus]),
@@ -262,10 +238,8 @@ class ColumnStatSpec extends AnyFunSuite {
 
   test("profiler plans: pass 1 is one object-aggregate job, no declarative aggregate") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
       ObjectHashAggregateExec}
-    import org.apache.spark.sql.util.QueryExecutionListener
     import graft.functions.RowStatsAggregate
     // every column kind, under names that hold the sketch aliases' suffixes
     val df = spark.range(0, 2000, 1, 2).select(
@@ -274,21 +248,9 @@ class ColumnStatSpec extends AnyFunSuite {
       (col("id") % 3).cast("double").as("c"),
       timestamp_seconds(col("id") * 3600).as("ts"),
       (col("id") % 2 === 0).as("flag"))
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
-      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
-        plans.add(qe.executedPlan)
-    }
-    spark.listenerManager.register(listener)
-    val p = try {
-      val p = Profiler.profile(df)
-      SparkTestSession.drainListenerBus()
-      p
-    } finally spark.listenerManager.unregister(listener)
+    val (p, execs) = SparkTestSession.executions(Profiler.profile(df))
     // pass 1 is the plan that computes the table-level row stats
-    val pass1 = plans.toArray(Array.empty[SparkPlan]).toSeq.filter(_.exists {
+    val pass1 = execs.map(_.executedPlan).filter(_.exists {
       case a: ObjectHashAggregateExec => a.aggregateExpressions
         .exists(_.aggregateFunction.isInstanceOf[RowStatsAggregate])
       case _ => false
@@ -308,9 +270,7 @@ class ColumnStatSpec extends AnyFunSuite {
 
   test("profiler plans: streamed micro-batches profile on the constructing session") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.HllSketchAgg
-    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.util.QueryExecutionListener
     import graft.streaming.StreamingProfiler
     val dir = java.nio.file.Files.createTempDirectory("sp-session").toFile
     val data = new java.io.File(dir, "data").toString
@@ -319,27 +279,21 @@ class ColumnStatSpec extends AnyFunSuite {
       .select(col("id"), concat(lit("v"), col("id").cast("string")).as("s"))
       .write.parquet(data)
 
-    val execs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = execs.add(qe)
-      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = execs.add(qe)
-    }
-    spark.listenerManager.register(listener)
     val sp = new StreamingProfiler()
-    try {
-      spark.readStream.schema(spark.read.parquet(data).schema)
+    val schema = spark.read.parquet(data).schema
+    val (_, execs) = SparkTestSession.executions {
+      spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(data)
         .writeStream.foreachBatch(sp.sink)
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", new java.io.File(dir, "ck").toString)
         .start().awaitTermination()
-      SparkTestSession.drainListenerBus()
-    } finally spark.listenerManager.unregister(listener)
+    }
     assert(sp.current.map(_.rowCount).contains(400L))
 
     // pass 1 (the HLL sketches) ran once per micro-batch, and every
     // profile execution the listener saw was on the constructing session
-    val profileExecs = execs.toArray(Array.empty[QueryExecution]).toSeq
+    val profileExecs = execs
       .filter(_.optimizedPlan.exists(_.expressions.exists(
         _.exists(_.isInstanceOf[HllSketchAgg]))))
     assert(profileExecs.size >= files,
@@ -351,24 +305,14 @@ class ColumnStatSpec extends AnyFunSuite {
   test("profiler plans: stream_gate micro-batches profile on the caller's session") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.HllSketchAgg
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val execs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = execs.add(qe)
-      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = execs.add(qe)
-    }
-    spark.listenerManager.register(listener)
-    val rows = try {
-      val r = graft.operators.ProfileQueries.queries("stream_gate")(
+    val (rows, execs) = SparkTestSession.executions {
+      graft.operators.ProfileQueries.queries("stream_gate")(
         spark, SparkTestSession.sfDir).collect()
-      SparkTestSession.drainListenerBus()
-      r
-    } finally spark.listenerManager.unregister(listener)
+    }
     assert(rows.nonEmpty)
     // the grouped pass 1: an Aggregate keyed on the split year holding
     // the HLL sketches
-    val pass1 = execs.toArray(Array.empty[QueryExecution]).toSeq
+    val pass1 = execs
       .filter(_.optimizedPlan.exists {
         case a: Aggregate => a.groupingExpressions.nonEmpty &&
           a.aggregateExpressions.exists(_.exists(_.isInstanceOf[HllSketchAgg]))

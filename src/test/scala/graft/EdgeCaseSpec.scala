@@ -82,4 +82,33 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(p.rowHasNull == (1 to 20).count(i =>
       i % 3 == 0 || i % 4 == 0 || i % 5 == 0))
   }
+
+  test("binary exemplars render as hex, the same on every profile") {
+    import spark.implicits._
+    val bin = Seq(Array[Byte](0, 1, 127), Array[Byte](-1, -128, 16)).toDF("b")
+    val first = Profiler.profile(bin).column("b").get.exemplars
+    assert(first == Seq("00017f", "ff8010"))
+    assert(Profiler.profile(bin).column("b").get.exemplars == first)
+  }
+
+  test("gini and unalikeability do not depend on the category map's insertion order") {
+    import graft.profiler.CategoricalStats
+    // counts whose shares sum to different last bits in different orders
+    val entries = Seq("a" -> 106604361L, "b" -> 207114534L, "c" -> 389704909L,
+      "d" -> 394386975L)
+    // a Map of up to 4 entries iterates in insertion order
+    val stats = entries.permutations.map(e => CategoricalStats(4, e.toMap, capped = false))
+      .toSeq
+    assert(stats.map(_.counts.keys.mkString).distinct.size == 24)
+    def bits(d: Option[Double]) = d.map(java.lang.Double.doubleToLongBits)
+    assert(stats.map(s => bits(s.gini)).distinct.size == 1)
+    assert(stats.map(s => bits(s.unalikeability)).distinct.size == 1)
+    // both stay within a few ulps of the exact values
+    val n = BigDecimal(entries.map(_._2).sum)
+    val sq = entries.map(e => BigDecimal(e._2) * e._2).sum
+    val gini = (1 - sq / (n * n)).toDouble
+    val un = ((n * n - sq) / (n * n - n)).toDouble
+    assert(math.abs(stats.head.gini.get - gini) <= 4 * math.ulp(gini))
+    assert(math.abs(stats.head.unalikeability.get - un) <= 4 * math.ulp(un))
+  }
 }

@@ -412,18 +412,7 @@ class ProfileSplitSpec extends AnyFunSuite {
     val base = Tables.load(spark, SparkTestSession.sfDir, "lineitem")
       .select("l_orderkey", "l_quantity", "l_returnflag")
       .withColumn("__half", col("l_orderkey") % 2).drop("l_orderkey")
-    val sc = spark.sparkContext
-    def countJobs(f: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      sc.addSparkListener(l)
-      try { f; SparkTestSession.drainListenerBus() } finally sc.removeSparkListener(l)
-      n.get()
-    }
+    def countJobs(f: => Unit): Int = graft.obs.JobCensus.of(spark)(f)._2.jobs.size
     var withProbes: Map[Long, graft.profiler.Profile] = null
     var noProbes: Map[Long, graft.profiler.Profile] = null
     val jobsOn = countJobs {

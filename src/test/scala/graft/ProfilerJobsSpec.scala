@@ -3,28 +3,18 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.profiler.Profiler
+import graft.obs.JobCensus
+import graft.profiler.{Profiler, ProfilerOptions}
 import graft.streaming.StreamingProfiler
 
-/** Spark jobs per profiler call, counted with a job listener. Each count
-  * is pinned as a ceiling, so a change that adds a job to a profile call
-  * fails here; a change that removes one lowers the ceiling. */
+/** Spark jobs per profiler call, counted by [[graft.obs.JobCensus]].
+  * Each count is pinned as a ceiling, so a change that adds a job to a
+  * profile call fails here; a change that removes one lowers the
+  * ceiling. */
 class ProfilerJobsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def jobsOf(f: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    SparkTestSession.drainListenerBus()
-    sc.addSparkListener(l)
-    try { f; SparkTestSession.drainListenerBus() } finally sc.removeSparkListener(l)
-    n.get()
-  }
+  private def jobsOf(f: => Unit): Int = JobCensus.of(spark)(f)._2.jobs.size
 
   /** The column kinds of the benchmark's 7-column profile frame: datetime
     * strings, integers, floats, five categories, an ascending id, long
@@ -91,7 +81,14 @@ class ProfilerJobsSpec extends AnyFunSuite {
     // a filter the optimizer cannot fold to an empty relation
     val none = benchShaped.filter(col("ordered") < 0)
     assert(jobsOf(Profiler.profile(none.drop("half"))) == 1)
-    // a split adds only the key-domain guard's distinct count
+    // a split adds only the key-domain guard's distinct count, and with
+    // a bounded key domain (as stream_gate declares) not even that
     assert(jobsOf(Profiler.profileSplit(none, "half")) == 2)
+    var groups = -1
+    assert(jobsOf {
+      groups = Profiler.profileSplit(none, "half",
+        ProfilerOptions(keyDomainBounded = true)).size
+    } == 1)
+    assert(groups == 0)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSessions, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.profiler._
@@ -11,36 +13,31 @@ object SparkTestSession {
   val sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata/sf0.001")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Pinned to 4 cores whatever `SPARK_GRAFT_CPUS` says (the specs'
+    * partition, plan and job assertions assume 4), and with Spark's
+    * default 128-key ObjectHashAggregate fallback rather than the
+    * suite's: ProfileSplitSpec's ">128 groups" test exercises the
+    * sort-based fallback path. */
+  lazy val spark: SparkSession = GraftSession(cpus = 4, appName = "graft-test",
+    confs = Seq(GraftSession.SortFallbackThreshold -> "128"))
 
-  /** Block until the listener bus has delivered every queued event, so a
-    * listener's counts are complete. `listenerBus` is private[spark]
-    * (public in bytecode), hence reflection; if no `waitUntilEmpty`
-    * overload resolves (a Spark upgrade renamed it) this throws rather
-    * than let a caller's assertions run on a partial drain. */
-  def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    val byArity = bus.getClass.getMethods
-      .filter(_.getName == "waitUntilEmpty").map(m => m.getParameterCount -> m)
-      .toMap
-    (byArity.get(0), byArity.get(1)) match {
-      case (Some(m), _) => m.invoke(bus)
-      case (None, Some(m)) => m.invoke(bus, java.lang.Long.valueOf(10000L))
-      case (None, None) => throw new AssertionError(
-        "no waitUntilEmpty overload on LiveListenerBus — listener-based " +
-          "assertions would be flaky without a drain")
+  /** `body`'s result and the query executions it ran on [[spark]], from
+    * a listener registered only while it runs (the listener bus is
+    * drained on both sides, as [[graft.obs.JobCensus]] does). */
+  def executions[T](body: => T): (T, Seq[QueryExecution]) = {
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = execs.add(qe)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = execs.add(qe)
     }
+    GraftSessions.drainListenerBus(spark)
+    spark.listenerManager.register(listener)
+    val r = try {
+      val r = body
+      GraftSessions.drainListenerBus(spark)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    (r, execs.toArray(Array.empty[QueryExecution]).toSeq)
   }
 }
 

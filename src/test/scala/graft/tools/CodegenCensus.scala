@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
 import org.apache.spark.sql.functions._
 import graft.profiler.{Profiler, ProfilerOptions}
@@ -52,13 +51,7 @@ object CodegenCensus {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("codegen-census").master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(cpus = 4, appName = "codegen-census")
     val maxEntries = spark.sparkContext.getConf
       .getInt("spark.sql.codegen.cache.maxEntries", 100)
     val df = spark.range(0, 8000, 1, 4).select(

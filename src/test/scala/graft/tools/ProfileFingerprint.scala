@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.profiler.{Codec, Profile, Profiler, ProfilerOptions, Report}
 
@@ -44,13 +44,7 @@ object ProfileFingerprint {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileFingerprint <sfDir> [<sfDir> ...]")
-    val spark = SparkSession.builder()
-      .appName("profile-fingerprint").master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(cpus = 4, appName = "profile-fingerprint")
     for (dir <- args) {
       val sf = new java.io.File(dir).getName
       for (t <- Tables)

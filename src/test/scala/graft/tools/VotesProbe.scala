@@ -1,18 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Perf probe (test scope, not shipped): why does labeler_votes cost
   * ~10× labeler_decision when both share the cells→regex→agg upstream?
   * Run: Test/runMain graft.tools.VotesProbe */
 object VotesProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("votes-probe").master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(cpus = 32, appName = "votes-probe")
     val dir = "/root/testdata/sf0.1"
     val qs = graft.SparkEntry.queries
     def t(name: String): Unit = {
