@@ -1,7 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Bucket-capped candidate edges over any banded-signature table — the
   * shared shape of LSH candidate generation that survives duplicate-heavy
@@ -16,9 +18,16 @@ import org.apache.spark.sql.functions._
   * quadratically whenever near-identical groups (or skewed sign bits)
   * pile members into one bucket. In that dense regime members are
   * mutually similar, so rep-centered edges recover the same connected
-  * components. The bucket census is NDV-bounded — broadcast to both
-  * probes, so no reducer ever sees an oversized bucket's quadratic
-  * fan-out.
+  * components. The bucket census is NDV-bounded and goes to both probes
+  * as a broadcast, so no reducer ever sees an oversized bucket's
+  * quadratic fan-out.
+  *
+  * The census runs as its own action, and its two halves re-enter the
+  * plan as local relations. A broadcast collects its side on the driver
+  * anyway; collected up front, the census is computed once (both sides
+  * of the pair self-join read it, where a plan would give each side its
+  * own copy of the aggregate), its broadcasts run no job, and an empty
+  * half (no oversized bucket) drops its branch from the plan.
   */
 object BandedCands {
 
@@ -28,16 +37,19 @@ object BandedCands {
       keyCol: String, cap: Int): DataFrame = {
     val sz = bands.groupBy(bandCol, keyCol)
       .agg(count(lit(1)).as("c"), min(idCol).as("rep"))
-    val small = broadcast(sz.filter(col("c") <= cap)
-      .select(bandCol, keyCol))
+    val (smallRows, bigRows) = sz.collect().toSeq.partition(_.getLong(2) <= cap)
+    def local(rows: Seq[Row], cols: String*): DataFrame =
+      bands.sparkSession.createDataFrame(rows.map(r => Row(cols.map(c =>
+        r.get(sz.schema.fieldIndex(c))): _*)).asJava,
+        StructType(cols.map(sz.schema(_))))
+    val small = broadcast(local(smallRows, bandCol, keyCol))
     val inSmall = bands.join(small, Seq(bandCol, keyCol), "left_semi")
     val pairs = inSmall.as("x").join(inSmall.as("y"),
         col(s"x.$bandCol") === col(s"y.$bandCol") &&
           col(s"x.$keyCol") === col(s"y.$keyCol") &&
           col(s"x.$idCol") < col(s"y.$idCol"))
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-    val big = broadcast(sz.filter(col("c") > cap)
-      .select(col(bandCol), col(keyCol), col("rep")))
+    val big = broadcast(local(bigRows, bandCol, keyCol, "rep"))
     val stars = bands.join(big, Seq(bandCol, keyCol))
       .filter(col(idCol) =!= col("rep"))
       .select(col("rep").as("id_a"), col(idCol).as("id_b"))

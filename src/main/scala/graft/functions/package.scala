@@ -33,6 +33,15 @@ package object functions {
       df.cache()
     else df
 
+  /** Drop the blocks of a `localCheckpoint()`ed frame. They belong to
+    * the checkpointed RDD behind its LogicalRDD leaf, NOT to a
+    * CacheManager entry — `df.unpersist()` on it is a no-op, so they
+    * would linger until ContextCleaner GC. */
+  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.foreach(_.unpersist(blocking = false))
+
   def roundHalfUp(x: Double, dp: Int): Double =
     // NaN/±Inf pass through like Spark's round() (BigDecimal would throw
     // NumberFormatException — a degenerate census slice, e.g. n == 0 or

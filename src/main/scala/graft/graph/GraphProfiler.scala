@@ -43,8 +43,46 @@ object GraphProfiler {
     * warning naming the unconverged state instead of silently returning
     * partial labels (long near-dup chains would otherwise disagree with
     * the transitive-closure oracle with no signal). */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-      smallGraphCap: Long = SmallGraphEdgeCap): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = MaxIter,
+      smallGraphCap: Long = SmallGraphEdgeCap): DataFrame =
+    smallComponents(edges, smallGraphCap) match {
+      case Some(comp) =>
+        val spark = edges.sparkSession
+        import spark.implicits._
+        comp.toSeq.toDF("node", "comp")
+      case None => componentLoop(edges, maxIter)
+    }
+
+  /** (`idName`, sz) for every component of more than one node, ordered by
+    * id: the id is the component's min node, sz its node count. Below
+    * `smallGraphCap` edges it is computed on the driver and comes back
+    * as a local relation; above, it runs the distributed loop on `edges`
+    * (cache them: the loop reads them several times) and is
+    * checkpointed. `release` runs once `edges` is fully materialized,
+    * so a caller can free what they were computed from before the loop
+    * starts. */
+  def componentSizes(edges: DataFrame, idName: String,
+      smallGraphCap: Long = SmallGraphEdgeCap)(release: => Unit): DataFrame =
+    smallComponents(edges, smallGraphCap) match {
+      case Some(comp) =>
+        release
+        val spark = edges.sparkSession
+        import spark.implicits._
+        comp.values.groupMapReduce(identity)(_ => 1L)(_ + _)
+          .filter(_._2 > 1).toSeq.sorted.toDF(idName, "sz")
+      case None =>
+        edges.count()
+        release
+        componentLoop(edges, MaxIter)
+          .groupBy(col("comp").as(idName))
+          .agg(count(lit(1)).as("sz"))
+          .filter(col("sz") > 1)
+          .orderBy(idName)
+          .localCheckpoint()
+    }
+
+  /** The distributed loop, with constraint propagation off. */
+  private def componentLoop(edges: DataFrame, maxIter: Int): DataFrame =
     // Catalyst's union constraint rewrite dereferences attributes the
     // self-join dedup has already rewritten away (AttributeMap "key not
     // found" — the long-standing iterative-plan bug GraphFrames also
@@ -56,35 +94,35 @@ object GraphProfiler {
     // spark.newSession() (same SparkContext, isolated SQLConf).
     graft.SessionConfs.withConf(edges.sparkSession,
         "spark.sql.constraintPropagation.enabled", "false") {
-      connectedComponentsImpl(edges, maxIter, smallGraphCap)
-    }
-  }
-
-  /** Block-level handle for a localCheckpoint()ed DataFrame: the blocks
-    * belong to the internal checkpointed RDD behind its LogicalRDD leaf,
-    * NOT to a CacheManager entry — `df.unpersist()` on it is a no-op, so
-    * rounds must release the previous round's blocks via this RDD or
-    * they linger until ContextCleaner GC. */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      connectedComponentsImpl(edges, maxIter)
     }
 
-  /** Below this many (bidirectional, distinct) edges the component
-    * structure is bounded driver state — solve it with one collect and a
-    * union-find instead of an O(log d)-round distributed loop. Same
-    * rationale as broadcasting a small join side: the iterative plan is
-    * the scale path, but on a small graph its per-round job overhead
-    * dominates (measured: ~6 s of pure job scheduling for a 25k-edge
-    * graph at bench scale, ~0.3 s via union-find). 500k edges ≈ 8 MB
-    * collected — comfortably bounded. */
+  /** Up to this many edge rows the component structure is bounded driver
+    * state — solve it with one collect and a union-find instead of an
+    * O(log d)-round distributed loop. Same rationale as broadcasting a
+    * small join side: the iterative plan is the scale path, but on a
+    * small graph its per-round job overhead dominates (measured: ~6 s of
+    * pure job scheduling for a 25k-edge graph at bench scale, ~0.3 s via
+    * union-find). 500k edges ≈ 8 MB collected — comfortably bounded. */
   private val SmallGraphEdgeCap = 500000L
 
-  /** Exact min-label union-find over a collected edge list; returns the
-    * same (node, comp = min reachable node) contract as the loop. */
-  private def smallGraphCC(bidir: DataFrame): DataFrame = {
-    val spark = bidir.sparkSession
-    import spark.implicits._
+  /** Rounds of the distributed loop before it gives up (with a warning). */
+  private val MaxIter = 50
+
+  /** node → min reachable node, by union-find over the collected edge
+    * rows, when `edges` has at most `cap` rows and long ids; else None.
+    * One job reads at most cap + 1 rows: the edge list as given, with no
+    * symmetrizing union or distinct (union-find ignores direction,
+    * repeats and self-loops need no special case). */
+  private def smallComponents(edges: DataFrame, cap: Long)
+      : Option[Map[Long, Long]] = {
+    val ids = edges.select(col("src"), col("dst"))
+    if (!ids.schema.fields.forall(
+        _.dataType == org.apache.spark.sql.types.LongType)) return None
+    // at cap ≥ Int.MaxValue no limit can bound the read: take every row
+    val rows = if (cap >= Int.MaxValue) ids.collect()
+      else ids.limit(math.max(cap, 0L).toInt + 1).collect()
+    if (rows.length > cap) return None
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -95,35 +133,26 @@ object GraphProfiler {
       }
       r
     }
-    bidir.select(col("src").cast("long"), col("dst").cast("long"))
-      .collect().foreach { row =>
-        val (a, b) = (row.getLong(0), row.getLong(1))
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-      }
-    parent.keys.toSeq.map(n => (n, find(n))).toDF("node", "comp")
+    rows.foreach { row =>
+      val (a, b) = (row.getLong(0), row.getLong(1))
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    Some(parent.keys.map(n => n -> find(n)).toMap)
   }
 
-  private def connectedComponentsImpl(edges: DataFrame, maxIter: Int,
-      smallGraphCap: Long): DataFrame = {
+  private def connectedComponentsImpl(edges: DataFrame, maxIter: Int): DataFrame = {
     val bidir = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .cache()
-    // the count also materializes the cache round 1 would have paid for
-    val nEdges = bidir.count()
-    val longIds = bidir.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (nEdges <= smallGraphCap && longIds) {
-      val out = smallGraphCC(bidir)
-      bidir.unpersist()
-      return out
-    }
+    // materializes the cache round 1 would have paid for
+    bidir.count()
     var labels = nodes(edges).withColumn("comp", col("node")).cache()
-    // previous round's checkpoint blocks, released once the next round
-    // has materialized on top of them
-    var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
+    // previous round's checkpoint, released once the next round has
+    // materialized on top of it
+    var prev: Option[DataFrame] = None
     // Convergence by label-sum: labels only ever decrease, so an unchanged
     // Σcomp means a fixpoint — the sum action also materializes the cached
     // next, so each round is checkpoint-job + sum-job, no per-round
@@ -161,8 +190,8 @@ object GraphProfiler {
         .localCheckpoint()
       val s = labelSum(next)
       labels.unpersist() // releases the round-0 cache; no-op on later rounds
-      prevCkpt.foreach(_.unpersist(blocking = false))
-      prevCkpt = checkpointRdd(next)
+      prev.foreach(graft.functions.releaseCheckpoint)
+      prev = Some(next)
       labels = next
       converged = s == prevSum
       prevSum = s

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -26,13 +26,17 @@ object DedupQueries extends QueryModule {
     * dedup operators have known positives to find — identical injection on
     * the DuckDB side. */
   private def corpus(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.load(s, dir, "documents").select("doc_id", "text")
-    val clones = d.filter(col("doc_id") < 20)
-      .select((col("doc_id") + 100000).as("doc_id"), col("text"))
-    val near = d.filter(col("doc_id") < 20)
-      .select((col("doc_id") + 200000).as("doc_id"),
-        substring(col("text"), 15, 1000000).as("text"))
-    d.unionAll(clones).unionAll(near)
+    // ONE scan: each document yields itself, and a doc_id < 20 also its
+    // two clones (a union of filtered copies would scan the table once
+    // per branch and compile a generated class per branch)
+    val (id, text) = (col("doc_id"), col("text"))
+    def doc(i: Column, t: Column) = struct(i.as("doc_id"), t.as("text"))
+    Tables.load(s, dir, "documents")
+      .select(explode(array(doc(id, text),
+        when(id < 20, doc(id + 100000, text)),
+        when(id < 20, doc(id + 200000, substring(text, 15, 1000000))))).as("d"))
+      .filter(col("d").isNotNull)
+      .select("d.doc_id", "d.text")
   }
 
   private val corpusSql =
@@ -68,7 +72,7 @@ object DedupQueries extends QueryModule {
 
   // ------------------------------------------------------- MinHash + LSH
   private val NumPerm = 16
-  private val NumBands = 4 // 4 rows per band
+  private[operators] val NumBands = 4 // 4 rows per band
 
   /** MinHash signatures: 16 permutations from ONE hash per shingle via
     * the universal family `h_p = (a + p·b) mod 2³²`, where a/b are the
@@ -273,19 +277,13 @@ object DedupQueries extends QueryModule {
     val c = corpus(s, dir).filter(col("doc_id") % 100000 < ClusterSlice)
     val wide = graft.functions.cacheOnce(minhashWide(c, useMd5 = true))
     wide.count()
-    // cache + materialize: the CC loop references the edge plan four
-    // times (bidir union branches + node frontier)
+    // cached: the CC loop references the edge plan four times (bidir
+    // union branches + node frontier)
     val edges = minhashPairs(wide)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .transform(graft.functions.cacheOnce)
-    edges.count()
-    wide.unpersist()
-    val comps = graft.graph.GraphProfiler.connectedComponents(edges)
-    val out = comps.groupBy(col("comp").as("cluster_id"))
-      .agg(count(lit(1)).as("sz"))
-      .filter(col("sz") > 1)
-      .orderBy("cluster_id")
-      .localCheckpoint()
+    val out = graft.graph.GraphProfiler.componentSizes(edges, "cluster_id")(
+      wide.unpersist())
     edges.unpersist()
     out
   }
@@ -349,22 +347,18 @@ object DedupQueries extends QueryModule {
 
   private def minhashClustersImpl(s: SparkSession, dir: String,
       useMd5: Boolean): DataFrame = {
+    // cached: bands and both verify sides read it. Its first reader is
+    // the bucket census, a single action that materializes the cache
+    // before the candidate plan fans out
     val wide = graft.functions.cacheOnce(minhashWide(corpus(s, dir), useMd5))
-    wide.count()
     val cands = graft.functions.BandedCands
       .capped(bandsOf(wide), "doc_id", "band", "sig", MinhashBucketCap)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     val edges = minhashVerify(wide, cands)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .transform(graft.functions.cacheOnce)
-    edges.count()
-    wide.unpersist()
-    val out = graft.graph.GraphProfiler.connectedComponents(edges)
-      .groupBy(col("comp").as("cluster_id"))
-      .agg(count(lit(1)).as("sz"))
-      .filter(col("sz") > 1)
-      .orderBy("cluster_id")
-      .localCheckpoint()
+    val out = graft.graph.GraphProfiler.componentSizes(edges, "cluster_id")(
+      wide.unpersist())
     edges.unpersist()
     out
   }

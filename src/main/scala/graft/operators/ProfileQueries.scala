@@ -592,9 +592,13 @@ object ProfileQueries extends QueryModule {
       computeExemplars = false)
     val sp = new graft.streaming.StreamingProfiler(opts)
     var nBatches = 0L
-    val sink: (DataFrame, Long) => Unit = (batch, id) => {
-      if (!batch.isEmpty) nBatches += 1 // AvailableNow may add an empty tail
+    // a batch counts when the profile's row count grows: AvailableNow may
+    // add an empty tail, and probing each batch for rows would cost a job
+    // on the stream's clone session
+    val sink = GraftSessions.foreachBatchOn(s) { (batch, id) =>
+      val before = sp.current.fold(0L)(_.rowCount)
       sp.sink(batch, id)
+      if (sp.current.fold(0L)(_.rowCount) > before) nBatches += 1
     }
     val schema = s.read.parquet(stage).schema
     val q = s.readStream.schema(schema)
@@ -694,12 +698,10 @@ object ProfileQueries extends QueryModule {
       keyDomainBounded = true)
     val slots = scala.collection.mutable.Map[Long, graft.profiler.Profile]()
     // each micro-batch is re-bound onto `s` (as StreamingProfiler.sink
-    // does): the stream's per-start() clone session has its own executor
-    // class loader, so profiling there recompiles every generated class.
-    // An empty batch needs no emptiness probe: with a bounded key domain
-    // its split runs pass 1 only and yields no groups.
-    val sink: (DataFrame, Long) => Unit = (batch0, _) => {
-      val batch = GraftSessions.ofRows(s, batch0.queryExecution.logical)
+    // does), so its generated classes compile once per session, not once
+    // per stream. An empty batch needs no emptiness probe: with a bounded
+    // key domain its split runs pass 1 only and yields no groups.
+    val sink = GraftSessions.foreachBatchOn(s) { (batch, _) =>
       Profiler.profileSplit(batch, "y", opts).foreach { case (yy, p) =>
         slots(yy) = slots.get(yy).map(_.merge(p)).getOrElse(p)
       }

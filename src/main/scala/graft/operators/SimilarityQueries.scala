@@ -792,8 +792,7 @@ object SimilarityQueries extends QueryModule {
     // frames ~8 ways, and AQE submits those stage builds concurrently —
     // against a not-yet-materialized cache each build re-executed the
     // cached plan's scan+project as its own job (8 observed at sf0.1;
-    // at corpus scale 7 redundant scans). Same discipline as
-    // minhashClustersImpl's wide.count().
+    // at corpus scale 7 redundant scans).
     e.count()
     val cands = lshCandsCapped(lshBands(e))
     val a = e.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
@@ -809,14 +808,9 @@ object SimilarityQueries extends QueryModule {
       .filter(col("sim") >= EmbedDupThreshold)
       .select("src", "dst")
       .cache()
-    edges.count()
-    val comps = graft.graph.GraphProfiler.connectedComponents(edges)
-    val out = comps.groupBy(col("comp").as("keeper"))
-      .agg(count(lit(1)).as("sz"))
-      .filter(col("sz") > 1)
-      .orderBy("keeper")
-      .localCheckpoint()
-    edges.unpersist(); e.unpersist()
+    val out = graft.graph.GraphProfiler.componentSizes(edges, "keeper")(
+      e.unpersist())
+    edges.unpersist()
     out
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSessions, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -165,7 +165,15 @@ object StreamingQueries extends QueryModule {
     * text (at scale the index would be bucketed on (band, sig)). The
     * census (per batch: size, flagged, admitted) is restated by the
     * oracle as an unrolled batch-order computation, so any deviation in
-    * replay order or probe semantics breaks the hash. */
+    * replay order or probe semantics breaks the hash.
+    *
+    * Session contract: each micro-batch runs on the session that called
+    * this query, not on the stream's own session. A stream runs on a
+    * clone session made anew at every `start()`, with its own executor
+    * class loader, which keys Spark's codegen cache; the sink re-binds
+    * the batch's plan onto the caller's session
+    * ([[org.apache.spark.sql.GraftSessions.foreachBatchOn]]), so a
+    * repeat run on one session compiles no class again. */
   private val NearDupBatches = 4
 
   private def streamNearDup(s: SparkSession, dir: String): DataFrame = {
@@ -219,62 +227,58 @@ object StreamingQueries extends QueryModule {
     }
     val results =
       scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    val sink: (DataFrame, Long) => Unit = (batch, _) => {
-      val b = batch.cache()
-      // batch id + size in ONE global aggregate (k is data-derived so a
-      // replay-order deviation surfaces as an oracle mismatch, not a
-      // silently relabeled census; the old separate head() + count()
-      // paid two jobs per batch for the same two numbers). count() = 0
-      // detects the empty tail batch AvailableNow may add, so this
-      // aggregate also subsumes the old per-trigger `isEmpty` probe
-      // job (r19)
-      // the census is a partial-agg'd GLOBAL aggregate whose exchange
-      // carries one row per map task — nothing for AQE to re-plan at
-      // any scale, and its stage-materialization job repeats per
-      // trigger (r20, the profiler/classifier bounded-exchange scope);
-      // AQE stays ON for the batch's index probe joins below, where
-      // adaptivity is real
-      val kn = graft.SessionConfs.withConf(b.sparkSession,
-        "spark.sql.adaptive.enabled", "false") {
-        b.agg(
+    // every batch, the first included, builds the same plan: the index
+    // starts as an empty directory, read with the bands' known schema
+    // (no footer-inference job; AQE still drops batch 0's empty probe
+    // when it runs)
+    val bandsSchema = DedupQueries.bandsOf(
+      DedupQueries.minhashWide(docs, useMd5 = true)).schema
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
+    val sink = GraftSessions.foreachBatchOn(s) { (batch, _) =>
+      // ONE pass over the batch: an eager local checkpoint of its bands,
+      // which both the probe and the append read (a cache would be built
+      // twice: AQE materializes each cached reference as its own
+      // concurrent stage). The batch census rides it as an observation:
+      // k is data-derived, so a replay-order deviation surfaces as an
+      // oracle mismatch, and each doc has exactly NumBands band rows.
+      val batchObs = new Observation("stream_neardup_batch")
+      val bands = DedupQueries.bandsOf(
+          DedupQueries.minhashWide(batch, useMd5 = true))
+        .observe(batchObs,
           (min(col("doc_id")) % NearDupBatches).as("k"),
-          count(lit(1)).as("n")).head()
-      }
-      if (kn.getLong(1) == 0L) b.unpersist()
-      else {
-        // skip ONLY the truly-empty batch: a nonempty batch whose ids
-        // are all NULL is an ingest/schema regression — fail loudly
-        // instead of masking it as an empty tail (r19 advice)
-        require(!kn.isNullAt(0),
-          s"stream_neardup: nonempty micro-batch (${kn.getLong(1)} rows) " +
+          count(lit(1)).as("rows"))
+        .localCheckpoint()
+      // NO distinct on the index side: LEFT SEMI ignores build-side
+      // duplicates by construction (at 100 TB the index would be
+      // bucketed on (band, sig) and the probe exchange-free)
+      val flagged = bands.join(
+          s.read.schema(bandsSchema).parquet(indexDir).select("band", "sig"),
+          Seq("band", "sig"), "left_semi")
+        .select("doc_id")
+      // then ONE action: the append of the admitted docs' bands, which
+      // counts them on the way
+      val admittedObs = new Observation("stream_neardup_admitted")
+      bands.join(flagged, Seq("doc_id"), "left_anti")
+        .observe(admittedObs, count(lit(1)).as("rows"))
+        .write.mode("append").parquet(indexDir)
+      graft.functions.releaseCheckpoint(bands)
+      val kn = batchObs.get
+      val rows = kn("rows").asInstanceOf[Long]
+      // skip ONLY the truly-empty batch (AvailableNow may add an empty
+      // tail): a nonempty batch whose ids are all NULL is an
+      // ingest/schema regression — fail loudly instead of masking it
+      if (rows > 0) {
+        require(kn("k") != null,
+          s"stream_neardup: nonempty micro-batch (${rows} band rows) " +
             "has all-NULL doc_id — upstream ingest regression")
-        val (k, nDocs) = (kn.getLong(0), kn.getLong(1))
-        val bands = DedupQueries.bandsOf(
-          DedupQueries.minhashWide(b, useMd5 = true)).cache()
-        val ss = b.sparkSession
-        val haveIndex = new java.io.File(indexDir).exists()
-        // NO distinct on the index side: LEFT SEMI ignores build-side
-        // duplicates by construction, and the dropped distinct was a full
-        // extra shuffle+aggregate of the GROWING index every batch — the
-        // term that would dominate at corpus scale (the semi join itself
-        // shuffles the index once on (band, sig); at 100 TB the index
-        // would be bucketed on that key and the probe exchange-free)
-        val flaggedDocs = (
-          if (!haveIndex) bands.limit(0)
-          else bands.join(
-            ss.read.parquet(indexDir).select("band", "sig"),
-            Seq("band", "sig"), "left_semi"))
-          .select("doc_id").distinct().cache()
-        val flagged = flaggedDocs.count()
-        bands.join(flaggedDocs, Seq("doc_id"), "left_anti")
-          .write.mode("append").parquet(indexDir)
-        results += ((k, nDocs, flagged, nDocs - flagged))
-        flaggedDocs.unpersist(); bands.unpersist(); b.unpersist()
+        val nDocs = rows / DedupQueries.NumBands
+        val admitted =
+          admittedObs.get("rows").asInstanceOf[Long] / DedupQueries.NumBands
+        results += ((kn("k").asInstanceOf[Long], nDocs, nDocs - admitted,
+          admitted))
       }
     }
-    val schema = s.read.parquet(stage.resolve("batch-0000.parquet").toString)
-      .schema
-    val q = s.readStream.schema(schema)
+    val q = s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(stage.toString)
       .writeStream.foreachBatch(sink)
       .trigger(Trigger.AvailableNow())

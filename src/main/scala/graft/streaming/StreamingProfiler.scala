@@ -55,10 +55,11 @@ final class StreamingProfiler(opts: ProfilerOptions = ProfilerOptions()) {
     * (foreachBatch serializes calls), so plain volatile state suffices.
     * An empty batch costs its pass-1 job only (the profiler runs no
     * later pass on zero rows) and leaves the state unchanged. */
-  def sink: (DataFrame, Long) => Unit = (batch, _) => {
-    val rebound = session.fold(batch)(
-      GraftSessions.ofRows(_, batch.queryExecution.logical))
-    val p = Profiler.profile(rebound, opts)
+  def sink: (DataFrame, Long) => Unit =
+    session.fold(profileBatch)(GraftSessions.foreachBatchOn(_)(profileBatch))
+
+  private val profileBatch: (DataFrame, Long) => Unit = (batch, _) => {
+    val p = Profiler.profile(batch, opts)
     if (p.rowCount > 0) state = Some(state.fold(p)(_.merge(p)))
   }
 

@@ -11,8 +11,11 @@ import org.apache.spark.sql.functions._
   * correctness check compares Spark vs DuckDB over the SAME files.
   *
   * Determinism: all randomness is hash-derived from row ids (xxhash64 /
-  * sin), never `rand()` — output is identical across runs and partition
-  * layouts. Each table lands as a single `name.parquet` FILE (DuckDB
+  * sin), never `rand()` — the tables, data pages and key-value metadata
+  * are identical across runs and partition layouts. The files' bytes are
+  * not: parquet-mr lists each column chunk's encodings in the footer in
+  * an order that changes from one JVM run to the next, so compare two
+  * generations by content, not by checksum. Each table lands as a single `name.parquet` FILE (DuckDB
   * reads files, not directories) with 16 MB row groups so Spark can
   * still split scans.
   *

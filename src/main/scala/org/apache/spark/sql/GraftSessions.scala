@@ -13,6 +13,15 @@ object GraftSessions {
   def ofRows(session: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
 
+  /** A `foreachBatch` sink that hands `sink` each micro-batch re-bound
+    * onto `session`. A stream runs on a clone session made anew at every
+    * `start()`, and each session has its own executor class loader,
+    * which keys Spark's codegen cache: work done on the batch as given
+    * recompiles every generated class on every run of the stream. */
+  def foreachBatchOn(session: SparkSession)(sink: (DataFrame, Long) => Unit)
+      : (DataFrame, Long) => Unit =
+    (batch, id) => sink(ofRows(session, batch.queryExecution.logical), id)
+
   /** Run `f` with `session` as the thread's active session, restoring
     * the previous one after (`SparkSession.withActive` is private[sql]). */
   def withActive[T](session: SparkSession)(f: => T): T =

@@ -61,6 +61,41 @@ class GraphSpec extends AnyFunSuite {
     assert(fast == loop, "fast-path labels diverge from the loop's")
   }
 
+  test("union-find on raw edges equals the loop: repeats, both directions, self-loops") {
+    // the fast path reads the edge rows as given (no symmetrizing union,
+    // no distinct): a repeated edge, an edge listed both ways, self-loops
+    // on a component member and on a lone node, and a 2-node component
+    val edges = Seq((1L, 2L), (1L, 2L), (2L, 1L), (2L, 3L), (3L, 3L),
+      (9L, 9L), (10L, 11L), (11L, 10L), (20L, 21L)).toDF("src", "dst")
+    def labelsOf(cap: Long) =
+      GraphProfiler.connectedComponents(edges, smallGraphCap = cap)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val loop = labelsOf(0)
+    assert(loop == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 9L,
+      10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
+    // Long.MaxValue takes no limit at all, a cap just past Int.MaxValue
+    // neither, and Int.MaxValue - 1 is the largest cap a limit can carry
+    for (cap <- Seq(Long.MaxValue, Int.MaxValue.toLong + 1, Int.MaxValue.toLong - 1,
+        edges.count(), edges.count() - 1))
+      assert(labelsOf(cap) == loop, s"cap $cap")
+    def sizesOf(cap: Long) =
+      GraphProfiler.componentSizes(edges, "cluster_id", cap)(())
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(sizesOf(Long.MaxValue) == Seq((1L, 3L), (10L, 2L), (20L, 2L)))
+    assert(sizesOf(0) == sizesOf(Long.MaxValue))
+  }
+
+  test("componentSizes frees its input once the edges are read") {
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    for (cap <- Seq(0L, Long.MaxValue)) {
+      var released = 0
+      val sizes = GraphProfiler.componentSizes(edges, "id", cap)(released += 1)
+      assert(released == 1, s"cap $cap")
+      assert(sizes.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+        Seq((1L, 3L)))
+    }
+  }
+
   test("empty edge set yields empty components without error") {
     val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(GraphProfiler.connectedComponents(edges).count() == 0)
