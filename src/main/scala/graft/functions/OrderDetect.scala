@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
   GenericInternalRow, InterpretedUnsafeProjection, RowOrdering, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, TypeUtils}
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,8 +34,8 @@ object OrderDetect {
       order: String, nIncr: Long, nDecr: Long, nEq: Long)
 
   /** One key's decoded [[OrderSegmentsAggregate]] result: a result per
-    * value column, and the rows each input partition held. */
-  final case class Segments(columns: Seq[OrderResult], partitionRows: Map[Int, Long])
+    * value column. */
+  final case class Segments(columns: Seq[OrderResult])
 
   private def classify(nIncr: Long, nDecr: Long, nEq: Long): String =
     if (nIncr == 0 && nDecr == 0) "constant"
@@ -53,11 +53,10 @@ object OrderDetect {
   def decode(v: Any): Map[Long, Segments] =
     v.asInstanceOf[scala.collection.Seq[Row]].map { r =>
       r.getLong(0) -> Segments(
-        r.getSeq[Row](2).map { c =>
+        r.getSeq[Row](1).map { c =>
           OrderResult(classify(c.getLong(0), c.getLong(1), c.getLong(2)),
             c.getLong(0), c.getLong(1), c.getLong(2))
-        },
-        r.getMap[Int, Long](1).toMap)
+        })
     }.toMap
 
   /** Detect order of `valCols` when rows are ordered by `keyCol`.
@@ -106,8 +105,8 @@ object OrderDetect {
   * its partition (`TaskContext.getPartitionId`, the value
   * `spark_partition_id()` reads): per column the non-null count, the
   * first and last non-null values and the increase / decrease / equal
-  * counts between consecutive non-null values, plus the segment's row
-  * count. Merge is the union of the segments. `eval` sorts each key's
+  * counts between consecutive non-null values. Merge is the union of
+  * the segments. `eval` sorts each key's
   * segments by partition and adds one comparison per seam between
   * consecutive non-empty segments.
   *
@@ -123,8 +122,8 @@ object OrderDetect {
   * bytes, and every other orderable type — booleans, dates, timestamps,
   * intervals — by its Catalyst value's natural ordering.
   *
-  * The result is `array<struct<key, partition_rows: map<int, bigint>,
-  * columns: array<struct<n_incr, n_decr, n_eq>>>>`, sorted by key. */
+  * The result is `array<struct<key, columns: array<struct<n_incr,
+  * n_decr, n_eq>>>>`, sorted by key. */
 case class OrderSegmentsAggregate(
     children: Seq[Expression],
     mutableAggBufferOffset: Int = 0,
@@ -160,7 +159,6 @@ case class OrderSegmentsAggregate(
   private[graft] def updateIn(b: Buf, input: InternalRow, partition: Int): Buf = {
     val key = children.head.eval(input).asInstanceOf[Long]
     val s = b.segment(partition, key, k)
-    s.rows += 1
     var c = 0
     while (c < k) {
       val v = valueExprs(c).eval(input)
@@ -204,17 +202,14 @@ case class OrderSegmentsAggregate(
         }
         InternalRow(incr, decr, eq)
       }
-      InternalRow(key,
-        ArrayBasedMapData(ordered.map(_.partition).toArray[Any],
-          ordered.map(_.rows).toArray[Any]),
-        new GenericArrayData(cols.toArray[Any]))
+      InternalRow(key, new GenericArrayData(cols.toArray[Any]))
     }.toArray[Any])
   }
 
-  /** A segment's fields: partition, key, rows, then per column n, incr,
+  /** A segment's fields: partition, key, then per column n, incr,
     * decr, eq, first and last. */
   @transient private lazy val segTypes: Seq[DataType] =
-    Seq(IntegerType, LongType, LongType) ++ values.flatMap(v =>
+    Seq(IntegerType, LongType) ++ values.flatMap(v =>
       Seq(LongType, LongType, LongType, LongType, v.dataType, v.dataType))
   @transient private lazy val toUnsafe = InterpretedUnsafeProjection.createProjection(
     segTypes.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) })
@@ -227,9 +222,9 @@ case class OrderSegmentsAggregate(
     data.writeInt(b.segments.size)
     b.segments.foreach { s =>
       val fields = new Array[Any](segTypes.size)
-      fields(0) = s.partition; fields(1) = s.key; fields(2) = s.rows
+      fields(0) = s.partition; fields(1) = s.key
       for (c <- 0 until k) {
-        val o = 3 + 6 * c
+        val o = 2 + 6 * c
         fields(o) = s.n(c); fields(o + 1) = s.incr(c); fields(o + 2) = s.decr(c)
         fields(o + 3) = s.eq(c); fields(o + 4) = s.first(c); fields(o + 5) = s.last(c)
       }
@@ -250,9 +245,8 @@ case class OrderSegmentsAggregate(
       val row = new UnsafeRow(segTypes.size)
       row.pointTo(seg, seg.length)
       val s = new Segment(row.getInt(0), row.getLong(1), k)
-      s.rows = row.getLong(2)
       for (c <- 0 until k) {
-        val o = 3 + 6 * c
+        val o = 2 + 6 * c
         s.n(c) = row.getLong(o); s.incr(c) = row.getLong(o + 1)
         s.decr(c) = row.getLong(o + 2); s.eq(c) = row.getLong(o + 3)
         s.first(c) = row.get(o + 4, segTypes(o + 4))
@@ -275,7 +269,6 @@ object OrderSegmentsAggregate {
 
   /** One (partition, key) forward-scan summary over `k` value columns. */
   final class Segment(val partition: Int, val key: Long, k: Int) {
-    var rows = 0L
     val n = new Array[Long](k)
     val incr = new Array[Long](k)
     val decr = new Array[Long](k)
@@ -313,8 +306,6 @@ object OrderSegmentsAggregate {
     StructField("n_eq", LongType, nullable = false)))
   val ResultType: DataType = ArrayType(StructType(Seq(
     StructField("key", LongType, nullable = false),
-    StructField("partition_rows", MapType(IntegerType, LongType, valueContainsNull = false),
-      nullable = false),
     StructField("columns", ArrayType(ColumnType, containsNull = false), nullable = false))),
     containsNull = false)
 

@@ -133,17 +133,25 @@ object DedupQueries extends QueryModule {
   }
 
   /** MinHash-estimated Jaccard ≥ 0.5 verification of a candidate edge
-    * set (columns doc_a, doc_b) against the signature table. */
+    * set (distinct doc_a < doc_b pairs) against the signature table. Each
+    * edge meets the table at both ends in ONE join, so the table is
+    * broadcast (or shuffled) once, not once per side; the two ends then
+    * fold per edge, where the position p agrees iff min(mh_p) = max(mh_p)
+    * over them. A signature is all null or all set, and an edge with a
+    * null end agrees nowhere, as the per-side comparison had it. The fold
+    * keys on the edge, which the candidates' distinct already partitions
+    * by, so it plans no exchange of its own. */
   private def minhashVerify(wide: DataFrame, cands: DataFrame): DataFrame = {
-    val a = wide.toDF(("doc_id" +: (0 until NumPerm).map(p => s"a$p")): _*)
-    val b = wide.toDF(("doc_id" +: (0 until NumPerm).map(p => s"b$p")): _*)
-    val estExpr = (0 until NumPerm)
-      .map(p => when(col(s"a$p") === col(s"b$p"), 1.0).otherwise(0.0))
-      .reduce(_ + _) / NumPerm.toDouble
+    val agree = (0 until NumPerm)
+      .map(p => when(min(s"mh$p") === max(s"mh$p"), 1.0).otherwise(0.0))
+      .reduce(_ + _)
+    val estExpr = when(count("mh0") === 2, agree).otherwise(0.0) / NumPerm.toDouble
     cands
-      .join(a, cands("doc_a") === a("doc_id")).drop("doc_id")
-      .join(b, cands("doc_b") === b("doc_id")).drop("doc_id")
-      .select(col("doc_a"), col("doc_b"), round(estExpr, 4).as("est_jaccard"))
+      .select(col("doc_a"), col("doc_b"),
+        explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+      .join(wide, "doc_id")
+      .groupBy("doc_a", "doc_b")
+      .agg(round(estExpr, 4).as("est_jaccard"))
       .filter(col("est_jaccard") >= 0.5)
   }
 
@@ -160,9 +168,9 @@ object DedupQueries extends QueryModule {
   private def dedupMinhash(s: SparkSession, dir: String): DataFrame = {
     val wide = graft.functions.cacheOnce(minhashWide(corpus(s, dir), useMd5 = true))
     // materialize eagerly: `wide` (the expensive shingle+md5 pass) feeds
-    // THREE subtrees of the pair plan (bands + both est-join sides);
-    // without this the first job may compute it up to 3x before the
-    // cache is populated
+    // two subtrees of the pair plan (bands + the verify join); without
+    // this the first job may compute it twice before the cache is
+    // populated
     wide.count()
     minhashPairs(wide).orderBy("doc_a", "doc_b")
   }
@@ -347,7 +355,7 @@ object DedupQueries extends QueryModule {
 
   private def minhashClustersImpl(s: SparkSession, dir: String,
       useMd5: Boolean): DataFrame = {
-    // cached: bands and both verify sides read it. Its first reader is
+    // cached: bands and the verify join read it. Its first reader is
     // the bucket census, a single action that materializes the cache
     // before the candidate plan fans out
     val wide = graft.functions.cacheOnce(minhashWide(corpus(s, dir), useMd5))

@@ -410,6 +410,11 @@ final case class Profile(
     rowIsNull: Long,
     columns: Seq[ColumnProfile],
     correlationState: Map[(String, String), PairMoments],
+    /** Wall milliseconds per pass: `aggregate` (pass 1), `categories`
+      * (the catMelt fallback), `order` (the split order pass) and
+      * `labeler` (the head-sample rules, on the driver); `histograms`,
+      * `vocab` and `datetime_formats` ride pass 1 and read 0. Summed on
+      * merge. */
     timesMs: Map[String, Long],
     /** Serialized DataSketches HLL over the row fingerprints. When both
       * merge sides carry one, distinct-row merge is a true sketch UNION

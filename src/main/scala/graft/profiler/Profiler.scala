@@ -20,9 +20,10 @@ final case class ProfilerOptions(
     /** Values per column sent to the entity labeler — the reference caps
       * the labeler sample at 1000 (data_labeler_column_profile.py:34).
       * The labeler reads the first this-many rows of the profile's one
-      * head sample (`df.head(n)`, collected to the driver with every
-      * column), so this also bounds that sample's size when labels
-      * are on. */
+      * head sample (the rows `df.head(n)` returns, with every column), so
+      * this also sizes that sample when labels are on and a string column
+      * exists: pass 1 keeps up to this many rows of each of its first 16
+      * input partitions. */
     labelerSampleSize: Int = 1000,
     /** Distinct-char vocabulary per string column
       * (text_column_profile.py:134-157). */
@@ -95,13 +96,14 @@ final case class ProfilerOptions(
     /** Head-sample exemplars (5 distinct values per column from the
       * first 100 rows, profile_builder.py:665-668). They read the
       * profile's one head sample, which this option sizes to at least
-      * 100 rows; under [[Profiler.profileSplit]] that sample is taken
-      * PER GROUP (a `filter(key === k)` head job that reads until the
-      * group's rows surface). With labels off and no datetime-like
-      * string column, exemplars are the only reader of the sample, so
-      * turning them off saves that job per call (per group when
-      * split): composite consumers whose emitted output never includes
-      * exemplars (the gate/diff/merge oracle queries) do. */
+      * 100 rows. On the whole frame the sample rides pass 1; under
+      * [[Profiler.profileSplit]] it is taken PER GROUP (a
+      * `filter(key === k)` head job that reads until the group's rows
+      * surface). With labels off and no datetime-like string column,
+      * exemplars are the only reader of a group's sample, so turning
+      * them off saves that job per group: composite consumers whose
+      * emitted output never includes exemplars (the gate/diff/merge
+      * oracle queries) do. */
     computeExemplars: Boolean = true) {
 
   /** DataSketches lgConfigK from the rsd contract rsd ≈ 1.04/√m. */
@@ -124,15 +126,16 @@ final case class ProfilerOptions(
   *            aggregate — counts, moments, extremes, lengths, type
   *            ratios — plus the NDV, quantile, histogram, CMS and
   *            Misra-Gries sketches, and for a string column its exact
-  *            category counts up to a ceiling and its code-point
-  *            vocabulary), with the table-level row stats and one
+  *            category counts up to a ceiling, its code-point
+  *            vocabulary and its parsed datetime extremes under every
+  *            candidate format), with the table-level row stats and one
   *            co-moment aggregate for correlation. On the whole frame it
-  *            also carries the natural-order segments: per input
-  *            partition, each column's forward-scan order summary and
-  *            the partition's row count. All are typed imperative
-  *            aggregates, so the pass plans as one ObjectHashAggregate
-  *            scan with map-side partial aggregation and no generated
-  *            per-row code.
+  *            also carries the natural-order segments (per input
+  *            partition, each column's forward-scan order summary) and
+  *            the head sample (the first rows of the leading input
+  *            partitions). All are typed imperative aggregates, so the
+  *            pass plans as one ObjectHashAggregate scan with map-side
+  *            partial aggregation and no generated per-row code.
   *   pass 2 — category counts by melt + groupBy, only for a column whose
   *            NDV estimate qualifies it but whose pass-1 counter passed
   *            its ceiling (normally never).
@@ -141,21 +144,25 @@ final case class ProfilerOptions(
   *            datetime-format discovery (first 50) and exemplars (first
   *            100); the label and format rules run in one projection
   *            over the sample as a LocalRelation, folded on the driver —
-  *            no job, no codegen. On the whole frame the order segments'
-  *            row counts name the leading partitions holding those rows,
-  *            so the sample is one job over exactly them.
+  *            no job, no codegen. On the whole frame pass 1 holds the
+  *            sample (a `head` job only when the first 16 input
+  *            partitions hold fewer rows than it and the frame more);
+  *            a split group takes it with a `head` job.
   *   pass 6 — under a split key only: natural-order detection, the
   *            order segments keyed by (partition, key) in one ungrouped
   *            aggregation.
   *   pass 7 — parsed min/max/distinct days of string columns under the
-  *            formats pass 4 discovered, one aggregation per group.
-  * Pass 1 runs first; passes 2, 6 and the per-group 4 + 7 then run as
-  * concurrent actions, or not at all when pass 1 counted no rows. A
-  * whole-frame profile is pass 1, the head sample and, with a string
-  * datetime column, pass 7: at most 3 jobs.
+  *            formats pass 4 discovered, read on the driver from pass
+  *            1's datetime candidates — no job.
+  * Pass 1 runs first; passes 2, 6 and the split groups' head samples
+  * then run as concurrent actions, or not at all when pass 1 counted no
+  * rows. A whole-frame profile is pass 1 alone: 1 job (the catMelt
+  * fallback or the head-sample fallback add one).
   * Nothing unbounded is collected: category maps are capped, histograms
-  * are fixed-width, quantiles use percentile_approx (GK sketch), and the
-  * head sample is at most max(labelerSampleSize, 100) rows.
+  * are fixed-width, quantiles use percentile_approx (GK sketch), the
+  * head sample is at most max(labelerSampleSize, 100) rows from each of
+  * 16 partitions, and the datetime candidates hold one entry per set of
+  * formats a value parses under.
   */
 object Profiler {
 
@@ -291,7 +298,7 @@ object Profiler {
     * the same expressions run grouped, so every group's profile comes
     * from ONE scan. */
   private def pass1Cols(fields: Seq[StructField], opts: ProfilerOptions,
-      statPlugins: Seq[graft.plugins.ColumnStatPlugin]): Seq[Column] = {
+      statPlugins: Seq[graft.plugins.ColumnStatPlugin], timeZoneId: String): Seq[Column] = {
     val perCol: Seq[Column] = fields.flatMap { f =>
       val c = col(f.name); val nm = f.name
       // the named fields of a stats struct, each as `<column>__<field>`
@@ -323,6 +330,9 @@ object Profiler {
               Seq(CodePointVocabAggregate(c, opts.vocabCharsPerValue, opts.vocabCap)
                 .as(s"${nm}__vocab"))
             else Seq.empty) ++
+            // the parsed extremes under every candidate format, read after
+            // pass 1 for the formats the head sample discovers
+            Seq(DatetimeCandidatesAggregate(c, timeZoneId, opts.ndvLgK).as(s"${nm}__dtc")) ++
             (if (opts.cmsHeavyHitters && opts.computeCategories)
               // a few-KB sketch per string column plus a bounded
               // Misra-Gries candidate map, fused into the same scan —
@@ -387,11 +397,11 @@ object Profiler {
     * each run once under `groupBy(splitKey)` — identical aggregate
     * expressions, same map-side partial aggregation, k result rows
     * instead of one — so the scan count is independent of k. The head
-    * sample (labels, datetime discovery, exemplars) and the parsed
-    * datetime extremes stay per-group, preserving profile()'s
-    * head-sample semantics exactly, and natural-order detection runs as
-    * ONE ungrouped forward pass keyed by (partition, key) — all equal
-    * their per-slice profile() results (ProfileSplitSpec).
+    * sample (labels, datetime discovery, exemplars) stays per-group,
+    * preserving profile()'s head-sample semantics exactly, the parsed
+    * datetime extremes ride pass 1 grouped, and natural-order detection
+    * runs as ONE ungrouped forward pass keyed by (partition, key) — all
+    * equal their per-slice profile() results (ProfileSplitSpec).
     *
     * Returns one Profile per key VALUE (cast to long); a key absent
     * from the result had zero rows, and null keys are excluded.
@@ -444,6 +454,8 @@ object Profiler {
     val statPlugins = activePlugins
     val numericCols = fields.filter(f => isNumeric(f.dataType)).map(_.name)
     val stringCols = fields.filter(_.dataType == StringType).map(_.name)
+    val labelCols = if (opts.computeLabels) stringCols else Nil
+    val timeZoneId = df.sparkSession.conf.get("spark.sql.session.timeZone")
     val grouping = key.map(_.as("__split")).toSeq
     def keyOf(r: Row): Long = if (key.isDefined) r.getLong(0) else 0L
 
@@ -456,16 +468,24 @@ object Profiler {
     val (corrPairs, corrAggs) = corrPairsAndAggs(numericCols, opts)
     // natural-order detection covers the columns with an ordered type;
     // on the whole frame its segments ride pass 1 (which has no grouping,
-    // so each map task folds its partition's rows in scan order) and
-    // count each partition's rows for the head sample
+    // so each map task folds its partition's rows in scan order), and so
+    // does the head sample
     val orderCols =
       if (opts.computeOrder) fields.filter(f => OrderDetect.orderable(f.dataType))
         .map(_.name)
       else Nil
-    val orderAgg =
+    // the head-sample size: its readers' largest prefix, with 50 rows for
+    // format discovery whenever a string column could need it
+    val headN = Seq(
+      if (labelCols.nonEmpty) opts.labelerSampleSize else 0,
+      if (stringCols.nonEmpty) DtDiscoveryRows else 0,
+      if (opts.computeExemplars) ExemplarRows else 0).max
+    val wholeAggs =
       if (key.isDefined) Nil
-      else Seq(OrderSegmentsAggregate(lit(0L), orderCols.map(col)).as("__order"))
-    val aggs = pass1Cols(fields, opts, statPlugins) ++ corrAggs ++ orderAgg
+      else Seq(OrderSegmentsAggregate(lit(0L), orderCols.map(col)).as("__order")) ++
+        (if (headN > 0) Seq(HeadRowsAggregate(fields.map(f => col(f.name)), headN)
+          .as("__head")) else Nil)
+    val aggs = pass1Cols(fields, opts, statPlugins, timeZoneId) ++ corrAggs ++ wholeAggs
     val valsByKey: Map[Long, Map[String, Any]] =
       df.groupBy(grouping: _*).agg(aggs.head, aggs.tail: _*).collect()
         .map { r =>
@@ -495,8 +515,8 @@ object Profiler {
       else OrderDetect.decode(valsByKey(0L)("__order")).get(0L)
     val t1 = System.currentTimeMillis()
 
-    // ---- passes 2, 6 and the per-group 4 + 7: independent actions,
-    // submitted concurrently, each timing itself ----
+    // ---- passes 2, 6 and the split groups' head samples: independent
+    // actions, submitted concurrently, each timing itself ----
     def timed[T](f: => T): Future[(T, Long)] = Future {
       val start = System.currentTimeMillis()
       val r = f
@@ -544,25 +564,19 @@ object Profiler {
       case _ => Future.successful((wholeOrder.map(0L -> _).toMap, 0L))
     }
 
-    // passes 4 + 7 per group: the head sample (timed as "labeler") and
-    // the parsed extremes under its discovered formats (timed as
-    // "datetime_formats")
-    val labelCols = if (opts.computeLabels) stringCols else Nil
-    val tailFuts = keys.map { k =>
+    // pass 4 per group: the head sample, from pass 1 on the whole frame
+    // and one `head` job per group under a split key
+    lazy val wholeHead = headFrom(df, headN, valsByKey(0L)("__head"), rowsOf(0L))
+    val headFuts = keys.map { k =>
+      val sample: Int => Array[Row] = key match {
+        case None => _ => wholeHead
+        case Some(kc) => n =>
+          df.filter(kc === k).select(fields.map(f => col(f.name)): _*).head(n)
+      }
+      val dtFormatCols = stringCols.filter(c => gdOf(k, s"${c}__dtr") > 0.0)
       k -> Future {
-        // no reader of the head sample → no job, and `slice` stays an
-        // unbuilt lazy
-        lazy val slice = key.fold(df)(kc =>
-          df.filter(kc === k).select(fields.map(f => col(f.name)): _*))
-        val dtFormatCols = stringCols.filter(c => gdOf(k, s"${c}__dtr") > 0.0)
-        val tHead = System.currentTimeMillis()
-        val head =
-          if (empty) HeadPasses(Map.empty, Map.empty, Map.empty)
-          else headPasses(slice, wholeOrder.map(_.partitionRows), fields,
-            labelCols, dtFormatCols, opts)
-        val tDt = System.currentTimeMillis()
-        val strDtStats = datetimeExtremes(slice, head.dtFormats, opts)
-        (head, strDtStats, tDt - tHead, System.currentTimeMillis() - tDt)
+        if (empty) (HeadPasses(Map.empty, Map.empty, Map.empty), 0L)
+        else headPasses(df.sparkSession, sample, fields, labelCols, dtFormatCols, opts)
       }
     }.toMap
 
@@ -571,13 +585,13 @@ object Profiler {
 
     // windows shared by all groups are DIVIDED across them, so merging
     // the k split profiles sums back to the actual wall clock instead of
-    // k× it; the per-group tail passes are attributed whole. Categories,
-    // vocab and (on the whole frame) order ride pass 1, so their own
-    // keys hold only the catMelt fallback and the split order pass.
+    // k× it; the per-group head rules are attributed whole. Categories,
+    // vocab, the parsed datetime extremes and (on the whole frame) order
+    // ride pass 1, so their own keys hold only the catMelt fallback and
+    // the split order pass.
     val shared = keys.size.max(1)
     keys.map { k =>
-      val (head, strDtStats, labelMs, dtMs) =
-        Await.result(tailFuts(k), Duration.Inf)
+      val (head, labelMs) = Await.result(headFuts(k), Duration.Inf)
       val histMaps =
         if (opts.computeHistograms) histFromPass1(numericCols, valsByKey(k))
         else Map.empty[String, Histogram]
@@ -593,13 +607,21 @@ object Profiler {
         case Some(s) => orderCols.zip(s.columns.map(_.order)).toMap
         case None => orderCols.map(_ -> OrderDetect.EmptyVerdict).toMap
       }
+      // pass 7: the extremes parsed under each column's discovered formats
+      val strDtStats = head.dtFormats.flatMap { case (c, fmts) =>
+        DatetimeCandidatesAggregate.resolve(
+          valsByKey(k)(s"${c}__dtc").asInstanceOf[scala.collection.Seq[Row]],
+          fmts.map(f => DatetimeFormats.formats.indexWhere(_.java == f)),
+          timeZoneId, opts.ndvLgK)
+          .map { case (mn, mx, days) => c -> DatetimeStats(mn, mx, days) }
+      }
       k -> assembleProfile(fields, opts, statPlugins, valsByKey(k), corrPairs,
         catMaps, histMaps, head.labelVotes, vocabSets, orders,
         head.dtFormats, strDtStats, head.exemplars,
         Map("aggregate" -> (t1 - t0) / shared,
           "categories" -> catMs / shared, "histograms" -> 0L,
           "labeler" -> labelMs, "vocab" -> 0L,
-          "order" -> orderMs / shared, "datetime_formats" -> dtMs))
+          "order" -> orderMs / shared, "datetime_formats" -> 0L))
     }.toMap
   }
 
@@ -819,30 +841,38 @@ object Profiler {
   /** Rows the exemplars are drawn from (profile_builder.py:665-668). */
   private val ExemplarRows = 100
 
+  /** The rows `df.head(n)` returns, from the collected result `got` of
+    * a [[HeadRowsAggregate]] of `n` rows over all of `df`'s columns
+    * (`total` rows): `got` when it holds them, else `df.head(n)` — the
+    * frame's first `n` rows lie past the partitions that keep rows. */
+  private[graft] def headFrom(df: DataFrame, n: Int, got: Any, total: Long): Array[Row] = {
+    val rows = got.asInstanceOf[scala.collection.Seq[Row]].toArray
+    if (HeadRowsAggregate.covers(rows.length, n, total)) rows else df.head(n)
+  }
+
   /** Pass 4: ONE head sample read by label votes (its first
     * labelerSampleSize rows, for `labelCols`), datetime-format discovery
     * (its first 50 rows, for `dtFormatCols`) and exemplars (its first
-    * 100 rows, every field). `df.head(n)` plans as a CollectLimit, which
-    * generates no limit counter: a LocalLimit/GlobalLimit names its
-    * counter from a JVM-global id, so any stage holding one is new
-    * source — a codegen-cache miss — on every call. With `partitionRows`
-    * (the whole frame's rows per input partition) [[headOf]] takes the
-    * same rows in one job. The label and format
-    * rules ([[graft.labelers.RegexLabeler.labelOf]],
+    * 100 rows, every field). `sample(n)` returns at least the rows
+    * `df.head(n)` returns: on the whole frame pass 1's
+    * [[HeadRowsAggregate]] holds them, and a split group takes them with
+    * `head`. The label and format rules
+    * ([[graft.labelers.RegexLabeler.labelOf]],
     * [[graft.functions.DatetimeFormats.matches]]) run in one select over
     * the sample as a LocalRelation, each gated to its own row prefix;
     * the optimizer folds that projection on the driver, so no job runs.
-    * No reader → no sample, and `df` is never evaluated. */
-  private def headPasses(df: => DataFrame, partitionRows: Option[Map[Int, Long]],
-      fields: Seq[StructField], labelCols: Seq[String], dtFormatCols: Seq[String],
-      opts: ProfilerOptions): HeadPasses = {
+    * No reader → no sample, and `sample` is never called. Returns the
+    * passes' results and the milliseconds the rules took. */
+  private def headPasses(spark: org.apache.spark.sql.SparkSession,
+      sample: Int => Array[Row], fields: Seq[StructField], labelCols: Seq[String],
+      dtFormatCols: Seq[String], opts: ProfilerOptions): (HeadPasses, Long) = {
     val labelN = if (labelCols.nonEmpty) opts.labelerSampleSize else 0
     val dtN = if (dtFormatCols.nonEmpty) DtDiscoveryRows else 0
     val exN = if (opts.computeExemplars) ExemplarRows else 0
     val n = Seq(labelN, dtN, exN).max
-    if (n == 0) return HeadPasses(Map.empty, Map.empty, Map.empty)
-    val src = df
-    val rows = partitionRows.fold(src.head(n))(headOf(src, n, _))
+    if (n == 0) return (HeadPasses(Map.empty, Map.empty, Map.empty), 0L)
+    val rows = sample(n).take(n)
+    val t0 = System.currentTimeMillis()
 
     val exemplars =
       if (exN == 0) Map.empty[String, Seq[String]]
@@ -860,7 +890,7 @@ object Profiler {
     val fieldIdx = fields.map(_.name).zipWithIndex.toMap
     val pos = ruleCols.zipWithIndex.toMap
     def cell(c: String): Column = col(s"c${pos(c)}")
-    val local = src.sparkSession.createDataFrame(
+    val local = spark.createDataFrame(
       rows.toSeq.zipWithIndex.map { case (r, i) =>
         Row.fromSeq(ruleCols.map(c => r.get(fieldIdx(c))) :+ i)
       }.asJava,
@@ -889,79 +919,7 @@ object Profiler {
         out.exists(r => !r.isNullAt(base + i) && r.getBoolean(base + i)))
         .map(formats(_).java)
     }.toMap
-    HeadPasses(labelVotes, dtFormats, exemplars)
-  }
-
-  /** The rows `df.head(n)` returns, in one job when `partitionRows` (the
-    * rows each input partition of `df` holds, from pass 1's order
-    * segments) shows that they span several partitions: `head` reads
-    * partition 0 first and then a scaled-up batch of further partitions,
-    * a second job. Here one job reads just the leading partitions that
-    * hold the first n rows, each only up to its share. If a partition
-    * yields a different count than pass 1 saw (the plan partitioned
-    * differently), the sample falls back to `df.head(n)`. */
-  private def headOf(df: DataFrame, n: Int, partitionRows: Map[Int, Long]): Array[Row] = {
-    // (partition, rows it contributes), in partition order
-    val quotaB = Vector.newBuilder[(Int, Int)]
-    val lastPart = partitionRows.keys.maxOption.getOrElse(-1)
-    var taken = 0L
-    var p = 0
-    while (taken < n && p <= lastPart) {
-      val r = math.min(partitionRows.getOrElse(p, 0L), n - taken)
-      quotaB += p -> r.toInt
-      taken += r
-      p += 1
-    }
-    val quota = quotaB.result()
-    if (quota.size <= 1) return df.head(n) // head's first job reads just partition 0
-    val spark = df.sparkSession
-    val qe = GraftSessions.ofRows(spark, df.queryExecution.logical).queryExecution
-    val want = quota.toMap
-    val last = quota.last._1
-    val parts = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
-        Some("profile head sample")) {
-      spark.sparkContext.runJob(qe.toRdd,
-        (ctx: org.apache.spark.TaskContext,
-            it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-          val p = ctx.partitionId()
-          // one row past a leading partition's share checks its count
-          it.take(want(p) + (if (p == last) 0 else 1)).map(_.copy()).toArray
-        },
-        quota.map(_._1))
-    }
-    if (parts.zip(quota).exists { case (rs, (_, r)) => rs.length != r })
-      return df.head(n)
-    val fromRow = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(df.schema)
-      .resolveAndBind().createDeserializer()
-    parts.flatten.map(fromRow)
-  }
-
-  /** Pass 7: parsed min/max and distinct days of each string
-    * column with at least one discovered format, parsing under ONLY its
-    * discovered formats (no 16-way coalesce on the full data). */
-  private def datetimeExtremes(df: DataFrame,
-      dtFormats: Map[String, Seq[String]],
-      opts: ProfilerOptions): Map[String, DatetimeStats] = {
-    val parseCols = dtFormats.filter(_._2.nonEmpty)
-    if (parseCols.isEmpty) Map.empty
-    else {
-      val aggs = parseCols.toSeq.flatMap { case (c, fmts) =>
-        val parsed = coalesce(fmts.map(fm =>
-          try_to_timestamp(col(c), lit(fm))): _*)
-        Seq(
-          date_format(min(parsed), "yyyy-MM-dd HH:mm:ss")
-            .as(s"${c}__smints"),
-          date_format(max(parsed), "yyyy-MM-dd HH:mm:ss")
-            .as(s"${c}__smaxts"),
-          distinctDays(parsed, opts).as(s"${c}__sndays"))
-      }
-      val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      parseCols.keySet.flatMap { c =>
-        Option(r.getAs[String](s"${c}__smints")).map(mn =>
-          c -> DatetimeStats(mn, r.getAs[String](s"${c}__smaxts"),
-            r.getAs[Long](s"${c}__sndays")))
-      }.toMap
-    }
+    (HeadPasses(labelVotes, dtFormats, exemplars), System.currentTimeMillis() - t0)
   }
 
   private def isNumeric(t: DataType): Boolean = t match {

@@ -38,12 +38,26 @@ object GraftData {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** `spark.read.parquet(path)`. A single file is read with the schema
+    * from its footer ([[org.apache.spark.sql.GraftSessions.parquetFileSchema]],
+    * equal to what inference yields), which spares the reader's one-task
+    * schema-inference job; a directory is left to inference. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    // a glob or a missing path is left to the reader and its errors
+    val isFile = scala.util.Try(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).isFile)
+      .getOrElse(false)
+    (if (isFile) org.apache.spark.sql.GraftSessions.parquetFileSchema(spark, p) else None)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
   def load(spark: SparkSession, rawPath: String,
       json: JsonOptions = JsonOptions()): Loaded = {
     val path = Sniffer.resolveUrl(rawPath)
     val s = Sniffer.sniff(spark, path)
     val df = s.format match {
-      case "parquet" => spark.read.parquet(path)
+      case "parquet" => parquet(spark, path)
       // the spark-avro datasource module is absent from this build —
       // AvroSource decodes via the avro-mapred input format instead
       case "avro" => AvroSource.read(spark, path)

@@ -41,4 +41,36 @@ object GraftSessions {
     * private[spark]). */
   def drainListenerBus(session: SparkSession): Unit =
     session.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The schema `spark.read.parquet(file)` infers for one parquet file,
+    * read from its footer on the driver: Spark's own conversion (the
+    * Spark schema stored in the key-value metadata, else the converted
+    * parquet schema) under the same confs, without the one-task job the
+    * reader runs to read footers. None when the footer cannot be read
+    * and corrupt files are ignored. */
+  def parquetFileSchema(session: SparkSession,
+      file: org.apache.hadoop.fs.Path): Option[types.StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val state = session.asInstanceOf[classic.SparkSession].sessionState
+    val conf = state.conf
+    val hadoopConf = state.newHadoopConf()
+    val status = file.getFileSystem(hadoopConf).getFileStatus(file)
+    // the converter schema inference builds (ParquetFileFormat.mergeSchemasInParallel)
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    val footer =
+      try Some(ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(status, hadoopConf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS))
+      catch { case e: java.io.IOException if conf.ignoreCorruptFiles => None }
+    footer.map(f => ParquetFileFormat.readSchemaFromFooter(new Footer(status.getPath, f),
+      converter))
+  }
 }

@@ -104,6 +104,39 @@ class HeadSampleSpec extends AnyFunSuite {
     assertMatchesProbes(noLabels, df, None, "labels off")
   }
 
+  /** The fixture's rows over `parts` partitions, with partition 0 empty
+    * when `emptyFirst`. */
+  private def spread(parts: Int, emptyFirst: Boolean): DataFrame = {
+    val df = fixture.drop("g")
+    val rows = df.collect().toSeq
+    // contiguous slices in order, so partition order is row order
+    val filled = parts - (if (emptyFirst) 1 else 0)
+    val slices = (if (emptyFirst) Seq(Seq.empty[Row]) else Nil) ++
+      (0 until filled).map(i => rows.slice(i * rows.size / filled, (i + 1) * rows.size / filled))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(slices, slices.size).flatMap(identity), df.schema)
+  }
+
+  test("pass-1 head rows equal df.head(n) across partition layouts") {
+    import graft.functions.HeadRowsAggregate
+    // an empty leading partition; partitions shorter than n; more
+    // partitions than keep rows (the sample falls back to `head`)
+    val layouts = Seq((4, true, false), (8, false, false), (100, false, true))
+    for ((parts, emptyFirst, fallback) <- layouts; n <- Seq(1000, 60)) {
+      val df = spread(parts, emptyFirst)
+      val what = s"$parts partitions, empty first = $emptyFirst, n = $n"
+      assert(df.rdd.getNumPartitions == parts, what)
+      val r = df.agg(HeadRowsAggregate(df.columns.toSeq.map(col), n),
+        count(lit(1))).head()
+      val got = r.getSeq[Row](0)
+      assert(!HeadRowsAggregate.covers(got.size, n, r.getLong(1)) == (fallback && n == 1000),
+        what)
+      assert(Profiler.headFrom(df, n, got, r.getLong(1)).toSeq == df.head(n).toSeq, what)
+      val opts = ProfilerOptions(labelerSampleSize = n)
+      assertMatchesProbes(Profiler.profile(df, opts), df, Some(opts), what)
+    }
+  }
+
   test("profileSplit: per-group head samples equal the per-group probes") {
     val df = fixture
     // labels on at labelerSampleSize 1000 (more than a group's 750 rows)

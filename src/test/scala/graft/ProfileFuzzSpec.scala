@@ -11,13 +11,14 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{CategoryCountAggregate, CodePointVocabAggregate,
-  OrderSegmentsAggregate}
+  DatetimeCandidatesAggregate, HeadRowsAggregate, OrderSegmentsAggregate}
 import graft.profiler.{ColumnProfile, Profile, Profiler, ProfilerOptions}
 
-/** Seeded metamorphic properties of the profiler's category, vocab and
-  * order state over generated frames: nulls, "", non-BMP and U+E000..
-  * strings, constant and all-null columns, 1–4 input partitions and an
-  * uneven split key. Order-free state must not change under
+/** Seeded metamorphic properties of the profiler's category, vocab,
+  * order and string-datetime state over generated frames: nulls, "",
+  * non-BMP and U+E000.. strings, datetime strings of several formats,
+  * constant and all-null columns, 1–4 input partitions and an uneven
+  * split key. Order-free state must not change under
   * `repartition`; each split group's profile must equal the filtered
   * whole-frame profile; every buffer must survive serialize →
   * deserialize. Fixed seeds keep runs identical. */
@@ -31,11 +32,21 @@ class ProfileFuzzSpec extends AnyFunSuite {
     2 -> Gen.oneOf("😀", "x🎉", "\uE000", "x\uFFFF", "中文", "é"),
     1 -> Gen.choose(0, 5).flatMap(n => Gen.listOfN(n, Gen.alphaChar).map(_.mkString)))
 
+  /** Datetime strings: day suffixes, 5-digit and 2-digit years, MM/dd
+    * against dd/MM, near misses and long text. */
+  private val dtCell: Gen[String] = Gen.frequency(
+    2 -> Gen.const(null),
+    4 -> Gen.choose(0, 2000).map(d => java.time.LocalDate.of(2019, 1, 1).plusDays(d).toString),
+    2 -> Gen.oneOf("03/04/2021", "13/04/2021", "04/13/2021", "03/04/21", "12/31/99"),
+    1 -> Gen.oneOf("March 23rd, 2022", "Mar 23, 2022", "+12345-01-02", "12345-01-02",
+      "2021-02-29", "20210304", "12:30:00", "2021-03-04 05:06"),
+    1 -> Gen.const("lorem ipsum dolor sit amet " * 10))
+
   private val schema = StructType(Seq(
     StructField("g", LongType, nullable = false),
     StructField("s", StringType), StructField("t", StringType),
     StructField("const", StringType), StructField("v", LongType),
-    StructField("d", DoubleType)))
+    StructField("d", DoubleType), StructField("dt", StringType)))
 
   private final case class Frame(rows: IndexedSeq[Row], parts: Int, reparts: Int,
       maxCategories: Int)
@@ -54,7 +65,8 @@ class ProfileFuzzSpec extends AnyFunSuite {
       v <- Gen.frequency(1 -> Gen.const(null), 4 -> Gen.choose(-3L, 3L).map(Long.box))
       d <- Gen.frequency(1 -> Gen.const(null),
         4 -> Gen.oneOf(0.0, -0.0, 1.5, Double.NaN, -2.0).map(Double.box))
-    } yield Row(g, s, t, constant, v, d))
+      dt <- dtCell
+    } yield Row(g, s, t, constant, v, d, dt))
   } yield Frame(rows.toIndexedSeq, parts, reparts, maxCategories)
 
   private def frameOf(f: Frame): DataFrame =
@@ -104,8 +116,12 @@ class ProfileFuzzSpec extends AnyFunSuite {
         val whole = Profiler.profile(df.filter(col("g") === k).drop("g"), optsOf(f))
         val what = s"frame $i group $k"
         sameOrderFree(g, whole, what)
-        for (c <- whole.columns)
-          assert(g.column(c.name).get.order == c.order, s"$what: ${c.name} order")
+        for (c <- whole.columns) {
+          val gc = g.column(c.name).get
+          assert(gc.order == c.order, s"$what: ${c.name} order")
+          assert(gc.datetimeFormats == c.datetimeFormats, s"$what: ${c.name} formats")
+          assert(gc.datetime == c.datetime, s"$what: ${c.name} datetime")
+        }
       }
     }
   }
@@ -124,13 +140,13 @@ class ProfileFuzzSpec extends AnyFunSuite {
       scala(merged(partials.map(b => agg.deserialize(agg.serialize(b))))))
   }
 
-  test("category, vocab and order buffers survive serialize → deserialize") {
+  test("category, vocab, order, head-row and datetime buffers survive serialize → deserialize") {
     val utf8 = (s: String) => if (s == null) null else UTF8String.fromString(s)
     val parted = for {
       nParts <- Gen.choose(1, 4)
       parts <- Gen.listOfN(nParts, Gen.choose(0, 30).flatMap(n => Gen.listOfN(n,
-        for { k <- Gen.choose(0L, 2L); s <- cell; v <- Gen.choose(-2L, 2L) }
-          yield InternalRow(k, utf8(s), if (s == null) null else v))))
+        for { k <- Gen.choose(0L, 2L); s <- cell; v <- Gen.choose(-2L, 2L); dt <- dtCell }
+          yield InternalRow(k, utf8(s), if (s == null) null else v, utf8(dt)))))
       ceiling <- Gen.choose(0, 6)
     } yield (parts, ceiling)
     for (((parts, ceiling), i) <- sample(parted, 200, seed = 7L).zipWithIndex) {
@@ -147,6 +163,15 @@ class ProfileFuzzSpec extends AnyFunSuite {
         str, BoundReference(2, LongType, nullable = true)))
       val (o1, o2) = roundTrip(order, parts, order.updateIn _)
       assert(o1 == o2, s"case $i order")
+      val head = HeadRowsAggregate(Seq(BoundReference(0, LongType, nullable = false), str,
+        BoundReference(3, StringType, nullable = true)), ceiling * 4)
+      val (h1, h2) = roundTrip(head, parts, head.updateIn _)
+      assert(h1 == h2, s"case $i head rows")
+      val dts = DatetimeCandidatesAggregate(BoundReference(3, StringType, nullable = true),
+        "UTC", ProfilerOptions().ndvLgK)
+      val (d1, d2) = roundTrip(dts, parts,
+        (b: DatetimeCandidatesAggregate.Buf, r: InternalRow, _: Int) => dts.update(b, r))
+      assert(d1 == d2, s"case $i datetime candidates")
     }
   }
 }

@@ -44,13 +44,12 @@ class ProfilerJobsSpec extends AnyFunSuite {
     val whole = jobsOf(Profiler.profile(df.drop("half")))
     val split = jobsOf(Profiler.profileSplit(df, "half"))
     info(s"profile $whole jobs, profileSplit (2 groups) $split jobs")
-    // whole: pass 1 (categories, vocab and order ride it), a head sample
-    // over the leading partitions that hold its rows, and the parsed
-    // datetime extremes; a split adds the key-domain guard and its own
-    // order pass, and takes each group's head sample with `head` (which
-    // reads past the first partition: 2 jobs)
-    assert(whole <= 3, s"profile: $whole jobs")
-    assert(split <= 9, s"profileSplit: $split jobs")
+    // whole: pass 1 alone (categories, vocab, order, the head sample and
+    // the parsed datetime extremes ride it); a split adds the key-domain
+    // guard and its own order pass, and takes each group's head sample
+    // with `head` (which reads past the first partition: 2 jobs)
+    assert(whole <= 1, s"profile: $whole jobs")
+    assert(split <= 7, s"profileSplit: $split jobs")
   }
 
   test("profile job counts do not grow: lineitem whole and 3-way split") {
@@ -59,9 +58,9 @@ class ProfilerJobsSpec extends AnyFunSuite {
     val split = jobsOf(Profiler.profileSplit(
       li.withColumn("__k", col("l_orderkey") % 3), "__k"))
     info(s"profile $whole jobs, profileSplit (3 groups) $split jobs")
-    // whole: pass 1 and the head sample; split: the key-domain guard,
-    // pass 1, the order pass and a head sample per group
-    assert(whole <= 2, s"profile: $whole jobs")
+    // whole: pass 1 alone; split: the key-domain guard, pass 1, the
+    // order pass and a head sample per group
+    assert(whole <= 1, s"profile: $whole jobs")
     assert(split <= 6, s"profileSplit: $split jobs")
   }
 

@@ -96,6 +96,35 @@ class SnifferSpec extends AnyFunSuite {
     assert(GraftData.load(spark, p.toString).df.count() > 0)
   }
 
+  test("a parquet file loads with its footer schema: inference's schema, without its job") {
+    import org.apache.spark.sql.functions._
+    // a Spark-written file, whose footer carries the Spark schema (field
+    // metadata, nested and decimal types), plus the test tables
+    val out = dir.resolve("spark-written").toString
+    spark.range(5).select(col("id"),
+        col("id").cast("decimal(12,3)").as("dec"),
+        struct(col("id").as("a"), array(col("id")).as("b")).as("s"),
+        map(col("id").cast("string"), col("id")).as("m"),
+        timestamp_seconds(col("id")).as("ts"),
+        col("id").cast("string").as("tagged", new org.apache.spark.sql.types.MetadataBuilder()
+          .putString("note", "kept").build()))
+      .coalesce(1).write.mode("overwrite").parquet(out)
+    val written = Files.list(Paths.get(out)).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+    val tables = Files.list(Paths.get(SparkTestSession.sfDir)).toArray.map(_.toString)
+      .filter(p => p.endsWith(".parquet") && Files.isRegularFile(Paths.get(p))).toSeq
+    assert(written.size == 1 && tables.nonEmpty)
+    for (p <- written ++ tables) {
+      val (loaded, census) = graft.obs.JobCensus.of(spark)(GraftData.load(spark, p))
+      assert(loaded.format == "parquet", p)
+      assert(census.jobs.isEmpty, s"$p: ${census.jobs.size} jobs")
+      val inferred = spark.read.parquet(p)
+      assert(loaded.df.schema == inferred.schema, p)
+      assert(loaded.df.schema.json == inferred.schema.json, p)
+      assert(loaded.df.collect().toSeq == inferred.collect().toSeq, p)
+    }
+  }
+
   test("JSON lines and JSON array") {
     val jl = write("rows.jsonl",
       "{\"a\": 1, \"b\": \"x\"}\n{\"a\": 2, \"b\": \"y\"}\n")
