@@ -4,7 +4,7 @@ import java.util.BitSet
 import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -42,16 +42,25 @@ case class CodePointVocabAggregate(
 
   override def createAggregationBuffer(): BitSet = new BitSet()
 
+  /** An ASCII byte is its own code point, so the value's leading ASCII
+    * bytes (up to `charsPerValue`) are set without decoding; the first
+    * byte from 0x80 up decodes the whole value and reads its first
+    * `charsPerValue` code points again, which sets those bits twice. */
   override def update(b: BitSet, input: InternalRow): BitSet = {
-    val v = child.eval(input)
+    val v = child.eval(input).asInstanceOf[UTF8String]
     if (v != null) {
-      val s = v.toString
-      var i = 0; var n = 0
-      while (i < s.length && n < charsPerValue) {
-        val cp = s.codePointAt(i)
-        b.set(cp)
-        i += Character.charCount(cp)
-        n += 1
+      val end = math.min(v.numBytes, charsPerValue)
+      var i = 0
+      while (i < end && v.getByte(i) >= 0) { b.set(v.getByte(i)); i += 1 }
+      if (i < end) {
+        val s = v.toString
+        var j = 0; var n = 0
+        while (j < s.length && n < charsPerValue) {
+          val cp = s.codePointAt(j)
+          b.set(cp)
+          j += Character.charCount(cp)
+          n += 1
+        }
       }
     }
     b

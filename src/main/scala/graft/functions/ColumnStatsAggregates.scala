@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /* The profiler's pass-1 column statistics as native typed aggregates, so
@@ -264,17 +265,19 @@ case class StringStatsAggregate(
     val v = child.eval(input).asInstanceOf[UTF8String]
     if (v == null) b.l(1) += 1
     else {
-      val len = v.numChars().toDouble
+      val len = StringStatsAggregate.numChars(v).toDouble
       val n = b.l(0)
       least(b.d, 0, n, len); greatest(b.d, 1, n, len)
       b.d(2) = b.d(2) + len
       momentsUpdate(b.d, 3, len)
       b.l(0) = n + 1
-      val s = v.toString
-      var i = 0
-      while (i < 3) {
-        if (patterns(i).matcher(s).find(0)) b.l(2 + i) += 1
-        i += 1
+      if (StringStatsAggregate.mayMatchTypes(v)) {
+        val s = v.toString
+        var i = 0
+        while (i < 3) {
+          if (patterns(i).matcher(s).find(0)) b.l(2 + i) += 1
+          i += 1
+        }
       }
     }
     b
@@ -310,6 +313,45 @@ object StringStatsAggregate {
 
   def apply(x: Column): Column = GraftSessions.column(StringStatsAggregate(
     GraftSessions.expression(x)).toAggregateExpression())
+
+  private val HighBits = 0x8080808080808080L
+
+  /** `v.numChars()`, without the per-byte walk when every byte is ASCII
+    * (then each byte is one character); read eight bytes at a time. Any
+    * byte from 0x80 up defers to `numChars()`, which keeps Spark's count
+    * of invalid UTF-8. */
+  def numChars(v: UTF8String): Int = {
+    val base = v.getBaseObject
+    val off = v.getBaseOffset
+    val n = v.numBytes
+    var i = 0
+    while (i + 8 <= n) {
+      if ((Platform.getLong(base, off + i) & HighBits) != 0) return v.numChars()
+      i += 8
+    }
+    while (i < n) {
+      if (Platform.getByte(base, off + i) < 0) return v.numChars()
+      i += 1
+    }
+    n
+  }
+
+  /** Whether the int, float or datetime regex can find a match in `v`.
+    * Each begins `^\s*`, Java's `\s` being `[ \t\n\x0B\f\r]`, and
+    * then needs a character of `[+\-.0-9]`. A value whose first byte
+    * past that whitespace is anything else matches none of them: a byte
+    * from 0x80 up decodes to a character outside ASCII, and an empty or
+    * all-whitespace value has no such byte. */
+  def mayMatchTypes(v: UTF8String): Boolean = {
+    val n = v.numBytes
+    var i = 0
+    while (i < n) {
+      val c = v.getByte(i)
+      if (c == ' ' || (c >= '\t' && c <= '\r')) i += 1
+      else return (c >= '0' && c <= '9') || c == '+' || c == '-' || c == '.'
+    }
+    false
+  }
 }
 
 /** Counts of any column: `struct<n, nulls>`; for a date or timestamp

@@ -1,7 +1,7 @@
 package graft.functions
 
 import java.text.ParsePosition
-import java.time.{DayOfWeek, Month, ZoneId}
+import java.time.{DayOfWeek, LocalDate, LocalTime, Month, ZoneId, ZonedDateTime}
 import java.time.format.{DateTimeFormatter, TextStyle}
 import java.util.Locale
 import org.apache.datasketches.hll.HllSketch
@@ -370,10 +370,15 @@ private[graft] object DatetimeCandidates {
       case _ => null
     }
 
+    /** The fixed-width form of the pattern, for the [[tokenizer]]'s
+      * formatter only; null when it has none. */
+    private val layout: Layout = if (tokenizer == null) null else Layout.of(fmt.java)
+
     /** The microseconds `s` parses to, or None (a null
       * `try_to_timestamp`, or its overflow error). */
     def parse(s: String): Option[Long] = {
       if (formatter == null || !shape.admits(s)) return None
+      if (layout != null && layout.fits(s)) return layout.micros(s, zone)
       if (tokenizer != null) {
         val pos = new ParsePosition(0)
         if (tokenizer.parseUnresolved(s, pos) == null || pos.getIndex != s.length) return None
@@ -384,6 +389,79 @@ private[graft] object DatetimeCandidates {
         case _: java.time.DateTimeException | _: java.text.ParseException |
             _: ArithmeticException => None
       }
+    }
+  }
+
+  /** A pattern of the numeric fields `yyyy`, `MM`, `dd`, `HH`, `mm`,
+    * `ss` and non-letter literals, as one fixed-width text: `slots(i)` is
+    * the literal character at position i, or `-1 - f` for a digit of
+    * field f (year, month, day, hour, minute, second); `start(f)` is 0
+    * for a field of the pattern, else its default.
+    *
+    * A text of exactly that length, with an ASCII digit in every digit
+    * slot and every literal in place, is read the way the tokenizer
+    * reads it: a four-digit year (`yyyy` reads 4 to 19 digits, the
+    * fields after it are fixed) and two digits per other field. The
+    * strict resolver then accepts exactly the fields `LocalDate.of` and
+    * `LocalTime.of` accept, and Spark builds the timestamp as
+    * `ZonedDateTime.of(date, time, zone)` (`toZonedDateTime`), a missing
+    * date as 1970-01-01 and a missing time field as 0. [[micros]] does
+    * the same; any other text takes the tokenizer and formatter. */
+  final class Layout(slots: Array[Int], start: Array[Int]) {
+    def fits(s: String): Boolean = {
+      if (s.length != slots.length) return false
+      var i = 0
+      while (i < slots.length) {
+        val c = s.charAt(i)
+        if (if (slots(i) < 0) !isDigit(c) else c != slots(i)) return false
+        i += 1
+      }
+      true
+    }
+
+    /** The microseconds a text that [[fits]] parses to in `zone`, or
+      * None for a field out of range. */
+    def micros(s: String, zone: ZoneId): Option[Long] = {
+      val v = start.clone()
+      var i = 0
+      while (i < slots.length) {
+        if (slots(i) < 0) v(-1 - slots(i)) = v(-1 - slots(i)) * 10 + (s.charAt(i) - '0')
+        i += 1
+      }
+      try Some(DateTimeUtils.instantToMicros(ZonedDateTime.of(
+        LocalDate.of(v(0), v(1), v(2)), LocalTime.of(v(3), v(4), v(5)), zone).toInstant))
+      catch { case _: java.time.DateTimeException => None }
+    }
+  }
+
+  object Layout {
+    private val Fields = Seq("yyyy", "MM", "dd", "HH", "mm", "ss")
+
+    /** The layout of `pattern`, or null when it holds anything else, a
+      * field twice, part of a date, or a time field without the ones
+      * before it. */
+    def of(pattern: String): Layout = {
+      val slots = Array.newBuilder[Int]
+      var used = Set.empty[Int]
+      var i = 0
+      while (i < pattern.length) {
+        val c = pattern.charAt(i)
+        if (Character.isLetter(c)) {
+          var j = i
+          while (j < pattern.length && pattern.charAt(j) == c) j += 1
+          val f = Fields.indexOf(pattern.substring(i, j))
+          if (f < 0 || used(f)) return null
+          used += f
+          slots ++= Seq.fill(j - i)(-1 - f)
+          i = j
+        } else if (c == '\'') return null
+        else { slots += c.toInt; i += 1 }
+      }
+      val date = used.filter(_ < 3)
+      val time = used.filter(_ >= 3)
+      if (date.nonEmpty && date.size < 3 || time != (3 until 3 + time.size).toSet) null
+      else new Layout(slots.result(),
+        Array(1970, 1, 1, 0, 0, 0).zipWithIndex.map { case (d, f) => if (used(f)) 0 else d })
     }
   }
 

@@ -136,29 +136,32 @@ object Codec {
     }
     private def str(): String = {
       expect('"')
-      val sb = new StringBuilder
+      val sb = new java.lang.StringBuilder
+      var from = i
       while (s.charAt(i) != '"') {
-        val c = s.charAt(i)
-        if (c == '\\') {
+        if (s.charAt(i) == '\\') {
+          sb.append(s, from, i)
           i += 1
           s.charAt(i) match {
-            case '"' => sb += '"'
-            case '\\' => sb += '\\'
-            case '/' => sb += '/'
-            case 'n' => sb += '\n'
-            case 'r' => sb += '\r'
-            case 't' => sb += '\t'
-            case 'b' => sb += '\b'
-            case 'f' => sb += '\f'
+            case '"' => sb.append('"')
+            case '\\' => sb.append('\\')
+            case '/' => sb.append('/')
+            case 'n' => sb.append('\n')
+            case 'r' => sb.append('\r')
+            case 't' => sb.append('\t')
+            case 'b' => sb.append('\b')
+            case 'f' => sb.append('\f')
             case 'u' =>
-              sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar
+              sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar)
               i += 4
           }
-        } else sb += c
+          from = i + 1
+        }
         i += 1
       }
+      sb.append(s, from, i)
       i += 1
-      sb.result()
+      sb.toString
     }
     private def number(): J = {
       val start = i

@@ -1,10 +1,10 @@
 package graft.profiler
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSessions, Row}
+import java.util.regex.Pattern
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions._
-import scala.jdk.CollectionConverters._
 
 /** Options mirroring the reference's ProfilerOptions surface
   * (profiler_options.py): category cap = the stop-condition, histogram bin
@@ -142,9 +142,9 @@ final case class ProfilerOptions(
   *   pass 4 — one head sample per group, the rows `df.head(n)` returns,
   *            feeding label votes (first labelerSampleSize rows),
   *            datetime-format discovery (first 50) and exemplars (first
-  *            100); the label and format rules run in one projection
-  *            over the sample as a LocalRelation, folded on the driver —
-  *            no job, no codegen. On the whole frame pass 1 holds the
+  *            100); the label and format rules run as plain calls on
+  *            the driver (FastMatch.label, the format regexes) — no
+  *            job, no query plan. On the whole frame pass 1 holds the
   *            sample (a `head` job only when the first 16 input
   *            partitions hold fewer rows than it and the frame more);
   *            a split group takes it with a `head` job.
@@ -576,7 +576,7 @@ object Profiler {
       val dtFormatCols = stringCols.filter(c => gdOf(k, s"${c}__dtr") > 0.0)
       k -> Future {
         if (empty) (HeadPasses(Map.empty, Map.empty, Map.empty), 0L)
-        else headPasses(df.sparkSession, sample, fields, labelCols, dtFormatCols, opts)
+        else headPasses(sample, fields, labelCols, dtFormatCols, opts)
       }
     }.toMap
 
@@ -856,16 +856,13 @@ object Profiler {
     * 100 rows, every field). `sample(n)` returns at least the rows
     * `df.head(n)` returns: on the whole frame pass 1's
     * [[HeadRowsAggregate]] holds them, and a split group takes them with
-    * `head`. The label and format rules
-    * ([[graft.labelers.RegexLabeler.labelOf]],
-    * [[graft.functions.DatetimeFormats.matches]]) run in one select over
-    * the sample as a LocalRelation, each gated to its own row prefix;
-    * the optimizer folds that projection on the driver, so no job runs.
+    * `head`. The label and format rules ([[headRules]]) run as plain
+    * calls on the driver.
     * No reader → no sample, and `sample` is never called. Returns the
     * passes' results and the milliseconds the rules took. */
-  private def headPasses(spark: org.apache.spark.sql.SparkSession,
-      sample: Int => Array[Row], fields: Seq[StructField], labelCols: Seq[String],
-      dtFormatCols: Seq[String], opts: ProfilerOptions): (HeadPasses, Long) = {
+  private def headPasses(sample: Int => Array[Row], fields: Seq[StructField],
+      labelCols: Seq[String], dtFormatCols: Seq[String],
+      opts: ProfilerOptions): (HeadPasses, Long) = {
     val labelN = if (labelCols.nonEmpty) opts.labelerSampleSize else 0
     val dtN = if (dtFormatCols.nonEmpty) DtDiscoveryRows else 0
     val exN = if (opts.computeExemplars) ExemplarRows else 0
@@ -885,41 +882,37 @@ object Profiler {
           }.toSeq.distinct.take(5)
       }.toMap
 
-    // the rule columns under positional names, plus the row's sample index
-    val ruleCols = (labelCols ++ dtFormatCols).distinct
-    val fieldIdx = fields.map(_.name).zipWithIndex.toMap
-    val pos = ruleCols.zipWithIndex.toMap
-    def cell(c: String): Column = col(s"c${pos(c)}")
-    val local = spark.createDataFrame(
-      rows.toSeq.zipWithIndex.map { case (r, i) =>
-        Row.fromSeq(ruleCols.map(c => r.get(fieldIdx(c))) :+ i)
-      }.asJava,
-      StructType(ruleCols.indices.map(i => StructField(s"c$i", StringType)) :+
-        StructField("i", IntegerType)))
-    val formats = graft.functions.DatetimeFormats.formats
-    // labelOf registers its function on the ACTIVE session, which must be
-    // the one `local` resolves in (a stream's sink thread, or a caller
-    // profiling another session's frame, has a different one active)
-    val out = GraftSessions.withActive(local.sparkSession) {
-      val exprs = labelCols.map(c => when(col("i") < labelN,
-          graft.labelers.RegexLabeler.labelOf(cell(c)))) ++
-        dtFormatCols.flatMap(c => formats.map(f => when(col("i") < dtN,
-          graft.functions.DatetimeFormats.matches(cell(c), f))))
-      if (exprs.isEmpty) Array.empty[Row]
-      else local.select(exprs: _*).collect()
-    }
-
-    val labelVotes = labelCols.zipWithIndex.map { case (c, j) =>
-      c -> out.flatMap(r => Option(r.getString(j)))
-        .groupMapReduce(identity)(_ => 1L)(_ + _)
-    }.filter(_._2.nonEmpty).toMap
-    val dtFormats = dtFormatCols.zipWithIndex.map { case (c, j) =>
-      val base = labelCols.size + j * formats.size
-      c -> formats.indices.filter(i =>
-        out.exists(r => !r.isNullAt(base + i) && r.getBoolean(base + i)))
-        .map(formats(_).java)
-    }.toMap
+    val (labelVotes, dtFormats) = headRules(rows, fields, labelCols, labelN, dtFormatCols, dtN)
     (HeadPasses(labelVotes, dtFormats, exemplars), System.currentTimeMillis() - t0)
+  }
+
+  private lazy val daySuffix = Pattern.compile(DatetimeFormats.daySuffixPattern)
+  private lazy val formatRegexes = DatetimeFormats.formats.map(f => Pattern.compile(f.regex))
+
+  /** The head sample's label and format rules over `rows` (with
+    * `fields`), nulls dropped: per column of `labelCols`, the label
+    * votes of its first `labelN` cells — [[graft.labelers.FastMatch.label]],
+    * what [[graft.labelers.RegexLabeler.labelOf]] evaluates; per column
+    * of `dtFormatCols`, the formats whose regex finds a match in one of
+    * its first `dtN` cells with the day suffixes stripped — the
+    * `regexp_replace` and `rlike` of [[DatetimeFormats.matches]] — in
+    * format order. A column with no vote has no entry. */
+  private[graft] def headRules(rows: Array[Row], fields: Seq[StructField],
+      labelCols: Seq[String], labelN: Int, dtFormatCols: Seq[String], dtN: Int)
+      : (Map[String, Map[String, Long]], Map[String, Seq[String]]) = {
+    val fieldIdx = fields.map(_.name).zipWithIndex.toMap
+    def cells(c: String, n: Int): Seq[String] =
+      rows.iterator.take(n).map(_.getString(fieldIdx(c))).filter(_ != null).toSeq
+    val labelVotes = labelCols.map(c => c ->
+      cells(c, labelN).groupMapReduce(graft.labelers.FastMatch.label)(_ => 1L)(_ + _))
+      .filter(_._2.nonEmpty).toMap
+    val dtFormats = dtFormatCols.map { c =>
+      val vs = cells(c, dtN).map(daySuffix.matcher(_).replaceAll("$1"))
+      c -> DatetimeFormats.formats.indices
+        .filter(i => vs.exists(formatRegexes(i).matcher(_).find(0)))
+        .map(DatetimeFormats.formats(_).java)
+    }.toMap
+    (labelVotes, dtFormats)
   }
 
   private def isNumeric(t: DataType): Boolean = t match {

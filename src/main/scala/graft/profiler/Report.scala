@@ -16,15 +16,35 @@ object Report {
   final case class JObj(fields: Seq[(String, J)]) extends J
   case object JNull extends J
 
-  def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
+  /** `s` as the body of a JSON string: `"`, `\` and the control
+    * characters escaped, everything else as is; `s` itself when nothing
+    * needs escaping. */
+  def esc(s: String): String = {
+    var i = 0
+    while (i < s.length && !needsEscape(s.charAt(i))) i += 1
+    if (i == s.length) return s
+    val sb = new java.lang.StringBuilder(s.length + 16)
+    var from = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (needsEscape(c)) {
+        sb.append(s, from, i)
+        c match {
+          case '"' => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' => sb.append("\\t")
+          case _ => sb.append(f"\\u${c.toInt}%04x")
+        }
+        from = i + 1
+      }
+      i += 1
+    }
+    sb.append(s, from, s.length).toString
   }
+
+  private def needsEscape(c: Char): Boolean = c < ' ' || c == '"' || c == '\\'
 
   private def num(d: Double): String =
     if (d.isNaN || d.isInfinite) "null"

@@ -22,11 +22,6 @@ object GraftSessions {
       : (DataFrame, Long) => Unit =
     (batch, id) => sink(ofRows(session, batch.queryExecution.logical), id)
 
-  /** Run `f` with `session` as the thread's active session, restoring
-    * the previous one after (`SparkSession.withActive` is private[sql]). */
-  def withActive[T](session: SparkSession)(f: => T): T =
-    session.withActive(f)
-
   /** The catalyst expression of `c` (unresolved while `c` names columns
     * by name). */
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)

@@ -32,6 +32,39 @@ class CodePointVocabSpec extends AnyFunSuite {
       .asInstanceOf[ArrayData].toSeq[UTF8String](StringType).map(_.toString)
   }
 
+  /** The update the aggregate ran before its ASCII path: decode the
+    * value, then set its first `charsPerValue` code points. */
+  private def decodedUpdate(b: java.util.BitSet, v: UTF8String, charsPerValue: Int): Unit =
+    if (v != null) {
+      val s = v.toString
+      var i = 0; var n = 0
+      while (i < s.length && n < charsPerValue) {
+        val cp = s.codePointAt(i)
+        b.set(cp)
+        i += Character.charCount(cp)
+        n += 1
+      }
+    }
+
+  test("the ASCII path sets the bits the decode path sets") {
+    val utf8 = (s: String) => UTF8String.fromBytes(s.getBytes("UTF-8"))
+    def bytes(bs: Int*) = UTF8String.fromBytes(bs.map(_.toByte).toArray)
+    val k = 6
+    // the first non-ASCII character at index k - 1, k (the first one past
+    // the cap) and k + 1, in each UTF-8 width; invalid UTF-8 after ASCII
+    val edges = for (at <- Seq(k - 1, k, k + 1); c <- Seq("é", "中", "😀"))
+      yield utf8("abcdefgh".take(at) + c + "xyz")
+    val values = edges ++ Seq(utf8(""), utf8("abc"), utf8("\u0000\u007F"),
+      utf8("x😀y🎉z"), bytes(0xC3, 0x28), bytes(0x61, 0x80, 0x62), bytes(0xFF),
+      bytes(0x61, 0x62, 0x63, 0xE4, 0xB8), null)
+    for (cap <- Seq(0, 1, k, k + 1, 1000); v <- values) {
+      val agg = CodePointVocabAggregate(BoundReference(0, StringType, nullable = true), cap, 5000)
+      val want = new java.util.BitSet
+      decodedUpdate(want, v, cap)
+      assert(agg.update(agg.createAggregationBuffer(), InternalRow(v)) == want, s"$v at $cap")
+    }
+  }
+
   /** The explode formulation, grouped by `key` (a constant key = whole frame). */
   private def explodeVocab(df: DataFrame, key: Column, cols: Seq[String],
       opts: ProfilerOptions): Map[Long, Map[String, Set[String]]] =

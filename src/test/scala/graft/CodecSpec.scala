@@ -1,13 +1,39 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.profiler.{Codec, Profiler, ProfilerOptions}
+import graft.profiler.{Codec, Profiler, ProfilerOptions, Report}
 
 /** Save/load round-trip: a decoded profile must carry ALL mergeable state
   * (the reference's ProfileEncoder/json_decoder contract). */
 class CodecSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
+
+  /** The per-character escape `Report.esc` was defined as. */
+  private def flatMapEsc(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
+  test("string escape and parse: every ASCII character, alone and in runs") {
+    val ascii = (0 to 0x7f).map(_.toChar.toString)
+    val cases = ascii ++ ascii.map(c => s"ab${c}cd$c") ++
+      Seq("", "plain", "😀", "a😀\"b\\c\u0001é", ascii.mkString, ascii.mkString * 3)
+    for (s <- cases) {
+      assert(Report.esc(s) == flatMapEsc(s), s.map(_.toInt))
+      assert(Codec.parse(Report.write(Report.JStr(s))) == Report.JStr(s), s.map(_.toInt))
+    }
+    // nothing to escape: the string itself
+    val plain = "no escapes 😀 here"
+    assert(Report.esc(plain) eq plain)
+    // the escapes the parser reads that the writer never emits
+    assert(Codec.parse("\"a\\/b\\bc\\fd\\u00e9\"") == Report.JStr("a/b\bc\fdé"))
+  }
 
   test("encode -> decode -> encode is a fixpoint with full state") {
     val li = Tables.load(spark, sf, "lineitem")

@@ -69,13 +69,18 @@ class DatetimeCandidatesSpec extends AnyFunSuite {
     }
   }
 
-  test("each format parses as try_to_timestamp, behind a prefilter that never rejects a parse") {
-    val vs = values(seed = 20261019L, n = 4000)
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(vs.map(Row(_)), 4),
+  /** Asserts that every usable format's parser, built in `session`'s
+    * time zone, parses each of `vs` as `session`'s `try_to_timestamp`
+    * does, and that its shape admits every value that parses. Returns
+    * the number of parses. */
+  private def assertParsesAsSpark(session: org.apache.spark.sql.SparkSession,
+      vs: Seq[String]): Int = {
+    val df = session.createDataFrame(session.sparkContext.parallelize(vs.map(Row(_)), 4),
       StructType(Seq(StructField("s", StringType))))
     val got = df.select(col("s") +: usable.map(i =>
       unix_micros(try_to_timestamp(col("s"), lit(formats(i).java))).as(s"f$i")): _*).collect()
-    val parsers = DatetimeCandidates.parsers(DateTimeUtils.getZoneId(tz))
+    val zone = session.conf.get("spark.sql.session.timeZone")
+    val parsers = DatetimeCandidates.parsers(DateTimeUtils.getZoneId(zone))
     var parsed = 0
     for (r <- got; (i, j) <- usable.zipWithIndex) {
       val s = r.getString(0)
@@ -84,15 +89,68 @@ class DatetimeCandidatesSpec extends AnyFunSuite {
         parsed += 1
         assert(parsers(i).shape.admits(s), s"shape of ${formats(i).java} rejects `$s`")
       }
-      assert(parsers(i).parse(s) == want, s"`$s` under ${formats(i).java}")
+      assert(parsers(i).parse(s) == want, s"`$s` under ${formats(i).java} in $zone")
     }
+    parsed
+  }
+
+  test("each format parses as try_to_timestamp, behind a prefilter that never rejects a parse") {
+    val vs = values(seed = 20261019L, n = 4000)
+    val parsed = assertParsesAsSpark(spark, vs)
     assert(parsed > 1000, s"only $parsed parses: the values miss the formats")
+    val parsers = DatetimeCandidates.parsers(DateTimeUtils.getZoneId(tz))
     // a year past the microsecond range, on which try_to_timestamp fails
     // the query, parses nothing
     assert(parsers.forall(_.parse("+999999999-12-31").isEmpty))
     // a format Spark cannot parse with parses nothing
     formats.indices.filterNot(usable.contains).foreach(i =>
       assert(vs.forall(parsers(i).parse(_).isEmpty), formats(i).java))
+  }
+
+  /** The fixed-width formats: those [[DatetimeCandidates.Layout]] reads. */
+  private lazy val fixedWidth: Seq[Int] =
+    usable.filter(i => DatetimeCandidates.Layout.of(formats(i).java) != null)
+
+  /** `pattern` with its fields filled in from (year, month, day, hour,
+    * minute, second), each zero-padded to its width. */
+  private def render(pattern: String, f: Seq[Int]): String =
+    pattern.replace("yyyy", f"${f(0)}%04d").replace("MM", f"${f(1)}%02d")
+      .replace("dd", f"${f(2)}%02d").replace("HH", f"${f(3)}%02d")
+      .replace("mm", f"${f(4)}%02d").replace("ss", f"${f(5)}%02d")
+
+  test("fixed-width formats parse out-of-range fields, DST gaps and overlaps as try_to_timestamp") {
+    assert(fixedWidth.map(formats(_).java).toSet == Set("yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd",
+      "yyyy/MM/dd", "MM/dd/yyyy", "dd/MM/yyyy", "MM-dd-yyyy", "yyyyMMdd", "HH:mm:ss",
+      "yyyy-MM-dd HH:mm", "MM/dd/yyyy HH:mm"))
+    val fields = Seq(
+      Seq(2021, 3, 14, 2, 30, 0), // Los Angeles DST gap
+      Seq(2021, 11, 7, 1, 30, 0), // Los Angeles DST overlap
+      Seq(2021, 13, 1, 0, 0, 0), Seq(2021, 0, 5, 0, 0, 0), Seq(2021, 2, 29, 0, 0, 0),
+      Seq(2020, 2, 29, 0, 0, 0), Seq(2021, 4, 31, 0, 0, 0), Seq(2021, 1, 0, 0, 0, 0),
+      Seq(2021, 1, 32, 0, 0, 0), Seq(2021, 1, 1, 24, 0, 0), Seq(2021, 1, 1, 23, 60, 0),
+      Seq(2021, 1, 1, 23, 59, 60), Seq(2021, 1, 1, 99, 99, 99), Seq(0, 1, 1, 0, 0, 0),
+      Seq(9999, 12, 31, 23, 59, 59), Seq(1900, 2, 29, 12, 0, 0), Seq(2000, 2, 29, 12, 0, 0))
+    val vs = (for (i <- fixedWidth; f <- fields) yield render(formats(i).java, f)).distinct
+    // every value takes the fixed-width path of its own format
+    for (i <- fixedWidth; f <- fields) {
+      val v = render(formats(i).java, f)
+      assert(DatetimeCandidates.Layout.of(formats(i).java).fits(v), v)
+    }
+    val la = spark.newSession()
+    la.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    for (session <- Seq(spark, la)) {
+      val parsed = assertParsesAsSpark(session, vs ++ values(seed = 5L, n = 1500))
+      assert(parsed > 300, s"only $parsed parses")
+    }
+    // the gap and the overlap are where the zone shows: one hour apart
+    // in UTC, 02:30 moves to 03:30 PDT and 01:30 takes PDT, the earlier
+    // offset
+    val laParsers = DatetimeCandidates.parsers(DateTimeUtils.getZoneId("America/Los_Angeles"))
+    val full = formats.indexWhere(_.java == "yyyy-MM-dd HH:mm:ss")
+    def at(s: String): Long = laParsers(full).parse(s).get
+    assert(at("2021-03-14 02:30:00") == at("2021-03-14 03:30:00"))
+    assert(at("2021-11-07 01:30:00") == java.time.Instant.parse("2021-11-07T08:30:00Z")
+      .getEpochSecond * 1000000L)
   }
 
   /** The aggregation the profiler ran as its own pass before. */

@@ -6,6 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{cnt, DatetimeFormats}
 import graft.labelers.RegexLabeler
 import graft.profiler.{Profile, Profiler, ProfilerOptions}
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Label votes, datetime-format discovery and exemplars all read the
   * profile's one head sample. Each must equal what its own bounded probe
@@ -49,6 +51,71 @@ class HeadSampleSpec extends AnyFunSuite {
     }.toMap
   }
 
+  /** The head rules as the profiler ran them before: one select over
+    * the rows as a LocalRelation, each rule gated to its row prefix
+    * (`labelOf` for the votes, `DatetimeFormats.matches` per format),
+    * folded on the driver. */
+  private def localRelationRules(rows: Array[Row], fields: Seq[StructField],
+      labelCols: Seq[String], labelN: Int, dtFormatCols: Seq[String], dtN: Int)
+      : (Map[String, Map[String, Long]], Map[String, Seq[String]]) = {
+    val ruleCols = (labelCols ++ dtFormatCols).distinct
+    val fieldIdx = fields.map(_.name).zipWithIndex.toMap
+    val pos = ruleCols.zipWithIndex.toMap
+    def cell(c: String) = col(s"c${pos(c)}")
+    val local = spark.createDataFrame(
+      rows.toSeq.zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(ruleCols.map(c => r.get(fieldIdx(c))) :+ i)
+      }.asJava,
+      StructType(ruleCols.indices.map(i => StructField(s"c$i", StringType)) :+
+        StructField("i", IntegerType)))
+    val formats = DatetimeFormats.formats
+    val exprs = labelCols.map(c => when(col("i") < labelN, RegexLabeler.labelOf(cell(c)))) ++
+      dtFormatCols.flatMap(c => formats.map(f => when(col("i") < dtN,
+        DatetimeFormats.matches(cell(c), f))))
+    val out = local.select(exprs: _*).collect()
+    val labelVotes = labelCols.zipWithIndex.map { case (c, j) =>
+      c -> out.flatMap(r => Option(r.getString(j))).groupMapReduce(identity)(_ => 1L)(_ + _)
+    }.filter(_._2.nonEmpty).toMap
+    val dtFormats = dtFormatCols.zipWithIndex.map { case (c, j) =>
+      val base = labelCols.size + j * formats.size
+      c -> formats.indices.filter(i =>
+        out.exists(r => !r.isNullAt(base + i) && r.getBoolean(base + i))).map(formats(_).java)
+    }.toMap
+    (labelVotes, dtFormats)
+  }
+
+  test("head rules equal the LocalRelation select they replaced") {
+    val r = new scala.util.Random(14L)
+    // values the labeler and the format regexes fire on, with line
+    // terminators (`$` matches before a final one), day suffixes and nulls
+    val seeds = Seq("123", "123\n", "123\r\n", "123\u2028", "12.5", "-7", "0x1F",
+      "a@example.com", "a@example.com\n", "555-867-5309", "(555) 867-5309",
+      "192.168.0.1", "4111 1111 1111 1111", "123-45-6789", "12345", "12345-6789",
+      "https://example.com/x", "John Smith", "CA", "100 Main St", "2021-03-04",
+      "2021-03-04\n", "2021-03-04 05:06:07", "2021-03-04T05:06:07", "03/04/2021",
+      "03/04/21", "March 23rd, 2022", "Mar 01st, 2022", "23rd March 2022",
+      "1st Jan 2020", "Jan 02nd, 2020", "20210304", "05:06:07", "Thu Mar 04 05:06:07 2021",
+      "11th", "2nd", "", " ", "UNKNOWN", "true", "中文", "😀 2021-03-04")
+    def cell(): String = r.nextInt(10) match {
+      case 0 => null
+      case 1 => seeds(r.nextInt(seeds.size)) + seeds(r.nextInt(seeds.size))
+      case 2 => r.alphanumeric.take(r.nextInt(12)).mkString
+      case _ => seeds(r.nextInt(seeds.size))
+    }
+    val fields = Seq(StructField("x", LongType), StructField("a", StringType),
+      StructField("b", StringType), StructField("c", StringType))
+    for (rowsN <- Seq(0, 7, 60, 1200); (labelN, dtN) <- Seq((1000, 50), (40, 50), (0, 50), (1000, 0))) {
+      val rows = Array.fill(rowsN)(Row(r.nextLong(), cell(), cell(), cell()))
+      val labelCols = if (labelN == 0) Nil else Seq("a", "b", "c")
+      val dtCols = if (dtN == 0) Nil else Seq("b", "c")
+      val want = localRelationRules(rows, fields, labelCols, labelN, dtCols, dtN)
+      val got = Profiler.headRules(rows, fields, labelCols, labelN, dtCols, dtN)
+      assert(got == want, s"$rowsN rows, labelN $labelN, dtN $dtN")
+      if (rowsN == 1200 && labelN == 1000 && dtN > 0)
+        assert(got._1.nonEmpty && got._2.values.exists(_.size > 1))
+    }
+  }
+
   // One partition, 1500 rows (past the default labelerSampleSize), two
   // split groups. `d` is yyyy-MM-dd for its first 200 rows (so in both
   // groups' first 50) and MM/dd/yyyy after: the late format must stay
@@ -64,7 +131,6 @@ class HeadSampleSpec extends AnyFunSuite {
         else f"${i % 12 + 1}%02d/${i % 28 + 1}%02d/2022",
         if (i % 17 == 0) null else java.lang.Long.valueOf(i * 31L % 97))
     }
-    import org.apache.spark.sql.types._
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
       StructType(Seq(StructField("g", LongType), StructField("s", StringType),
         StructField("d", StringType), StructField("x", LongType))))

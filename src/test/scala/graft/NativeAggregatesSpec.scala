@@ -202,6 +202,54 @@ class NativeAggregatesSpec extends AnyFunSuite {
       builtIns, "empty")
   }
 
+  /** Values at the edges of the string stats' byte paths, as UTF-8
+    * bytes: ASCII; 2-, 3- and 4-byte characters, also past the first
+    * eight bytes the length reads at once; invalid UTF-8 (a lead byte
+    * before ASCII, a lone continuation byte, 0xFF); the whitespace
+    * `\s` takes and U+00A0, which it does not; signs and points alone. */
+  private val edgeStrings: Seq[Array[Byte]] = {
+    val hex = (h: String) => h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    val utf8 = (s: String) => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    Seq("", "abc", "12", "é", "héllo", "中文", "😀", "x😀é中", "12é", "1234567é",
+      "12345678é", "123456789é", "abcdefghijklmno中", "abcdefghijklmnop😀",
+      "\u000B12", "\f12", "\r12", "\u000B\f\r\t\n 3.5e10", "\u00A012", "   ", "+", "-",
+      ".", ".5", "\t.25", "-.5", " 12 ", "+-1", "4.0", "1e5", "2021-03-04", " 2021-03-04 05:06 ",
+      "\t2021-03-04T05:06:07\n", "12\n", "０１２").map(utf8) ++
+      Seq("C328", "80", "FF", "31C328", "FF3132", "2B80", "3132333435363738FF",
+        "20C3", "E4B8").map(hex)
+  }
+
+  test("string stats read bytes as the built-ins read characters") {
+    val rows = edgeStrings.zipWithIndex.map { case (b, i) =>
+      Row(i.toLong, b.map(x => f"${x & 0xff}%02X").mkString) }
+    // binary → string keeps the bytes, invalid UTF-8 included
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      StructType(Seq(StructField("k", LongType), StructField("h", StringType))))
+      .select(col("k"), col("h"), unhex(col("h")).cast("string").as("s"))
+    assert(df.filter(hex(col("s")) =!= col("h")).isEmpty)
+    val s = col("s")
+    val len = length(s).cast("double")
+    val builtIns = Seq(count(s), cnt(s.isNull), min(len), max(len), avg(len),
+      var_pop(len), ratioNonNull(s, isIntStr(s)), ratioNonNull(s, isFloatStr(s)),
+      ratioNonNull(s, isDatetimeStr(s)))
+    // per value, and all values in one group
+    for (keys <- Seq(Seq(col("k")), Nil))
+      assertFieldsEqual(df, keys, StringStatsAggregate(s), builtIns,
+        s"by ${keys.size} keys")
+    // the kernels alone: the ASCII length is the character count, and a
+    // value the prefilter rejects matches no type regex
+    val patterns = Seq(graft.functions.IntRegex, graft.functions.FloatRegex,
+      graft.functions.DatetimeRegex).map(java.util.regex.Pattern.compile)
+    var admitted = 0
+    for (b <- edgeStrings) {
+      val v = UTF8String.fromBytes(b)
+      assert(StringStatsAggregate.numChars(v) == v.numChars(), v)
+      if (StringStatsAggregate.mayMatchTypes(v)) admitted += 1
+      else assert(!patterns.exists(_.matcher(v.toString).find(0)), v)
+    }
+    assert(admitted > 10 && admitted < edgeStrings.size)
+  }
+
   test("value stats equal count, null count, min and max") {
     val df = spark.range(0, 1000, 1, 3).select(
       when(col("id") % 7 =!= 0, timestamp_seconds(col("id") * 7919 % 100003)).as("ts"),
