@@ -15,9 +15,11 @@ import org.apache.spark.sql.functions._
   *    strptime laxness could differ),
   *  - the strptime string (documentation of reference lineage).
   *
-  * Discovery runs as |formats| sibling count-aggregates over one scan;
-  * the reference's "50-row quick reject" (`:392-410`) maps to running the
-  * same expressions over `limit(50)` first.
+  * Discovery reads the profile's head sample on the driver: a format is
+  * discovered when its shape regex finds a match in one of a column's
+  * first 50 values with the day suffixes stripped (the reference's
+  * 50-row pre-test, `:392-410`; `Profiler.headRules`). [[matches]] and
+  * [[parsed]] are the same rules as Spark columns.
   */
 object DatetimeFormats {
 
@@ -61,11 +63,4 @@ object DatetimeFormats {
   /** Actual parse under one format (Spark-side; null on mismatch). */
   def parsed(c: Column, f: Fmt): Column =
     try_to_timestamp(stripDaySuffix(c), lit(f.java))
-
-  /** Best-effort parse: first format whose shape matches AND parses.
-    * Each arm is gated on the shape regex — lenient Java parsing alone
-    * (e.g. `yy` accepting 4-digit years) would otherwise claim strings
-    * the discovered-format semantics reject. */
-  def parseAny(c: Column): Column =
-    coalesce(formats.map(f => when(matches(c, f), parsed(c, f))): _*)
 }

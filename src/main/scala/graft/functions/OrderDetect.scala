@@ -34,8 +34,8 @@ object OrderDetect {
       order: String, nIncr: Long, nDecr: Long, nEq: Long)
 
   /** One key's decoded [[OrderSegmentsAggregate]] result: a result per
-    * value column. */
-  final case class Segments(columns: Seq[OrderResult])
+    * value column, and the key's first rows of the head columns. */
+  final case class Segments(columns: Seq[OrderResult], rows: Seq[Row])
 
   private def classify(nIncr: Long, nDecr: Long, nEq: Long): String =
     if (nIncr == 0 && nDecr == 0) "constant"
@@ -56,7 +56,8 @@ object OrderDetect {
         r.getSeq[Row](1).map { c =>
           OrderResult(classify(c.getLong(0), c.getLong(1), c.getLong(2)),
             c.getLong(0), c.getLong(1), c.getLong(2))
-        })
+        },
+        r.getSeq[Row](2))
     }.toMap
 
   /** Detect order of `valCols` when rows are ordered by `keyCol`.
@@ -71,7 +72,7 @@ object OrderDetect {
       .repartitionByRange(p, col(keyCol))
       .sortWithinPartitions(keyCol)
     val res = decode(arranged.agg(
-      OrderSegmentsAggregate(lit(0L), valCols.map(col))).head().get(0))
+      OrderSegmentsAggregate(lit(0L), valCols.map(col), Nil, 0)).head().get(0))
     val cols = res.get(0L).map(_.columns)
       .getOrElse(valCols.map(_ => OrderResult(EmptyVerdict, 0L, 0L, 0L)))
     valCols.zip(cols).toMap
@@ -97,18 +98,25 @@ object OrderDetect {
   }
 }
 
-/** Per-(input partition, key) forward-scan order summaries of the value
-  * columns, as one mergeable aggregate: the engine of [[OrderDetect]].
+/** Per-(input partition, key) scan segments, as one mergeable aggregate:
+  * forward-scan order summaries of the value columns (the engine of
+  * [[OrderDetect]]) and the first `n` rows of the head columns (the
+  * profiler's head sample, the rows `df.head(n)` returns).
   *
-  * `children` are a long key and then the value columns. A task folds
-  * its rows, in the order it reads them, into one segment per key for
-  * its partition (`TaskContext.getPartitionId`, the value
-  * `spark_partition_id()` reads): per column the non-null count, the
-  * first and last non-null values and the increase / decrease / equal
-  * counts between consecutive non-null values. Merge is the union of
-  * the segments. `eval` sorts each key's
-  * segments by partition and adds one comparison per seam between
-  * consecutive non-empty segments.
+  * `children` are a long key, then `orderCount` value columns, then the
+  * head columns. A task folds its rows, in the order it reads them, into
+  * one segment per key for its partition (`TaskContext.getPartitionId`,
+  * the value `spark_partition_id()` reads): per value column the
+  * non-null count, the first and last non-null values and the increase /
+  * decrease / equal counts between consecutive non-null values; and,
+  * in partitions below [[OrderSegmentsAggregate.MaxPartitions]] only, the
+  * segment's first `n` rows of the head columns, so at most that many
+  * partitions times `n` rows per key cross the exchange at any scale.
+  * Merge is the union of the segments. `eval` sorts each key's segments
+  * by partition, adds one comparison per seam between consecutive
+  * non-empty segments, and concatenates their rows, taking `n`: the
+  * key's first `n` rows whenever its segments there hold `n` rows or all
+  * of its rows ([[OrderSegmentsAggregate.covers]]).
   *
   * The rows of one partition must reach `update` in scan order, so the
   * aggregate belongs in an aggregation without grouping (or over a
@@ -123,17 +131,20 @@ object OrderDetect {
   * intervals — by its Catalyst value's natural ordering.
   *
   * The result is `array<struct<key, columns: array<struct<n_incr,
-  * n_decr, n_eq>>>>`, sorted by key. */
+  * n_decr, n_eq>>, rows: array<struct<c0, c1, …>>>>`, sorted by key. */
 case class OrderSegmentsAggregate(
     children: Seq[Expression],
+    orderCount: Int,
+    n: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[OrderSegmentsAggregate.Buf] {
 
-  import OrderSegmentsAggregate.{Buf, Segment}
+  import OrderSegmentsAggregate.{Buf, MaxPartitions, Segment}
 
-  private def values: Seq[Expression] = children.tail
-  private def k: Int = children.size - 1
+  private def values: Seq[Expression] = children.slice(1, 1 + orderCount)
+  private def heads: Seq[Expression] = children.drop(1 + orderCount)
+  private def k: Int = orderCount
   @transient private lazy val valueExprs: Array[Expression] = values.toArray
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -144,11 +155,18 @@ case class OrderSegmentsAggregate(
         s"OrderSegmentsAggregate cannot order ${v.dataType.simpleString}")
       case None => TypeCheckResult.TypeCheckSuccess
     }
-  override def dataType: DataType = OrderSegmentsAggregate.ResultType
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("key", LongType, nullable = false),
+    StructField("columns", ArrayType(OrderSegmentsAggregate.ColumnType, containsNull = false),
+      nullable = false),
+    StructField("rows", ArrayType(StructType(heads.zipWithIndex.map { case (c, i) =>
+      StructField(s"c$i", c.dataType, nullable = true)
+    }), containsNull = false), nullable = false))), containsNull = false)
   override def nullable: Boolean = false
 
   @transient private lazy val cmps: Array[(Any, Any) => Int] =
     values.map(v => OrderSegmentsAggregate.comparator(v.dataType)).toArray
+  @transient private lazy val headRow = InterpretedUnsafeProjection.createProjection(heads)
 
   override def createAggregationBuffer(): Buf = new Buf
 
@@ -175,6 +193,8 @@ case class OrderSegmentsAggregate(
       }
       c += 1
     }
+    // the projection's row is reused: copy before keeping
+    if (partition < MaxPartitions && s.rows.size < n) s.rows += headRow(input).copy()
     b
   }
 
@@ -202,7 +222,8 @@ case class OrderSegmentsAggregate(
         }
         InternalRow(incr, decr, eq)
       }
-      InternalRow(key, new GenericArrayData(cols.toArray[Any]))
+      InternalRow(key, new GenericArrayData(cols.toArray[Any]),
+        new GenericArrayData(ordered.iterator.flatMap(_.rows).take(n).toArray[Any]))
     }.toArray[Any])
   }
 
@@ -215,10 +236,15 @@ case class OrderSegmentsAggregate(
     segTypes.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) })
 
   /** Layout: the segment count (int), then per segment its fields as an
-    * UnsafeRow, length-prefixed (int). */
+    * UnsafeRow, its kept-row count (int) and each kept row as an
+    * UnsafeRow, every UnsafeRow length-prefixed (int). */
   override def serialize(b: Buf): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     val data = new java.io.DataOutputStream(out)
+    def write(row: UnsafeRow): Unit = {
+      data.writeInt(row.getSizeInBytes)
+      data.write(row.getBytes, 0, row.getSizeInBytes)
+    }
     data.writeInt(b.segments.size)
     b.segments.foreach { s =>
       val fields = new Array[Any](segTypes.size)
@@ -228,9 +254,9 @@ case class OrderSegmentsAggregate(
         fields(o) = s.n(c); fields(o + 1) = s.incr(c); fields(o + 2) = s.decr(c)
         fields(o + 3) = s.eq(c); fields(o + 4) = s.first(c); fields(o + 5) = s.last(c)
       }
-      val row = toUnsafe(new GenericInternalRow(fields))
-      data.writeInt(row.getSizeInBytes)
-      data.write(row.getBytes, 0, row.getSizeInBytes)
+      write(toUnsafe(new GenericInternalRow(fields)))
+      data.writeInt(s.rows.size)
+      s.rows.foreach(write)
     }
     data.flush()
     out.toByteArray
@@ -238,12 +264,16 @@ case class OrderSegmentsAggregate(
 
   override def deserialize(bytes: Array[Byte]): Buf = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
+    def read(width: Int): UnsafeRow = {
+      val bytes = new Array[Byte](bb.getInt)
+      bb.get(bytes)
+      val row = new UnsafeRow(width)
+      row.pointTo(bytes, bytes.length)
+      row
+    }
     val b = new Buf
     for (_ <- 0 until bb.getInt) {
-      val seg = new Array[Byte](bb.getInt)
-      bb.get(seg)
-      val row = new UnsafeRow(segTypes.size)
-      row.pointTo(seg, seg.length)
+      val row = read(segTypes.size)
       val s = new Segment(row.getInt(0), row.getLong(1), k)
       for (c <- 0 until k) {
         val o = 2 + 6 * c
@@ -252,6 +282,7 @@ case class OrderSegmentsAggregate(
         s.first(c) = row.get(o + 4, segTypes(o + 4))
         s.last(c) = row.get(o + 5, segTypes(o + 5))
       }
+      for (_ <- 0 until bb.getInt) s.rows += read(heads.size)
       b.add(s)
     }
     b
@@ -267,7 +298,15 @@ case class OrderSegmentsAggregate(
 
 object OrderSegmentsAggregate {
 
-  /** One (partition, key) forward-scan summary over `k` value columns. */
+  /** Input partitions at or past this one keep no head rows. */
+  val MaxPartitions = 16
+
+  /** Whether `got` head rows of a frame of `total` rows are its first
+    * `n`: they are when there are `n` of them, or all `total`. */
+  def covers(got: Int, n: Int, total: Long): Boolean = got >= n || got >= total
+
+  /** One (partition, key) forward-scan summary over `k` value columns,
+    * with the segment's kept head rows. */
   final class Segment(val partition: Int, val key: Long, k: Int) {
     val n = new Array[Long](k)
     val incr = new Array[Long](k)
@@ -275,6 +314,7 @@ object OrderSegmentsAggregate {
     val eq = new Array[Long](k)
     val first = new Array[Any](k)
     val last = new Array[Any](k)
+    val rows = mutable.ArrayBuffer.empty[UnsafeRow]
   }
 
   /** Segments by (partition, key); the segment last updated is kept at
@@ -304,10 +344,6 @@ object OrderSegmentsAggregate {
     StructField("n_incr", LongType, nullable = false),
     StructField("n_decr", LongType, nullable = false),
     StructField("n_eq", LongType, nullable = false)))
-  val ResultType: DataType = ArrayType(StructType(Seq(
-    StructField("key", LongType, nullable = false),
-    StructField("columns", ArrayType(ColumnType, containsNull = false), nullable = false))),
-    containsNull = false)
 
   /** The order of two non-null Catalyst values of type `t`. */
   private[functions] def comparator(t: DataType): (Any, Any) => Int = t match {
@@ -354,9 +390,11 @@ object OrderSegmentsAggregate {
     else c
   }
 
-  /** Order summaries of the `values` columns per (input partition, `key`
-    * value); `key` must be a non-null long. */
-  def apply(key: Column, values: Seq[Column]): Column =
+  /** Order summaries of the `values` columns and the first `n` rows of
+    * the `head` columns per (input partition, `key` value); `key` must be
+    * a non-null long. */
+  def apply(key: Column, values: Seq[Column], head: Seq[Column], n: Int): Column =
     GraftSessions.column(OrderSegmentsAggregate(
-      (key +: values).map(GraftSessions.expression)).toAggregateExpression())
+      (key +: (values ++ head)).map(GraftSessions.expression), values.size, n)
+      .toAggregateExpression())
 }

@@ -411,7 +411,7 @@ final case class Profile(
     columns: Seq[ColumnProfile],
     correlationState: Map[(String, String), PairMoments],
     /** Wall milliseconds per pass: `aggregate` (pass 1), `categories`
-      * (the catMelt fallback), `order` (the split order pass) and
+      * (the catMelt fallback), `order` (the split segment pass) and
       * `labeler` (the head-sample label and format rules, plain calls
       * on the driver over the sample; no query plan); `histograms`,
       * `vocab` and `datetime_formats` ride pass 1 and read 0. Summed on

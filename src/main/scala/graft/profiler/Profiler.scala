@@ -22,8 +22,9 @@ final case class ProfilerOptions(
       * The labeler reads the first this-many rows of the profile's one
       * head sample (the rows `df.head(n)` returns, with every column), so
       * this also sizes that sample when labels are on and a string column
-      * exists: pass 1 keeps up to this many rows of each of its first 16
-      * input partitions. */
+      * exists: the scan segments keep up to this many rows of each of the
+      * first 16 input partitions (per split group under
+      * [[Profiler.profileSplit]]). */
     labelerSampleSize: Int = 1000,
     /** Distinct-char vocabulary per string column
       * (text_column_profile.py:134-157). */
@@ -76,8 +77,10 @@ final case class ProfilerOptions(
     /** Fail-fast cap on [[Profiler.profileSplit]]'s key cardinality. The
       * split contract is "k chunk profiles" with k SMALL: pass 1 collects
       * one WIDE row per key (HLL sketches + histogram buffers + quantile
-      * arrays, ~tens of KB each) and the grouped order pass collects
-      * O(partitions × keys × columns) summaries — a high-cardinality id
+      * arrays, ~tens of KB each) and the segment pass collects
+      * O(partitions × keys × columns) order summaries plus up to the
+      * head-sample size of rows per key from each of the first 16
+      * partitions — a high-cardinality id
       * column would OOM the driver instead of erroring. Enforced before
       * pass 1 by a narrow exact count of the distinct keys (one
       * column-pruned scan, one long to the driver), unless
@@ -96,14 +99,14 @@ final case class ProfilerOptions(
     /** Head-sample exemplars (5 distinct values per column from the
       * first 100 rows, profile_builder.py:665-668). They read the
       * profile's one head sample, which this option sizes to at least
-      * 100 rows. On the whole frame the sample rides pass 1; under
-      * [[Profiler.profileSplit]] it is taken PER GROUP (a
-      * `filter(key === k)` head job that reads until the group's rows
-      * surface). With labels off and no datetime-like string column,
-      * exemplars are the only reader of a group's sample, so turning
-      * them off saves that job per group: composite consumers whose
-      * emitted output never includes exemplars (the gate/diff/merge
-      * oracle queries) do. */
+      * 100 rows. The sample rides the scan segments: inside pass 1 on
+      * the whole frame, and in the one segment pass under
+      * [[Profiler.profileSplit]], which takes every group's sample at
+      * once. With labels off, no datetime-like string column and no
+      * order to detect, exemplars are a split's only reason for that
+      * pass, so turning them off saves its job: composite consumers
+      * whose emitted output never includes exemplars (the
+      * gate/diff/merge oracle queries) do. */
     computeExemplars: Boolean = true) {
 
   /** DataSketches lgConfigK from the rsd contract rsd ≈ 1.04/√m. */
@@ -130,39 +133,42 @@ final case class ProfilerOptions(
   *            vocabulary and its parsed datetime extremes under every
   *            candidate format), with the table-level row stats and one
   *            co-moment aggregate for correlation. On the whole frame it
-  *            also carries the natural-order segments (per input
-  *            partition, each column's forward-scan order summary) and
-  *            the head sample (the first rows of the leading input
-  *            partitions). All are typed imperative aggregates, so the
-  *            pass plans as one ObjectHashAggregate scan with map-side
+  *            also carries the scan segments ([[OrderSegmentsAggregate]]:
+  *            per input partition, each column's forward-scan order
+  *            summary and, for the leading partitions, their first
+  *            rows). All are typed imperative aggregates, so the pass
+  *            plans as one ObjectHashAggregate scan with map-side
   *            partial aggregation and no generated per-row code.
   *   pass 2 — category counts by melt + groupBy, only for a column whose
   *            NDV estimate qualifies it but whose pass-1 counter passed
   *            its ceiling (normally never).
+  *   segment pass — under a split key only: the scan segments of every
+  *            group in one ungrouped aggregation keyed by (input
+  *            partition, key), when some group has rows and there is an
+  *            order to detect or a group needs a head sample.
   *   pass 4 — one head sample per group, the rows `df.head(n)` returns,
   *            feeding label votes (first labelerSampleSize rows),
   *            datetime-format discovery (first 50) and exemplars (first
-  *            100); the label and format rules run as plain calls on
-  *            the driver (FastMatch.label, the format regexes) — no
-  *            job, no query plan. On the whole frame pass 1 holds the
-  *            sample (a `head` job only when the first 16 input
-  *            partitions hold fewer rows than it and the frame more);
-  *            a split group takes it with a `head` job.
-  *   pass 6 — under a split key only: natural-order detection, the
-  *            order segments keyed by (partition, key) in one ungrouped
-  *            aggregation.
+  *            100), read from the scan segments' head rows (a
+  *            `filter(key === k).head(n)` job only for a group whose
+  *            first 16 input partitions hold fewer of its rows than the
+  *            sample and the group more); the label and format rules
+  *            run as plain calls on the driver (FastMatch.label, the
+  *            format regexes) — no job, no query plan.
   *   pass 7 — parsed min/max/distinct days of string columns under the
   *            formats pass 4 discovered, read on the driver from pass
   *            1's datetime candidates — no job.
-  * Pass 1 runs first; passes 2, 6 and the split groups' head samples
-  * then run as concurrent actions, or not at all when pass 1 counted no
-  * rows. A whole-frame profile is pass 1 alone: 1 job (the catMelt
-  * fallback or the head-sample fallback add one).
+  * The passes run one after another, each only when its input is there
+  * to read: pass 1, then pass 2, then the segment pass; none after pass
+  * 1 when it counted no rows. A whole-frame profile is pass 1 alone: 1
+  * job; a split is the key-domain guard, pass 1 and the segment pass: 3
+  * jobs, whatever the group count (the catMelt fallback and the
+  * head-sample fallback add to either).
   * Nothing unbounded is collected: category maps are capped, histograms
   * are fixed-width, quantiles use percentile_approx (GK sketch), the
   * head sample is at most max(labelerSampleSize, 100) rows from each of
-  * 16 partitions, and the datetime candidates hold one entry per set of
-  * formats a value parses under.
+  * 16 partitions per group, and the datetime candidates hold one entry
+  * per set of formats a value parses under.
   */
 object Profiler {
 
@@ -172,7 +178,8 @@ object Profiler {
     * global (or ≤ maxGroups-key) aggregation whose exchange carries one
     * sketch row per map task (per key), the category melt aggregates
     * map-side to ≤ qualifying-columns × maxCategories rows, and the
-    * split order pass carries one segment set per map task. Adaptive re-planning has nothing
+    * split segment pass carries one segment set per map task (with head
+    * rows from the first 16 only). Adaptive re-planning has nothing
     * to coalesce or skew-split on such exchanges at ANY scale, while
     * costing one extra job + scheduling barrier per exchange
     * materialization — at bench scale that was roughly half the
@@ -396,12 +403,12 @@ object Profiler {
     * pays k× the per-job scheduler cost; here the aggregating passes
     * each run once under `groupBy(splitKey)` — identical aggregate
     * expressions, same map-side partial aggregation, k result rows
-    * instead of one — so the scan count is independent of k. The head
-    * sample (labels, datetime discovery, exemplars) stays per-group,
-    * preserving profile()'s head-sample semantics exactly, the parsed
-    * datetime extremes ride pass 1 grouped, and natural-order detection
-    * runs as ONE ungrouped forward pass keyed by (partition, key) — all
-    * equal their per-slice profile() results (ProfileSplitSpec).
+    * instead of one — so the scan count is independent of k. The parsed
+    * datetime extremes ride pass 1 grouped; natural-order detection and
+    * every group's head sample (labels, datetime discovery, exemplars)
+    * ride ONE ungrouped forward pass keyed by (partition, key) — all
+    * equal their per-slice profile() results (ProfileSplitSpec,
+    * HeadSampleSpec).
     *
     * Returns one Profile per key VALUE (cast to long); a key absent
     * from the result had zero rows, and null keys are excluded.
@@ -447,9 +454,6 @@ object Profiler {
     * [[withAqeOff]] scope. */
   private def passSet(df: DataFrame, fields: Seq[StructField],
       key: Option[Column], opts: ProfilerOptions): Map[Long, Profile] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
     val t0 = System.currentTimeMillis()
     val statPlugins = activePlugins
     val numericCols = fields.filter(f => isNumeric(f.dataType)).map(_.name)
@@ -459,32 +463,35 @@ object Profiler {
     val grouping = key.map(_.as("__split")).toSeq
     def keyOf(r: Row): Long = if (key.isDefined) r.getLong(0) else 0L
 
+    // natural-order detection covers the columns with an ordered type;
+    // the scan segments carry it and the head sample, each (partition,
+    // key) segment folded in scan order, so they run ungrouped: inside
+    // pass 1 on the whole frame, as their own pass under a split key
+    val orderCols =
+      if (opts.computeOrder) fields.filter(f => OrderDetect.orderable(f.dataType))
+        .map(_.name)
+      else Nil
+    val fieldCols = fields.map(f => col(f.name))
+    def segments(n: Int): Column =
+      OrderSegmentsAggregate(key.getOrElse(lit(0L)), orderCols.map(col), fieldCols, n)
+    // the head-sample size: its readers' largest prefix, each group's
+    // with 50 rows for format discovery when it has a datetime-like column
+    def sampleSize(dtFormatCols: Seq[String]): Int = Seq(
+      if (labelCols.nonEmpty) opts.labelerSampleSize else 0,
+      if (dtFormatCols.nonEmpty) DtDiscoveryRows else 0,
+      if (opts.computeExemplars) ExemplarRows else 0).max
+
     // ---- pass 1: the fused aggregation --------------------------------
     // One job: every pass-1 aggregate is a typed imperative aggregate, so
     // the whole pass plans as a single ObjectHashAggregate with map-side
     // partial aggregation. Correlation rides it as one co-moment
     // aggregate, so under a key each group gets its own mergeable matrix
-    // state at zero extra scans.
+    // state at zero extra scans. On the whole frame, which has no
+    // grouping, the segments ride it too, sized for any string column's
+    // format discovery.
     val (corrPairs, corrAggs) = corrPairsAndAggs(numericCols, opts)
-    // natural-order detection covers the columns with an ordered type;
-    // on the whole frame its segments ride pass 1 (which has no grouping,
-    // so each map task folds its partition's rows in scan order), and so
-    // does the head sample
-    val orderCols =
-      if (opts.computeOrder) fields.filter(f => OrderDetect.orderable(f.dataType))
-        .map(_.name)
-      else Nil
-    // the head-sample size: its readers' largest prefix, with 50 rows for
-    // format discovery whenever a string column could need it
-    val headN = Seq(
-      if (labelCols.nonEmpty) opts.labelerSampleSize else 0,
-      if (stringCols.nonEmpty) DtDiscoveryRows else 0,
-      if (opts.computeExemplars) ExemplarRows else 0).max
     val wholeAggs =
-      if (key.isDefined) Nil
-      else Seq(OrderSegmentsAggregate(lit(0L), orderCols.map(col)).as("__order")) ++
-        (if (headN > 0) Seq(HeadRowsAggregate(fields.map(f => col(f.name)), headN)
-          .as("__head")) else Nil)
+      if (key.isDefined) Nil else Seq(segments(sampleSize(stringCols)).as("__segments"))
     val aggs = pass1Cols(fields, opts, statPlugins, timeZoneId) ++ corrAggs ++ wholeAggs
     val valsByKey: Map[Long, Map[String, Any]] =
       df.groupBy(grouping: _*).agg(aggs.head, aggs.tail: _*).collect()
@@ -509,25 +516,16 @@ object Profiler {
     // no rows in any group: every later pass would read nothing, so none
     // runs, and each result is what that pass yields on empty input
     val empty = keys.forall(rowsOf(_) == 0L)
-    // the whole frame's order segments (pass 1); absent on empty input
-    val wholeOrder =
-      if (key.isDefined) None
-      else OrderDetect.decode(valsByKey(0L)("__order")).get(0L)
+    val dtFormatCols: Map[Long, Seq[String]] = keys.map(k =>
+      k -> stringCols.filter(c => gdOf(k, s"${c}__dtr") > 0.0)).toMap
     val t1 = System.currentTimeMillis()
 
-    // ---- passes 2, 6 and the split groups' head samples: independent
-    // actions, submitted concurrently, each timing itself ----
-    def timed[T](f: => T): Future[(T, Long)] = Future {
-      val start = System.currentTimeMillis()
-      val r = f
-      (r, System.currentTimeMillis() - start)
-    }
-
-    // category maps: counted exactly in pass 1 up to the ceiling, and
-    // qualified PER GROUP afterwards (a column can be categorical in one
-    // chunk and over-cap in another) by the NDV estimate. A column the
-    // estimate qualifies but whose counter overflowed is counted by the
-    // catMelt fallback (pass 2).
+    // ---- pass 2: category maps ------------------------------------------
+    // counted exactly in pass 1 up to the ceiling, and qualified PER
+    // GROUP afterwards (a column can be categorical in one chunk and
+    // over-cap in another) by the NDV estimate. A column the estimate
+    // qualifies but whose counter overflowed is counted by the catMelt
+    // fallback.
     def qualifies(k: Long, c: String): Boolean =
       opts.computeCategories && ndvOf(k, c) <= opts.maxCategories
     val counted: Map[Long, Map[String, Map[String, Long]]] = keys.map(k =>
@@ -536,62 +534,52 @@ object Profiler {
           .map(m => c -> m.toMap)).toMap).toMap
     val overflowed: Map[Long, Seq[String]] = keys.map(k => k ->
       stringCols.filter(c => qualifies(k, c) && !counted(k).contains(c))).toMap
-    val catFut =
-      if (overflowed.values.forall(_.isEmpty))
-        Future.successful((Map.empty[Long, Map[String, Map[String, Long]]], 0L))
-      else timed {
-        catMelt(df, key, overflowed).collect()
-          .groupBy(keyOf).map { case (k, rows) =>
-            k -> rows.groupBy(_.getString(key.size)).map { case (c, rs) =>
-              c -> rs.map(r =>
-                r.getString(key.size + 1) -> r.getLong(key.size + 2)).toMap
-            }
+    val melt = overflowed.values.exists(_.nonEmpty)
+    val t2 = System.currentTimeMillis()
+    val melted: Map[Long, Map[String, Map[String, Long]]] =
+      if (!melt) Map.empty
+      else catMelt(df, key, overflowed).collect()
+        .groupBy(keyOf).map { case (k, rows) =>
+          k -> rows.groupBy(_.getString(key.size)).map { case (c, rs) =>
+            c -> rs.map(r =>
+              r.getString(key.size + 1) -> r.getLong(key.size + 2)).toMap
           }
-      }
+        }
+    val catMs = if (melt) System.currentTimeMillis() - t2 else 0L
 
-    // pass 6, under a split key: natural-order detection, one ungrouped
-    // forward pass whose segments are keyed by (partition, key). A filter
+    // ---- the scan segments under a split key ---------------------------
+    // one ungrouped pass whose segments are keyed by (partition, key),
+    // holding every group's order summaries and head rows. A filter
     // preserves partition structure and row order, so each group's
-    // result is exactly what profile(df.filter(key === k)) sees. Not
+    // segments are exactly what profile(df.filter(key === k)) sees. Not
     // grouped by the key: past 128 keys a grouped ObjectHashAggregate
     // falls back to sorting, which would feed a partition's rows to a
-    // group's buffer out of order.
-    val orderFut = key match {
-      case Some(kc) if !empty && orderCols.nonEmpty => timed {
-        OrderDetect.decode(df.agg(
-          OrderSegmentsAggregate(kc, orderCols.map(col))).head().get(0))
-      }
-      case _ => Future.successful((wholeOrder.map(0L -> _).toMap, 0L))
-    }
-
-    // pass 4 per group: the head sample, from pass 1 on the whole frame
-    // and one `head` job per group under a split key
-    lazy val wholeHead = headFrom(df, headN, valsByKey(0L)("__head"), rowsOf(0L))
-    val headFuts = keys.map { k =>
-      val sample: Int => Array[Row] = key match {
-        case None => _ => wholeHead
-        case Some(kc) => n =>
-          df.filter(kc === k).select(fields.map(f => col(f.name)): _*).head(n)
-      }
-      val dtFormatCols = stringCols.filter(c => gdOf(k, s"${c}__dtr") > 0.0)
-      k -> Future {
-        if (empty) (HeadPasses(Map.empty, Map.empty, Map.empty), 0L)
-        else headPasses(sample, fields, labelCols, dtFormatCols, opts)
-      }
-    }.toMap
-
-    val (melted, catMs) = Await.result(catFut, Duration.Inf)
-    val (orderSegs, orderMs) = Await.result(orderFut, Duration.Inf)
+    // group's buffer out of order. It runs when some group has rows and
+    // there is an order to detect or a group needs a head sample.
+    val splitN = keys.map(k => sampleSize(dtFormatCols(k))).maxOption.getOrElse(0)
+    val splitPass = key.isDefined && !empty && (orderCols.nonEmpty || splitN > 0)
+    val t3 = System.currentTimeMillis()
+    val segs: Map[Long, OrderDetect.Segments] =
+      if (key.isEmpty) OrderDetect.decode(valsByKey(0L)("__segments"))
+      else if (splitPass) OrderDetect.decode(df.agg(segments(splitN)).head().get(0))
+      else Map.empty
+    val orderMs = if (splitPass) System.currentTimeMillis() - t3 else 0L
 
     // windows shared by all groups are DIVIDED across them, so merging
     // the k split profiles sums back to the actual wall clock instead of
     // k× it; the per-group head rules are attributed whole. Categories,
     // vocab, the parsed datetime extremes and (on the whole frame) order
     // ride pass 1, so their own keys hold only the catMelt fallback and
-    // the split order pass.
+    // the split segment pass.
     val shared = keys.size.max(1)
     keys.map { k =>
-      val (head, labelMs) = Await.result(headFuts(k), Duration.Inf)
+      // pass 4: the group's head sample and the rules that read it
+      val n = if (empty) 0 else sampleSize(dtFormatCols(k))
+      val sample =
+        if (n == 0) Array.empty[Row]
+        else headFrom(key.fold(df)(kc => df.filter(kc === k)).select(fieldCols: _*),
+          n, segs(k).rows, rowsOf(k))
+      val (head, labelMs) = headPasses(sample, fields, labelCols, dtFormatCols(k), opts)
       val histMaps =
         if (opts.computeHistograms) histFromPass1(numericCols, valsByKey(k))
         else Map.empty[String, Histogram]
@@ -603,7 +591,7 @@ object Profiler {
         else stringCols.map(c => c ->
           valsByKey(k)(s"${c}__vocab").asInstanceOf[scala.collection.Seq[String]].toSet)
           .toMap
-      val orders: Map[String, String] = orderSegs.get(k) match {
+      val orders: Map[String, String] = segs.get(k) match {
         case Some(s) => orderCols.zip(s.columns.map(_.order)).toMap
         case None => orderCols.map(_ -> OrderDetect.EmptyVerdict).toMap
       }
@@ -841,34 +829,28 @@ object Profiler {
   /** Rows the exemplars are drawn from (profile_builder.py:665-668). */
   private val ExemplarRows = 100
 
-  /** The rows `df.head(n)` returns, from the collected result `got` of
-    * a [[HeadRowsAggregate]] of `n` rows over all of `df`'s columns
-    * (`total` rows): `got` when it holds them, else `df.head(n)` — the
-    * frame's first `n` rows lie past the partitions that keep rows. */
-  private[graft] def headFrom(df: DataFrame, n: Int, got: Any, total: Long): Array[Row] = {
-    val rows = got.asInstanceOf[scala.collection.Seq[Row]].toArray
-    if (HeadRowsAggregate.covers(rows.length, n, total)) rows else df.head(n)
-  }
+  /** The rows `df.head(n)` returns, from the head rows `got` that an
+    * [[OrderSegmentsAggregate]] of `n` rows kept for a frame of `total`
+    * rows: `got` when it holds them, else `df.head(n)` — the frame's
+    * first `n` rows lie past the partitions that keep rows. */
+  private[graft] def headFrom(df: DataFrame, n: Int, got: Seq[Row], total: Long): Array[Row] =
+    if (OrderSegmentsAggregate.covers(got.size, n, total)) got.take(n).toArray else df.head(n)
 
-  /** Pass 4: ONE head sample read by label votes (its first
+  /** Pass 4: ONE head sample, `rows`, read by label votes (its first
     * labelerSampleSize rows, for `labelCols`), datetime-format discovery
     * (its first 50 rows, for `dtFormatCols`) and exemplars (its first
-    * 100 rows, every field). `sample(n)` returns at least the rows
-    * `df.head(n)` returns: on the whole frame pass 1's
-    * [[HeadRowsAggregate]] holds them, and a split group takes them with
-    * `head`. The label and format rules ([[headRules]]) run as plain
-    * calls on the driver.
-    * No reader → no sample, and `sample` is never called. Returns the
+    * 100 rows, every field). `rows` are the rows `df.head(n)` returns for
+    * the largest of those prefixes, from the scan segments' head rows
+    * ([[headFrom]]). The label and format rules ([[headRules]]) run as
+    * plain calls on the driver. No rows → no result. Returns the
     * passes' results and the milliseconds the rules took. */
-  private def headPasses(sample: Int => Array[Row], fields: Seq[StructField],
+  private def headPasses(rows: Array[Row], fields: Seq[StructField],
       labelCols: Seq[String], dtFormatCols: Seq[String],
       opts: ProfilerOptions): (HeadPasses, Long) = {
+    if (rows.isEmpty) return (HeadPasses(Map.empty, Map.empty, Map.empty), 0L)
     val labelN = if (labelCols.nonEmpty) opts.labelerSampleSize else 0
     val dtN = if (dtFormatCols.nonEmpty) DtDiscoveryRows else 0
     val exN = if (opts.computeExemplars) ExemplarRows else 0
-    val n = Seq(labelN, dtN, exN).max
-    if (n == 0) return (HeadPasses(Map.empty, Map.empty, Map.empty), 0L)
-    val rows = sample(n).take(n)
     val t0 = System.currentTimeMillis()
 
     val exemplars =

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{cnt, DatetimeFormats}
+import graft.functions.{cnt, DatetimeFormats, OrderDetect, OrderSegmentsAggregate}
 import graft.labelers.RegexLabeler
 import graft.profiler.{Profile, Profiler, ProfilerOptions}
 import org.apache.spark.sql.types._
@@ -183,23 +183,51 @@ class HeadSampleSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(slices, slices.size).flatMap(identity), df.schema)
   }
 
+  // an empty leading partition; partitions shorter than n; more
+  // partitions than keep rows (the sample falls back to `head`)
+  private val layouts = Seq((4, true, false), (8, false, false), (100, false, true))
+
   test("pass-1 head rows equal df.head(n) across partition layouts") {
-    import graft.functions.HeadRowsAggregate
-    // an empty leading partition; partitions shorter than n; more
-    // partitions than keep rows (the sample falls back to `head`)
-    val layouts = Seq((4, true, false), (8, false, false), (100, false, true))
     for ((parts, emptyFirst, fallback) <- layouts; n <- Seq(1000, 60)) {
       val df = spread(parts, emptyFirst)
       val what = s"$parts partitions, empty first = $emptyFirst, n = $n"
       assert(df.rdd.getNumPartitions == parts, what)
-      val r = df.agg(HeadRowsAggregate(df.columns.toSeq.map(col), n),
+      val r = df.agg(OrderSegmentsAggregate(lit(0L), Nil, df.columns.toSeq.map(col), n),
         count(lit(1))).head()
-      val got = r.getSeq[Row](0)
-      assert(!HeadRowsAggregate.covers(got.size, n, r.getLong(1)) == (fallback && n == 1000),
-        what)
+      val got = OrderDetect.decode(r.get(0))(0L).rows
+      assert(!OrderSegmentsAggregate.covers(got.size, n, r.getLong(1)) ==
+        (fallback && n == 1000), what)
       assert(Profiler.headFrom(df, n, got, r.getLong(1)).toSeq == df.head(n).toSeq, what)
       val opts = ProfilerOptions(labelerSampleSize = n)
       assertMatchesProbes(Profiler.profile(df, opts), df, Some(opts), what)
+    }
+  }
+
+  test("profileSplit: head rows past the partition cap equal each group's head(n)") {
+    for ((parts, emptyFirst, fallback) <- layouts; n <- Seq(1000, 60)) {
+      val df = spread(parts, emptyFirst).withColumn("g", (col("x") % 2).cast("long"))
+        .na.fill(0L, Seq("g"))
+      val what = s"$parts partitions, empty first = $emptyFirst, n = $n"
+      // every group's kept rows, and whether they cover its head(n)
+      val fields = df.columns.toSeq.filterNot(_ == "g")
+      val segs = OrderDetect.decode(df.agg(
+        OrderSegmentsAggregate(col("g"), Nil, fields.map(col), n)).head().get(0))
+      val counts = df.groupBy("g").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(segs.keySet == counts.keySet && counts.size == 2, what)
+      for ((k, total) <- counts) {
+        val group = df.filter(col("g") === k).select(fields.map(col): _*)
+        val got = segs(k).rows
+        assert(!OrderSegmentsAggregate.covers(got.size, n, total) == (fallback && n == 1000),
+          s"$what group $k")
+        assert(Profiler.headFrom(group, n, got, total).toSeq == group.head(n).toSeq,
+          s"$what group $k")
+      }
+      val opts = ProfilerOptions(labelerSampleSize = n, keyDomainBounded = true)
+      val split = Profiler.profileSplit(df, "g", opts)
+      assert(split.keySet == counts.keySet, what)
+      for ((k, p) <- split)
+        assertMatchesProbes(p, df.filter(col("g") === k).drop("g"), Some(opts),
+          s"$what group $k")
     }
   }
 

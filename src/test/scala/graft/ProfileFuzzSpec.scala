@@ -11,7 +11,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{CategoryCountAggregate, CodePointVocabAggregate,
-  DatetimeCandidatesAggregate, HeadRowsAggregate, OrderSegmentsAggregate}
+  DatetimeCandidatesAggregate, OrderSegmentsAggregate}
 import graft.profiler.{ColumnProfile, Profile, Profiler, ProfilerOptions}
 
 /** Seeded metamorphic properties of the profiler's category, vocab,
@@ -140,7 +140,7 @@ class ProfileFuzzSpec extends AnyFunSuite {
       scala(merged(partials.map(b => agg.deserialize(agg.serialize(b))))))
   }
 
-  // also covers the head-row and datetime-candidate buffers
+  // also covers the scan segments' head rows and the datetime candidates
   test("category, vocab and order buffers survive serialize → deserialize") {
     val utf8 = (s: String) => if (s == null) null else UTF8String.fromString(s)
     val parted = for {
@@ -160,14 +160,25 @@ class ProfileFuzzSpec extends AnyFunSuite {
       val (v1, v2) = roundTrip(vocab, parts,
         (b: java.util.BitSet, r: InternalRow, _: Int) => vocab.update(b, r))
       assert(v1 == v2, s"case $i vocab")
-      val order = OrderSegmentsAggregate(Seq(BoundReference(0, LongType, nullable = false),
-        str, BoundReference(2, LongType, nullable = true)))
-      val (o1, o2) = roundTrip(order, parts, order.updateIn _)
-      assert(o1 == o2, s"case $i order")
-      val head = HeadRowsAggregate(Seq(BoundReference(0, LongType, nullable = false), str,
-        BoundReference(3, StringType, nullable = true)), ceiling * 4)
-      val (h1, h2) = roundTrip(head, parts, head.updateIn _)
-      assert(h1 == h2, s"case $i head rows")
+      // the scan segments: order columns with head rows, order columns
+      // alone (n = 0), and head rows alone
+      val key = BoundReference(0, LongType, nullable = false)
+      val dt = BoundReference(3, StringType, nullable = true)
+      for ((orderCols, n) <- Seq((2, ceiling * 4), (2, 0), (0, ceiling * 4 + 1))) {
+        val segs = OrderSegmentsAggregate(
+          Seq(key, str, BoundReference(2, LongType, nullable = true)).take(1 + orderCols) ++
+            Seq(key, str, dt), orderCols, n)
+        val (o1, o2) = roundTrip(segs, parts, segs.updateIn _)
+        assert(o1 == o2, s"case $i segments: $orderCols order columns, n = $n")
+        // each key keeps its first n rows in partition order
+        def cells(r: InternalRow) = (r.getLong(0), Option(r.getUTF8String(1)).map(_.toString),
+          Option(r.getUTF8String(3)).map(_.toString))
+        val want = parts.flatten.groupBy(_.getLong(0)).map { case (k, rs) =>
+          k -> rs.take(n).map(cells) }
+        val got = o1.asInstanceOf[Seq[Row]].map(r => r.getLong(0) ->
+          r.getSeq[Row](2).map(x => (x.getLong(0), Option(x.getString(1)), Option(x.getString(2)))))
+        assert(got.toMap == want, s"case $i head rows: $orderCols order columns, n = $n")
+      }
       val dts = DatetimeCandidatesAggregate(BoundReference(3, StringType, nullable = true),
         "UTC", ProfilerOptions().ndvLgK)
       val (d1, d2) = roundTrip(dts, parts,

@@ -402,13 +402,13 @@ class ProfileSplitSpec extends AnyFunSuite {
   }
 
   test("computeExemplars=false skips the per-group head probes (r19)") {
-    // The r19 optimization: gate/diff/merge composites never emit
-    // exemplars, so their per-(group × call) filter+limit probe jobs
-    // are pure waste (~28 of stream_gate's 80 jobs). Pin BOTH halves of
-    // the contract: (a) every other stat is identical with the flag
-    // off, (b) the probe JOBS are actually gone — measured with a job
-    // listener, the flag-off run must plan strictly fewer jobs, by at
-    // least one per group.
+    // gate/diff/merge composites never emit exemplars. With labels and
+    // order off and no datetime-like column, exemplars are a split's
+    // only reason for its segment pass, which takes every group's head
+    // sample in one job. Pin BOTH halves of the contract: (a) every
+    // other stat is identical with the flag off, (b) the pass is
+    // actually gone — measured with a job listener, the flag-off run
+    // plans exactly one job fewer.
     val base = Tables.load(spark, SparkTestSession.sfDir, "lineitem")
       .select("l_orderkey", "l_quantity", "l_returnflag")
       .withColumn("__half", col("l_orderkey") % 2).drop("l_orderkey")
@@ -422,8 +422,8 @@ class ProfileSplitSpec extends AnyFunSuite {
       noProbes = Profiler.profileSplit(base, "__half",
         opts.copy(computeExemplars = false))
     }
-    assert(jobsOff <= jobsOn - 2,
-      s"expected >=2 fewer jobs (one probe per group): on=$jobsOn off=$jobsOff")
+    assert(jobsOff == jobsOn - 1,
+      s"expected exactly 1 fewer job (the segment pass): on=$jobsOn off=$jobsOff")
     assert(noProbes.keySet == withProbes.keySet)
     for (k <- noProbes.keySet) {
       val (a, b) = (noProbes(k), withProbes(k))

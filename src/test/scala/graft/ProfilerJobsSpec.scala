@@ -46,10 +46,10 @@ class ProfilerJobsSpec extends AnyFunSuite {
     info(s"profile $whole jobs, profileSplit (2 groups) $split jobs")
     // whole: pass 1 alone (categories, vocab, order, the head sample and
     // the parsed datetime extremes ride it); a split adds the key-domain
-    // guard and its own order pass, and takes each group's head sample
-    // with `head` (which reads past the first partition: 2 jobs)
+    // guard and its one segment pass, which carries every group's order
+    // summaries and head sample
     assert(whole <= 1, s"profile: $whole jobs")
-    assert(split <= 7, s"profileSplit: $split jobs")
+    assert(split <= 3, s"profileSplit: $split jobs")
   }
 
   test("profile job counts do not grow: lineitem whole and 3-way split") {
@@ -58,10 +58,20 @@ class ProfilerJobsSpec extends AnyFunSuite {
     val split = jobsOf(Profiler.profileSplit(
       li.withColumn("__k", col("l_orderkey") % 3), "__k"))
     info(s"profile $whole jobs, profileSplit (3 groups) $split jobs")
-    // whole: pass 1 alone; split: the key-domain guard, pass 1, the
-    // order pass and a head sample per group
+    // whole: pass 1 alone; split: the key-domain guard, pass 1 and the
+    // segment pass
     assert(whole <= 1, s"profile: $whole jobs")
-    assert(split <= 6, s"profileSplit: $split jobs")
+    assert(split <= 3, s"profileSplit: $split jobs")
+  }
+
+  test("profileSplit jobs do not depend on the group count: lineitem at 16 and 200 groups") {
+    val li = lineitem
+    for (k <- Seq(16, 200)) {
+      val split = jobsOf(Profiler.profileSplit(
+        li.withColumn("__k", col("l_orderkey") % k), "__k"))
+      info(s"profileSplit ($k groups) $split jobs")
+      assert(split <= 3, s"profileSplit, $k groups: $split jobs")
+    }
   }
 
   test("stream sink: an empty batch runs one job and keeps the state") {
