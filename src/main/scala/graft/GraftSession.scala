@@ -28,8 +28,8 @@ object GraftSession {
     }
 
   /** A `local[cpus]` session (or the one already running) with shuffle
-    * partitions = `cpus`, UTC, the UI off and WARN logging, then
-    * `confs`. */
+    * partitions = `cpus`, UTC, TIMESTAMP(NANOS) parquet columns read as
+    * longs, the UI off and WARN logging, then `confs`. */
   def apply(cpus: Int = envCpus(), appName: String = "",
       confs: Seq[(String, String)] = Nil): SparkSession = {
     val b = SparkSession.builder()
@@ -46,6 +46,10 @@ object GraftSession {
       // Every object-buffer aggregate in this suite keys on bounded or
       // model-sized groups, so the hash path is safe at any suite scale.
       .config(SortFallbackThreshold, "20000000")
+      // older driver generations (and GenSf sf1 output) write events.ts
+      // as TIMESTAMP(NANOS), which Spark reads only as a nanos long;
+      // Tables.normalizeEventsTs turns that long into a timestamp
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     if (appName.nonEmpty) b.appName(appName)

@@ -5,8 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
-  * All engine code reads through here so that path handling, and later
-  * options like bucketed re-layout, live in one place.
+  * All engine code reads through here so that path handling lives in one
+  * place. A load reads the table's schema from its file footer
+  * ([[graft.sources.GraftData.parquet]]), so it runs no Spark job and
+  * writes no session conf. events.ts in the TIMESTAMP(NANOS) shape needs
+  * a session that reads those columns as longs, as every
+  * [[GraftSession]] session does.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -14,11 +18,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // legacy knob: older driver generations (and GenSf sf1 output) write
-    // events.ts as TIMESTAMP(NANOS), which Spark rejects natively unless
-    // read as a nanos long
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = graft.sources.GraftData.parquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventsTs(df) else df
   }
 
@@ -39,9 +39,9 @@ object Tables {
       .repartition(spark.sessionState.conf.numShufflePartitions)
 
   /** events.ts arrives in one of two physical shapes depending on the
-    * data generation: TIMESTAMP(NANOS) surfaced as a nanos LONG under
-    * the legacy knob, or a plain parquet timestamp[us] that Spark reads
-    * as TIMESTAMP_NTZ. Both normalize to session-tz TimestampType at
+    * data generation: TIMESTAMP(NANOS) surfaced as a nanos LONG (the
+    * session's `nanosAsLong` read, see [[GraftSession]]), or a plain
+    * parquet timestamp[us] that Spark reads as TIMESTAMP_NTZ. Both normalize to session-tz TimestampType at
     * microsecond precision so every downstream query (and its oracle
     * comparison) sees a single type regardless of generation. Works on
     * batch and streaming frames alike (pure projection). */

@@ -285,7 +285,7 @@ object JoinQueries extends QueryModule {
   /** BUCKETED fact-to-fact join — the co-location story as a first-class
     * gated operator (sources/Bucketing.scala held the util; this runs
     * it): both join sides are written ONCE bucketed+sorted on the join
-    * key (8 buckets, cachedFixture — the shuffle is paid at write time),
+    * key (8 buckets, a Stage.fixture — the shuffle is paid at write time),
     * and the recurring join then plans with ZERO exchanges below the
     * SortMergeJoin (PlanInvariantsSpec pins that). A fresh session
     * re-attaches the existing bucket files through `CREATE TABLE IF NOT
@@ -296,31 +296,21 @@ object JoinQueries extends QueryModule {
   private val BjBuckets = 8
 
   private def bucketJoin(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(java.nio.file.Paths.get(dir).toAbsolutePath.normalize()
-        .toString.getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val root = graft.Stage.dir("bucket_join").resolve(digest)
+    import graft.sources.Bucketing
+    val root = graft.Stage.fixture("bucket_join", dir) { tmp =>
+      Bucketing.withScratchTable(s)(Bucketing.writeBucketed(
+        Tables.load(s, dir, "lineitem").select("l_orderkey", "l_extendedprice"),
+        _, tmp.resolve("lineitem").toString, "l_orderkey", BjBuckets))
+      Bucketing.withScratchTable(s)(Bucketing.writeBucketed(
+        Tables.load(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
+        _, tmp.resolve("orders").toString, "o_orderkey", BjBuckets))
+    }
     val liPath = root.resolve("lineitem").toString
     val ordPath = root.resolve("orders").toString
-    val liTbl = s"graft_bj_li_$digest"
-    val ordTbl = s"graft_bj_ord_$digest"
-    ReaderQueries.cachedFixture(s"$root/_done", dir) {
-      graft.sources.Bucketing.drop(s, liTbl)
-      graft.sources.Bucketing.drop(s, ordTbl)
-      graft.sources.Bucketing.writeBucketed(
-        Tables.load(s, dir, "lineitem")
-          .select("l_orderkey", "l_extendedprice"),
-        liTbl, liPath, "l_orderkey", BjBuckets)
-      graft.sources.Bucketing.writeBucketed(
-        Tables.load(s, dir, "orders")
-          .select("o_orderkey", "o_orderpriority"),
-        ordTbl, ordPath, "o_orderkey", BjBuckets)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/_done"), "ok")
-    }
-    // a fresh JVM has the files but an empty in-memory catalog:
-    // re-attach by DDL (idempotent, metadata-only)
+    val liTbl = s"graft_bj_li_${root.getFileName}"
+    val ordTbl = s"graft_bj_ord_${root.getFileName}"
+    // attach by DDL (idempotent, metadata-only), then re-list the files:
+    // a rebuilt fixture has new files at the same location
     s.sql(s"""CREATE TABLE IF NOT EXISTS $liTbl
              |(l_orderkey BIGINT, l_extendedprice DOUBLE)
              |USING PARQUET CLUSTERED BY (l_orderkey)
@@ -331,6 +321,7 @@ object JoinQueries extends QueryModule {
              |USING PARQUET CLUSTERED BY (o_orderkey)
              |SORTED BY (o_orderkey) INTO $BjBuckets BUCKETS
              |LOCATION '$ordPath'""".stripMargin.replace('\n', ' '))
+    Seq(liTbl, ordTbl).foreach(s.catalog.refreshTable)
     s.table(liTbl)
       .join(s.table(ordTbl), col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderpriority")

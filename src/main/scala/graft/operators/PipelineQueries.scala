@@ -425,7 +425,7 @@ object PipelineQueries extends QueryModule {
   /** PARTITION-PRUNED layout scan — the Hive-style directory-layout half
     * of the storage story (zorder_layout is the intra-file half): the
     * events table is written ONCE partitioned by event-time day
-    * (`write.partitionBy`, cachedFixture so re-runs never pay), then
+    * (`write.partitionBy`, a Stage.fixture so re-runs never pay), then
     * read back with a day predicate. Catalyst resolves the predicate
     * against the PARTITION column at file-listing time — non-matching
     * day directories are never even opened, the physical scan carries
@@ -439,18 +439,11 @@ object PipelineQueries extends QueryModule {
   private val DayMicros = 86400L * 1000000L
 
   private def partitionPrune(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(java.nio.file.Paths.get(dir).toAbsolutePath.normalize()
-        .toString.getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val stage = graft.Stage.dir("partition_prune").resolve(digest).toString
     val withDay = Tables.load(s, dir, "events")
       .withColumn("day", expr(s"unix_micros(ts) div $DayMicros"))
-    ReaderQueries.cachedFixture(s"$stage/_done", dir) {
-      withDay.write.mode("overwrite").partitionBy("day").parquet(stage)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$stage/_done"), "ok")
-    }
+    val stage = graft.Stage.fixture("partition_prune", dir) { tmp =>
+      withDay.write.partitionBy("day").parquet(tmp.toString)
+    }.toString
     // the cut day becomes a LITERAL in the plan (a cheap ts-column-only
     // scan of the raw table), so pruning is static, not a runtime
     // subquery — the shape a daily-incremental job has anyway. An EMPTY

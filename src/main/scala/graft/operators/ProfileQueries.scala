@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftSessions, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.streaming.Bounded
 import graft.profiler.{Codec, Profiler, ProfilerOptions}
 
 /** Oracle coverage for the profiler's OWN algebra — the subsystems the
@@ -569,19 +570,12 @@ object ProfileQueries extends QueryModule {
     val li = Tables.load(s, dir, "lineitem")
       .select("l_orderkey", "l_quantity", "l_returnflag")
       .filter(col("l_orderkey") % StreamMod < StreamKeep)
-    // digest covers the slice params too: changing them must invalidate
+    // the key covers the slice params too: changing them must rebuild
     // the staged files, not silently replay the old slice
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest((java.nio.file.Paths.get(dir).toAbsolutePath.normalize()
-        .toString + s"#$StreamMod/$StreamKeep/$StreamFiles")
-        .getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val stage = graft.Stage.dir("stream_profile").resolve(digest).toString
-    ReaderQueries.cachedFixture(s"$stage/_done", dir) {
-      li.drop("l_orderkey").repartition(StreamFiles)
-        .write.mode("overwrite").parquet(stage)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$stage/_done"), "ok")
+    val staged = li.drop("l_orderkey")
+    val stage = graft.Stage.fixture("stream_profile", dir,
+        s"$StreamMod/$StreamKeep/$StreamFiles") { tmp =>
+      staged.repartition(StreamFiles).write.parquet(tmp.toString)
     }
     val opts = ProfilerOptions(
       computeCorrelation = false, computeLabels = false,
@@ -595,18 +589,11 @@ object ProfileQueries extends QueryModule {
     // a batch counts when the profile's row count grows: AvailableNow may
     // add an empty tail, and probing each batch for rows would cost a job
     // on the stream's clone session
-    val sink = GraftSessions.foreachBatchOn(s) { (batch, id) =>
+    Bounded.replay(s, stage.toString, staged.schema, "stream_profile") { (batch, id) =>
       val before = sp.current.fold(0L)(_.rowCount)
       sp.sink(batch, id)
       if (sp.current.fold(0L)(_.rowCount) > before) nBatches += 1
     }
-    val schema = s.read.parquet(stage).schema
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-      .writeStream.foreachBatch(sink)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val p = sp.current.get
     val qty = p.column("l_quantity").get
     val qn = qty.numeric.get
@@ -672,16 +659,9 @@ object ProfileQueries extends QueryModule {
       .filter(col("l_orderkey") % StreamMod < StreamKeep)
       .select(col("l_quantity"), col("l_returnflag"),
         year(to_date(col("l_shipdate"))).as("y"))
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest((java.nio.file.Paths.get(dir).toAbsolutePath.normalize()
-        .toString + s"#gate$StreamMod/$StreamKeep/$StreamFiles")
-        .getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val stage = graft.Stage.dir("stream_gate").resolve(digest).toString
-    ReaderQueries.cachedFixture(s"$stage/_done", dir) {
-      li.repartition(StreamFiles).write.mode("overwrite").parquet(stage)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$stage/_done"), "ok")
+    val stage = graft.Stage.fixture("stream_gate", dir,
+        s"$StreamMod/$StreamKeep/$StreamFiles") { tmp =>
+      li.repartition(StreamFiles).write.parquet(tmp.toString)
     }
     // Gate.check never reads vocab or exemplars; at 4 micro-batches ×
     // ~7 year-groups the per-group exemplar probes alone were ~28 of
@@ -697,22 +677,15 @@ object ProfileQueries extends QueryModule {
       computeVocab = false, computeExemplars = false,
       keyDomainBounded = true)
     val slots = scala.collection.mutable.Map[Long, graft.profiler.Profile]()
-    // each micro-batch is re-bound onto `s` (as StreamingProfiler.sink
-    // does), so its generated classes compile once per session, not once
-    // per stream. An empty batch needs no emptiness probe: with a bounded
+    // each micro-batch is re-bound onto `s` (Bounded.replay), so its
+    // generated classes compile once per session, not once per stream.
+    // An empty batch needs no emptiness probe: with a bounded
     // key domain its split runs pass 1 only and yields no groups.
-    val sink = GraftSessions.foreachBatchOn(s) { (batch, _) =>
+    Bounded.replay(s, stage.toString, li.schema, "stream_gate") { (batch, _) =>
       Profiler.profileSplit(batch, "y", opts).foreach { case (yy, p) =>
         slots(yy) = slots.get(yy).map(_.merge(p)).getOrElse(p)
       }
     }
-    val schema = s.read.parquet(stage).schema
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-      .writeStream.foreachBatch(sink)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val years = slots.keys.toSeq.sorted
     // the oracle is GENERATED over StreamGateYearDomain — a realized
     // year outside it would be silently absent from the oracle and

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -24,45 +24,29 @@ object ReaderQueries extends QueryModule {
   private lazy val FixturePath =
     graft.Stage.path("sniff_profile", "orders_data.txt")
 
-  /** Fixture idempotence: the fixtures are deterministic functions of the
-    * (immutable) sfDir tables, so rebuilding them on every run only adds
-    * writer time to the benched query — which the DuckDB side (reading
-    * the pre-built file) never pays. A `<path>.src` marker records which
-    * sfDir built the fixture; the build closure runs only when the marker
-    * is absent or names a different source dir. */
-  private[operators] def cachedFixture(path: String, srcDir: String)
-      (build: => Unit): Unit = {
-    val marker = Paths.get(path + ".src")
-    val key = Paths.get(srcDir).toAbsolutePath.normalize().toString
-    val fresh = Files.exists(Paths.get(path)) && Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!fresh) {
-      // fixture builders must not depend on another query having created
-      // the shared fixture dir first (suite subsets run in any order)
-      Option(Paths.get(path).getParent).foreach(Files.createDirectories(_))
-      build
-      Files.write(marker, key.getBytes("UTF-8"))
-    }
-  }
+  /** The reader fixture at `path` (a [[graft.Stage.fixture]] under
+    * `sniff_profile`, at the fixed path the oracle SQL reads), built from
+    * the tables of `srcDir` by `build`. The fixtures are deterministic
+    * functions of those tables, so rebuilding them on every run would only
+    * add writer time to the benched query, which the DuckDB side (reading
+    * the pre-built file) never pays. */
+  private def fixture(path: String, srcDir: String)(build: Path => Unit): Unit =
+    graft.Stage.fixture("sniff_profile", srcDir,
+      name = Paths.get(path).getFileName.toString)(build)
 
   /** Write the fixture with Spark's distributed CSV writer (coalesced to
-    * one part so the oracle reads a single file), then move the part file
-    * to the stable mislabeled path. Null injection: every 7th order key
-    * blanks o_priority, so null-sentinel handling is on the hash path. */
-  private def writeFixture(s: SparkSession, dir: String): Unit = {
+    * one part so the oracle reads a single file) at `to`. Null
+    * injection: every 7th order key blanks o_priority, so null-sentinel
+    * handling is on the hash path. */
+  private def writeFixture(s: SparkSession, dir: String, to: Path): Unit = {
     val o = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"),
         when(col("o_orderkey") % 7 === 0, lit(null))
           .otherwise(col("o_orderpriority")).as("o_priority"))
-    val tmpDir = FixturePath + ".staging"
-    o.coalesce(1).write.mode("overwrite")
-      .option("sep", "|").option("header", true).csv(tmpDir)
-    val part = new java.io.File(tmpDir).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-      .getOrElse(sys.error(s"no part file written under $tmpDir"))
-    Files.move(part.toPath, Paths.get(FixturePath),
-      StandardCopyOption.REPLACE_EXISTING)
+    graft.Stage.singlePart(to, ".csv") {
+      o.coalesce(1).write.option("sep", "|").option("header", true).csv(_)
+    }
   }
 
   /** sniff → read → profile-style aggregate. Only order-insensitive exact
@@ -72,7 +56,7 @@ object ReaderQueries extends QueryModule {
     * decisions belong, before the min/max (string min/max would be
     * lexicographic and wrong). */
   private def sniffProfile(s: SparkSession, dir: String): DataFrame = {
-    cachedFixture(FixturePath, dir) { writeFixture(s, dir) }
+    fixture(FixturePath, dir)(writeFixture(s, dir, _))
     val loaded = graft.sources.GraftData.load(s, FixturePath)
     require(loaded.format == "csv",
       s"sniffer detected '${loaded.format}', expected csv")
@@ -125,12 +109,12 @@ object ReaderQueries extends QueryModule {
       .stripMargin
 
   private def avroScan(s: SparkSession, dir: String): DataFrame = {
-    cachedFixture(AvroFixturePath, dir) {
+    fixture(AvroFixturePath, dir) { to =>
       val rows = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           col("o_orderpriority"))
         .collect() // fixture bootstrap only — the read under test is distributed
-      graft.sources.AvroSource.write(AvroFixturePath, AvroFixtureSchema,
+      graft.sources.AvroSource.write(to.toString, AvroFixtureSchema,
         rows.iterator.map { r =>
           Map[String, Any](
             "o_orderkey" -> r.getLong(0),
@@ -179,7 +163,7 @@ object ReaderQueries extends QueryModule {
     graft.Stage.path("sniff_profile", "orders_rows.csv")
 
   private def jsonScan(s: SparkSession, dir: String): DataFrame = {
-    cachedFixture(JsonFixturePath, dir) {
+    fixture(JsonFixturePath, dir) { to =>
       val o = Tables.load(s, dir, "orders").select(
         col("o_orderkey"),
         struct(
@@ -187,13 +171,7 @@ object ReaderQueries extends QueryModule {
           when(col("o_orderkey") % 3 === 0, lit(null))
             .otherwise(col("o_orderpriority")).as("priority")).as("meta"),
         col("o_totalprice"))
-      val tmpDir = JsonFixturePath + ".staging"
-      o.coalesce(1).write.mode("overwrite").json(tmpDir)
-      val part = new java.io.File(tmpDir).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        .getOrElse(sys.error(s"no part file written under $tmpDir"))
-      Files.move(part.toPath, Paths.get(JsonFixturePath),
-        StandardCopyOption.REPLACE_EXISTING)
+      graft.Stage.singlePart(to, ".json")(o.coalesce(1).write.json(_))
     }
     val loaded = graft.sources.GraftData.load(s, JsonFixturePath)
     require(loaded.format == "json",
@@ -237,7 +215,7 @@ object ReaderQueries extends QueryModule {
     graft.Stage.path("sniff_profile", "orders_wide.txt")
 
   private def csvUtf16(s: SparkSession, dir: String): DataFrame = {
-    cachedFixture(Utf16FixturePath, dir) {
+    fixture(Utf16FixturePath, dir) { to =>
       val rows = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .collect() // fixture bootstrap only — the read under test is distributed
@@ -248,7 +226,7 @@ object ReaderQueries extends QueryModule {
       }
       val bytes = Array[Byte](0xFF.toByte, 0xFE.toByte) ++
         sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_16LE)
-      Files.write(Paths.get(Utf16FixturePath), bytes)
+      Files.write(to, bytes)
     }
     val loaded = graft.sources.GraftData.load(s, Utf16FixturePath)
     require(loaded.format == "csv",

@@ -607,41 +607,40 @@ object SimilarityQueries extends QueryModule {
     * its probed buckets. The probed-cell collect is bounded by
     * queries × nprobe. */
   private def indexPersist(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest((java.nio.file.Paths.get(dir).toAbsolutePath.normalize()
-        .toString + s"#ivf$NCentroids/$NProbe").getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val root = graft.Stage.dir("index_persist").resolve(digest)
-    val postPath = root.resolve("postings").toString
-    val centPath = root.resolve("codebook").toString
-    val postTbl = s"graft_ivf_post_$digest"
-    ReaderQueries.cachedFixture(s"$root/_done", dir) {
-      graft.sources.Bucketing.drop(s, postTbl)
+    val root = graft.Stage.fixture("index_persist", dir,
+        s"ivf$NCentroids/$NProbe") { tmp =>
       val e = vecs(s, dir)
       val cents = firstKCentroids(e)
-      graft.sources.Bucketing.writeBucketed(
-        assignCell(e, cents)
-          .select(col("vec_id"), col("v"), col("nrm"), col("cell")),
-        postTbl, postPath, "cell", IdxBuckets)
-      // codebook: k × dim doubles + the SAME driver-computed norms
-      // assignCell embeds as literals (left-to-right fold, bit-identical
-      // to the oracle's list_sum)
-      import s.implicits._
-      cents.map { case (j, v) =>
-        (j, v.toSeq, math.sqrt(v.map(x => x * x).sum)) }
-        .toDF("c_id", "cv", "cn")
-        .coalesce(1).write.mode("overwrite").parquet(centPath)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/_done"), "ok")
+      graft.sources.Bucketing.withScratchTable(s)(
+        graft.sources.Bucketing.writeBucketed(
+          assignCell(e, cents)
+            .select(col("vec_id"), col("v"), col("nrm"), col("cell")),
+          _, tmp.resolve("postings").toString, "cell", IdxBuckets))
+      writeCodebook(s, cents, tmp)
     }
-    ivfPersistedSearch(s, dir, postTbl, postPath, centPath)
+    ivfPersistedSearch(s, dir, s"graft_ivf_post_${root.getFileName}", root)
+  }
+
+  /** The persisted codebook's schema: centroid id, vector and norm. */
+  private val CodebookSchema = "c_id INT, cv ARRAY<DOUBLE>, cn DOUBLE"
+
+  /** Write the codebook of an index under `root`: k × dim doubles plus
+    * the SAME driver-computed norms [[assignCell]] embeds as literals
+    * (left-to-right fold, bit-identical to the oracle's list_sum). */
+  private def writeCodebook(s: SparkSession, cents: Seq[(Int, Array[Double])],
+      root: java.nio.file.Path): Unit = {
+    import s.implicits._
+    cents.map { case (j, v) =>
+      (j, v.toSeq, math.sqrt(v.map(x => x * x).sum)) }
+      .toDF("c_id", "cv", "cn")
+      .coalesce(1).write.parquet(root.resolve("codebook").toString)
   }
 
   /** The reload side shared by index_persist and index_update: a FRESH
     * session re-attaches the bucketed postings metadata-only and runs
     * the nprobe search purely from the persisted artifacts. */
   private def ivfPersistedSearch(s: SparkSession, dir: String,
-      postTbl: String, postPath: String, centPath: String): DataFrame = {
+      postTbl: String, root: java.nio.file.Path): DataFrame = {
     val s2 = s.newSession()
     // keep the bucketed scan ON so the probe IN filter bucket-prunes:
     // the auto-bucketed-scan rule would disable it (the candidate join
@@ -653,9 +652,10 @@ object SimilarityQueries extends QueryModule {
                |(vec_id BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE, cell INT)
                |USING PARQUET CLUSTERED BY (cell)
                |SORTED BY (cell) INTO $IdxBuckets BUCKETS
-               |LOCATION '$postPath'""").stripMargin.replace('\n', ' '))
-    val cents = s2.read.parquet(centPath)
-      .select(col("c_id"), col("cv"), col("cn"))
+               |LOCATION '${root.resolve("postings")}'""").stripMargin
+      .replace('\n', ' '))
+    val cents = s2.read.schema(CodebookSchema)
+      .parquet(root.resolve("codebook").toString)
     val q = vecs(s2, dir).filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qn"))
@@ -722,47 +722,36 @@ object SimilarityQueries extends QueryModule {
     * never shuffled, never rewritten. Search cost is unchanged
     * (~nprobe/k of base+batch by physical bucket pruning). */
   private def indexUpdate(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest((java.nio.file.Paths.get(dir).toAbsolutePath.normalize()
-        .toString + s"#ivfupd$NCentroids/$NProbe").getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val root = graft.Stage.dir("index_update").resolve(digest)
-    val postPath = root.resolve("postings").toString
-    val centPath = root.resolve("codebook").toString
-    val postTbl = s"graft_ivf_upd_$digest"
-    ReaderQueries.cachedFixture(s"$root/_done", dir) {
-      graft.sources.Bucketing.drop(s, postTbl)
+    val root = graft.Stage.fixture("index_update", dir,
+        s"ivf$NCentroids/$NProbe") { tmp =>
       val e = vecs(s, dir)
       val split = math.max(NCentroids.toLong, e.count() * 3 / 4)
       val base = e.filter(col("vec_id") < split)
       val batch = e.filter(col("vec_id") >= split)
       // ---- base build: identical to index_persist ----
       val cents = firstKCentroids(base)
-      graft.sources.Bucketing.writeBucketed(
-        assignCell(base, cents)
-          .select(col("vec_id"), col("v"), col("nrm"), col("cell")),
-        postTbl, postPath, "cell", IdxBuckets)
-      import s.implicits._
-      cents.map { case (j, v) =>
-        (j, v.toSeq, math.sqrt(v.map(x => x * x).sum)) }
-        .toDF("c_id", "cv", "cn")
-        .coalesce(1).write.mode("overwrite").parquet(centPath)
-      // ---- the append: route the batch from the PERSISTED codebook
-      // (k × dim — a bounded reload, the same artifact a new ingest
-      // job would attach) and insert into the bucketed postings.
-      // insertInto resolves by POSITION against the catalog schema
-      // (vec_id, v, nrm, cell) and applies its bucket spec.
-      val persistedCents = s.read.parquet(centPath)
-        .select("c_id", "cv").collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1).toSeq
-      assignCell(batch, persistedCents)
-        .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-        .write.mode("append").insertInto(postTbl)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/_done"), "ok")
+      writeCodebook(s, cents, tmp)
+      graft.sources.Bucketing.withScratchTable(s) { t =>
+        graft.sources.Bucketing.writeBucketed(
+          assignCell(base, cents)
+            .select(col("vec_id"), col("v"), col("nrm"), col("cell")),
+          t, tmp.resolve("postings").toString, "cell", IdxBuckets)
+        // ---- the append: route the batch from the PERSISTED codebook
+        // (k × dim — a bounded reload, the same artifact a new ingest
+        // job would attach) and insert into the bucketed postings.
+        // insertInto resolves by POSITION against the catalog schema
+        // (vec_id, v, nrm, cell) and applies its bucket spec.
+        val persistedCents = s.read.schema(CodebookSchema)
+          .parquet(tmp.resolve("codebook").toString)
+          .select("c_id", "cv").collect()
+          .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+          .sortBy(_._1).toSeq
+        assignCell(batch, persistedCents)
+          .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
+          .write.mode("append").insertInto(t)
+      }
     }
-    ivfPersistedSearch(s, dir, postTbl, postPath, centPath)
+    ivfPersistedSearch(s, dir, s"graft_ivf_upd_${root.getFileName}", root)
   }
 
   /** Oracle: the raw-vector nprobe search over the full (base ∪ batch)

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftSessions, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import graft.sources.GraftData
+import graft.streaming.Bounded
 
 /** Oracle coverage for the Structured Streaming path (SURVEY §2.10): the
   * events table is replayed through a FILE STREAM (Trigger.AvailableNow,
@@ -20,32 +21,25 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingQueries extends QueryModule {
 
   private val WindowSecs = 21600L // 6 hours
-  private val SinkName = "graft_stream_windows"
 
-  /** Stage `events.parquet` behind a symlink dir and open it as a
-    * normalized file stream — shared front door of every events-driven
-    * streaming query here. The file stream source ingests DIRECTORIES
-    * (its arrival contract); the target is ABSOLUTIZED (a relative sfDir
-    * would otherwise resolve against the stage dir — a silently-broken
-    * link), the stage name includes a digest of the absolute path
-    * (sanitization alone maps distinct dirs to one name), and the link
-    * is recreated per run (a stale or broken link would survive a
-    * follow-links existence check). events.ts is nanos-long in older
-    * generations — same legacy knob + ts normalization as Tables.load,
-    * but through readStream. */
+  /** `events.parquet` as a normalized file stream — the shared front
+    * door of every events-driven streaming query here. The file stream
+    * source ingests DIRECTORIES (its arrival contract), so the table is
+    * staged as a [[graft.Stage.fixture]] directory holding one link to
+    * it (absolute, so it never resolves against the stage dir). The
+    * fixture is built once per source state and never rewritten while
+    * it holds, so concurrent streams over one `dir` share it. The
+    * stream's schema is the table's footer schema; events.ts in the
+    * TIMESTAMP(NANOS) shape needs a session that reads it as a long, as
+    * every [[graft.GraftSession]] session does, and is normalized as
+    * [[graft.Tables.load]] normalizes it. */
   private[graft] def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/events.parquet"
-    val target = java.nio.file.Paths.get(path).toAbsolutePath.normalize()
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(target.toString.getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val stage = graft.Stage.dir("stream_events").resolve(digest)
-    java.nio.file.Files.createDirectories(stage)
-    val link = stage.resolve("events.parquet")
-    java.nio.file.Files.deleteIfExists(link)
-    java.nio.file.Files.createSymbolicLink(link, target)
-    val schema = s.read.parquet(path).schema
+    val stage = graft.Stage.fixture("stream_events", dir) { tmp =>
+      java.nio.file.Files.createDirectories(tmp)
+      java.nio.file.Files.createSymbolicLink(tmp.resolve("events.parquet"),
+        java.nio.file.Paths.get(path).toAbsolutePath.normalize())
+    }
     // maxFilesPerTrigger=1 over the single staged file PINS the replay
     // at exactly one data micro-batch: without the option the source's
     // own batching heuristics decide, and a run that happens to split
@@ -54,8 +48,8 @@ object StreamingQueries extends QueryModule {
     // on identical code). stream_profile/stream_neardup pin the same
     // way over their fixed 4-file stages.
     graft.Tables.normalizeEventsTs(
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(stage.toString))
+      s.readStream.schema(GraftData.parquet(s, path).schema)
+        .option("maxFilesPerTrigger", 1).parquet(stage.toString))
   }
 
   private def windowsFrame(s: SparkSession, dir: String): DataFrame =
@@ -68,24 +62,14 @@ object StreamingQueries extends QueryModule {
         min("event_id").as("min_event"),
         max("event_id").as("max_event"))
 
-  private def streamWindows(s: SparkSession, dir: String): DataFrame = {
-    val stream = windowsFrame(s, dir)
-    scala.util.Try(s.catalog.dropTempView(SinkName))
-    val q = stream.writeStream
-      .format("memory").queryName(SinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamMetrics.dump(q, "stream_windows")
-    s.table(SinkName)
+  private def streamWindows(s: SparkSession, dir: String): DataFrame =
+    Bounded.drain(windowsFrame(s, dir), "stream_windows", "complete")
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("window_start"),
         col("event_type"), col("n"), col("sum_value"),
         col("min_event"), col("max_event"))
       .orderBy("window_start", "event_type")
-  }
 
   private val streamWindowsSql =
     s"""SELECT strftime(to_timestamp((epoch_us(ts) // ${WindowSecs}000000)
@@ -99,7 +83,6 @@ object StreamingQueries extends QueryModule {
        |ORDER BY window_start, event_type""".stripMargin
 
   // ------------------------------------------------------------ stream_dedup
-  private val DedupSinkName = "graft_stream_dedup"
   private val DedupKeyMod = 500
 
   /** Streaming EXACT DEDUP — the standing-pipeline twin of `dedup_exact`:
@@ -122,23 +105,13 @@ object StreamingQueries extends QueryModule {
       .groupBy("win_start")
       .agg(count(lit(1)).as("n_unique_keys"))
 
-  private def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    val stream = dedupFrame(s, dir)
-    scala.util.Try(s.catalog.dropTempView(DedupSinkName))
-    val q = stream.writeStream
-      .format("memory").queryName(DedupSinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamMetrics.dump(q, "stream_dedup")
-    s.table(DedupSinkName)
+  private def streamDedup(s: SparkSession, dir: String): DataFrame =
+    Bounded.drain(dedupFrame(s, dir), "stream_dedup", "complete")
       .select(
         date_format(timestamp_seconds(col("win_start")),
           "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("n_unique_keys"))
       .orderBy("window_start")
-  }
 
   private val streamDedupSql =
     s"""SELECT strftime(to_timestamp((epoch_us(ts) // ${WindowSecs}000000)
@@ -178,53 +151,26 @@ object StreamingQueries extends QueryModule {
 
   private def streamNearDup(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.load(s, dir, "documents").select("doc_id", "text")
-    // key the staged input by CONTENT, not just path: size+mtime of the
-    // source parquet ride the digest, so regenerating the data in place
-    // invalidates the stage instead of silently replaying stale batches
-    val srcFile = java.nio.file.Paths.get(dir, "documents.parquet")
-    val srcSig =
-      if (java.nio.file.Files.exists(srcFile))
-        s"${java.nio.file.Files.size(srcFile)}:" +
-          s"${java.nio.file.Files.getLastModifiedTime(srcFile).toMillis}"
-      else "nofile"
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest((java.nio.file.Paths.get(dir).toAbsolutePath.normalize()
-        .toString + "|" + srcSig).getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val root = graft.Stage.dir("stream_neardup").resolve(digest)
-    val stage = root.resolve("in")
-    val indexDir = root.resolve("index").toString
-    val stagedOk = stage.resolve("_staged_ok")
-    // fresh run: the index accumulates during replay, so a stale one
-    // from a previous invocation would double-flag everything. The
-    // STAGED INPUT is digest-keyed to the source file's (path, size,
-    // mtime), so it is reusable across invocations AND self-invalidates
-    // when the data is regenerated in place (the marker is written only
-    // after all batch files + mtimes land) — re-staging cost 4 filtered
-    // writes of the documents table per run, ~1.5 s of the sf0.1 wall.
-    org.apache.commons.io.FileUtils
-      .deleteDirectory(root.resolve("index").toFile)
-    if (!java.nio.file.Files.exists(stagedOk)) {
-      org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
-      java.nio.file.Files.createDirectories(stage)
+    // the staged batches are a fixture: built once per source state and
+    // reused (re-staging cost 4 filtered writes of the documents table
+    // per run, ~1.5 s of the sf0.1 wall)
+    val stage = graft.Stage.fixture("stream_neardup", dir,
+        s"batches$NearDupBatches") { tmp =>
       (0 until NearDupBatches).foreach { k =>
-        val f = stage.resolve(f"batch-$k%04d.parquet")
-        docs.filter(col("doc_id") % NearDupBatches === k)
-          .coalesce(1).write.mode("overwrite").parquet(f.toString + ".dir")
-        val part = new java.io.File(f.toString + ".dir").listFiles()
-          .find(x => x.getName.startsWith("part-")
-            && x.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file for batch $k"))
-        java.nio.file.Files.move(part.toPath, f,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(f.toString + ".dir"))
+        val f = tmp.resolve(f"batch-$k%04d.parquet")
+        graft.Stage.singlePart(f, ".parquet") { out =>
+          docs.filter(col("doc_id") % NearDupBatches === k)
+            .coalesce(1).write.parquet(out)
+        }
         // strictly increasing mtimes pin the FileStreamSource replay order
         java.nio.file.Files.setLastModifiedTime(f,
           java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 60000L))
       }
-      java.nio.file.Files.createFile(stagedOk)
     }
+    // fresh run: the index accumulates during replay, so a stale one
+    // from a previous invocation would double-flag everything
+    val indexDir = s"$stage.index"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(indexDir))
     val results =
       scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     // every batch, the first included, builds the same plan: the index
@@ -234,7 +180,7 @@ object StreamingQueries extends QueryModule {
     val bandsSchema = DedupQueries.bandsOf(
       DedupQueries.minhashWide(docs, useMd5 = true)).schema
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
-    val sink = GraftSessions.foreachBatchOn(s) { (batch, _) =>
+    Bounded.replay(s, stage.toString, docs.schema, "stream_neardup") { (batch, _) =>
       // ONE pass over the batch: an eager local checkpoint of its bands,
       // which both the probe and the append read (a cache would be built
       // twice: AQE materializes each cached reference as its own
@@ -278,13 +224,6 @@ object StreamingQueries extends QueryModule {
           admitted))
       }
     }
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage.toString)
-      .writeStream.foreachBatch(sink)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamMetrics.dump(q, "stream_neardup")
     import s.implicits._
     results.sortBy(_._1).toSeq
       .toDF("batch", "n_docs", "n_flagged", "n_admitted")
@@ -339,7 +278,6 @@ object StreamingQueries extends QueryModule {
 
   // ------------------------------------------------------ stream_sessions
   private val SessionGapSec = 1800
-  private val SessSinkName = "graft_stream_sessions"
 
   /** STREAMING sessionization via `session_window` — the native
     * merging-session operator (not the batch lag/running-sum plan
@@ -360,17 +298,8 @@ object StreamingQueries extends QueryModule {
         session_window(col("ts"), s"$SessionGapSec seconds"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
 
-  private def streamSessions(s: SparkSession, dir: String): DataFrame = {
-    val stream = sessionsFrame(s, dir)
-    scala.util.Try(s.catalog.dropTempView(SessSinkName))
-    val q = stream.writeStream
-      .format("memory").queryName(SessSinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamMetrics.dump(q, "stream_sessions")
-    s.table(SessSinkName)
+  private def streamSessions(s: SparkSession, dir: String): DataFrame =
+    Bounded.drain(sessionsFrame(s, dir), "stream_sessions", "complete")
       .select(col("user_id"), col("n_events"),
         // session_window.end = last_ts + gap; take the gap back out so
         // dur matches the batch (max ts − min ts) definition
@@ -383,7 +312,6 @@ object StreamingQueries extends QueryModule {
         round(avg("n_events"), 6).as("avg_events_per_session"),
         max("n_events").as("max_session_events"),
         round(avg("dur_sec"), 3).as("avg_session_dur_sec"))
-  }
 
   /** Batch restatement: gaps-and-islands with the same `> gap` break
     * (session_window merges windows that touch, i.e. keeps gap ≤ the
@@ -434,16 +362,7 @@ object StreamingQueries extends QueryModule {
       .groupBy(
         session_window(col("ts"), s"$SessionGapSec seconds"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
-    val sink = SessSinkName + "_append"
-    scala.util.Try(s.catalog.dropTempView(sink))
-    val q = stream.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamMetrics.dump(q, "stream_sessions_append")
-    s.table(sink)
+    Bounded.drain(stream, "stream_sessions_append", "append")
       .agg(
         count(lit(1)).as("n_finalized_sessions"),
         countDistinct("user_id").as("n_users"),
@@ -451,7 +370,6 @@ object StreamingQueries extends QueryModule {
   }
 
   // -------------------------------------------------------- stream_enrich
-  private val EnrichSinkName = "graft_stream_enrich"
 
   /** Stream-static ENRICHMENT join — the standing-pipeline lookup shape:
     * every micro-batch of the event stream joins the static customer
@@ -472,23 +390,13 @@ object StreamingQueries extends QueryModule {
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
   }
 
-  private def streamEnrich(s: SparkSession, dir: String): DataFrame = {
-    val stream = enrichFrame(s, dir)
-    scala.util.Try(s.catalog.dropTempView(EnrichSinkName))
-    val q = stream.writeStream
-      .format("memory").queryName(EnrichSinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamMetrics.dump(q, "stream_enrich")
-    s.table(EnrichSinkName)
+  private def streamEnrich(s: SparkSession, dir: String): DataFrame =
+    Bounded.drain(enrichFrame(s, dir), "stream_enrich", "complete")
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("window_start"),
         col("c_mktsegment"), col("n"), col("sum_value"))
       .orderBy("window_start", "c_mktsegment")
-  }
 
   private val streamEnrichSql =
     s"""SELECT strftime(to_timestamp((epoch_us(ts) // ${WindowSecs}000000)
@@ -500,7 +408,6 @@ object StreamingQueries extends QueryModule {
        |ORDER BY window_start, c_mktsegment""".stripMargin
 
   // ---------------------------------------------------------- stream_join
-  private val JoinSinkName = "graft_stream_join"
   private val JoinUserMod = 20
   private val JoinHorizonSec = 3600L
 
@@ -536,18 +443,8 @@ object StreamingQueries extends QueryModule {
     streamJoinImpl(s, dir, suffix = "")
 
   private def streamJoinImpl(s: SparkSession, dir: String,
-      suffix: String): DataFrame = {
-    val joined = joinFrame(s, dir)
-    val sink = JoinSinkName + suffix
-    scala.util.Try(s.catalog.dropTempView(sink))
-    val q = joined.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamMetrics.dump(q, "stream_join" + suffix)
-    s.table(sink)
+      suffix: String): DataFrame =
+    Bounded.drain(joinFrame(s, dir), "stream_join" + suffix, "append")
       .agg(
         count(lit(1)).as("n_pairs"),
         countDistinct("v_user").as("n_users"),
@@ -555,7 +452,6 @@ object StreamingQueries extends QueryModule {
           .cast("double") / 1e6), 3).as("avg_gap_sec"),
         max((unix_micros(col("p_ts")) - unix_micros(col("v_ts")))
           .cast("double") / 1e6).as("max_gap_sec"))
-  }
 
   /** RocksDB-state-store twin of [[streamJoin]] — the DEPLOYMENT
     * configuration a standing 100 TB stream-stream join runs (state

@@ -24,6 +24,14 @@ object Bucketing {
   def drop(spark: SparkSession, table: String): Unit =
     spark.sql(s"DROP TABLE IF EXISTS $table")
 
+  /** `f` given a fresh table name, dropped when `f` returns: for bucketed
+    * files that are read elsewhere through their own DDL (the bucket id
+    * is in each file's name, the bucket spec in the DDL). */
+  def withScratchTable[T](spark: SparkSession)(f: String => T): T = {
+    val t = "graft_scratch_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    try f(t) finally drop(spark, t)
+  }
+
   /** True when the physical plan of `df` contains no shuffle exchange —
     * the property bucketing is meant to buy. */
   def isExchangeFree(df: DataFrame): Boolean =

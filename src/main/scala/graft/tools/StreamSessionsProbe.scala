@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Floor decomposition for `stream_sessions` — the largest remaining
   * streaming bench entry (r15: 5.0 s sf1 vs a 0.17 s batch oracle
@@ -60,16 +59,9 @@ object StreamSessionsProbe {
           countDistinct("user_id").as("n_users"),
           round(avg("n_events"), 6).as("avg_events_per_session"))
 
-    def minimalStream(d: String): Unit = {
-      val sink = "graft_sessions_probe_floor"
-      scala.util.Try(spark.catalog.dropTempView(sink))
-      val q = eventsStream(spark, d)
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(sink).collect()
-    }
+    def minimalStream(d: String): Unit =
+      graft.streaming.Bounded.drain(eventsStream(spark, d).agg(count(lit(1)).as("n")),
+        "sessions_probe_floor", "complete").collect()
 
     val entry = graft.SparkEntry.queries("stream_sessions")
 

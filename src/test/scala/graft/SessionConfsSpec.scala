@@ -41,9 +41,6 @@ class SessionConfsSpec extends AnyFunSuite {
 
   test("quality_classifier leaves a fresh session's conf entries unchanged") {
     val s = spark.newSession()
-    // Tables.load sets the parquet nanosAsLong read knob for good (a
-    // separate, known leak); load once first so the snapshot holds it
-    Tables.load(s, SparkTestSession.sfDir, "documents")
     val before = s.conf.getAll
     assert(!before.contains(aqe))
     graft.operators.CurationQueries.queries("quality_classifier")(
@@ -77,8 +74,6 @@ class SessionConfsSpec extends AnyFunSuite {
 
   test("stream_join_rocksdb leaves a fresh session's conf entries unchanged") {
     val s = spark.newSession()
-    // Tables.load's nanosAsLong knob, set for good (see quality_classifier)
-    Tables.load(s, SparkTestSession.sfDir, "events")
     val before = s.conf.getAll
     graft.operators.StreamingQueries.streamJoinRocksdb(
       s, SparkTestSession.sfDir).collect()

@@ -2,9 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One of each: the library builds its sessions in [[GraftSession]] and
-  * counts jobs and stages in [[graft.obs.JobCensus]] only, so a second
-  * hand-built session or listener in `src/main` fails here. */
+/** One of each: the library builds its sessions in [[GraftSession]],
+  * counts jobs and stages in [[graft.obs.JobCensus]], reads parquet
+  * schemas in [[graft.sources.GraftData]] and names staged fixtures in
+  * [[Stage]] only, so a second copy of any of these in `src/main` fails
+  * here. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   /** Each `src/main` Scala file's path and code, comments removed. */
@@ -34,5 +36,21 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(filesMatching(
       """\b(?:extends|with|new)\s+(?:org\.apache\.spark\.scheduler\.)?""" +
         """SparkListener(?:Interface)?\b""") == Seq("graft/obs/JobCensus.scala"))
+  }
+
+  test("src/main sets the parquet nanosAsLong read only in GraftSession") {
+    assert(filesMatching("""parquet\.nanosAsLong|LEGACY_PARQUET_NANOS_AS_LONG""") ==
+      Seq("graft/GraftSession.scala"))
+  }
+
+  test("src/main infers a parquet schema only in GraftData") {
+    assert(filesMatching("""\bread(?:Stream)?\s*\.\s*parquet\s*\(""") ==
+      Seq("graft/sources/GraftData.scala"))
+  }
+
+  test("src/main computes staging digests only in Stage") {
+    // a digest in a file that stages something names a staged artifact
+    assert(filesMatching("""\b(?:MessageDigest|DigestUtils)\b""")
+      .intersect(filesMatching("""\bStage\b""")) == Seq("graft/Stage.scala"))
   }
 }

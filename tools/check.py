@@ -64,19 +64,6 @@ def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     skip = set(filter(None,
                       os.environ.get("GRAFT_CHECK_SKIP", "").split(",")))
-    # Reader-query fixtures (target/sniff_profile/*) are rebuilt by each
-    # graft.Verify run FOR ITS OWN sfDir; their oracle SQL reads the same
-    # fixed paths. Checking an OLD dump after a Verify at a different SF
-    # silently compares mismatched data — catch that here.
-    import glob
-    want = os.path.normpath(os.path.abspath(sf_dir))
-    for marker in glob.glob("/root/repo/target/*/*.src"):
-        with open(marker) as mf:
-            got = mf.read().strip()
-        if got and os.path.normpath(got) != want:
-            print(f"WARNING: fixture {marker[:-4]} was built from {got}, "
-                  f"not {sf_dir} — rerun graft.Verify at this SF first; "
-                  "reader-query comparisons below are meaningless")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -84,6 +71,27 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracle = json.load(f)
+    # Reader-query fixtures (target/sniff_profile/*) are rebuilt by each
+    # graft.Verify run FOR ITS OWN sfDir; their oracle SQL reads the same
+    # fixed paths. Checking an OLD dump after a Verify at a different SF
+    # silently compares mismatched data — catch that here. A fixture's
+    # marker <fixture>.src holds its key, the source dir on the first
+    # line; only fixtures some oracle SQL reads by path are checked.
+    import glob
+    want = os.path.normpath(os.path.abspath(sf_dir))
+    stage = os.environ.get("SPARK_GRAFT_STAGE_DIR") or os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "..", "target")
+    sql_text = "\n".join(oracle.values())
+    for marker in glob.glob(os.path.join(stage, "*", "*.src")):
+        fixture = os.path.normpath(marker[:-4])
+        if fixture not in sql_text:
+            continue
+        with open(marker) as mf:
+            got = mf.readline().strip()
+        if got and os.path.normpath(got) != want:
+            print(f"WARNING: fixture {fixture} was built from {got}, "
+                  f"not {sf_dir} — rerun graft.Verify at this SF first; "
+                  "reader-query comparisons below are meaningless")
     n_pass = n_fail = 0
     for name in sorted(os.listdir(out_dir)):
         d = os.path.join(out_dir, name)
