@@ -29,11 +29,13 @@ object GraftSession {
 
   /** A `local[cpus]` session (or the one already running) with shuffle
     * partitions = `cpus`, UTC, TIMESTAMP(NANOS) parquet columns read as
-    * longs, the UI off and WARN logging, then `confs`. */
+    * longs, the UI off, WARN logging and the `graft_*` SQL functions of
+    * [[GraftExtensions]], then `confs`. */
   def apply(cpus: Int = envCpus(), appName: String = "",
       confs: Seq[(String, String)] = Nil): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
+      .withExtensions(new GraftExtensions())
       .config("spark.sql.shuffle.partitions", cpus.toString)
       // single large parquet files split at the default 128 MB starve a
       // 32-thread executor (measured: labeler_votes scan-stage on 6

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -96,23 +96,10 @@ object AdcLut {
     acc
   }
 
-  /** Register `graft_adclut(codes, 'comma,joined,doubles')` — the table
-    * must be a string literal of `java.lang.Double.toString` values
-    * (exact round-trip), the BucketSum constructor-arg pattern. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(FuncName, builder, "built-in")
-  }
-
+  /** The SQL builder of `graft_adclut(codes, 'comma,joined,doubles')`
+    * ([[graft.GraftExtensions]] checks the arity): the table must be a
+    * string literal of `java.lang.Double.toString` values. */
   private[graft] def builder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 2)
-      throw new org.apache.spark.sql.AnalysisException(
-        "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        Map("functionName" -> s"`$FuncName`", "expectedNum" -> "2",
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
     val lut = exprs(1) match {
       case org.apache.spark.sql.catalyst.expressions.Literal(
           v: org.apache.spark.unsafe.types.UTF8String,
@@ -134,8 +121,7 @@ object AdcLut {
   }
 
   def apply(codes: Column, lut: Array[Double]): Column = {
-    import org.apache.spark.sql.functions.{call_function, lit}
-    call_function(FuncName, codes,
-      lit(lut.map(java.lang.Double.toString).mkString(",")))
+    require(lut.nonEmpty, s"$FuncName needs a non-empty table")
+    GraftSessions.column(AdcLut(GraftSessions.expression(codes), lut.toIndexedSeq))
   }
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.{Column, GraftSessions}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.functions.call_function
 
 /** Bloom-filter set membership as session functions — Spark ships
   * `BloomFilterAggregate` / `BloomFilterMightContain` for its own
@@ -25,25 +23,11 @@ object BloomMembership {
   val AggName = "graft_bloom_agg"
   val ProbeName = "graft_bloom_contains"
 
-  /** Idempotent registration, same contract as [[DotProduct.register]]. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val aggId = FunctionIdentifier(AggName)
-    if (!reg.functionExists(aggId))
-      reg.createOrReplaceTempFunction(AggName,
-        exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-        "built-in")
-    val probeId = FunctionIdentifier(ProbeName)
-    if (!reg.functionExists(probeId))
-      reg.createOrReplaceTempFunction(ProbeName,
-        exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-  }
-
   def agg(hashed: Column, nItems: Long, nBits: Long): Column =
-    call_function(AggName, hashed,
-      org.apache.spark.sql.functions.lit(nItems),
-      org.apache.spark.sql.functions.lit(nBits))
+    GraftSessions.column(new BloomFilterAggregate(GraftSessions.expression(hashed),
+      Literal(nItems), Literal(nBits)).toAggregateExpression())
 
   def contains(sketch: Column, hashed: Column): Column =
-    call_function(ProbeName, sketch, hashed)
+    GraftSessions.column(BloomFilterMightContain(GraftSessions.expression(sketch),
+      GraftSessions.expression(hashed)))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -64,23 +64,10 @@ object BucketSum {
     acc
   }
 
-  /** Register `graft_bucketsum(bs, 'comma,joined,longs')` (the table must
-    * be a string literal), idempotent — the TermCounts pattern for
-    * constructor-arg expressions. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(FuncName, builder, "built-in")
-  }
-
+  /** The SQL builder of `graft_bucketsum(bs, 'comma,joined,longs')`
+    * ([[graft.GraftExtensions]] checks the arity): the table must be a
+    * non-empty string literal. */
   private[graft] def builder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 2)
-      throw new org.apache.spark.sql.AnalysisException(
-        "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        Map("functionName" -> s"`$FuncName`", "expectedNum" -> "2",
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
     val table = exprs(1) match {
       case org.apache.spark.sql.catalyst.expressions.Literal(
           v: org.apache.spark.unsafe.types.UTF8String,
@@ -102,7 +89,7 @@ object BucketSum {
   }
 
   def apply(bs: Column, table: Array[Long]): Column = {
-    import org.apache.spark.sql.functions.{call_function, lit}
-    call_function(FuncName, bs, lit(table.mkString(",")))
+    require(table.nonEmpty, s"$FuncName needs a non-empty table")
+    GraftSessions.column(BucketSum(GraftSessions.expression(bs), table.toIndexedSeq))
   }
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -92,24 +91,5 @@ object CharEntropy {
     math.log(n.toDouble) / Log2 - sum / n
   }
 
-  /** Idempotent registration, same contract as [[CharGrams.register]]. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(FuncName, builder, "built-in")
-  }
-
-  /** Arity-checked builder (shared with [[graft.GraftExtensions]]). */
-  private[graft] def builder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        Map("functionName" -> s"`$FuncName`", "expectedNum" -> "1",
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
-    CharEntropy(exprs.head)
-  }
-
-  def apply(s: Column): Column = call_function(FuncName, s)
+  def apply(s: Column): Column = GraftSessions.column(CharEntropy(GraftSessions.expression(s)))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -75,36 +74,18 @@ object CharGrams {
     new GenericArrayData(out)
   }
 
-  /** Idempotent registration, same contract as [[IntersectCount.register]]
-    * (`n` must be an int literal). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(FuncName, builder, "built-in")
-  }
+  /** The SQL builder of `graft_chargrams(s, n)` ([[graft.GraftExtensions]]
+    * checks the arity): `n` must be an int literal. */
+  private[graft] def builder(exprs: Seq[Expression]): Expression =
+    exprs(1) match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) =>
+        CharGrams(exprs(0), v)
+      case other => throw new org.apache.spark.sql.AnalysisException(
+        "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT",
+        Map("sqlExpr" -> s"\"$FuncName\"", "inputName" -> "`n`",
+          "inputType" -> "\"INT\"", "inputExpr" -> s"\"${other.sql}\""))
+    }
 
-  /** Arity/literal-checked expression builder (shared with
-    * [[graft.GraftExtensions]]). */
-  private[graft] def builder(exprs: Seq[Expression]): Expression = {
-          if (exprs.length != 2)
-            throw new org.apache.spark.sql.AnalysisException(
-              "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-              Map("functionName" -> s"`$FuncName`", "expectedNum" -> "2",
-                "actualNum" -> exprs.length.toString,
-                "docroot" -> "https://spark.apache.org/docs/latest"))
-          exprs(1) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) =>
-              CharGrams(exprs(0), v)
-            case other => throw new org.apache.spark.sql.AnalysisException(
-              "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT",
-              Map("sqlExpr" -> s"\"$FuncName\"", "inputName" -> "`n`",
-                "inputType" -> "\"INT\"", "inputExpr" -> s"\"${other.sql}\""))
-          }
-  }
-
-  def apply(s: Column, n: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function(FuncName, s, lit(n))
-  }
+  def apply(s: Column, n: Int): Column =
+    GraftSessions.column(CharGrams(GraftSessions.expression(s), n))
 }

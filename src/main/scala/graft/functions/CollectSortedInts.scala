@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** Growable primitive int buffer — the whole point is NO per-element
@@ -107,24 +106,6 @@ case class CollectSortedInts(
 object CollectSortedInts {
   val FuncName = "graft_collect_ints"
 
-  /** Idempotent registration, same contract as [[IntersectCount.register]]. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(FuncName, builder, "built-in")
-  }
-
-  /** Arity-checked expression builder (shared with [[graft.GraftExtensions]]). */
-  private[graft] def builder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        Map("functionName" -> s"`$FuncName`", "expectedNum" -> "1",
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
-    CollectSortedInts(exprs(0)).toAggregateExpression()
-  }
-
-  def apply(v: Column): Column = call_function(FuncName, v)
+  def apply(v: Column): Column =
+    GraftSessions.column(CollectSortedInts(GraftSessions.expression(v)).toAggregateExpression())
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -162,26 +161,5 @@ object DateShapeMask {
     m
   }
 
-  /** Register `graft_dateshape(cell)`, idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(FuncName, builder, "built-in")
-  }
-
-  /** Arity-checked builder (shared with [[graft.GraftExtensions]]) —
-    * zero args must raise the same WRONG_NUM_ARGS every sibling
-    * builder does, not a NoSuchElementException from `exprs.head`. */
-  private[graft] def builder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        Map("functionName" -> s"`$FuncName`", "expectedNum" -> "1",
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
-    DateShapeMask(exprs.head)
-  }
-
-  def apply(c: Column): Column = call_function(FuncName, c)
+  def apply(c: Column): Column = GraftSessions.column(DateShapeMask(GraftSessions.expression(c)))
 }

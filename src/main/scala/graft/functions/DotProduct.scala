@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** `dot(a, b)` over two double arrays as a native Catalyst expression.
@@ -100,17 +99,6 @@ case class DotProduct(left: Expression, right: Expression)
 object DotProduct {
   val FuncName = "graft_dot"
 
-  /** Register `graft_dot` in the session's function registry so plans can
-    * use it via [[apply]] / SQL. Idempotent AND quiet: registering only
-    * when absent avoids the per-call "replaced a previously registered
-    * function" warning spam. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        FuncName, exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-  }
-
-  def apply(a: Column, b: Column): Column = call_function(FuncName, a, b)
+  def apply(a: Column, b: Column): Column =
+    GraftSessions.column(DotProduct(GraftSessions.expression(a), GraftSessions.expression(b)))
 }

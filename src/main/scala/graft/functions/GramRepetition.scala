@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -89,25 +88,5 @@ object GramRepetition {
     UnsafeArrayData.fromPrimitiveArray(Array((n - 1).toLong, m, d))
   }
 
-  /** Register `graft_gramstats`, idempotent, matching
-    * [[IntersectCount.register]]. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(FuncName, builder, "built-in")
-  }
-
-  /** Arity-checked expression builder (shared with [[graft.GraftExtensions]]). */
-  private[graft] def builder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        Map("functionName" -> s"`$FuncName`", "expectedNum" -> "1",
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
-    GramRepetition(exprs(0))
-  }
-
-  def apply(a: Column): Column = call_function(FuncName, a)
+  def apply(a: Column): Column = GraftSessions.column(GramRepetition(GraftSessions.expression(a)))
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -104,22 +103,10 @@ object HashBuckets {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** Register `graft_hashbuckets(text, nb, asSet)` (both config args
-    * literal), idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(FuncName, builder, "built-in")
-  }
-
+  /** The SQL builder of `graft_hashbuckets(text, nb, asSet)`
+    * ([[graft.GraftExtensions]] checks the arity): both config args must
+    * be literals. */
   private[graft] def builder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 3)
-      throw new org.apache.spark.sql.AnalysisException(
-        "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        Map("functionName" -> s"`$FuncName`", "expectedNum" -> "3",
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
     (exprs(1), exprs(2)) match {
       case (org.apache.spark.sql.catalyst.expressions.Literal(nb: Int, _),
           org.apache.spark.sql.catalyst.expressions.Literal(asSet: Boolean, _)) =>
@@ -132,8 +119,6 @@ object HashBuckets {
     }
   }
 
-  def apply(text: Column, nb: Int, asSet: Boolean): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function(FuncName, text, lit(nb), lit(asSet))
-  }
+  def apply(text: Column, nb: Int, asSet: Boolean): Column =
+    GraftSessions.column(HashBuckets(GraftSessions.expression(text), nb, asSet))
 }

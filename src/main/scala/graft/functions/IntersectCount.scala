@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** `graft_icount(a, b)` — |a ∩ b| for two SORTED integer or long arrays
@@ -94,25 +93,6 @@ case class IntersectCount(left: Expression, right: Expression)
 object IntersectCount {
   val FuncName = "graft_icount"
 
-  /** Register `graft_icount` in the session's function registry.
-    * Idempotent and quiet, matching [[DotProduct.register]]. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(FuncName, builder, "built-in")
-  }
-
-  /** Arity-checked expression builder (shared with [[graft.GraftExtensions]]). */
-  private[graft] def builder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 2)
-      throw new org.apache.spark.sql.AnalysisException(
-        "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        Map("functionName" -> s"`$FuncName`", "expectedNum" -> "2",
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
-    IntersectCount(exprs(0), exprs(1))
-  }
-
-  def apply(a: Column, b: Column): Column = call_function(FuncName, a, b)
+  def apply(a: Column, b: Column): Column =
+    GraftSessions.column(IntersectCount(GraftSessions.expression(a), GraftSessions.expression(b)))
 }

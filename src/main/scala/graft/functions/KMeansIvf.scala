@@ -57,7 +57,6 @@ object KMeansIvf {
     * decision reproducible on both sides. */
   def assign(vecs: DataFrame, vCol: String,
       cents: Array[Array[Double]]): DataFrame = {
-    DotProduct.register(vecs.sparkSession)
     val scored = cents.zipWithIndex.map { case (c, j) =>
       val cl = array(c.map(lit): _*)
       val cn = math.sqrt(c.map(x => x * x).sum)

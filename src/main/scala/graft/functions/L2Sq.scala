@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** `l2sq(a, b)` — squared L2 distance Σ(aᵢ−bᵢ)² over two double arrays
@@ -111,14 +110,6 @@ case class L2Sq(left: Expression, right: Expression)
 object L2Sq {
   val FuncName = "graft_l2sq"
 
-  /** Idempotent registration, same contract as [[DotProduct.register]]. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        FuncName, exprs => L2Sq(exprs(0), exprs(1)), "built-in")
-  }
-
-  def apply(a: Column, b: Column): Column = call_function(FuncName, a, b)
+  def apply(a: Column, b: Column): Column =
+    GraftSessions.column(L2Sq(GraftSessions.expression(a), GraftSessions.expression(b)))
 }

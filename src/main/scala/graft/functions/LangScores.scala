@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -118,23 +117,11 @@ object LangScores {
       .fromPrimitiveArray(out)
   }
 
-  /** Register `graft_langscores(text, 'lang:w1,w2;lang2:...')`,
-    * idempotent (the TermCounts literal-encoding pattern; a language
-    * with an empty word list is scored by CJK-token count). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(FuncName, builder, "built-in")
-  }
-
+  /** The SQL builder of `graft_langscores(text, 'lang:w1,w2;lang2:...')`
+    * ([[graft.GraftExtensions]] checks the arity): the profiles must be a
+    * string literal; a language with an empty word list is scored by
+    * CJK-token count. */
   private[graft] def builder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 2)
-      throw new org.apache.spark.sql.AnalysisException(
-        "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        Map("functionName" -> s"`$FuncName`", "expectedNum" -> "2",
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
     val profiles = exprs(1) match {
       case org.apache.spark.sql.catalyst.expressions.Literal(v: UTF8String, StringType) =>
         v.toString.split(";", -1).toSeq.map { part =>
@@ -151,15 +138,12 @@ object LangScores {
   }
 
   def apply(text: Column, profiles: Seq[(String, Seq[String])]): Column = {
-    import org.apache.spark.sql.functions.lit
-    // the encoding reserves ';' ':' ',' — a profile word containing one
-    // would silently shift every later entry in the decoded table
+    // the SQL form's encoding reserves ';' ':' ',', so a profile holding
+    // one is rejected here too: both forms take the same profiles
     require(profiles.forall { case (l, ws) =>
       !l.exists(";:,".contains(_)) &&
         ws.forall(w => !w.exists(";:,".contains(_)))
     }, s"$FuncName profile langs/words must not contain ';' ':' ','")
-    val enc = profiles.map { case (l, ws) => s"$l:${ws.mkString(",")}" }
-      .mkString(";")
-    call_function(FuncName, text, lit(enc))
+    GraftSessions.column(LangScores(GraftSessions.expression(text), profiles))
   }
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -124,19 +123,6 @@ object MinHashSig {
     mins
   }
 
-  /** Register in the session's function registry; idempotent and quiet. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def put(name: String, isMd5: Boolean): Unit = {
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!reg.functionExists(id))
-        reg.createOrReplaceTempFunction(
-          name, exprs => MinHashSig(exprs.head, isMd5), "built-in")
-    }
-    put(FuncName + "_md5", isMd5 = true)
-    put(FuncName + "_xx", isMd5 = false)
-  }
-
   def apply(c: Column, md5: Boolean): Column =
-    call_function(FuncName + (if (md5) "_md5" else "_xx"), c)
+    GraftSessions.column(MinHashSig(GraftSessions.expression(c), md5))
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -47,14 +46,5 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 object NfcNormalize {
   val FuncName = "graft_nfc"
 
-  /** Idempotent session registration (same contract as DotProduct). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        FuncName, exprs => NfcNormalize(exprs.head), "built-in")
-  }
-
-  def apply(c: Column): Column = call_function(FuncName, c)
+  def apply(c: Column): Column = GraftSessions.column(NfcNormalize(GraftSessions.expression(c)))
 }

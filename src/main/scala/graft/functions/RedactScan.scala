@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -183,14 +182,5 @@ object RedactScan {
       cur.codePointCount(0, cur.length).toLong)
   }
 
-  /** Register in the session's function registry; idempotent and quiet. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        FuncName, exprs => RedactScan(exprs.head), "built-in")
-  }
-
-  def apply(c: Column): Column = call_function(FuncName, c)
+  def apply(c: Column): Column = GraftSessions.column(RedactScan(GraftSessions.expression(c)))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -95,22 +94,10 @@ object TermCounts {
       .fromPrimitiveArray(out)
   }
 
-  /** Register `graft_termcounts(text, 'comma,joined,terms')` (terms must
-    * be a string literal), idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(FuncName, builder, "built-in")
-  }
-
+  /** The SQL builder of `graft_termcounts(text, 'comma,joined,terms')`
+    * ([[graft.GraftExtensions]] checks the arity): the terms must be a
+    * string literal. */
   private[graft] def builder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 2)
-      throw new org.apache.spark.sql.AnalysisException(
-        "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        Map("functionName" -> s"`$FuncName`", "expectedNum" -> "2",
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
     val ts = exprs(1) match {
       case org.apache.spark.sql.catalyst.expressions.Literal(v: UTF8String, StringType) =>
         v.toString.split(",").toSeq
@@ -122,9 +109,9 @@ object TermCounts {
     TermCounts(exprs(0), ts)
   }
 
+  /** `terms` must be comma-free, as in the SQL form's term list. */
   def apply(text: Column, terms: Seq[String]): Column = {
-    import org.apache.spark.sql.functions.lit
     require(terms.forall(!_.contains(",")), "terms must be comma-free")
-    call_function(FuncName, text, lit(terms.mkString(",")))
+    GraftSessions.column(TermCounts(GraftSessions.expression(text), terms))
   }
 }

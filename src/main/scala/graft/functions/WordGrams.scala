@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -167,44 +166,27 @@ object WordGrams {
     else new GenericArrayData(java.util.Arrays.copyOf(out, u))
   }
 
-  /** Register `graft_wordgrams(words, n, stride, dedup)` (the three
-    * config args must be literals), idempotent, matching
-    * [[IntersectCount.register]]. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(FuncName, builder, "built-in")
-  }
-
-  /** Arity/literal-checked expression builder (shared with
-    * [[graft.GraftExtensions]]). */
+  /** The SQL builder of `graft_wordgrams(words, n, stride, dedup)`
+    * ([[graft.GraftExtensions]] checks the arity): the three config args
+    * must be literals. */
   private[graft] def builder(exprs: Seq[Expression]): Expression = {
-          if (exprs.length != 4)
-            throw new org.apache.spark.sql.AnalysisException(
-              "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-              Map("functionName" -> s"`$FuncName`", "expectedNum" -> "4",
-                "actualNum" -> exprs.length.toString,
-                "docroot" -> "https://spark.apache.org/docs/latest"))
-          def intLit(e: Expression, what: String): Int = e match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-            case other => throw new org.apache.spark.sql.AnalysisException(
-              "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT",
-              Map("sqlExpr" -> s"\"$FuncName\"", "inputName" -> s"`$what`",
-                "inputType" -> "\"INT\"", "inputExpr" -> s"\"${other.sql}\""))
-          }
-          val d = exprs(3) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Boolean, _) => v
-            case other => throw new org.apache.spark.sql.AnalysisException(
-              "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT",
-              Map("sqlExpr" -> s"\"$FuncName\"", "inputName" -> "`dedup`",
-                "inputType" -> "\"BOOLEAN\"", "inputExpr" -> s"\"${other.sql}\""))
-          }
-          WordGrams(exprs(0), intLit(exprs(1), "n"), intLit(exprs(2), "stride"), d)
+    def intLit(e: Expression, what: String): Int = e match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+      case other => throw new org.apache.spark.sql.AnalysisException(
+        "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT",
+        Map("sqlExpr" -> s"\"$FuncName\"", "inputName" -> s"`$what`",
+          "inputType" -> "\"INT\"", "inputExpr" -> s"\"${other.sql}\""))
+    }
+    val d = exprs(3) match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(v: Boolean, _) => v
+      case other => throw new org.apache.spark.sql.AnalysisException(
+        "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT",
+        Map("sqlExpr" -> s"\"$FuncName\"", "inputName" -> "`dedup`",
+          "inputType" -> "\"BOOLEAN\"", "inputExpr" -> s"\"${other.sql}\""))
+    }
+    WordGrams(exprs(0), intLit(exprs(1), "n"), intLit(exprs(2), "stride"), d)
   }
 
-  def apply(words: Column, n: Int, stride: Int = 1, dedup: Boolean = false): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function(FuncName, words, lit(n), lit(stride), lit(dedup))
-  }
+  def apply(words: Column, n: Int, stride: Int = 1, dedup: Boolean = false): Column =
+    GraftSessions.column(WordGrams(GraftSessions.expression(words), n, stride, dedup))
 }

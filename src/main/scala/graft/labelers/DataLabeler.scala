@@ -51,12 +51,7 @@ object DataLabeler {
     * (LABELER_ACCURACY.md's adversarial table quantifies the gap this
     * closes). */
   object TwoStageModel extends LabelModel {
-    def label(c: Column): Column = {
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .foreach(FastLabelTwoStage.register)
-      FastLabelTwoStage(c)
-    }
+    def label(c: Column): Column = FastLabelTwoStage(c)
   }
 
   object ThresholdVote extends VotePostprocessor {

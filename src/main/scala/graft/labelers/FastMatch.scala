@@ -1,10 +1,9 @@
 package graft.labelers
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSessions}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -1743,17 +1742,7 @@ case class FastLabel(child: Expression) extends UnaryExpression {
 object FastLabel {
   val FuncName = "graft_label"
 
-  /** Idempotent session-registry registration (same device as
-    * [[graft.functions.DotProduct.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        FuncName, exprs => FastLabel(exprs.head), "built-in")
-  }
-
-  def apply(c: Column): Column = call_function(FuncName, c)
+  def apply(c: Column): Column = GraftSessions.column(FastLabel(GraftSessions.expression(c)))
 }
 
 /** `graft_label_2stage(cell)` — [[FastMatch.twoStageLabel]] as a native
@@ -1781,14 +1770,6 @@ case class FastLabelTwoStage(child: Expression) extends UnaryExpression {
 object FastLabelTwoStage {
   val FuncName = "graft_label_2stage"
 
-  /** Idempotent registration, same contract as [[FastLabel.register]]. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(FuncName)
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        FuncName, exprs => FastLabelTwoStage(exprs.head), "built-in")
-  }
-
-  def apply(c: Column): Column = call_function(FuncName, c)
+  def apply(c: Column): Column =
+    GraftSessions.column(FastLabelTwoStage(GraftSessions.expression(c)))
 }

@@ -52,9 +52,6 @@ object NgramBayes {
     * same fit/score algebra ([[graft.tools.LabelerEnsembleProbe]]). */
   def grams(c: Column, ns: Seq[Int]): Column = {
     require(ns.nonEmpty, "gram-length list must be non-empty")
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.functions.CharGrams.register)
     ns.map(n => graft.functions.CharGrams(c, n): Column).reduce(concat(_, _))
   }
 

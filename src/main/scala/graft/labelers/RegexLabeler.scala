@@ -544,21 +544,12 @@ object RegexLabeler {
     * `FastMatchSpec` property-checks it equivalent to [[labelOfRegex]],
     * and the DuckDB oracle still evaluates the regex chain — so every
     * labeler CORRECTNESS row compares two independent implementations. */
-  def labelOf(c: Column): Column = {
-    // getActiveSession is thread-local and unset on bare ExecutionContext
-    // threads (ProfileQueries futures); fall back to the default session
-    // so first use there doesn't fail analysis with 'undefined function'
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(FastLabel.register)
-    FastLabel(c)
-  }
+  def labelOf(c: Column): Column = FastLabel(c)
 
   /** Cell → label as ONE codegen'd CASE-WHEN chain of rlike predicates
     * (first match wins; null stays null; no match → UNKNOWN). The
     * reference semantics [[FastMatch]] must reproduce exactly; kept as
-    * the equivalence-spec oracle and for sessions where registering a
-    * function is undesirable. */
+    * the equivalence-spec oracle and for the `labeler_votes` bench twin. */
   def labelOfRegex(c: Column): Column = {
     val chain = rules.foldLeft(Option.empty[Column]) { (acc, r) =>
       // guard first: And short-circuits in codegen, so the Matcher

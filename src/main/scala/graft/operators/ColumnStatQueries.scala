@@ -85,7 +85,6 @@ object ColumnStatQueries extends QueryModule {
     // ONE graft_dateshape walk per cell replaces 16 regex Matchers + 16
     // suffix-strip regexp_replaces (bitmask property-tested equal to the
     // per-format shape regexes)
-    graft.functions.DateShapeMask.register(s)
     val aggs = DatetimeFormats.formats.indices.map { i =>
       cnt(shiftright(col("msk"), i).bitwiseAND(lit(1)) === 1).as(s"f$i")
     }

@@ -104,7 +104,6 @@ object CorpusQueries extends QueryModule {
     // — the only Generate left is the |terms|-slot posexplode and the tf
     // stage needs no aggregation at all (SCALING.md records the ratio to
     // the explode→isin→groupBy formulation it replaced).
-    graft.functions.TermCounts.register(s)
     val nT = terms.size
     // CACHE the (doc_id, dl, tc) frame — ~an int per term per doc — so
     // the byte-scan runs exactly ONCE per document: stats and tf both

@@ -95,7 +95,6 @@ object CurationQueries extends QueryModule {
     // one cached frame: each doc's distinct bucket set as a sorted array,
     // so scoring is MAP-ONLY (no join, no shuffle — the feature vector
     // travels with the doc, exactly how a 100 TB scoring pass should)
-    graft.functions.HashBuckets.register(s)
     val feats = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         when(blockedCol, 0.0).otherwise(1.0).as("y"),
@@ -126,7 +125,6 @@ object CurationQueries extends QueryModule {
         else BigDecimal(wb * 1e8)
           .setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble.toLong
       }
-      graft.functions.BucketSum.register(s)
       val sCol = graft.functions.BucketSum(col("bs"), table)
         .cast("double") / 1e8 + bias
       feats
@@ -268,7 +266,6 @@ object CurationQueries extends QueryModule {
     * buckets are both bounded, so everything after the first partial
     * agg is constant-size. */
   private def tokenDrift(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashBuckets.register(s)
     // per-doc bucket-count vectors in ONE codegen'd pass (tokenize +
     // digest + bucket in-row, graft_hashbuckets) — the explode→md5→
     // hex→conv chain it replaces paid a Generate row and two string

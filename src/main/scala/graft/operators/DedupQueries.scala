@@ -92,7 +92,6 @@ object DedupQueries extends QueryModule {
     // explode, no per-shingle hash projection, no 16-column min
     // exchange. The first shuffle in the MinHash pipeline now carries
     // one 16-long row per document instead of one row per shingle.
-    graft.functions.MinHashSig.register(c.sparkSession)
     c.select(col("doc_id"),
         graft.functions.MinHashSig(col("text"), useMd5).as("s"))
       .select(col("doc_id") +:
@@ -493,7 +492,6 @@ object DedupQueries extends QueryModule {
     * non-negative int (no signed-long shift semantics to align). */
   private def simhashMd5(s: SparkSession, dir: String): DataFrame = {
     val c = corpus(s, dir)
-    graft.functions.Md5AB.register(s)
     val tok = c.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .withColumn("ab", graft.functions.Md5AB(col("w")))
       .select(col("doc_id"),
@@ -563,7 +561,6 @@ object DedupQueries extends QueryModule {
   private val LineChunkWords = 3
 
   private def dedupLines(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordGrams.register(s)
     val d = Tables.load(s, dir, "documents").select("doc_id", "text")
     val k = LineChunkWords
     // codegen'd chunk build (WordGrams stride = n), replacing the
@@ -645,7 +642,6 @@ object DedupQueries extends QueryModule {
       gramKey: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.WordGrams.register(c.sparkSession)
     val ws = split(col("text"), " ")
     val d = c.select(col("doc_id"), ws.as("ws"), size(ws).as("nw"))
     // codegen'd overlapping-gram build (WordGrams stride = 1) replacing

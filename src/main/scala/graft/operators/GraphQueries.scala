@@ -339,7 +339,6 @@ object GraphQueries extends QueryModule {
   private def trianglesBody(s: SparkSession, dir: String, persist: Boolean,
       sampleDenom: Long): DataFrame = {
     def p(df: DataFrame) = if (persist) df.cache() else df
-    graft.functions.CollectSortedInts.register(s)
     val sets = Tables.load(s, dir, "lineitem")
       // int vertex ids: halves every downstream shuffle/adjacency byte
       // (part keys fit int at any TPC-H SF; a web-scale id space would
@@ -369,7 +368,6 @@ object GraphQueries extends QueryModule {
     // CollectSortedInts appends into raw int buffers and sort+dedups once
     // per group at eval (and its sorted output is exactly what the
     // icount merge needs downstream).
-    graft.functions.CollectSortedInts.register(s)
     val nbr = p(h.groupBy("v")
       .agg(graft.functions.CollectSortedInts(col("w")).as("ns"))
       .select(col("v"), size(col("ns")).cast("long").as("d"), col("ns")))
@@ -405,7 +403,6 @@ object GraphQueries extends QueryModule {
     // into every edge row before the dst shuffle, so the saved join is
     // paid back double in shuffle bytes. Keeping edges thin through
     // both joins wins.)
-    graft.functions.IntersectCount.register(s)
     // same primitive-int aggregate as the nbr build (o's (src, dst) rows
     // are already distinct, so set semantics ≡ list semantics here, and
     // the output comes back pre-sorted for the two-pointer merge)

@@ -36,7 +36,6 @@ object PipelineQueries extends QueryModule {
     * scan, so the only shuffle in the plan is the 2×10-key decile
     * histogram. */
   private def textRepetition(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GramRepetition.register(s)
     // <2-word docs are dropped AFTER the explode (null bucket), not by a
     // pre-filter on st[0]: a filter below the project would be pushed
     // under it and re-evaluate the gramstats sort per row just to test
@@ -157,7 +156,6 @@ object PipelineQueries extends QueryModule {
     // formulation paid eight java.util.regex passes per row (the DuckDB
     // oracle still runs that formulation; RedactScanSpec property-checks
     // the char-walk against the regex chain)
-    graft.functions.RedactScan.register(s)
     val t = piiText(s, dir)
       .select(graft.functions.RedactScan(col("text")).as("rs"))
       .select(RedactRules.zipWithIndex.map { case ((label, _), i) =>
@@ -283,7 +281,6 @@ object PipelineQueries extends QueryModule {
     * ever cross an exchange. The only 100 TB-viable plan. Output is one
     * integer summary row. */
   private def decontaminate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordGrams.register(s)
     val d = Tables.load(s, dir, "documents")
     val grams = d
       .select(col("doc_id"), explode(graft.functions.WordGrams(
@@ -313,8 +310,6 @@ object PipelineQueries extends QueryModule {
     * benched, not oracle-gated; [[decontaminate]] verifies the exact
     * semantics of the shared gram pipeline. */
   def decontaminateBloom(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.BloomMembership.register(s)
-    graft.functions.WordGrams.register(s)
     val d = Tables.load(s, dir, "documents")
     val grams = d
       .select(col("doc_id"), explode(graft.functions.WordGrams(

@@ -32,8 +32,6 @@ object SimilarityQueries extends QueryModule {
     graft.functions.DotProduct(a, b)
 
   private def vecs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
-    graft.functions.L2Sq.register(s)
     val e = Tables.load(s, dir, "embeddings")
     val v = transform(col("embedding"), x => x.cast("double"))
     e.select(col("vec_id"), col("label"), v.as("v"))
@@ -958,7 +956,6 @@ object SimilarityQueries extends QueryModule {
     * until the top-k window. */
   private def pqAdcDistances(e: DataFrame,
       cents: Map[(Int, Int), Array[Double]]): DataFrame = {
-    graft.functions.AdcLut.register(e.sparkSession)
     def l2sq(a: Seq[Double], b: Array[Double]): Double = {
       var s = 0.0; var i = 0
       while (i < b.length) { val d = a(i) - b(i); s += d * d; i += 1 }

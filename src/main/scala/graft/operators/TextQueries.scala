@@ -180,7 +180,6 @@ object TextQueries extends QueryModule {
     * the heuristic degenerates to en/unknown — the operator and its
     * evaluation plumbing are the deliverable. */
   private def langid(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.LangScores.register(s)
     val docs = Tables.load(s, dir, "documents")
     // ALL language profiles scored in one codegen'd byte-scan — the
     // per-language size(filter(tokens, isin/rlike)) formulation ran an
@@ -356,7 +355,6 @@ object TextQueries extends QueryModule {
     * dedup. Output: one census row (docs, changed-by-NFC count, chars
     * removed, docs colliding post-NFC vs pre-NFC). */
   private def textNormalize(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NfcNormalize.register(s)
     val base = Tables.load(s, dir, "documents").select("doc_id", "text")
     val small = base.filter(col("doc_id") < 10)
     val pre = small.select((col("doc_id") + 300000).as("doc_id"),
@@ -421,7 +419,6 @@ object TextQueries extends QueryModule {
     * census agg, partial map-side. Entropies round to 6 dp BEFORE
     * bucketing/min/max so both engines bucket identical values. */
   private def textEntropy(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CharEntropy.register(s)
     val docs = Tables.load(s, dir, "documents").filter(col("n_chars") > 0)
     docs
       .select(col("source"), col("n_chars"),

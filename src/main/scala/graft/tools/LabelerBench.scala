@@ -265,7 +265,6 @@ object LabelerBench {
     // on UNKNOWN): on the clean tier it must match the chain everywhere
     // the chain labels; the delta (if any) is confined to true-UNKNOWN
     // cells and reported explicitly
-    graft.labelers.FastLabelTwoStage.register(spark)
     val twoCleanConf = confusionOf(
       fixtures.select(col("true_label"),
         graft.labelers.FastLabelTwoStage(col("cell")).as("pred")))

@@ -78,7 +78,6 @@ object LabelerEnsembleProbe {
       }
     }
 
-    graft.labelers.FastLabelTwoStage.register(spark)
     val twoCol = graft.labelers.FastLabelTwoStage(trim(col("cell")))
     val advTwo = adv.select(col("id"), twoCol.as("two")).cache()
     val cleanTwo = clean.select(col("id"), twoCol.as("two")).cache()

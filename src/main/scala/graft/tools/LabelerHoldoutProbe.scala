@@ -153,7 +153,6 @@ object LabelerHoldoutProbe {
     val pred = model.label(holdout.select("id", "cell"), "cell")
     // stage-1 (two-stage chain) answer alongside, to attribute each
     // residual to the chain vs the NB vote
-    graft.labelers.FastLabelTwoStage.register(spark)
     val stage1 = holdout.select(col("id"),
       graft.labelers.FastLabelTwoStage(trim(col("cell"))).as("stage1"))
     val j = holdout.join(pred, Seq("id")).join(stage1, Seq("id")).cache()

@@ -35,7 +35,6 @@ object LabelerTierHarness {
     val model = graft.labelers.DataLabeler.NbFallback.train(
       clean.select(col("true_label").as("label"), col("cell")))
     val pred = model.label(tier.select("id", "cell"), "cell")
-    graft.labelers.FastLabelTwoStage.register(spark)
     val stage1 = tier.select(col("id"),
       graft.labelers.FastLabelTwoStage(trim(col("cell"))).as("stage1"))
     val j = tier.join(pred, Seq("id")).join(stage1, Seq("id")).cache()

@@ -17,8 +17,6 @@ class ArrayMathNullSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private def probe(sql: String): Seq[Row] = {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.L2Sq.register(spark)
     val schema = StructType(Seq(
       StructField("a", ArrayType(DoubleType, containsNull = true)),
       StructField("b", ArrayType(DoubleType, containsNull = true))))
@@ -62,8 +60,6 @@ class ArrayMathNullSpec extends AnyFunSuite {
   }
 
   test("containsNull=false arrays skip the per-element probe but keep length NULL") {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.L2Sq.register(spark)
     import spark.implicits._
     // toDF on Seq[Double] yields containsNull=false element types
     val df = Seq((Seq(1.0, 2.0), Seq(3.0)), (Seq(1.0, 2.0), Seq(3.0, 4.0)))

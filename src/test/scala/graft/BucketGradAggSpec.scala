@@ -19,7 +19,6 @@ class BucketGradAggSpec extends AnyFunSuite {
 
   test("array aggregate equals explode+groupBy gradient sums on real buckets") {
     import spark.implicits._
-    graft.functions.HashBuckets.register(spark)
     val docs = Tables.load(spark, SparkTestSession.sfDir, "documents")
       .select(col("doc_id"),
         graft.functions.HashBuckets(col("text"), NB, asSet = true).as("bs"),

@@ -12,7 +12,6 @@ class CharEntropySpec extends AnyFunSuite {
 
   private def h(s: String): Option[Double] = {
     import spark.implicits._
-    CharEntropy.register(spark)
     val r = Seq(s).toDF("s").select(CharEntropy(col("s")).as("h")).collect()(0)
     if (r.isNullAt(0)) None else Some(r.getDouble(0))
   }
@@ -36,7 +35,6 @@ class CharEntropySpec extends AnyFunSuite {
 
   test("empty and null yield null; interpreted eval agrees with codegen") {
     import spark.implicits._
-    CharEntropy.register(spark)
     assert(h("").isEmpty)
     val out = Seq(Option.empty[String]).toDF("s")
       .select(CharEntropy(col("s")).as("h")).collect()

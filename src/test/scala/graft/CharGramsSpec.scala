@@ -13,7 +13,6 @@ class CharGramsSpec extends AnyFunSuite {
 
   test("equals the substr chain on ascii, unicode, and edge lengths") {
     import spark.implicits._
-    CharGrams.register(spark)
     val rnd = new scala.util.Random(23)
     // codepoint-safe alphabet (indexing a String would split the
     // surrogate-pair emoji into invalid lone surrogates)
@@ -36,7 +35,6 @@ class CharGramsSpec extends AnyFunSuite {
 
   test("null in, null out; bad arity is an analysis error") {
     import spark.implicits._
-    CharGrams.register(spark)
     val out = Seq(Option.empty[String]).toDF("s")
       .select(CharGrams(col("s"), 3).as("g")).collect()
     assert(out(0).isNullAt(0))

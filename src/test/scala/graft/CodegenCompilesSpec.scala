@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftExtensionsBridge, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, GraftExtensionsBridge}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The whole-class-of-bug gate for round 12's CharEntropy finding:
@@ -24,9 +24,6 @@ class CodegenCompilesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private lazy val probe: DataFrame = {
-    val ext = new SparkSessionExtensions
-    new GraftExtensions()(ext)
-    GraftExtensionsBridge.register(ext, spark.sessionState.functionRegistry)
     import spark.implicits._
     Seq(("u@example.com 2024-01-05 the spark text",
         Seq(1.0, 2.0), Seq(3.0, 4.0), Seq(1, 2, 3), Seq(2, 3, 9),

@@ -12,7 +12,6 @@ class CollectSortedIntsSpec extends AnyFunSuite {
 
   test("equals sort_array(collect_set) across groups, duplicates, skew") {
     import spark.implicits._
-    CollectSortedInts.register(spark)
     val rnd = new scala.util.Random(17)
     val rows = (0 until 20000).map { _ =>
       (rnd.nextInt(50), rnd.nextInt(if (rnd.nextBoolean()) 10 else 100000)
@@ -29,7 +28,6 @@ class CollectSortedIntsSpec extends AnyFunSuite {
 
   test("null inputs are skipped, like collect_set") {
     import spark.implicits._
-    CollectSortedInts.register(spark)
     val out = Seq((1, Some(3)), (1, None), (1, Some(1)), (2, None))
       .toDF("k", "v")
       .groupBy("k").agg(CollectSortedInts(col("v")).as("fast"))

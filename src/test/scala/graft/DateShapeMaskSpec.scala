@@ -20,7 +20,6 @@ class DateShapeMaskSpec extends AnyFunSuite {
 
   private def exprMask(rows: Seq[String]): Seq[Int] = {
     import spark.implicits._
-    DateShapeMask.register(spark)
     rows.toDF("cell").select(DateShapeMask(col("cell")).as("m"))
       .collect().map(_.getInt(0)).toSeq
   }

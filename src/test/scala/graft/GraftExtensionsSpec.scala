@@ -1,20 +1,19 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** The SparkSessionExtensions install path must expose every custom
-  * expression to SQL exactly like the per-session register() helpers do. */
+  * expression to SQL: [[GraftSession]] installs [[GraftExtensions]], so
+  * the suite's session resolves every name of its table. */
 class GraftExtensionsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   test("extensions inject all graft functions into a function registry") {
-    val ext = new SparkSessionExtensions
-    new GraftExtensions()(ext)
-    // apply the injected descriptions to THIS session's registry (the
-    // same call SparkSession.applyExtensions makes at build time)
-    org.apache.spark.sql.GraftExtensionsBridge.register(
-      ext, spark.sessionState.functionRegistry)
+    val names = GraftExtensions.Functions.map(_.name)
+    assert(names.distinct.size == 23, names)
+    val child = spark.newSession()
+    names.foreach(n => assert(spark.catalog.functionExists(n) &&
+      child.catalog.functionExists(n), n))
     import spark.implicits._
     Seq(("u@example.com", Seq(1.0, 2.0), Seq(3.0, 4.0)))
       .toDF("cell", "a", "b").createOrReplaceTempView("ext_probe")
@@ -91,9 +90,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
 
   test("builders raise AnalysisException on bad arity / bad literals (r13)") {
     import org.apache.spark.sql.AnalysisException
-    // zero-arg graft_dateshape: WRONG_NUM_ARGS, not NoSuchElementException
-    val e1 = intercept[AnalysisException](spark.sql("SELECT graft_dateshape()"))
-    assert(e1.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
+    // every name, called with one argument too few and one too many
+    for (f <- GraftExtensions.Functions; n <- Seq(f.arity - 1, f.arity + 1)) {
+      val call = s"${f.name}(${Seq.fill(n)("1").mkString(", ")})"
+      val e = intercept[AnalysisException](spark.sql(s"SELECT $call"))
+      assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", call)
+      assert(e.getMessageParameters.get("functionName") == s"`${f.name}`", call)
+    }
     // empty / malformed graft_bucketsum table: AnalysisException, not a
     // raw NumberFormatException out of the parser
     val e2 = intercept[AnalysisException](

@@ -17,7 +17,6 @@ class HashBucketsSpec extends AnyFunSuite {
 
   test("property: counts and set equal the md5/conv chain") {
     import spark.implicits._
-    HashBuckets.register(spark)
     val rnd = new scala.util.Random(3)
     val vocab = Array("spark", "la", "中文", "x", "", "the", "naïve", "123",
       "a-b", "q".*(40))
@@ -52,7 +51,6 @@ class HashBucketsSpec extends AnyFunSuite {
 
   test("null text stays null") {
     import spark.implicits._
-    HashBuckets.register(spark)
     val r = Seq(Option.empty[String]).toDF("text")
       .select(HashBuckets(col("text"), Nb, asSet = false).as("bc"))
       .collect()(0)

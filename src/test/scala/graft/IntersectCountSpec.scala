@@ -25,7 +25,6 @@ class IntersectCountSpec extends AnyFunSuite {
 
   test("int arrays: merge count equals size(array_intersect)") {
     import spark.implicits._
-    IntersectCount.register(spark)
     val rows = cases(7).toDF("a", "b")
     val out = rows.select(
       IntersectCount(col("a"), col("b")).as("fast"),
@@ -36,7 +35,6 @@ class IntersectCountSpec extends AnyFunSuite {
 
   test("long arrays: same semantics through the long codegen branch") {
     import spark.implicits._
-    IntersectCount.register(spark)
     val rows = cases(11)
       .map { case (a, b) => (a.map(_.toLong), b.map(_.toLong)) }
       .toDF("a", "b")
@@ -49,7 +47,6 @@ class IntersectCountSpec extends AnyFunSuite {
 
   test("null input yields null; mixed element types are rejected") {
     import spark.implicits._
-    IntersectCount.register(spark)
     val out = Seq((Some(Seq(1, 2)), Option.empty[Seq[Int]]))
       .toDF("a", "b")
       .select(IntersectCount(col("a"), col("b")).as("n")).collect()

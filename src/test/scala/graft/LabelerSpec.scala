@@ -219,7 +219,6 @@ class LabelerSpec extends AnyFunSuite {
       s"only $recovered/${unseenCandidates.size} unseen cells recovered")
     // the invariant that makes the ensemble safe: wherever two-stage is
     // not UNKNOWN, the ensemble answer IS the two-stage answer
-    graft.labelers.FastLabelTwoStage.register(spark)
     val adv = tools.LabelerBench.EvalLabels.flatMap(l =>
       (0 until 21).map(i => (l, tools.LabelerBench.advCell(l, i))))
       .toDF("label", "cell")

@@ -19,7 +19,6 @@ class LangScoresSpec extends AnyFunSuite {
 
   private def score(text: String): Seq[Int] = {
     import spark.implicits._
-    LangScores.register(spark)
     Seq(Option(text)).toDF("text")
       .select(LangScores(col("text"), profiles).as("ls"))
       .collect()(0).getSeq[Int](0)
@@ -38,7 +37,6 @@ class LangScoresSpec extends AnyFunSuite {
 
   test("null text stays null") {
     import spark.implicits._
-    LangScores.register(spark)
     val r = Seq(Option.empty[String]).toDF("text")
       .select(LangScores(col("text"), profiles).as("ls")).collect()(0)
     assert(r.isNullAt(0))
@@ -46,7 +44,6 @@ class LangScoresSpec extends AnyFunSuite {
 
   test("property: equals the filter/isin + rlike formulation") {
     import spark.implicits._
-    LangScores.register(spark)
     val rnd = new scala.util.Random(7)
     val vocab = Array("the", "a", "and", "la", "de", "y", "les", "et",
       "xy", "中文", "漢", "", "q")

@@ -11,7 +11,6 @@ class Md5ABSpec extends AnyFunSuite {
 
   test("halves match the conv/substring/md5 built-in chain") {
     import spark.implicits._
-    Md5AB.register(spark)
     val samples = Seq(
       "", "a", "spark", "hash join", "exactly5", "ünïcödé ✓ 漢字",
       "0123456789abcdef0123456789abcdef", "\t\n spaces ",
@@ -30,7 +29,6 @@ class Md5ABSpec extends AnyFunSuite {
 
   test("null input yields null, not a crash") {
     import spark.implicits._
-    Md5AB.register(spark)
     val out = Seq[Option[String]](Some("x"), None).toDF("s")
       .select(Md5AB(col("s")).as("ab")).collect()
     assert(out(0).getSeq[Long](0).length == 2)

@@ -40,7 +40,6 @@ class MinHashSigSpec extends AnyFunSuite {
       min((col("a") + lit(p.toLong) * col("b")) % lit(4294967296L)).as(s"mh$p")
     }
     val ref = withAB.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-    MinHashSig.register(spark)
     val fast = c.select(col("doc_id"),
       MinHashSig(col("text"), useMd5).as("s"))
     (ref.collect().map(r => r.getLong(0) ->

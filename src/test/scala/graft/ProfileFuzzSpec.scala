@@ -12,7 +12,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{CategoryCountAggregate, CodePointVocabAggregate,
   DatetimeCandidatesAggregate, OrderSegmentsAggregate}
-import graft.profiler.{ColumnProfile, Profile, Profiler, ProfilerOptions}
+import graft.profiler.{Codec, ColumnProfile, Diff, Profile, Profiler, ProfilerOptions}
 
 /** Seeded metamorphic properties of the profiler's category, vocab,
   * order and string-datetime state over generated frames: nulls, "",
@@ -21,7 +21,9 @@ import graft.profiler.{ColumnProfile, Profile, Profiler, ProfilerOptions}
   * split key. Order-free state must not change under
   * `repartition`; each split group's profile must equal the filtered
   * whole-frame profile; every buffer must survive serialize →
-  * deserialize. Fixed seeds keep runs identical. */
+  * deserialize; every profile must re-encode byte-identically through
+  * the codec and show no drift against itself. Fixed seeds keep runs
+  * identical. */
 class ProfileFuzzSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -122,6 +124,51 @@ class ProfileFuzzSpec extends AnyFunSuite {
           assert(gc.datetimeFormats == c.datetimeFormats, s"$what: ${c.name} formats")
           assert(gc.datetime == c.datetime, s"$what: ${c.name} datetime")
         }
+      }
+    }
+  }
+
+  /** Fails when `Diff.diff(p, p)` reports drift: a non-zero delta, a
+    * statistic other than its no-change value, or a changed order, label
+    * or format set. A delta may be NaN only where the statistic itself
+    * is undefined on the profile. */
+  private def assertNoDrift(p: Profile, what: String): Unit = {
+    def zero(d: Double, undefined: Boolean, name: String) =
+      assert(d == 0.0 || (d.isNaN && undefined), s"$what: $name $d")
+    val d = Diff.diff(p, p)
+    assert(d.rowCountDelta == 0, what)
+    assert(d.columns.map(_.name) == p.columns.map(_.name), what)
+    for (cd <- d.columns) {
+      val c = p.column(cd.name).get
+      val at = s"${cd.name}:"
+      assert(cd.countDelta == 0, s"$what: $at count")
+      zero(cd.nullRatioDelta, c.nullRatio.isNaN, s"$at null ratio")
+      for (nd <- cd.numeric; s <- c.numeric) {
+        zero(nd.meanDelta, s.mean.isNaN, s"$at mean")
+        zero(nd.stdDelta, s.stddev.isNaN, s"$at stddev")
+        zero(nd.tStatistic, nd.tStatistic.isNaN, s"$at t")
+        assert(nd.tPValue.isNaN || nd.tPValue == 1.0, s"$what: $at t p-value ${nd.tPValue}")
+        nd.psi.foreach(x => zero(x, x.isNaN, s"$at psi"))
+      }
+      for (cat <- cd.categorical) {
+        zero(cat.chi2Statistic, cat.chi2Statistic.isNaN, s"$at chi2")
+        zero(cat.psi, cat.psi.isNaN, s"$at categorical psi")
+      }
+      assert(cd.orderChange.isEmpty && cd.labelChange.isEmpty, s"$what: $at order/label")
+      assert(cd.formatsOnlyLeft.isEmpty && cd.formatsOnlyRight.isEmpty, s"$what: $at formats")
+    }
+  }
+
+  test("Codec re-encodes each profile byte-identically; Diff finds no drift against itself") {
+    for ((f, i) <- frames.zipWithIndex) {
+      val df = frameOf(f)
+      val whole = Profiler.profile(df.drop("g"), ProfilerOptions(maxCategories = f.maxCategories))
+      val groups = Profiler.profileSplit(df, "g", optsOf(f)).toSeq.sortBy(_._1)
+      for ((what, p) <- (s"frame $i whole" -> whole) +:
+          groups.map { case (k, g) => s"frame $i group $k" -> g }) {
+        val enc = Codec.encode(p)
+        assert(Codec.encode(Codec.decode(enc)) == enc, s"$what: re-encode")
+        assertNoDrift(p, what)
       }
     }
   }

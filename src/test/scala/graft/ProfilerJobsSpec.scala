@@ -74,6 +74,22 @@ class ProfilerJobsSpec extends AnyFunSuite {
     }
   }
 
+  test("profileSplit head-sample fallback past 16 partitions: a head per group") {
+    // 20 partitions of 12 rows, two groups alternating: each group has
+    // 96 rows in the first 16 partitions, under its 100-row sample
+    // (exemplars; labels off), and 120 in all, so the segments' head
+    // rows do not cover it and its sample is taken by `head`
+    val df = spark.range(0, 240, 1, 20)
+      .select((col("id") % 2).as("g"), col("id").cast("string").as("s"))
+    val jobs = jobsOf(Profiler.profileSplit(df, "g",
+      ProfilerOptions(computeOrder = false, computeLabels = false)))
+    info(s"profileSplit (2 groups, 20 partitions) $jobs jobs")
+    // the key guard, pass 1 and the segment pass, then each group's
+    // head(100), which Spark's incremental take runs as 3 jobs: 1
+    // partition (6 rows), 4 more (30 rows in all), the last 15
+    assert(jobs == 3 + 2 * 3, s"profileSplit: $jobs jobs")
+  }
+
   test("stream sink: an empty batch runs one job and keeps the state") {
     val df = benchShaped.drop("half")
     val sp = new StreamingProfiler()

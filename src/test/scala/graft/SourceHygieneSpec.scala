@@ -4,9 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One of each: the library builds its sessions in [[GraftSession]],
   * counts jobs and stages in [[graft.obs.JobCensus]], reads parquet
-  * schemas in [[graft.sources.GraftData]] and names staged fixtures in
-  * [[Stage]] only, so a second copy of any of these in `src/main` fails
-  * here. */
+  * schemas in [[graft.sources.GraftData]], names staged fixtures in
+  * [[Stage]] and ties SQL names to expressions in [[GraftExtensions]]
+  * only, so a second copy of any of these in `src/main` fails here. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   /** Each `src/main` Scala file's path and code, comments removed. */
@@ -46,6 +46,11 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("src/main infers a parquet schema only in GraftData") {
     assert(filesMatching("""\bread(?:Stream)?\s*\.\s*parquet\s*\(""") ==
       Seq("graft/sources/GraftData.scala"))
+  }
+
+  test("src/main binds graft expressions directly, never by function name") {
+    assert(filesMatching(
+      """\b(?:call_function|createOrReplaceTempFunction|functionRegistry)\b""").isEmpty)
   }
 
   test("src/main computes staging digests only in Stage") {

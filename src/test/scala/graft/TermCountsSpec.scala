@@ -14,7 +14,6 @@ class TermCountsSpec extends AnyFunSuite {
 
   private def counts(text: String): Seq[Int] = {
     import spark.implicits._
-    TermCounts.register(spark)
     Seq(Option(text)).toDF("text")
       .select(TermCounts(col("text"), terms).as("tc"))
       .collect()(0).getSeq[Int](0)
@@ -31,14 +30,12 @@ class TermCountsSpec extends AnyFunSuite {
 
   test("null text stays null") {
     import spark.implicits._
-    TermCounts.register(spark)
     val r = Seq(Option.empty[String]).toDF("text")
       .select(TermCounts(col("text"), terms).as("tc")).collect()(0)
     assert(r.isNullAt(0))
   }
 
   test("property: equals filter(split) tokenization on random strings") {
-    TermCounts.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     val alphabet = "spark hash join x yz  ü"

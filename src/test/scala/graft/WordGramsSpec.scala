@@ -26,7 +26,6 @@ class WordGramsSpec extends AnyFunSuite {
 
   test("overlapping n-grams equal the transform/slice chain (array path)") {
     import spark.implicits._
-    WordGrams.register(spark)
     val df = randomTexts(3, 300).toDF("text")
       .select(filter(split(col("text"), " "), x => x =!= "").as("arr"))
     val out = df.select(
@@ -39,7 +38,6 @@ class WordGramsSpec extends AnyFunSuite {
 
   test("chunk mode (stride = n) equals the chunk transform chain") {
     import spark.implicits._
-    WordGrams.register(spark)
     val df = randomTexts(5, 300).toDF("text")
       .select(split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 1)
@@ -52,7 +50,6 @@ class WordGramsSpec extends AnyFunSuite {
 
   test("text path equals array path (byte-scan tokenizer)") {
     import spark.implicits._
-    WordGrams.register(spark)
     for (dedup <- Seq(false, true)) {
       val out = randomTexts(7, 300).toDF("text").select(
         WordGrams(col("text"), 5, 1, dedup).as("fromText"),
@@ -65,7 +62,6 @@ class WordGramsSpec extends AnyFunSuite {
 
   test("fused dedup equals array_distinct up to order") {
     import spark.implicits._
-    WordGrams.register(spark)
     val out = randomTexts(11, 300).toDF("text").select(
       WordGrams(col("text"), 2, 1, dedup = true).as("fast"),
       array_sort(array_distinct(
@@ -75,8 +71,6 @@ class WordGramsSpec extends AnyFunSuite {
 
   test("graft_gramstats equals the explode/groupBy statistics") {
     import spark.implicits._
-    GramRepetition.register(spark)
-    WordGrams.register(spark)
     val texts = randomTexts(13, 300) ++ Seq(
       "x x x x x", "a b a b a b", "w1 w2 w1 w2 w3")
     val df = texts.zipWithIndex.map(_.swap).toDF("id", "text")
@@ -107,9 +101,6 @@ class WordGramsSpec extends AnyFunSuite {
 
   test("null input yields null; bad arity is an analysis error") {
     import spark.implicits._
-    WordGrams.register(spark)
-    GramRepetition.register(spark)
-    graft.functions.IntersectCount.register(spark)
     val out = Seq(Option.empty[String]).toDF("text")
       .select(WordGrams(col("text"), 2, 1, dedup = false).as("g")).collect()
     assert(out(0).isNullAt(0))

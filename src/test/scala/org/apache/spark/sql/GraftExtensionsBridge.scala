@@ -1,15 +1,7 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-
-/** Test-scope bridge: `SparkSessionExtensions.registerFunctions` is
-  * private[sql] (sessions call it internally at build time); this lets
-  * the spec apply an extensions instance to an existing session's
-  * registry without constructing a whole new SparkContext. */
+/** Test-scope bridge to private[sql] code generation. */
 object GraftExtensionsBridge {
-  def register(ext: SparkSessionExtensions, reg: FunctionRegistry): Unit =
-    ext.registerFunctions(reg)
-
   /** Force-compile every WholeStageCodegen stage of `df`'s executed
     * plan through Janino (the exact source + compiler path of a real
     * run) and return the compiled stages. Throws on ANY compile
